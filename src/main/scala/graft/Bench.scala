@@ -137,12 +137,12 @@ object Bench {
     // per level regardless of feature count, which is what makes wide
     // tables viable (the melt formulation multiplies rows by #features+1).
     def wideFit(nDerived: Int): Unit = {
-      // Shared construction (graft.tools.WideFrame) keeps the probes
-      // measuring exactly this workload. Repartition because at wide
-      // widths the per-row work dominates the one tiny 5-column
-      // exchange (the testdata parquet is ONE row group -> a single
-      // scan task; a real corpus has thousands). The narrow fits stay
-      // on the raw scan: their per-row work is light enough that each
+      // Shared construction (graft.tools.WideFrame) keeps WideHeapProbe
+      // and WideScalableFitSpec on exactly this workload. Repartition
+      // because at wide widths the per-row work dominates the one tiny
+      // 5-column exchange (the testdata parquet is ONE row group -> a
+      // single scan task; a real corpus has thousands). The narrow fits
+      // stay on the raw scan: their per-row work is light enough that each
       // pre-cache action re-paying the exchange costs more than it buys.
       val wide = graft.tools.WideFrame.frame(spark, sfDir, nDerived,
         repartitionTo = Some(spark.sparkContext.defaultParallelism))
@@ -151,35 +151,13 @@ object Bench {
       graft.tree.Predict.predictMany(model, wide)
         .write.format("noop").mode("overwrite").save()
     }
-    // The exact-threshold (scalable prefix-sum) fit at width moved OUT
-    // of the per-round gate entirely (r17 verdict #1: the 10%-row
-    // entry alone was 75.8 s — 12% of every sweep — and the 219-entry
-    // x 4-sweep gate outgrew the driver budget, rc 124). A cheaper
-    // in-gate proxy was MEASURED not to exist (r18 receipts,
-    // WideScalingProbe `proxy` mode): 2% rows 50 s, width-96 79 s,
-    // width-48 138 s — the exact path at width is PLAN/stage-bound,
-    // not row-bound, so no sample or width cut buys a cheap line. The
-    // shape's receipts live in WideScalingProbe `scalable` mode (75.8 s
-    // at 10% rows, 256 s full-row — SCALING.md); the gate keeps the
-    // DESIGNED wide path, bins32_wide190.
-    // r20 verdict #6: the exact-at-width shape RETURNS to the gate via the
-    // melted-histogram pipeline over the per-feature SAMPLED candidate set
-    // (maxBins GK edges — counts at each sampled candidate exact, windows
-    // bounded at 33 rows/feature, so the only width-scaled cost is the
-    // melt itself, now the int-indexed posexplode). Same tree as
-    // bins32_wide190 (WideScalableFitSpec differential on sf0.01).
-    def wideScalableFit(nDerived: Int): Unit = {
-      val wide = graft.tools.WideFrame.frame(spark, sfDir, nDerived,
-        repartitionTo = Some(spark.sparkContext.defaultParallelism))
-      val model = DecisionTreeClassifier(maxDepth = Some(4), criterion = Criterion.Entropy,
-        maxBins = Some(32), useAggregatedHistogram = false).fit(wide, "l_returnflag")
-      graft.tree.Predict.predictMany(model, wide)
-        .write.format("noop").mode("overwrite").save()
-    }
     val wideEntries: Seq[(String, () => Unit)] = Seq(
       ("fit_depth4_entropy_bins32_wide24", () => wideFit(20)),
       ("fit_depth4_entropy_bins32_wide190", () => wideFit(186)),
-      ("fit_depth4_entropy_scalable_wide190", () => wideScalableFit(186)))
+      // the former melted-histogram pipeline shape of the same binned
+      // fit; the name is kept so the entry's trajectory continues, and it
+      // now runs the one binned trainer
+      ("fit_depth4_entropy_scalable_wide190", () => wideFit(186)))
 
     // documents with each token deterministically suffixed into ~500
     // variants — the vocabulary-rich corpus the realistic-merge-count

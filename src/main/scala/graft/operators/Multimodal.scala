@@ -92,10 +92,20 @@ object Multimodal {
       // created, written, read and deleted PER IMAGE PER ROW, i.e. a
       // hidden disk round trip on a pure in-memory decode (guide §1.2
       // step 2: per-task work). The decoded pixels are identical.
-      else try Option(javax.imageio.ImageIO.read(
-        new javax.imageio.stream.MemoryCacheImageInputStream(
-          new java.io.ByteArrayInputStream(bytes))))
+      else decodeStream(new javax.imageio.stream.MemoryCacheImageInputStream(
+        new java.io.ByteArrayInputStream(bytes)))
+
+    /** Decode from an image stream and close it on every path:
+      * `ImageIO.read` closes the stream itself only when a reader claims
+      * it — on unrecognized bytes it returns null and leaves it open. */
+    private[operators] def decodeStream(
+        iis: javax.imageio.stream.ImageInputStream): Option[java.awt.image.BufferedImage] =
+      try Option(javax.imageio.ImageIO.read(iis))
       catch { case scala.util.control.NonFatal(_) => None }
+      finally {
+        // a second close of an already-closed stream throws "closed"
+        try iis.close() catch { case _: java.io.IOException => () }
+      }
 
     /** Encode a width x height 8-bit grayscale PNG whose pixel (x, y) is
       * `pixel(x, y) & 0xff`. Gray PNG is lossless, so a decode reads back

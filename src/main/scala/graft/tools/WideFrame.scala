@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions.col
 /** THE wide synthetic frame: lineitem's four numeric columns plus
   * `nDerived` arithmetic features, one flat select (a withColumn fold
   * costs O(width^2) driver re-analysis and nested Projects). Shared by
-  * Bench.wideFit and the width probes so the probes measure the exact
-  * workload the bench entry reports — a drifted copy would silently
-  * invalidate the attribution story.
+  * Bench.wideFit, WideHeapProbe and WideScalableFitSpec so the probe and
+  * the spec run the exact workload the bench entry reports — a drifted
+  * copy would silently invalidate them.
   *
   * `repartitionTo`: the testdata parquet is ONE row group (single scan
   * task); pass the parallelism when per-row work dominates (the
@@ -21,13 +21,11 @@ object WideFrame {
       spark: SparkSession,
       sfDir: String,
       nDerived: Int,
-      repartitionTo: Option[Int],
-      rowFraction: Double = 1.0
+      repartitionTo: Option[Int]
   ): DataFrame = {
     val full = spark.read.parquet(s"$sfDir/lineitem.parquet")
       .select((BaseCols :+ "l_returnflag").map(col): _*)
-    val sampled = if (rowFraction >= 1.0) full else full.sample(rowFraction, 42L)
-    val base = repartitionTo.fold(sampled)(sampled.repartition)
+    val base = repartitionTo.fold(full)(full.repartition)
     base.select(base.columns.map(col) ++
       (0 until nDerived).map(i =>
         (col(BaseCols(i % 4)) * (1.0 + i * 0.1) + i).as(s"f_$i")): _*)

@@ -60,13 +60,6 @@ object SplitSearch {
         (-c.candidate.informationGain, c.candidate.feature, c.candidate.threshold)))
   }
 
-  /** Sentinel pseudo-feature melted alongside the real ones: its constant
-    * value yields exactly one histogram row per node whose totals are the
-    * node's class distribution over ALL rows (a `lit` is never null, so no
-    * per-feature null filter applies). It can never produce a split
-    * candidate — a single distinct value leaves no right-hand side. */
-  private val NodeSentinel = "__node__"
-
   /** Snap a feature value to the smallest bin edge >= value (edges sorted
     * ascending); values beyond the last edge collapse into a +Infinity
     * catch-all bucket, which sorts last and is dropped by the
@@ -108,31 +101,20 @@ object SplitSearch {
       df: DataFrame,
       features: Seq[String],
       targetName: String,
-      targets: Seq[Any],
-      binEdges: Map[String, Seq[Double]] = Map.empty,
-      withNodeSentinel: Boolean = false,
-      extraKeys: Seq[String] = Nil
+      targets: Seq[Any]
   ): DataFrame = {
-    val fv = features.map { f =>
-      val v = binEdges.get(f) match {
-        case Some(edges) => snapToEdges(col(f).cast(DoubleType), edges)
-        case None        => col(f).cast(DoubleType)
-      }
-      struct(lit(f).as("feature"), v.as("feature_value"))
-    } ++ (if (withNodeSentinel)
-            Seq(struct(lit(NodeSentinel).as("feature"), lit(0.0).as("feature_value")))
-          else Nil)
-    val keyed = extraKeys.map(col)
+    val fv = features.map(f =>
+      struct(lit(f).as("feature"), col(f).cast(DoubleType).as("feature_value")))
     val melted = df
-      .select((keyed :+ col(targetName).as("__target") :+ explode(array(fv: _*)).as("fv")): _*)
-      .select((keyed :+ col("fv.feature").as("feature") :+
-        col("fv.feature_value").as("feature_value") :+ col("__target")): _*)
+      .select(col(targetName).as("__target"), explode(array(fv: _*)).as("fv"))
+      .select(col("fv.feature").as("feature"), col("fv.feature_value").as("feature_value"),
+        col("__target"))
       .where(col("feature_value").isNotNull) // per-feature null filter (tree.py:239)
     val classCounts = targets.zipWithIndex.map { case (v, i) =>
       count(when(col("__target") === lit(v), 1)).as(s"class_${i}_count")
     }
     melted
-      .groupBy((extraKeys :+ "feature" :+ "feature_value").map(col): _*)
+      .groupBy("feature", "feature_value")
       .agg(classCounts.head, (classCounts.tail :+ count(lit(1)).as("count_examples")): _*)
   }
 
@@ -276,100 +258,23 @@ object SplitSearch {
     *
     * The index->name decode happens once per LEVEL on the collected
     * winners frame (<= nodes x (F+1) rows), so results are identical to
-    * the string melt (SplitSearchSpec pins the trainer paths against the
+    * the string melt (SplitSearchSpec pins the trainer path against the
     * oracle-shaped pipeline). The node sentinel is index `features.size` —
-    * a lit(0.0) array element, never null, exactly like the string melt's
-    * sentinel struct. Null/NaN semantics are untouched: snapped features
-    * map null -> +Infinity inside [[snapToEdges]] (same expression), raw
-    * features keep nulls and the post-explode null filter drops them.
+    * a lit(0.0) array element, never null, so its one histogram row per
+    * node totals the node's class distribution over ALL rows; a single
+    * distinct value leaves no right-hand side, so it is never a split
+    * candidate. Raw features keep nulls and the post-explode null filter
+    * drops them (tree.py:239).
     */
-  private[graft] def meltedHistogramIdx(
+  private def meltedHistogramIdx(
       df: DataFrame,
       features: Seq[String],
       targetName: String,
       targets: Seq[Any],
-      binEdges: Map[String, Seq[Double]],
       extraKeys: Seq[String]
   ): DataFrame = {
-    // Fully binned frames take the FUSED melt+histogram aggregate (r21):
-    // the posexplode of rows x (F+1) melted tuples — and the boxed snap
-    // array feeding it — never materializes; one flat-counter aggregate
-    // per node emits the identical observed cells for `inline` to
-    // explode (see [[graft.functions.PackedHistogramCells]] for the
-    // allocation-rate mechanism the r20 driver record exposed at 32
-    // cores). A +Inf edge would collide with the overflow cell the
-    // melt's group-by kept separate-then-merged, so (never produced by
-    // the quantile sketch) it falls back to the exploded formulation.
-    val fusible = features.nonEmpty && features.forall(f =>
-      binEdges.get(f).exists(es =>
-        es.nonEmpty && es.forall(e => java.lang.Double.isFinite(e))))
-    if (fusible) meltedHistogramIdxFused(df, features, targetName, targets, binEdges, extraKeys)
-    else meltedHistogramIdxExploded(df, features, targetName, targets, binEdges, extraKeys)
-  }
-
-  /** The fused formulation: codegen-projected packed array + class index,
-    * ONE [[graft.functions.PackedHistogramCells]] aggregate per node
-    * group, `inline` of the emitted cells. Output rows identical to
-    * [[meltedHistogramIdxExploded]] (PackedHistogramCellsSpec). */
-  private[graft] def meltedHistogramIdxFused(
-      df: DataFrame,
-      features: Seq[String],
-      targetName: String,
-      targets: Seq[Any],
-      binEdges: Map[String, Seq[Double]],
-      extraKeys: Seq[String]
-  ): DataFrame = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    val raw = array((features.map(f => col(f).cast(DoubleType)) :+
+    val packed = array((features.map(f => col(f).cast(DoubleType)) :+
       lit(0.0)): _*) // node sentinel at index features.size
-    val classIdx = targets.zipWithIndex.foldLeft(when(lit(false), lit(-1))) {
-      case (chain, (v, i)) => chain.when(col(targetName) === lit(v), lit(i))
-    }.otherwise(lit(-1)).cast("int")
-    // Pre-project through whole-stage codegen so the aggregate's update
-    // reads two bound attributes (primitive array + int) per row instead
-    // of interpreting the 191-element CreateArray per row (interpreted
-    // eval boxes every element — the same allocation rate the fusion is
-    // here to remove).
-    val pre = df.select((extraKeys.map(col) :+ raw.as("__arr") :+ classIdx.as("__cls")): _*)
-    // sentinel slot: one edge at its constant 0.0 value — every row lands
-    // on that edge, reproducing the melt's single sentinel cell
-    val edgeRows = features.map(f => binEdges(f).sorted) :+ Seq(0.0)
-    val agg = graft.functions.PackedHistogramCells(
-      ColumnBridge.expression(col("__arr")),
-      ColumnBridge.expression(col("__cls")), edgeRows, targets.size)
-    pre.groupBy(extraKeys.map(col): _*)
-      .agg(ColumnBridge.column(agg.toAggregateExpression()).as("__cells"))
-      .select((extraKeys.map(col) :+ inline(col("__cells"))): _*)
-  }
-
-  /** The exploded (posexplode + hash aggregate) formulation — the general
-    * path for exact/mixed candidate sets, and the model the fused
-    * aggregate is differentially pinned against. */
-  private[graft] def meltedHistogramIdxExploded(
-      df: DataFrame,
-      features: Seq[String],
-      targetName: String,
-      targets: Seq[Any],
-      binEdges: Map[String, Seq[Double]],
-      extraKeys: Seq[String]
-  ): DataFrame = {
-    val raw = array((features.map(f => col(f).cast(DoubleType)) :+
-      lit(0.0)): _*) // node sentinel at index features.size
-    // Binned features snap BEFORE the explode, as one native binary-search
-    // expression over the whole packed array ([[graft.functions
-    // .SnapArrayToEdges]]) instead of one per-feature when-chain — at 190
-    // features x 32 edges the chain was ~6,000 branch expressions per
-    // level (O(F x B) per row, and a plan Catalyst re-analyzes per
-    // level); the expression is one plan node at O(F log B) per row.
-    // Identity on the sentinel slot and on features without edges.
-    val packed =
-      if (binEdges.isEmpty) raw
-      else {
-        import org.apache.spark.sql.graft.ColumnBridge
-        val edgeRows = features.map(f => binEdges.getOrElse(f, Nil)) :+ Nil
-        ColumnBridge.column(graft.functions.SnapArrayToEdges(
-          ColumnBridge.expression(raw), edgeRows))
-      }
     val keyed = extraKeys.map(col)
     val melted = df
       .select((keyed :+ col(targetName).as("__target") :+
@@ -459,7 +364,7 @@ object SplitSearch {
     * the node's class distribution, in a single collect.
     *
     * Differences from the oracle-shaped [[bestSplitsPerFeature]] pipeline:
-    *   - the [[NodeSentinel]] pseudo-feature is melted in, contributing one
+    *   - a node-sentinel pseudo-feature is melted in, contributing one
     *     histogram row whose totals are the node's class distribution;
     *   - instead of filtering out the last cumulative row (F3) and NaN
     *     gains (F4), the gain is computed as
@@ -471,10 +376,6 @@ object SplitSearch {
     *
     * Replaces the reference's ~3 executions per node (collect_all fan-out +
     * mask collect + distribution collect, tree.py:339-372) with one.
-    *
-    * `binEdges`: optional per-feature quantile-bin edges (maxBins mode) —
-    * bounds every per-feature window partition at |edges|+1 rows, which is
-    * what makes the cumulative windows scale-safe on continuous features.
     */
   def searchWithStats(
       df: DataFrame,
@@ -482,12 +383,11 @@ object SplitSearch {
       targetName: String,
       targets: Seq[Any],
       criterion: Criterion,
-      binEdges: Map[String, Seq[Double]] = Map.empty,
       cumBuckets: Option[Int] = None,
       cumRanges: Map[String, (Double, Double)] = Map.empty
   ): NodeSearch =
     searchLevelWithStats(df, lit(0), features, targetName, targets, criterion,
-      binEdges, cumBuckets, cumRanges)
+      cumBuckets, cumRanges)
       .getOrElse(0, throw new IllegalArgumentException(
         "searchWithStats on empty input data (no rows reached the search)"))
 
@@ -505,13 +405,12 @@ object SplitSearch {
       targetName: String,
       targets: Seq[Any],
       criterion: Criterion,
-      binEdges: Map[String, Seq[Double]] = Map.empty,
       cumBuckets: Option[Int] = None,
       cumRanges: Map[String, (Double, Double)] = Map.empty
   ): Map[Int, NodeSearch] = {
     val k = targets.size
     val winners = searchLevelFrame(df, nodeId, features, targetName, targets,
-      criterion, binEdges, cumBuckets, cumRanges).collect()
+      criterion, cumBuckets, cumRanges).collect()
 
     val sentinelIdx = features.size
     winners.toSeq.groupBy(_.getAs[Int]("__node")).map { case (node, rows) =>
@@ -535,24 +434,22 @@ object SplitSearch {
   }
 
   /** The level search's winners DataFrame (one row per (node, feature) with
-    * the argmax payload), pre-collect — factored out of
-    * [[searchLevelWithStats]] so probes can `explain` the exact plan the
-    * trainer executes. Feature column is the melt INDEX (sentinel =
-    * `features.size`); [[searchLevelWithStats]] decodes it to names. */
-  private[graft] def searchLevelFrame(
+    * the argmax payload), pre-collect. Feature column is the melt INDEX
+    * (sentinel = `features.size`); [[searchLevelWithStats]] decodes it to
+    * names. */
+  private def searchLevelFrame(
       df: DataFrame,
       nodeId: Column,
       features: Seq[String],
       targetName: String,
       targets: Seq[Any],
       criterion: Criterion,
-      binEdges: Map[String, Seq[Double]] = Map.empty,
-      cumBuckets: Option[Int] = None,
-      cumRanges: Map[String, (Double, Double)] = Map.empty
+      cumBuckets: Option[Int],
+      cumRanges: Map[String, (Double, Double)]
   ): DataFrame = {
     val k = targets.size
     val base = df.withColumn("__node", nodeId.cast("int")).where(col("__node").isNotNull)
-    val hist = meltedHistogramIdx(base, features, targetName, targets, binEdges,
+    val hist = meltedHistogramIdx(base, features, targetName, targets,
       extraKeys = Seq("__node"))
     // index-keyed ranges for the bucket chain (the sentinel index is absent
     // from the map and collapses into the last bucket, same as the string
@@ -619,28 +516,18 @@ object SplitSearch {
       .select(col("__node"), col("feature"), col("w.p.*"))
   }
 
-  /** Binned-mode fast path: ONE [[graft.functions.MultiFeatureHistogram]]
-    * aggregate job (no melt — a single pass over un-exploded rows, buffer
-    * = (F+1) x (B+1) x K longs merged to one row) and the entire gain
-    * computation on the driver. Requires bin edges for every feature and
-    * non-null targets; candidate set, counts, tie-breaks, and float
-    * association order mirror the DataFrame pipeline exactly (equality is
-    * asserted in SplitSearchSpec).
+  /** Binned-mode level search: ONE [[graft.functions.MultiFeatureHistogram]]
+    * aggregate job per tree LEVEL (no melt — a single pass over un-exploded
+    * rows; the buffer = nodes x (F+1) x (B+1) x K longs merged to one row)
+    * and the entire gain computation on the driver. Requires bin edges for
+    * every splittable feature (all-null features have none and are
+    * skipped) and non-null targets. On null-free features with finite
+    * edges, candidate set, counts, tie-breaks, and float association order
+    * match the exact [[searchWithStats]] run over [[snapToEdges]]-snapped
+    * features (asserted in SplitSearchSpec). Unlike the snap, null feature
+    * values count in no bin, and an interior +Inf edge keeps its own bin
+    * apart from NaN. Nodes with no rows are absent from the result map.
     */
-  def searchWithStatsAggregated(
-      df: DataFrame,
-      features: Seq[String],
-      targetName: String,
-      targets: Seq[Any],
-      criterion: Criterion,
-      binEdges: Map[String, Seq[Double]]
-  ): NodeSearch =
-    searchLevelAggregated(df, lit(0), 1, features, targetName, targets, criterion, binEdges)(0)
-
-  /** Level-wise twin of [[searchWithStatsAggregated]]: one
-    * [[graft.functions.MultiFeatureHistogram]] job per tree LEVEL (the
-    * aggregate buffer carries a node dimension), gain math on the driver.
-    * Nodes with no rows are absent from the result map. */
   def searchLevelAggregated(
       df: DataFrame,
       nodeId: Column,

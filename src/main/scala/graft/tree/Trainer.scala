@@ -8,12 +8,17 @@ import org.apache.spark.storage.StorageLevel
   * DataFrame dataflow — the Spark-native rebuild of the reference's
   * Polars-backed `DecisionTreeClassifier` (reference: efficient_trees/tree.py:16-385).
   *
-  * Execution shape per tree node: ONE Spark job
-  * ([[SplitSearch.searchWithStats]]) that returns every feature's best
-  * split AND the node's class distribution; the children's distributions
-  * fall out of the winner's cumulative counts, so leaves cost zero jobs.
-  * The reference runs ~3 executions per node (per-feature `collect_all`
-  * fan-out + mask collect + distribution collect, tree.py:339-372).
+  * Execution shape: ONE level-wise loop. Each tree level runs ONE Spark
+  * job that answers every pending node at once — per-feature best splits
+  * AND each node's class distribution; the children's distributions fall
+  * out of the winner's cumulative counts, so leaves cost zero jobs. The
+  * per-level search is chosen by `maxBins`: exact mode runs
+  * [[SplitSearch.searchLevelWithStats]] (int-keyed melt + cumulative
+  * sums), binned mode runs [[SplitSearch.searchLevelAggregated]] (one
+  * [[graft.functions.MultiFeatureHistogram]] aggregate + driver gain
+  * math). The reference runs ~3 executions per NODE (per-feature
+  * `collect_all` fan-out + mask collect + distribution collect,
+  * tree.py:339-372).
   *
   * @param maxDepth       depth cap; at `depth >= maxDepth` a majority-class
   *                       leaf is emitted (reference: tree.py:202-203)
@@ -36,9 +41,9 @@ import org.apache.spark.storage.StorageLevel
   * @param criterion      entropy or gini (reference: enums.py:8-14)
   * @param maxBins        when set, candidate thresholds per feature are
   *                       restricted to `maxBins` approximate quantile edges
-  *                       computed ONCE on the training data (MLlib-style).
-  *                       This bounds the per-feature cumulative-count window
-  *                       partition at maxBins+1 rows — the scale-safe mode
+  *                       computed ONCE on the training data (MLlib-style),
+  *                       and every level is one single-pass histogram
+  *                       aggregate over un-melted rows — the scale-safe mode
   *                       for continuous features, where exact mode's
   *                       candidate set (every distinct value) would put O(n)
   *                       rows in a single window task. Counts at the chosen
@@ -52,29 +57,17 @@ import org.apache.spark.storage.StorageLevel
   *                       results, bounded window partitions, still one
   *                       query per level (two tiny broadcast side
   *                       aggregates, no checkpoint). Ignored when maxBins
-  *                       already bounds the windows.
-  * @param useAggregatedHistogram binned mode's fast path (default on): the
-  *                       single-pass [[graft.functions.MultiFeatureHistogram]]
-  *                       aggregate replaces the melt + window pipeline —
-  *                       no (#features+1)x row explosion, one tiny-row
-  *                       merge instead of a histogram shuffle, gain math
-  *                       on the driver. Same splits; stored gain metadata
-  *                       can differ in the last ulp vs the pipeline path.
-  * @param cacheNodes     persist each node's rows (MEMORY_AND_DISK) for the
-  *                       duration of its subtree build. The reference's
-  *                       lazy/streaming mode re-derives every node from the
-  *                       root scan through the stacked filters instead
-  *                       (tree.py:233-234, SURVEY.md §3 EP1) — set false to
-  *                       reproduce that recompute-everything behavior (lower
-  *                       memory, more scans). On a cluster, cached node data
-  *                       spills to executor-local disk, so this is the
-  *                       out-of-core analogue of the reference's streaming
-  *                       engine, with strictly fewer input rescans.
-  * @param checkpointDepthInterval every this-many levels, truncate plan
-  *                       lineage with `localCheckpoint` — stacked filters
-  *                       grow the logical plan linearly with depth and
-  *                       Catalyst analysis cost superlinearly
-  *                       (SURVEY.md §7 hard-part 2). 0 disables.
+  *                       is set.
+  * @param cacheNodes     persist the training rows (MEMORY_AND_DISK) for the
+  *                       duration of the build. The reference's
+  *                       lazy/streaming mode re-derives every level from the
+  *                       root scan instead (tree.py:233-234, SURVEY.md §3
+  *                       EP1) — set false to reproduce that
+  *                       recompute-everything behavior (lower memory, more
+  *                       scans). On a cluster, cached data spills to
+  *                       executor-local disk, so this is the out-of-core
+  *                       analogue of the reference's streaming engine, with
+  *                       strictly fewer input rescans.
   */
 final case class DecisionTreeClassifier(
     maxDepth: Option[Int] = None,
@@ -83,10 +76,7 @@ final case class DecisionTreeClassifier(
     criterion: Criterion = Criterion.Entropy,
     maxBins: Option[Int] = None,
     exactCumulativePartitions: Option[Int] = None,
-    useAggregatedHistogram: Boolean = true,
-    levelWise: Boolean = true,
-    cacheNodes: Boolean = true,
-    checkpointDepthInterval: Int = 0
+    cacheNodes: Boolean = true
 ) {
 
   /** Level-wise construction state: the partially built tree, where
@@ -102,20 +92,20 @@ final case class DecisionTreeClassifier(
   /** Train. Pipeline mirrors the reference's `fit` (tree.py:79-115):
     * schema introspection -> (dtype shrink: a no-op under Tungsten) ->
     * target-encode categoricals -> collect distinct targets ->
-    * (maxBins mode: one approxQuantile pass for bin edges) ->
-    * recursive build.
+    * (maxBins mode: one [[graft.functions.MultiQuantileSketch]] pass for
+    * bin edges) -> level-wise build.
     */
   def fit(data: DataFrame, targetName: String): DecisionTreeModel = {
     val featureNames = data.schema.fieldNames.filterNot(_ == targetName).toSeq
     val targetType = data.schema(targetName).dataType
 
     // NULL targets are excluded up front: `=== lit(null)` never matches, so
-    // a null class could never accrue histogram counts — the pipeline path
-    // would still count those rows in count_examples while the aggregated
-    // path dropped them (different trees per useAggregatedHistogram), and an
-    // all-null node would throw "majority of empty node". One filter makes
-    // every path see identical data. (The reference never defines null-target
-    // behavior; its examples fill_null before fit — amex_default.py:23.)
+    // a null class could never accrue histogram counts — the exact melt
+    // would still count those rows in count_examples while the binned
+    // histogram dropped them, and an all-null node would throw "majority of
+    // empty node". One filter makes both searches see identical data. (The
+    // reference never defines null-target behavior; its examples fill_null
+    // before fit — amex_default.py:23.)
     val nonNullTarget = data.where(col(targetName).isNotNull)
 
     val (encoded0, mappings) =
@@ -135,7 +125,7 @@ final case class DecisionTreeClassifier(
       if (shrinkDtype && doubleFeatures.nonEmpty) {
         // one select, not a withColumn fold — each withColumn re-analyzes
         // the accumulated plan, O(width^2) driver time at 190 features
-        // (the same hazard WidePhaseProbe measured in the bench harness)
+        // (measured on the 190-feature bench fit)
         val shrinkSet = doubleFeatures.filter(f =>
           // absent = all-null/all-NaN feature: the cast is a no-op either way
           absMax(f).forall(_ <= Float.MaxValue.toDouble)).toSet
@@ -224,12 +214,7 @@ final case class DecisionTreeClassifier(
         }.toMap
       } else Map.empty
 
-    val tree =
-      if (levelWise)
-        buildTreeLevelWise(encoded, featureNames, targetName, targets, binEdges, cumRanges)
-      else
-        buildTree(encoded, featureNames, targetName, targets, binEdges, cumRanges,
-          depth = 0, inheritedDist = None)
+    val tree = trainLevels(encoded, featureNames, targetName, targets, binEdges, cumRanges)
     DecisionTreeModel(tree, mappings, targetType)
   }
 
@@ -241,13 +226,13 @@ final case class DecisionTreeClassifier(
     * mode) that answers every pending node at once — rows are routed to
     * their pending node by a when-chain id expression over the partial
     * tree. Jobs per tree = depth, not node count; the source is cached
-    * once instead of per node. Identical trees to the depth-first builder
-    * (node membership and per-node math are the same; asserted in
+    * once. Node membership follows the reference's filter/negated-filter
+    * recursion (tree.py:351-358; pinned against RefTree in TreeSpec and
     * SplitSearchSpec). The id when-chain has one branch per node at the
     * current frontier, so keep depth <= ~12 (the reference's own examples
     * cap at 4-8).
     */
-  private def buildTreeLevelWise(
+  private def trainLevels(
       data: DataFrame,
       featureNames: Seq[String],
       targetName: String,
@@ -265,7 +250,8 @@ final case class DecisionTreeClassifier(
 
     /** Pre-order pending-node id routing expression over the partial tree.
       * NULL id = row sits in a finalized leaf or drops out at a NULL split
-      * feature (3-valued logic — same as the recursive builder's filters). */
+      * feature (3-valued logic — the reference's mask + ~mask drops
+      * NULL-feature rows from both children, tree.py:351-358). */
     def idExpr(b: Building): org.apache.spark.sql.Column = {
       var idx = -1
       def walk(n: Building): org.apache.spark.sql.Column = n match {
@@ -316,13 +302,16 @@ final case class DecisionTreeClassifier(
           val numPendings = countPendings(tree)
           val nodeId = idExpr(tree)
           val results: Map[Int, SplitSearch.NodeSearch] =
-            if (binEdges.nonEmpty && useAggregatedHistogram)
+            // binEdges is empty in exact mode, and in maxBins mode only when
+            // every feature is all-null — then the exact search (which finds
+            // no candidates either) still answers the node distributions
+            if (binEdges.nonEmpty)
               SplitSearch.searchLevelAggregated(source, nodeId, numPendings,
                 featureNames, targetName, targets, criterion, binEdges)
             else
               SplitSearch.searchLevelWithStats(source, nodeId,
-                featureNames, targetName, targets, criterion, binEdges,
-                if (binEdges.isEmpty) exactCumulativePartitions else None, cumRanges)
+                featureNames, targetName, targets, criterion,
+                exactCumulativePartitions, cumRanges)
           var idx = -1
           def rebuild(b: Building): Building = b match {
             case s: BSplit => s.copy(left = rebuild(s.left), right = rebuild(s.right))
@@ -376,64 +365,5 @@ final case class DecisionTreeClassifier(
     val counts = df.groupBy(col(targetName)).agg(count(lit(1)).as("n"))
       .collect().map(r => r.get(0) -> r.getAs[Long]("n")).toMap
     targets.map(t => counts.getOrElse(t, 0L))
-  }
-
-  /** Recursive node build (reference: tree.py:180-385). */
-  private def buildTree(
-      data: DataFrame,
-      featureNames: Seq[String],
-      targetName: String,
-      targets: Seq[Any],
-      binEdges: Map[String, Seq[Double]],
-      cumRanges: Map[String, (Double, Double)],
-      depth: Int,
-      inheritedDist: Option[Seq[Long]]
-  ): TreeNode = {
-    if (maxDepth.exists(depth >= _)) {
-      // Depth-capped leaf: zero Spark jobs when the parent handed us the
-      // distribution (always, except a root-level cap).
-      val dist = inheritedDist.getOrElse(distributionJob(data, targetName, targets))
-      return LeafNode(majorityFromDist(dist, targets))
-    }
-
-    val node = {
-      val checkpointed =
-        if (checkpointDepthInterval > 0 && depth > 0 && depth % checkpointDepthInterval == 0)
-          data.localCheckpoint(eager = false)
-        else data
-      if (cacheNodes) checkpointed.persist(StorageLevel.MEMORY_AND_DISK) else checkpointed
-    }
-    try {
-      // Binned mode takes the single-pass aggregate fast path (no melt,
-      // driver-side gain math); exact mode runs the DataFrame pipeline.
-      val search =
-        if (binEdges.nonEmpty && useAggregatedHistogram)
-          SplitSearch.searchWithStatsAggregated(
-            node, featureNames, targetName, targets, criterion, binEdges)
-        else
-          SplitSearch.searchWithStats(
-            node, featureNames, targetName, targets, criterion, binEdges,
-            if (binEdges.isEmpty) exactCumulativePartitions else None, cumRanges)
-      search.best match {
-        case Some(cs) if cs.candidate.informationGain > 0 =>
-          val c = cs.candidate
-          // Split by re-applying the predicate on each side — same 3-valued
-          // semantics as the reference's materialized mask + ~mask
-          // (tree.py:351-358): NULL-feature rows leave both children.
-          val pred = col(c.feature).cast("double") <= lit(c.threshold)
-          val leftDist = cs.leftClassCounts
-          val rightDist = cs.featureClassTotals.zip(cs.leftClassCounts).map { case (t, l) => t - l }
-          val left = buildTree(node.where(pred), featureNames, targetName, targets,
-            binEdges, cumRanges, depth + 1, Some(leftDist))
-          val right = buildTree(node.where(!pred), featureNames, targetName, targets,
-            binEdges, cumRanges, depth + 1, Some(rightDist))
-          SplitNode(c.feature, c.threshold, c.informationGain, c.parentCriterion,
-            search.nodeDistribution, left, right)
-        case _ =>
-          LeafNode(majorityFromDist(search.nodeDistribution, targets))
-      }
-    } finally {
-      if (cacheNodes) node.unpersist(blocking = false)
-    }
   }
 }

@@ -126,6 +126,20 @@ class MultimodalSpec extends AnyFunSuite {
     assert(plan.forall(_.getAs[Int]("n_kept") == 0))
   }
 
+  test("ImageCodec closes its stream on undecodable bytes and on success") {
+    final class Tracked(bytes: Array[Byte]) extends javax.imageio.stream.MemoryCacheImageInputStream(
+        new java.io.ByteArrayInputStream(bytes)) {
+      var closes = 0
+      override def close(): Unit = { closes += 1; super.close() }
+    }
+    val garbage = new Tracked(Array[Byte](1, 2, 3, 4, 5, 6, 7, 8))
+    assert(Multimodal.ImageCodec.decodeStream(garbage).isEmpty)
+    assert(garbage.closes >= 1, "stream leaked on the ImageIO.read null path")
+    val good = new Tracked(png(1))
+    assert(Multimodal.ImageCodec.decodeStream(good).map(_.getWidth).contains(8))
+    assert(good.closes >= 1)
+  }
+
   test("ImageCodec decodes a real checked-in PNG fixture to its true dims and pixels") {
     // fixture: 8x5 8-bit grayscale, pixel(x,y) = (x*7 + y*13) % 256
     val in = getClass.getResourceAsStream("/graft/fixture_8x5.png")

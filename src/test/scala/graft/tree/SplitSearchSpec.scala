@@ -1,13 +1,15 @@
 package graft.tree
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
 /** Hand-computed split-search values on a tiny fixture, plus agreement
-  * between the oracle-shaped pipeline and the trainer's single-job path. */
+  * between the oracle-shaped pipeline, the trainer's exact single-job
+  * path, and the binned histogram search. */
 class SplitSearchSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
@@ -95,6 +97,9 @@ class SplitSearchSpec extends AnyFunSuite {
   }
 
   test("aggregated single-pass histogram search matches the DataFrame pipeline") {
+    // the binned search (MultiFeatureHistogram + driver gain math) must
+    // equal the exact melt pipeline run over the same rows with every
+    // feature snapped to its bin edge: same candidate set, exact counts
     val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
     val features = Seq("l_quantity", "l_discount", "l_tax", "l_extendedprice")
     val targets = Seq[Any]("A", "N", "R")
@@ -103,15 +108,17 @@ class SplitSearchSpec extends AnyFunSuite {
       "l_discount" -> Seq(0.02, 0.05, 0.08),
       "l_tax" -> Seq(0.03, 0.06),
       "l_extendedprice" -> Seq(10000.0, 30000.0, 60000.0, 90000.0))
+    val snapped = li.select(features.map(f =>
+      SplitSearch.snapToEdges(col(f).cast("double"), edges(f)).as(f)) :+ col("l_returnflag"): _*)
     for (crit <- Seq(Criterion.Entropy, Criterion.Gini)) {
       val viaPipeline = SplitSearch.searchWithStats(
-        li, features, "l_returnflag", targets, crit, edges)
-      val viaAggregate = SplitSearch.searchWithStatsAggregated(
-        li, features, "l_returnflag", targets, crit, edges)
+        snapped, features, "l_returnflag", targets, crit)
+      val viaAggregate = SplitSearch.searchLevelAggregated(
+        li, lit(0), 1, features, "l_returnflag", targets, crit, edges)(0)
       assert(viaAggregate.nodeDistribution == viaPipeline.nodeDistribution)
       val p = viaPipeline.candidates.map(c => c.candidate.feature -> c).toMap
       val a = viaAggregate.candidates.map(c => c.candidate.feature -> c).toMap
-      assert(a.keySet == p.keySet)
+      assert(a.keySet == p.keySet && a.size == features.size)
       a.foreach { case (f, ca) =>
         val cp = p(f)
         assert(ca.candidate.threshold == cp.candidate.threshold, s"$f threshold")
@@ -123,79 +130,44 @@ class SplitSearchSpec extends AnyFunSuite {
     }
   }
 
-  test("aggregated and pipeline binned trainers build the same tree") {
-    val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-      .select("l_quantity", "l_discount", "l_tax", "l_extendedprice", "l_returnflag")
-    val fast = DecisionTreeClassifier(maxDepth = Some(3), maxBins = Some(16)).fit(li, "l_returnflag")
-    val slow = DecisionTreeClassifier(maxDepth = Some(3), maxBins = Some(16),
-      useAggregatedHistogram = false).fit(li, "l_returnflag")
-    // identical structure/thresholds/distributions; stored gain metadata
-    // may differ in the last ulp between the column-expression and
-    // driver-side float paths
-    def same(a: TreeNode, b: TreeNode): Boolean = (a, b) match {
-      case (LeafNode(x), LeafNode(y)) => x == y
-      case (SplitNode(f1, t1, g1, c1, d1, l1, r1), SplitNode(f2, t2, g2, c2, d2, l2, r2)) =>
-        f1 == f2 && t1 == t2 && d1 == d2 &&
-          math.abs(g1 - g2) < 1e-12 && math.abs(c1 - c2) < 1e-12 &&
-          same(l1, l2) && same(r1, r2)
-      case _ => false
-    }
-    assert(same(fast.tree, slow.tree), s"\nfast: ${fast.tree}\nslow: ${slow.tree}")
-  }
-
-  test("level-wise trainer builds the identical tree to the depth-first trainer") {
-    val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-      .select("l_quantity", "l_discount", "l_tax", "l_extendedprice", "l_returnflag")
-    for (crit <- Seq(Criterion.Entropy, Criterion.Gini)) {
-      val level = DecisionTreeClassifier(maxDepth = Some(3), criterion = crit)
-        .fit(li, "l_returnflag")
-      val depthFirst = DecisionTreeClassifier(maxDepth = Some(3), criterion = crit,
-        levelWise = false).fit(li, "l_returnflag")
-      assert(level.tree == depthFirst.tree, s"${crit.name} trees differ")
-    }
-  }
-
-  test("level-wise binned (aggregated) trainer matches depth-first binned pipeline") {
-    val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-      .select("l_quantity", "l_discount", "l_tax", "l_extendedprice", "l_returnflag")
-    val level = DecisionTreeClassifier(maxDepth = Some(3), maxBins = Some(16))
-      .fit(li, "l_returnflag")
-    val depthFirst = DecisionTreeClassifier(maxDepth = Some(3), maxBins = Some(16),
-      levelWise = false, useAggregatedHistogram = false).fit(li, "l_returnflag")
-    def same(a: TreeNode, b: TreeNode): Boolean = (a, b) match {
-      case (LeafNode(x), LeafNode(y)) => x == y
-      case (SplitNode(f1, t1, g1, _, d1, l1, r1), SplitNode(f2, t2, g2, _, d2, l2, r2)) =>
-        f1 == f2 && t1 == t2 && d1 == d2 && math.abs(g1 - g2) < 1e-12 &&
-          same(l1, l2) && same(r1, r2)
-      case _ => false
-    }
-    assert(same(level.tree, depthFirst.tree))
-  }
-
-  test("level-wise null routing matches depth-first on null-laden data") {
+  test("level-wise null routing matches RefTree on null-laden data") {
     // nulls in the split features: rows must drop out of BOTH children at
-    // the level-wise id when-chain exactly as they do in the recursive
-    // builder's filter/negated-filter pair
+    // the level-wise id when-chain, as in the reference's mask + ~mask
+    // recursion that RefTree reproduces. shrinkDtype = false keeps the
+    // Gaussian values off the f32 grid RefTree does not model.
     val rnd = new scala.util.Random(5)
-    val rows = (0 until 200).map { i =>
+    val vals = (0 until 200).map { i =>
       val c = i % 2
-      Row(
-        if (i % 7 == 0) null else java.lang.Double.valueOf(c * 2.0 + rnd.nextGaussian()),
-        if (i % 11 == 0) null else java.lang.Double.valueOf(3.0 - c + rnd.nextGaussian()),
+      (if (i % 7 == 0) None else Some(c * 2.0 + rnd.nextGaussian()),
+        if (i % 11 == 0) None else Some(3.0 - c + rnd.nextGaussian()),
         c)
+    }
+    val rows = vals.map { case (f1, f2, c) =>
+      Row(f1.map(Double.box).orNull, f2.map(Double.box).orNull, c)
     }
     val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3),
       StructType(Seq(StructField("f1", DoubleType, nullable = true),
         StructField("f2", DoubleType, nullable = true),
         StructField("target", IntegerType))))
-    val level = DecisionTreeClassifier(maxDepth = Some(3)).fit(df, "target")
-    val depthFirst = DecisionTreeClassifier(maxDepth = Some(3), levelWise = false)
-      .fit(df, "target")
-    assert(level.tree == depthFirst.tree)
+    val refRows = vals.map { case (f1, f2, _) => Map("f1" -> f1, "f2" -> f2) }
+    def same(a: TreeNode, b: TreeNode): Boolean = (a, b) match {
+      case (LeafNode(x), LeafNode(y)) => x == y
+      case (SplitNode(f1, t1, g1, c1, d1, l1, r1), SplitNode(f2, t2, g2, c2, d2, l2, r2)) =>
+        f1 == f2 && t1 == t2 && d1 == d2 &&
+          math.abs(g1 - g2) < 1e-9 && math.abs(c1 - c2) < 1e-9 &&
+          same(l1, l2) && same(r1, r2)
+      case _ => false
+    }
+    for (crit <- Seq(Criterion.Entropy, Criterion.Gini)) {
+      val model = DecisionTreeClassifier(maxDepth = Some(3), criterion = crit,
+        shrinkDtype = false).fit(df, "target")
+      val ref = RefTree.fit(refRows, vals.map(_._3), Seq("f1", "f2"), crit, maxDepth = 3)
+      assert(model.tree.depth == 3, s"${crit.name}: too shallow to exercise routing")
+      assert(same(model.tree, ref.tree), s"${crit.name}\nengine: ${model.tree}\nref: ${ref.tree}")
+    }
   }
 
   test("snapToEdges: exact counts at edges, +inf catch-all") {
-    import org.apache.spark.sql.functions._
     val vals = spark.range(1, 101).select((col("id").cast("double") / 10.0).as("v"))
     val edges = Seq(2.0, 5.0, 8.0)
     val snapped = vals.select(SplitSearch.snapToEdges(col("v"), edges).as("s"))
@@ -207,11 +179,34 @@ class SplitSearchSpec extends AnyFunSuite {
   }
 
   test("binned search gives exact gain at a chosen edge") {
-    val search = SplitSearch.searchWithStats(df, Seq("x"), "target", Seq(0, 1),
-      Criterion.Entropy, binEdges = Map("x" -> Seq(2.0, 3.0)))
+    val search = SplitSearch.searchLevelAggregated(df, lit(0), 1, Seq("x"), "target", Seq(0, 1),
+      Criterion.Entropy, Map("x" -> Seq(2.0, 3.0)))(0)
     val exact = SplitSearch.bestSplit(df, Seq("x"), "target", Seq(0, 1), Criterion.Entropy).get
     val b = search.best.get.candidate
     // 2.0 is in the edge set, so the binned winner must equal the exact one
     assert(b == exact)
+  }
+
+  test("binned search bins +Inf apart from NaN and -0.0 with 0.0") {
+    // an interior +Inf edge is a real threshold: +Inf rows sit on it, NaN
+    // rows (above every value in Spark's ordering) go right of it; -0.0
+    // and 0.0 compare equal, so both land on the -0.0 edge's bin
+    val rows = Seq(
+      Row(1.0, -0.0, 0), Row(Double.PositiveInfinity, 0.0, 0), Row(Double.PositiveInfinity, 0.0, 0),
+      Row(Double.NaN, 1.0, 1), Row(Double.NaN, 1.0, 1), Row(null, 1.0, 1))
+    val d = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2),
+      StructType(Seq(StructField("x", DoubleType, nullable = true),
+        StructField("z", DoubleType), StructField("target", IntegerType))))
+    val s = SplitSearch.searchLevelAggregated(d, lit(0), 1, Seq("x", "z"), "target", Seq(0, 1),
+      Criterion.Entropy, Map("x" -> Seq(1.0, Double.PositiveInfinity), "z" -> Seq(-0.0, 0.0, 1.0)))(0)
+    assert(s.nodeDistribution == Seq(3L, 3L))
+    val byFeature = s.candidates.map(c => c.candidate.feature -> c).toMap
+    val x = byFeature("x")
+    assert(x.candidate.threshold == Double.PositiveInfinity)
+    assert(x.leftClassCounts == Seq(3L, 0L) && x.featureClassTotals == Seq(3L, 2L))
+    val z = byFeature("z")
+    assert(z.candidate.threshold.equals(-0.0))
+    assert(z.leftClassCounts == Seq(3L, 0L) && z.featureClassTotals == Seq(3L, 3L))
+    assert(s.best.get.candidate.feature == "z") // a pure split, gain 1
   }
 }

@@ -123,23 +123,21 @@ class TreeSpec extends AnyFunSuite {
       when(pmod(hash(col("sepal_length"), col("petal_length")), lit(7)) === 0, lit(null))
         .otherwise(col("target")))
     val prefiltered = dirty.where(col("target").isNotNull)
-    for (agg <- Seq(true, false)) {
-      val m1 = DecisionTreeClassifier(maxDepth = Some(3), useAggregatedHistogram = agg)
-        .fit(dirty, "target")
-      val m2 = DecisionTreeClassifier(maxDepth = Some(3), useAggregatedHistogram = agg)
-        .fit(prefiltered, "target")
-      assert(sameTree(m1.tree, m2.tree),
-        s"null-target rows leaked into training (useAggregatedHistogram=$agg)")
+    // exact melt and binned histogram search
+    for (bins <- Seq(None, Some(16))) {
+      val m1 = DecisionTreeClassifier(maxDepth = Some(3), maxBins = bins).fit(dirty, "target")
+      val m2 = DecisionTreeClassifier(maxDepth = Some(3), maxBins = bins).fit(prefiltered, "target")
+      assert(m1.tree.depth == 3, s"tree too shallow to exercise the search (maxBins=$bins)")
+      assert(sameTree(m1.tree, m2.tree), s"null-target rows leaked into training (maxBins=$bins)")
     }
   }
 
   test("degenerate fits: single-class data -> one leaf; empty input fails loudly") {
     val single = makeDf(strTarget = false, withCat = false)
       .withColumn("target", org.apache.spark.sql.functions.lit(1))
-    for (agg <- Seq(true, false)) {
-      val m = DecisionTreeClassifier(maxDepth = Some(3), useAggregatedHistogram = agg)
-        .fit(single, "target")
-      assert(m.tree == LeafNode(1), s"pure node must be a leaf (agg=$agg)")
+    for (bins <- Seq(None, Some(16))) {
+      val m = DecisionTreeClassifier(maxDepth = Some(3), maxBins = bins).fit(single, "target")
+      assert(m.tree == LeafNode(1), s"pure node must be a leaf (maxBins=$bins)")
     }
     val empty = makeDf(strTarget = false, withCat = false).limit(0)
     val e = intercept[Exception](DecisionTreeClassifier(maxDepth = Some(2)).fit(empty, "target"))
@@ -215,6 +213,89 @@ class TreeSpec extends AnyFunSuite {
     preds.foreach { r =>
       val sample = featureNames.zipWithIndex.map { case (f, i) => f -> (r.getDouble(i): Any) }.toMap
       assert(Predict.predictRow(model.tree, sample) == r.getAs[Any]("prediction"))
+    }
+  }
+
+  test("maxBins edge cases: all-null, constant, +Inf edge, NaN, -0.0 features") {
+    // the binned histogram's boundary semantics on adversarial columns:
+    // f_null has no edges; f_const has one; a quarter of f_inf is +Inf, so
+    // the 7/8 quantile is an interior +Inf edge; NaN sorts above every
+    // value (Spark ordering), so it lands in the catch-all bucket; -0.0 and
+    // 0.0 compare equal. Finite values sit on the f32-exact quarter grid,
+    // so the fit's f32 shrink leaves them unchanged.
+    val n = 480
+    val rnd = new scala.util.Random(23)
+    val data: Seq[(Array[java.lang.Double], Int)] = (0 until n).map { i =>
+      val c = i % 3
+      def q(v: Double): Double = math.rint(v * 4) / 4
+      val fInf = if (i % 4 == 0) Double.PositiveInfinity
+        else if (i % 17 == 0) Double.NaN
+        else q(c + rnd.nextGaussian())
+      val fNan = if (i % 5 == 0) Double.NaN else q(2.0 * c + rnd.nextGaussian())
+      val fZero = (c + i % 2) match {
+        case 0 => -0.0
+        case 1 => 0.0
+        case 2 => if (i % 4 < 2) -0.0 else 1.0
+        case _ => -1.0
+      }
+      (Array[java.lang.Double](null, 3.0, fInf, fNan, fZero), c)
+    }
+    val names = Seq("f_null", "f_const", "f_inf", "f_nan", "f_zero")
+    val schema = StructType(names.map(StructField(_, DoubleType, nullable = true)) :+
+      StructField("target", IntegerType, nullable = false))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(
+      data.map { case (vs, c) => Row.fromSeq(vs.toSeq :+ c) }, 4), schema)
+    val model = DecisionTreeClassifier(maxDepth = Some(4), maxBins = Some(8)).fit(df, "target")
+    val used = {
+      def feats(t: TreeNode): Set[String] = t match {
+        case s: SplitNode => Set(s.feature) ++ feats(s.left) ++ feats(s.right)
+        case _: LeafNode  => Set.empty
+      }
+      feats(model.tree)
+    }
+    assert(Set("f_inf", "f_nan", "f_zero").subsetOf(used), s"edge-case features unused: ${model.tree}")
+
+    // every split's targetDistribution == class counts of the rows routed
+    // to it under Spark's comparison semantics (NULL leaves both sides);
+    // its stored gain == the entropy gain recomputed from the routed rows
+    // (this is what checks the histogram's bin counts); every leaf with
+    // rows holds their majority class (depth-capped leaves take theirs
+    // from the histogram's left/right counts)
+    def counts(rows: Seq[(Array[java.lang.Double], Int)]): Seq[Long] =
+      (0 until 3).map(c => rows.count(_._2 == c).toLong)
+    def entropy(cs: Seq[Long]): Double = {
+      val tot = cs.sum.toDouble
+      -cs.filter(_ > 0).map { c => val p = c / tot; p * math.log(p) / math.log(2) }.sum
+    }
+    def routed(t: TreeNode, rows: Seq[(Array[java.lang.Double], Int)]): Unit = t match {
+      case LeafNode(v) =>
+        if (rows.nonEmpty) {
+          val cs = counts(rows)
+          assert(v == cs.indexOf(cs.max), s"leaf $v over class counts $cs")
+        }
+      case s: SplitNode =>
+        val at = s"split ${s.feature} <= ${s.threshold}"
+        assert(s.targetDistribution == counts(rows), s"distribution of $at")
+        val present = rows.filter(_._1(names.indexOf(s.feature)) != null)
+        val (l, r) = present.partition { case (vs, _) =>
+          val v: Double = vs(names.indexOf(s.feature))
+          !v.isNaN && v <= s.threshold
+        }
+        val n = present.size.toDouble
+        val gain = entropy(counts(present)) -
+          (l.size / n * entropy(counts(l)) + r.size / n * entropy(counts(r)))
+        assert(math.abs(s.informationGain - gain) < 1e-9, s"gain of $at: ${s.informationGain} vs $gain")
+        routed(s.left, l)
+        routed(s.right, r)
+    }
+    routed(model.tree, data)
+
+    // differential: local walker == engine scorer on every row
+    val preds = Predict.predictMany(model, df).collect()
+    assert(preds.length == n)
+    preds.foreach { r =>
+      val sample = names.zipWithIndex.map { case (f, i) => f -> r.get(i) }.toMap
+      assert(Predict.predictRow(model.tree, sample) == r.getAs[Any]("prediction"), s"at $sample")
     }
   }
 
