@@ -3,9 +3,8 @@ package graft.functions
 import java.nio.ByteBuffer
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** One-pass multi-feature class-count histogram — the custom memory
@@ -112,7 +111,8 @@ case class MultiFeatureHistogram(
     buffer
   }
 
-  override def eval(buffer: Array[Long]): Any = new GenericArrayData(buffer)
+  // primitive copy; a GenericArrayData would box every cell into an Array[Any]
+  override def eval(buffer: Array[Long]): Any = UnsafeArrayData.fromPrimitiveArray(buffer)
 
   override def serialize(buffer: Array[Long]): Array[Byte] = {
     val bb = ByteBuffer.allocate(bufferLen * 8)

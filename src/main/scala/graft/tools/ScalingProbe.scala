@@ -527,7 +527,7 @@ object ScalingProbe {
       ("fit_depth4_entropy_scalable", Seq(1, 10), nx => {
         val df = fitDf(nx)
         val model = DecisionTreeClassifier(maxDepth = Some(4),
-          criterion = Criterion.Entropy, exactCumulativePartitions = Some(32))
+          criterion = Criterion.Entropy)
           .fit(df, "l_returnflag")
         graft.tree.Predict.predictMany(model, df)
           .write.format("noop").mode("overwrite").save()
@@ -1067,7 +1067,7 @@ object ScalingProbe {
       measure("fit_depth4_entropy_scalable", fitRows(10)) {
         val df = fitDf(10)
         val model = DecisionTreeClassifier(maxDepth = Some(4),
-          criterion = Criterion.Entropy, exactCumulativePartitions = Some(32))
+          criterion = Criterion.Entropy)
           .fit(df, "l_returnflag")
         graft.tree.Predict.predictMany(model, df)
           .write.format("noop").mode("overwrite").save()

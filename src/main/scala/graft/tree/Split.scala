@@ -15,15 +15,19 @@ import org.apache.spark.sql.types.DoubleType
   * class proportions -> criterion (entropy or gini) -> weighted child
   * criterion -> information gain -> top-1 per feature.
   *
-  * Spark-first architecture: instead of the reference's one-lazy-plan-per-
-  * feature fan-out joined by `pl.collect_all` (tree.py:338-339), we *melt*
-  * all feature columns into (feature, feature_value, target) rows with a
-  * single `explode` and run ONE aggregation job for every feature at once:
-  * one scan, one partial-aggregated shuffle keyed by (feature, value), then
-  * windows over the tiny post-aggregation frame partitioned by feature.
-  * At cluster scale this replaces k full input scans with 1, and the
-  * shuffle volume is bounded by the number of distinct (feature, value)
-  * pairs, not the row count (hash aggregation does map-side combine).
+  * Two formulations live here. The reference-shaped pipeline
+  * ([[meltedHistogram]] -> [[cumulativeCounts]] -> [[gainPerThreshold]] ->
+  * [[bestSplit]]) *melts* all feature columns into (feature, feature_value,
+  * target) rows with a single `explode`, aggregates by (feature, value) and
+  * runs windows per feature: the relational encoding, kept for the oracle
+  * entries and as the tests' yardstick. The trainer instead runs each tree
+  * level as ONE native aggregate over un-melted rows —
+  * [[graft.functions.ExactHistogram]] (exact thresholds, sparse value keys)
+  * or [[graft.functions.MultiFeatureHistogram]] (binned, dense bin index)
+  * — and one shared driver-side gain scan ([[bestThreshold]]) that
+  * reproduces the pipeline's gains bit for bit. Either way one scan
+  * answers every feature, where the reference fans out one plan per
+  * feature joined by `pl.collect_all` (tree.py:338-339).
   */
 object SplitSearch {
 
@@ -124,11 +128,10 @@ object SplitSearch {
     * an unbounded window. Post-aggregation frames are tiny — at most the
     * number of distinct feature values — so the per-feature window is cheap).
     */
-  def cumulativeCounts(hist: DataFrame, numClasses: Int,
-      keyCols: Seq[String] = Seq("feature")): DataFrame = {
-    val wCum = Window.partitionBy(keyCols.map(col): _*).orderBy("feature_value")
+  def cumulativeCounts(hist: DataFrame, numClasses: Int): DataFrame = {
+    val wCum = Window.partitionBy("feature").orderBy("feature_value")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wAll = Window.partitionBy(keyCols.map(col): _*)
+    val wAll = Window.partitionBy("feature")
     val cums = (0 until numClasses).flatMap { i =>
       Seq(
         sum(col(s"class_${i}_count")).over(wCum).as(s"cum_sum_class_${i}_count"),
@@ -138,7 +141,7 @@ object SplitSearch {
       sum(col("count_examples")).over(wCum).as("cum_sum_count_examples"),
       sum(col("count_examples")).over(wAll).as("sum_count_examples")
     )
-    hist.select((keyCols.map(col) ++ Seq(col("feature_value")) ++ cums): _*)
+    hist.select((Seq(col("feature"), col("feature_value")) ++ cums): _*)
   }
 
   /** Scale-safe twin of [[cumulativeCounts]] for EXACT mode on continuous
@@ -146,15 +149,15 @@ object SplitSearch {
     * rows in a single task. A fully declarative distributed prefix sum —
     * ONE query, no checkpoint, no repartition sampling, no driver collect:
     *
-    *  1. per-key min/max of `feature_value` (a tiny order-independent
+    *  1. per-feature min/max of `feature_value` (a tiny order-independent
     *     aggregate, broadcast back) defines `numBuckets` uniform value
     *     ranges; the bucket id is a monotonic codegen'd arithmetic
     *     expression, so every cumulative window partition is bounded by
     *     one bucket's worth of distinct values;
-    *  2. per-(key, bucket) totals -> exclusive prefix offsets + key grand
-    *     totals, via windows over the tiny totals frame (<= keys x
-    *     buckets rows), broadcast back;
-    *  3. running sums inside each (key, bucket) window plus the offsets.
+    *  2. per-(feature, bucket) totals -> exclusive prefix offsets + feature
+    *     grand totals, via windows over the tiny totals frame (<= features
+    *     x buckets rows), broadcast back;
+    *  3. running sums inside each (feature, bucket) window plus the offsets.
     *
     * The histogram subplan feeds the min/max branch, the totals branch,
     * and the final window; its shuffle runs once and is ReusedExchange'd
@@ -170,63 +173,41 @@ object SplitSearch {
   def cumulativeCountsPartitioned(
       hist: DataFrame,
       numClasses: Int,
-      numBuckets: Int,
-      keyCols: Seq[String] = Seq("feature"),
-      // keys are compared to the `feature` column with `lit(_)`: feature
-      // NAMES for the oracle-shaped string melt, feature INDICES for the
-      // trainer's int melt (r20 — int equality codegens to a primitive
-      // compare where the string chain paid a per-row UTF8 compare per
-      // branch)
-      featureRanges: Map[Any, (Double, Double)] = Map.empty
+      numBuckets: Int
   ): DataFrame = {
     require(numBuckets >= 1, s"numBuckets must be >= 1, got $numBuckets")
     val countCols = (0 until numClasses).map(i => s"class_${i}_count") :+ "count_examples"
-    val key = keyCols.map(col)
     val fv = col("feature_value")
 
     // NaN sorts above every double in Spark orderings, so NaN rows belong in
     // the last bucket; a constant-valued (or all-NaN) group collapses there
     // too, which keeps the expression total without an ANSI divide-by-zero.
-    def bucketFor(mn: Column, mx: Column): Column =
-      when(isnan(fv) || mx.isNull || mx === mn, lit(numBuckets - 1))
-        .otherwise(least(
-          floor((fv - mn) / ((mx - mn) / lit(numBuckets.toDouble))).cast("int"),
-          lit(numBuckets - 1)))
-    // Callers that know per-feature (min, max) up front (the trainer
-    // computes them once at fit time) get a pure literal bucket expression;
-    // otherwise the ranges come from one extra tiny in-plan aggregate of
-    // the histogram, broadcast back. Features absent from a non-empty map
-    // (e.g. the node sentinel) collapse into the last bucket.
-    val withBucket =
-      if (featureRanges.nonEmpty) {
-        val chain = featureRanges.foldLeft(when(lit(false), lit(0))) {
-          case (c, (f, (mn, mx))) =>
-            c.when(col("feature") === lit(f), bucketFor(lit(mn), lit(mx)))
-        }.otherwise(lit(numBuckets - 1))
-        hist.withColumn("__bkt", chain)
-      } else {
-        val ranges = hist.groupBy(key: _*).agg(
-          min(when(!isnan(fv), fv)).as("__mn"),
-          max(when(!isnan(fv), fv)).as("__mx"))
-        hist.join(broadcast(ranges), keyCols)
-          .withColumn("__bkt", bucketFor(col("__mn"), col("__mx")))
-          .drop("__mn", "__mx")
-      }
+    val ranges = hist.groupBy("feature").agg(
+      min(when(!isnan(fv), fv)).as("__mn"),
+      max(when(!isnan(fv), fv)).as("__mx"))
+    val (mn, mx) = (col("__mn"), col("__mx"))
+    val withBucket = hist.join(broadcast(ranges), "feature")
+      .withColumn("__bkt",
+        when(isnan(fv) || mx.isNull || mx === mn, lit(numBuckets - 1))
+          .otherwise(least(
+            floor((fv - mn) / ((mx - mn) / lit(numBuckets.toDouble))).cast("int"),
+            lit(numBuckets - 1))))
+      .drop("__mn", "__mx")
 
-    val bucketTotals = withBucket.groupBy((keyCols :+ "__bkt").map(col): _*)
+    val bucketTotals = withBucket.groupBy("feature", "__bkt")
       .agg(sum(col(countCols.head)).as(countCols.head),
         countCols.tail.map(c => sum(col(c)).as(c)): _*)
-    val wPrev = Window.partitionBy(key: _*).orderBy("__bkt")
+    val wPrev = Window.partitionBy("feature").orderBy("__bkt")
       .rowsBetween(Window.unboundedPreceding, -1)
-    val wTot = Window.partitionBy(key: _*)
+    val wTot = Window.partitionBy("feature")
     val offsets = bucketTotals.select(
-      (key :+ col("__bkt")) ++
+      Seq(col("feature"), col("__bkt")) ++
         countCols.map(c => coalesce(sum(col(c)).over(wPrev), lit(0L)).as(s"__off_$c")) ++
         countCols.map(c => sum(col(c)).over(wTot).as(s"__tot_$c")): _*)
 
-    val wCum = Window.partitionBy((keyCols :+ "__bkt").map(col): _*).orderBy("feature_value")
+    val wCum = Window.partitionBy("feature", "__bkt").orderBy("feature_value")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val joined = withBucket.join(broadcast(offsets), keyCols :+ "__bkt")
+    val joined = withBucket.join(broadcast(offsets), Seq("feature", "__bkt"))
     val outCols = (0 until numClasses).flatMap { i =>
       val c = s"class_${i}_count"
       Seq(
@@ -236,56 +217,7 @@ object SplitSearch {
       (sum(col("count_examples")).over(wCum) + col("__off_count_examples"))
         .as("cum_sum_count_examples"),
       col("__tot_count_examples").as("sum_count_examples"))
-    joined.select((keyCols.map(col) ++ Seq(col("feature_value")) ++ outCols): _*)
-  }
-
-  /** Trainer-internal melt keyed by feature INDEX (r20 optimization):
-    * `posexplode` over a plain double array replaces the oracle-shaped
-    * [[meltedHistogram]]'s explode of (name string, value) structs on the
-    * fit hot path. Three costs drop at once, none visible in the result:
-    *
-    *   - per melted row the exchange/aggregate key narrows from a
-    *     variable-length UTF8 feature name (~8-16 bytes, hashed and
-    *     compared per row) to a fixed 4-byte int (guide §2.3 "narrower
-    *     types" — at 190 features and 10^8 melted rows per level the name
-    *     bytes dominated the key);
-    *   - the melt projection builds ONE array of F doubles instead of F
-    *     (lit(name), value) structs — no per-row struct headers, and the
-    *     array position IS the feature id, so the id costs zero bytes
-    *     until posexplode materializes it;
-    *   - every downstream keyed operation (partial aggregate, bucket
-    *     chain, winners argmax) compares ints.
-    *
-    * The index->name decode happens once per LEVEL on the collected
-    * winners frame (<= nodes x (F+1) rows), so results are identical to
-    * the string melt (SplitSearchSpec pins the trainer path against the
-    * oracle-shaped pipeline). The node sentinel is index `features.size` —
-    * a lit(0.0) array element, never null, so its one histogram row per
-    * node totals the node's class distribution over ALL rows; a single
-    * distinct value leaves no right-hand side, so it is never a split
-    * candidate. Raw features keep nulls and the post-explode null filter
-    * drops them (tree.py:239).
-    */
-  private def meltedHistogramIdx(
-      df: DataFrame,
-      features: Seq[String],
-      targetName: String,
-      targets: Seq[Any],
-      extraKeys: Seq[String]
-  ): DataFrame = {
-    val packed = array((features.map(f => col(f).cast(DoubleType)) :+
-      lit(0.0)): _*) // node sentinel at index features.size
-    val keyed = extraKeys.map(col)
-    val melted = df
-      .select((keyed :+ col(targetName).as("__target") :+
-        posexplode(packed).as(Seq("feature", "feature_value"))): _*)
-      .where(col("feature_value").isNotNull) // per-feature null filter (tree.py:239)
-    val classCounts = targets.zipWithIndex.map { case (v, i) =>
-      count(when(col("__target") === lit(v), 1)).as(s"class_${i}_count")
-    }
-    melted
-      .groupBy((extraKeys :+ "feature" :+ "feature_value").map(col): _*)
-      .agg(classCounts.head, (classCounts.tail :+ count(lit(1)).as("count_examples")): _*)
+    joined.select((Seq(col("feature"), fv) ++ outCols): _*)
   }
 
   /** Full gain pipeline: histogram -> cumulative counts -> candidate filter
@@ -360,160 +292,56 @@ object SplitSearch {
       .drop("__rn")
   }
 
-  /** The trainer's ONE Spark job per tree node: per-feature best splits AND
-    * the node's class distribution, in a single collect.
-    *
-    * Differences from the oracle-shaped [[bestSplitsPerFeature]] pipeline:
-    *   - a node-sentinel pseudo-feature is melted in, contributing one
-    *     histogram row whose totals are the node's class distribution;
-    *   - instead of filtering out the last cumulative row (F3) and NaN
-    *     gains (F4), the gain is computed as
-    *     `when(valid, gain).otherwise(null)` and the per-feature top-1
-    *     window orders gain DESC NULLS LAST — so a feature with no valid
-    *     candidate (and the sentinel, which never has one) still emits its
-    *     winner row carrying the count columns. Null-gain rows become
-    *     distribution carriers; non-null rows are real candidates.
-    *
-    * Replaces the reference's ~3 executions per node (collect_all fan-out +
-    * mask collect + distribution collect, tree.py:339-372) with one.
+  /** The trainer's per-node search, one Spark job: per-feature best splits
+    * AND the node's class distribution ([[searchLevelExact]] with every row
+    * in node 0). Replaces the reference's ~3 executions per node
+    * (collect_all fan-out + mask collect + distribution collect,
+    * tree.py:339-372) with one.
     */
   def searchWithStats(
       df: DataFrame,
       features: Seq[String],
       targetName: String,
       targets: Seq[Any],
-      criterion: Criterion,
-      cumBuckets: Option[Int] = None,
-      cumRanges: Map[String, (Double, Double)] = Map.empty
+      criterion: Criterion
   ): NodeSearch =
-    searchLevelWithStats(df, lit(0), features, targetName, targets, criterion,
-      cumBuckets, cumRanges)
+    searchLevelExact(df, lit(0), 1, features, targetName, targets, criterion)
       .getOrElse(0, throw new IllegalArgumentException(
         "searchWithStats on empty input data (no rows reached the search)"))
 
-  /** Level-wise generalization of [[searchWithStats]]: `nodeId` assigns
-    * every row to a pending tree node (NULL = row settled in a finalized
-    * leaf or dropped by a NULL split feature — excluded), and ONE job
-    * returns every pending node's candidates + distribution, keyed by id.
-    * This is what makes whole-level training cost one scan: histograms,
-    * windows, and winners are all additionally keyed by `__node`.
+  /** Exact-mode level search: ONE [[graft.functions.ExactHistogram]]
+    * aggregate job per tree LEVEL over un-melted rows. `nodeId` assigns
+    * every row to a pending node in [0, numNodes) (NULL = row settled in a
+    * finalized leaf or dropped by a NULL split feature — excluded). The
+    * aggregate's one binary row carries, per (node, feature), the class
+    * counts of every distinct value; the driver sorts each slot and runs
+    * [[bestThreshold]] over it, so candidates, counts, gains and
+    * tie-breaks equal the reference pipeline's ([[bestSplit]] /
+    * [[gainPerThreshold]], asserted with `==` in SplitSearchSpec). Rows
+    * whose target is not in `targets` count nowhere. Nodes with no rows are
+    * absent from the result map.
     */
-  def searchLevelWithStats(
+  def searchLevelExact(
       df: DataFrame,
       nodeId: Column,
+      numNodes: Int,
       features: Seq[String],
       targetName: String,
       targets: Seq[Any],
-      criterion: Criterion,
-      cumBuckets: Option[Int] = None,
-      cumRanges: Map[String, (Double, Double)] = Map.empty
+      criterion: Criterion
   ): Map[Int, NodeSearch] = {
     val k = targets.size
-    val winners = searchLevelFrame(df, nodeId, features, targetName, targets,
-      criterion, cumBuckets, cumRanges).collect()
-
-    val sentinelIdx = features.size
-    winners.toSeq.groupBy(_.getAs[Int]("__node")).map { case (node, rows) =>
-      val (sentinelRows, featureRows) = rows.partition(_.getAs[Int]("feature") == sentinelIdx)
-      require(sentinelRows.nonEmpty, s"searchLevelWithStats: node $node has no sentinel row")
-      val nodeDist = (0 until k).map(i => sentinelRows.head.getAs[Long](s"sum_class_${i}_count"))
-      val candidates = featureRows
-        .filter(r => !r.isNullAt(r.fieldIndex("information_gain")))
-        .map { r =>
-          CandidateStats(
-            Candidate(
-              features(r.getAs[Int]("feature")),
-              r.getAs[Double]("feature_value"),
-              r.getAs[Double]("information_gain"),
-              r.getAs[Double]("parent_criterion")),
-            (0 until k).map(i => r.getAs[Long](s"cum_sum_class_${i}_count")),
-            (0 until k).map(i => r.getAs[Long](s"sum_class_${i}_count")))
-        }
-      node -> NodeSearch(candidates, nodeDist)
-    }
-  }
-
-  /** The level search's winners DataFrame (one row per (node, feature) with
-    * the argmax payload), pre-collect. Feature column is the melt INDEX
-    * (sentinel = `features.size`); [[searchLevelWithStats]] decodes it to
-    * names. */
-  private def searchLevelFrame(
-      df: DataFrame,
-      nodeId: Column,
-      features: Seq[String],
-      targetName: String,
-      targets: Seq[Any],
-      criterion: Criterion,
-      cumBuckets: Option[Int],
-      cumRanges: Map[String, (Double, Double)]
-  ): DataFrame = {
-    val k = targets.size
-    val base = df.withColumn("__node", nodeId.cast("int")).where(col("__node").isNotNull)
-    val hist = meltedHistogramIdx(base, features, targetName, targets,
-      extraKeys = Seq("__node"))
-    // index-keyed ranges for the bucket chain (the sentinel index is absent
-    // from the map and collapses into the last bucket, same as the string
-    // melt's absent sentinel name)
-    val fIdx: Map[String, Int] = features.zipWithIndex.toMap
-    val idxRanges: Map[Any, (Double, Double)] =
-      cumRanges.collect { case (f, r) if fIdx.contains(f) => (fIdx(f): Any) -> r }
-    val cum = cumBuckets match {
-      case Some(p) => cumulativeCountsPartitioned(hist, k, p,
-        keyCols = Seq("__node", "feature"), featureRanges = idxRanges)
-      case None    => cumulativeCounts(hist, k, keyCols = Seq("__node", "feature"))
-    }
-    // Rows where cum == sum (the per-feature maximum and the sentinel) are
-    // not candidates; under ANSI mode (Spark 4 default) their right-side
-    // proportion would throw DIVIDE_BY_ZERO, so guard it to NULL — the
-    // criterion's 0*log2(0) coalesce then yields 0, and the validity filter
-    // below nulls the gain anyway (the oracle-shaped pipeline instead
-    // filters these rows out before dividing, F3).
-    val hasRight = col("sum_count_examples") > col("cum_sum_count_examples")
-    val proportions = (0 until k).flatMap { i =>
-      Seq(
-        (col(s"cum_sum_class_${i}_count") / col("cum_sum_count_examples"))
-          .as(s"left_proportion_class_$i"),
-        when(hasRight,
-          (col(s"sum_class_${i}_count") - col(s"cum_sum_class_${i}_count")) /
-            (col("sum_count_examples") - col("cum_sum_count_examples")))
-          .as(s"right_proportion_class_$i"),
-        (col(s"sum_class_${i}_count") / col("sum_count_examples"))
-          .as(s"parent_proportion_class_$i")
-      )
-    }
-    val countCols = (0 until k).flatMap(i =>
-      Seq(col(s"cum_sum_class_${i}_count"), col(s"sum_class_${i}_count"))) ++
-      Seq(col("cum_sum_count_examples"), col("sum_count_examples"))
-    val keyed = Seq(col("__node"), col("feature"), col("feature_value"))
-    val withCrit = cum
-      .select((keyed ++ countCols ++ proportions): _*)
-      .select((keyed ++ countCols ++ Seq(
-        criterionExpr("left", k, criterion),
-        criterionExpr("right", k, criterion),
-        criterionExpr("parent", k, criterion))): _*)
-    val rawGain = col("parent_criterion") -
-      (col("cum_sum_count_examples") / col("sum_count_examples") * col("left_criterion") +
-        (col("sum_count_examples") - col("cum_sum_count_examples")) /
-          col("sum_count_examples") * col("right_criterion"))
-    val valid = (col("sum_count_examples") > col("cum_sum_count_examples")) &&
-      !isnan(rawGain) && rawGain.isNotNull
-    val withGain = withCrit.withColumn("information_gain", when(valid, rawGain))
-    // Per-feature argmax as an AGGREGATION, not a window: min over a
-    // (sort-key, payload) struct does map-side combine, so no single task
-    // ever gathers a whole feature's candidate rows (a row_number window
-    // partitioned by (node, feature) would — the one remaining single-task
-    // stage of the exact path at scale). Null gains (distribution-carrier
-    // rows) sort last via the MaxValue key; ties break on feature_value
-    // ASC — same order as (gain DESC NULLS LAST, feature_value ASC).
-    val payload = struct((Seq(col("feature_value"), col("information_gain"),
-      col("parent_criterion")) ++ countCols): _*)
-    val sortKey = struct(
-      coalesce(col("information_gain") * lit(-1.0), lit(Double.MaxValue)).as("k1"),
-      col("feature_value").as("k2"))
-    withGain
-      .groupBy(col("__node"), col("feature"))
-      .agg(min(struct(sortKey.as("k"), payload.as("p"))).as("w"))
-      .select(col("__node"), col("feature"), col("w.p.*"))
+    val bytes = exactLevelQuery(df, nodeId, numNodes, features, targetName, targets)
+      .head().getAs[Array[Byte]](0)
+    val hist = graft.functions.ExactHistogram.decode(bytes, numNodes, features.size, k)
+    (0 until numNodes).flatMap { node =>
+      val nodeDist = hist.nodeTotals.slice(node * k, (node + 1) * k).toVector
+      if (nodeDist.sum == 0) None
+      else Some(node -> NodeSearch(features.indices.flatMap { f =>
+        val (values, counts) = hist.sorted(node, f)
+        bestThreshold(features(f), values, counts, k, criterion)
+      }, nodeDist))
+    }.toMap
   }
 
   /** Binned-mode level search: ONE [[graft.functions.MultiFeatureHistogram]]
@@ -522,11 +350,11 @@ object SplitSearch {
     * and the entire gain computation on the driver. Requires bin edges for
     * every splittable feature (all-null features have none and are
     * skipped) and non-null targets. On null-free features with finite
-    * edges, candidate set, counts, tie-breaks, and float association order
-    * match the exact [[searchWithStats]] run over [[snapToEdges]]-snapped
-    * features (asserted in SplitSearchSpec). Unlike the snap, null feature
-    * values count in no bin, and an interior +Inf edge keeps its own bin
-    * apart from NaN. Nodes with no rows are absent from the result map.
+    * edges, candidate set, counts and gains match the exact
+    * [[searchWithStats]] run over [[snapToEdges]]-snapped features
+    * (asserted in SplitSearchSpec). Unlike the snap, null feature values
+    * count in no bin, and an interior +Inf edge keeps its own bin apart
+    * from NaN. Nodes with no rows are absent from the result map.
     */
   def searchLevelAggregated(
       df: DataFrame,
@@ -538,95 +366,160 @@ object SplitSearch {
       criterion: Criterion,
       binEdges: Map[String, Seq[Double]]
   ): Map[Int, NodeSearch] = {
-    import org.apache.spark.sql.graft.ColumnBridge
     val k = targets.size
     val feats = features.filter(binEdges.contains) // all-null features have no edges
     val edges = feats.map(binEdges)
+    val buffer: Array[Long] = binnedLevelQuery(df, nodeId, numNodes, features, targetName,
+      targets, binEdges).head().getSeq[Long](0).toArray
+    val block = (edges.map(_.size).max + 1) * k
+    val nodeLen = (feats.size + 1) * block
+    (0 until numNodes).flatMap { node =>
+      val base = node * nodeLen
+      val nodeDist = buffer.slice(base + feats.size * block, base + feats.size * block + k)
+        .toVector // node sentinel block, bin 0
+      if (nodeDist.sum == 0) None
+      else Some(node -> NodeSearch(feats.indices.flatMap { f =>
+        val off = base + f * block
+        bestThreshold(feats(f), edges(f).toArray,
+          buffer.slice(off, off + (edges(f).size + 1) * k), k, criterion)
+      }, nodeDist))
+    }.toMap
+  }
+
+  /** Both level searches' input projection: the packed feature array
+    * `__arr`, the class index `__cls` (-1 = no class) and the pending-node
+    * id `__node`. Pre-projected through whole-stage codegen (r21): an
+    * imperative aggregate evaluates its children interpreted per row, so a
+    * bare CreateArray would box every feature of every row (at 190
+    * features that boxing dominated the histogram scan); bound attribute
+    * reads allocate nothing. */
+  private def levelInputs(
+      df: DataFrame,
+      nodeId: Column,
+      features: Seq[String],
+      targetName: String,
+      targets: Seq[Any]
+  ): DataFrame = {
     val classIdx = targets.zipWithIndex.foldLeft(
       when(lit(false), lit(-1))) { case (chain, (v, i)) =>
       chain.when(col(targetName) === lit(v), lit(i))
     }.otherwise(lit(-1)).cast("int")
+    df.select(array(features.map(f => col(f).cast(DoubleType)): _*).as("__arr"),
+      classIdx.as("__cls"), nodeId.cast("int").as("__node"))
+  }
+
+  /** The exact level's single aggregate query: one row, one binary
+    * [[graft.functions.ExactHistogram]] buffer. */
+  private[graft] def exactLevelQuery(
+      df: DataFrame,
+      nodeId: Column,
+      numNodes: Int,
+      features: Seq[String],
+      targetName: String,
+      targets: Seq[Any]
+  ): DataFrame = {
+    import org.apache.spark.sql.graft.ColumnBridge
+    val agg = graft.functions.ExactHistogram(
+      ColumnBridge.expression(col("__arr")),
+      ColumnBridge.expression(col("__cls")),
+      ColumnBridge.expression(col("__node")), features.size, targets.size, numNodes)
+    levelInputs(df, nodeId, features, targetName, targets)
+      .select(ColumnBridge.column(agg.toAggregateExpression()).as("hist"))
+  }
+
+  /** The binned level's single aggregate query: one row, one flat
+    * [[graft.functions.MultiFeatureHistogram]] count array over the
+    * features that have edges. */
+  private[graft] def binnedLevelQuery(
+      df: DataFrame,
+      nodeId: Column,
+      numNodes: Int,
+      features: Seq[String],
+      targetName: String,
+      targets: Seq[Any],
+      binEdges: Map[String, Seq[Double]]
+  ): DataFrame = {
+    import org.apache.spark.sql.graft.ColumnBridge
+    val feats = features.filter(binEdges.contains)
     val agg = graft.functions.MultiFeatureHistogram(
       ColumnBridge.expression(col("__arr")),
       ColumnBridge.expression(col("__cls")),
-      ColumnBridge.expression(col("__node")), edges, k, numNodes)
-    // Pre-project array/class/node through whole-stage codegen (r21): the
-    // imperative aggregate's update evaluates its children interpreted
-    // per row, so the bare CreateArray boxed every feature of every row
-    // (at 190 features that boxing was the histogram scan's dominant
-    // allocation and fed the 32-core page-churn pathology in the r20
-    // scaling block); bound attribute reads allocate nothing.
-    val buffer: Seq[Long] = df
-      .select(array(feats.map(f => col(f).cast(DoubleType)): _*).as("__arr"),
-        classIdx.as("__cls"), nodeId.cast("int").as("__node"))
+      ColumnBridge.expression(col("__node")), feats.map(binEdges), targets.size, numNodes)
+    levelInputs(df, nodeId, feats, targetName, targets)
       .select(ColumnBridge.column(agg.toAggregateExpression()).as("hist"))
-      .head().getSeq[Long](0)
-
-    val numBins = edges.map(_.size).max + 1
-    val block = numBins * k
-    val nodeLen = (feats.size + 1) * block
-    (0 until numNodes).flatMap { node =>
-      def cell(f: Int, b: Int, c: Int): Long = buffer(node * nodeLen + f * block + b * k + c)
-      val nodeDist = (0 until k).map(c => cell(feats.size, 0, c))
-      if (nodeDist.sum == 0) None
-      else Some(node -> unpackNode(cell, feats, edges, k, criterion, nodeDist))
-    }.toMap
   }
 
-  /** Driver-side gain math over one node's histogram block, mirroring the
-    * column expressions' association order. */
-  private def unpackNode(
-      cell: (Int, Int, Int) => Long,
-      feats: Seq[String],
-      edges: Seq[Seq[Double]],
-      k: Int,
-      criterion: Criterion,
-      nodeDist: Seq[Long]
-  ): NodeSearch = {
+  private val Log2 = StrictMath.log(2.0)
 
-    // gain math mirroring the column expressions' association order
-    def crit(ps: Seq[Double]): Double = criterion match {
-      case Criterion.Entropy =>
-        -1.0 * ps.map(p => if (p > 0) p * (math.log(p) / math.log(2.0)) else 0.0)
-          .reduce(_ + _)
-      case Criterion.Gini =>
-        1.0 - ps.map(p => p * p).reduce(_ + _)
-    }
-
-    val candidates = feats.indices.flatMap { f =>
-      val fEdges = edges(f)
-      val totals = (0 until k).map(c => (0 to fEdges.size).map(b => cell(f, b, c)).sum)
-      val totN = totals.sum
-      if (totN == 0) None
-      else {
-        val parentCrit = crit(totals.map(t => t.toDouble / totN.toDouble))
-        val cums = new Array[Long](k)
-        var cumN = 0L
-        val scored = (0 until fEdges.size).flatMap { b =>
-          val binCount = (0 until k).map(c => cell(f, b, c)).sum
-          (0 until k).foreach(c => cums(c) += cell(f, b, c))
-          cumN += binCount
-          if (binCount == 0 || cumN >= totN) None // empty bin / right side empty
-          else {
-            val left = crit((0 until k).map(c => cums(c).toDouble / cumN.toDouble))
-            val right = crit((0 until k).map(c =>
-              (totals(c) - cums(c)).toDouble / (totN - cumN).toDouble))
-            val child = cumN.toDouble / totN.toDouble * left +
-              (totN - cumN).toDouble / totN.toDouble * right
-            val gain = parentCrit - child
-            if (gain.isNaN) None
-            else Some((fEdges(b), gain, (0 until k).map(cums(_)).toIndexedSeq))
-          }
-        }
-        if (scored.isEmpty) None
-        else {
-          val (thr, gain, leftCounts) = scored.minBy { case (t, g, _) => (-g, t) }
-          Some(CandidateStats(
-            Candidate(feats(f), thr, gain, parentCrit), leftCounts, totals))
-        }
+  /** Criterion of the class counts `counts` over `n` rows, operation for
+    * operation as [[criterionExpr]] evaluates it: long/long proportions
+    * divided in double, `p * (log p / log 2)` with `StrictMath.log` (what
+    * Spark's `Logarithm` runs) and 0 for p = 0, terms summed left to right
+    * as `reduce(_ + _)` does. */
+  private def criterionOf(criterion: Criterion, counts: Array[Long], n: Long): Double = {
+    var s = 0.0
+    var c = 0
+    while (c < counts.length) {
+      val p = counts(c).toDouble / n.toDouble
+      val t = criterion match {
+        case Criterion.Entropy => if (p > 0) p * (StrictMath.log(p) / Log2) else 0.0
+        case Criterion.Gini    => p * p
       }
+      s = if (c == 0) t else s + t
+      c += 1
     }
-    NodeSearch(candidates, nodeDist)
+    criterion match {
+      case Criterion.Entropy => -1.0 * s
+      case Criterion.Gini    => 1.0 - s
+    }
+  }
+
+  /** One feature's best split from its histogram — the gain scan both
+    * level searches share. `thresholds` ascend; `counts` holds K class
+    * counts per bin (bin-major), bin b < thresholds.length covering the
+    * rows above thresholds(b - 1) up to thresholds(b). A trailing bin with
+    * no threshold (binned mode's +inf catch-all) only adds to the totals.
+    * A threshold is a candidate when its bin is non-empty and rows remain
+    * on the right (tree.py:274-277) and its gain is not NaN (tree.py:331);
+    * the gain follows [[gainPerThreshold]]'s association order, so it is
+    * bit-identical to the reference pipeline's. Ties: gain DESC, threshold
+    * ASC. None when no candidate exists.
+    */
+  private def bestThreshold(
+      feature: String,
+      thresholds: Array[Double],
+      counts: Array[Long],
+      k: Int,
+      criterion: Criterion
+  ): Option[CandidateStats] = {
+    val totals = new Array[Long](k)
+    counts.indices.foreach(i => totals(i % k) += counts(i))
+    val totN = totals.sum
+    if (totN == 0) return None
+    val parentCrit = criterionOf(criterion, totals, totN)
+    val cums = new Array[Long](k)
+    val right = new Array[Long](k)
+    var cumN = 0L
+    var best: Option[(Double, Double, Array[Long])] = None // (threshold, gain, left counts)
+    var b = 0
+    while (b < thresholds.length) {
+      var binN = 0L
+      var c = 0
+      while (c < k) { cums(c) += counts(b * k + c); binN += counts(b * k + c); c += 1 }
+      cumN += binN
+      if (binN > 0 && cumN < totN) {
+        c = 0
+        while (c < k) { right(c) = totals(c) - cums(c); c += 1 }
+        val child = cumN.toDouble / totN.toDouble * criterionOf(criterion, cums, cumN) +
+          (totN - cumN).toDouble / totN.toDouble * criterionOf(criterion, right, totN - cumN)
+        val gain = parentCrit - child
+        if (!gain.isNaN && best.forall(gain > _._2)) best = Some((thresholds(b), gain, cums.clone()))
+      }
+      b += 1
+    }
+    best.map { case (thr, gain, left) =>
+      CandidateStats(Candidate(feature, thr, gain, parentCrit), left.toVector, totals.toVector)
+    }
   }
 
   /** Collect the per-feature winners and pick the global best on the driver

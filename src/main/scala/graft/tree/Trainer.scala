@@ -8,17 +8,18 @@ import org.apache.spark.storage.StorageLevel
   * DataFrame dataflow — the Spark-native rebuild of the reference's
   * Polars-backed `DecisionTreeClassifier` (reference: efficient_trees/tree.py:16-385).
   *
-  * Execution shape: ONE level-wise loop. Each tree level runs ONE Spark
-  * job that answers every pending node at once — per-feature best splits
-  * AND each node's class distribution; the children's distributions fall
-  * out of the winner's cumulative counts, so leaves cost zero jobs. The
-  * per-level search is chosen by `maxBins`: exact mode runs
-  * [[SplitSearch.searchLevelWithStats]] (int-keyed melt + cumulative
-  * sums), binned mode runs [[SplitSearch.searchLevelAggregated]] (one
-  * [[graft.functions.MultiFeatureHistogram]] aggregate + driver gain
-  * math). The reference runs ~3 executions per NODE (per-feature
-  * `collect_all` fan-out + mask collect + distribution collect,
-  * tree.py:339-372).
+  * Execution shape: ONE level-wise loop. Each tree level runs ONE native
+  * aggregate over un-melted rows that answers every pending node at once —
+  * per-feature class-count histograms AND each node's class distribution;
+  * one driver-side gain scan picks the splits, and the children's
+  * distributions fall out of the winner's cumulative counts, so leaves
+  * cost zero jobs. `maxBins` picks the histogram's key layout: exact mode
+  * runs [[SplitSearch.searchLevelExact]] (a sparse
+  * [[graft.functions.ExactHistogram]] keyed by distinct value), binned
+  * mode runs [[SplitSearch.searchLevelAggregated]] (a dense
+  * [[graft.functions.MultiFeatureHistogram]] keyed by bin index). The
+  * reference runs ~3 executions per NODE (per-feature `collect_all`
+  * fan-out + mask collect + distribution collect, tree.py:339-372).
   *
   * @param maxDepth       depth cap; at `depth >= maxDepth` a majority-class
   *                       leaf is emitted (reference: tree.py:202-203)
@@ -43,21 +44,13 @@ import org.apache.spark.storage.StorageLevel
   *                       restricted to `maxBins` approximate quantile edges
   *                       computed ONCE on the training data (MLlib-style),
   *                       and every level is one single-pass histogram
-  *                       aggregate over un-melted rows — the scale-safe mode
-  *                       for continuous features, where exact mode's
-  *                       candidate set (every distinct value) would put O(n)
-  *                       rows in a single window task. Counts at the chosen
-  *                       edges stay exact; only the candidate set shrinks.
-  *                       None = exact mode (reference parity, golden tests).
-  * @param exactCumulativePartitions exact mode's other scale lever: when
-  *                       set, the cumulative class counts use the
-  *                       declarative bucketed prefix sum
-  *                       ([[SplitSearch.cumulativeCountsPartitioned]])
-  *                       instead of one window task per feature — same
-  *                       results, bounded window partitions, still one
-  *                       query per level (two tiny broadcast side
-  *                       aggregates, no checkpoint). Ignored when maxBins
-  *                       is set.
+  *                       aggregate over un-melted rows with a fixed-size
+  *                       buffer — the scale-safe mode for continuous
+  *                       features, where exact mode's buffer and driver
+  *                       scan grow with every distinct value. Counts at the
+  *                       chosen edges stay exact; only the candidate set
+  *                       shrinks. None = exact mode (reference parity,
+  *                       golden tests).
   * @param cacheNodes     persist the training rows (MEMORY_AND_DISK) for the
   *                       duration of the build. The reference's
   *                       lazy/streaming mode re-derives every level from the
@@ -75,7 +68,6 @@ final case class DecisionTreeClassifier(
     shrinkDtype: Boolean = true,
     criterion: Criterion = Criterion.Entropy,
     maxBins: Option[Int] = None,
-    exactCumulativePartitions: Option[Int] = None,
     cacheNodes: Boolean = true
 ) {
 
@@ -100,10 +92,11 @@ final case class DecisionTreeClassifier(
     val targetType = data.schema(targetName).dataType
 
     // NULL targets are excluded up front: `=== lit(null)` never matches, so
-    // a null class could never accrue histogram counts — the exact melt
-    // would still count those rows in count_examples while the binned
-    // histogram dropped them, and an all-null node would throw "majority of
-    // empty node". One filter makes both searches see identical data. (The
+    // a null class could never accrue histogram counts — both histograms
+    // would drop those rows, and a node holding only them would throw
+    // "majority of empty node". The reference pipeline's count_examples
+    // would still count them, so the filter also keeps the trainer's
+    // gains equal to the reference's on the same rows. (The
     // reference never defines null-target behavior; its examples fill_null
     // before fit — amex_default.py:23.)
     val nonNullTarget = data.where(col(targetName).isNotNull)
@@ -195,35 +188,16 @@ final case class DecisionTreeClassifier(
     val targets: Seq[Any] =
       encoded.select(col(targetName)).distinct().orderBy(col(targetName)).collect().map(_.get(0)).toSeq
 
-    // Exact+partitioned mode: per-feature (min, max) computed ONCE here give
-    // every level's bucketed prefix sum a literal bucket expression (no
-    // in-plan ranges aggregate). Root-data ranges over-cover deeper nodes'
-    // value slices — fewer effective buckets, never wrong answers.
-    val cumRanges: Map[String, (Double, Double)] =
-      if (binEdges.isEmpty && exactCumulativePartitions.isDefined) {
-        val aggs = featureNames.flatMap { f =>
-          val c = col(f).cast("double")
-          Seq(min(when(!isnan(c), c)).as(s"__mn_$f"), max(when(!isnan(c), c)).as(s"__mx_$f"))
-        }
-        val r = encoded.agg(aggs.head, aggs.tail: _*).head()
-        featureNames.flatMap { f =>
-          (Option(r.getAs[Any](s"__mn_$f")), Option(r.getAs[Any](s"__mx_$f"))) match {
-            case (Some(mn: Double), Some(mx: Double)) => Some(f -> (mn, mx))
-            case _                                    => None // all-null/NaN feature
-          }
-        }.toMap
-      } else Map.empty
-
-    val tree = trainLevels(encoded, featureNames, targetName, targets, binEdges, cumRanges)
+    val tree = trainLevels(encoded, featureNames, targetName, targets, binEdges)
     DecisionTreeModel(tree, mappings, targetType)
   }
 
   // ---- level-wise construction (one Spark job per tree LEVEL) -------------
 
-  /** Breadth-first trainer: each level runs ONE job
-    * ([[SplitSearch.searchLevelWithStats]], or the
-    * [[SplitSearch.searchLevelAggregated]] single-pass aggregate in binned
-    * mode) that answers every pending node at once — rows are routed to
+  /** Breadth-first trainer: each level runs ONE aggregate job
+    * ([[SplitSearch.searchLevelExact]], or
+    * [[SplitSearch.searchLevelAggregated]] in binned mode) that answers
+    * every pending node at once — rows are routed to
     * their pending node by a when-chain id expression over the partial
     * tree. Jobs per tree = depth, not node count; the source is cached
     * once. Node membership follows the reference's filter/negated-filter
@@ -237,8 +211,7 @@ final case class DecisionTreeClassifier(
       featureNames: Seq[String],
       targetName: String,
       targets: Seq[Any],
-      binEdges: Map[String, Seq[Double]],
-      cumRanges: Map[String, (Double, Double)]
+      binEdges: Map[String, Seq[Double]]
   ): TreeNode = {
     val source = if (cacheNodes) data.persist(StorageLevel.MEMORY_AND_DISK) else data
 
@@ -309,9 +282,8 @@ final case class DecisionTreeClassifier(
               SplitSearch.searchLevelAggregated(source, nodeId, numPendings,
                 featureNames, targetName, targets, criterion, binEdges)
             else
-              SplitSearch.searchLevelWithStats(source, nodeId,
-                featureNames, targetName, targets, criterion,
-                exactCumulativePartitions, cumRanges)
+              SplitSearch.searchLevelExact(source, nodeId, numPendings,
+                featureNames, targetName, targets, criterion)
           var idx = -1
           def rebuild(b: Building): Building = b match {
             case s: BSplit => s.copy(left = rebuild(s.left), right = rebuild(s.right))

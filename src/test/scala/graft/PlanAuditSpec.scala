@@ -75,6 +75,31 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(p.contains("BroadcastHashJoin"), "per-bucket offsets must broadcast back")
   }
 
+  test("tree level searches plan no Generate and no Window node") {
+    import org.apache.spark.sql.functions.{col, lit, when}
+    import graft.tree.{Criterion, SplitSearch}
+    def nodes(df: DataFrame): Seq[String] =
+      withConf("spark.sql.adaptive.enabled" -> "false") {
+        df.queryExecution.executedPlan.collect { case n => n.nodeName }
+      }
+    val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
+    val features = Seq("l_quantity", "l_discount", "l_tax", "l_extendedprice")
+    val targets = Seq[Any]("A", "N", "R")
+    val nodeId = when(col("l_quantity") <= 25.0, lit(0)).otherwise(lit(1))
+    // detector proof: the reference pipeline melts and windows
+    val ref = nodes(SplitSearch.gainPerThreshold(li, features, "l_returnflag", targets,
+      Criterion.Entropy))
+    assert(ref.contains("Generate") && ref.contains("Window"), s"detector is vacuous: $ref")
+    val levels = Seq(
+      "exact" -> SplitSearch.exactLevelQuery(li, nodeId, 2, features, "l_returnflag", targets),
+      "binned" -> SplitSearch.binnedLevelQuery(li, nodeId, 2, features, "l_returnflag", targets,
+        features.map(_ -> Seq(0.05, 10.0)).toMap))
+    levels.foreach { case (mode, q) =>
+      val n = nodes(q)
+      assert(!n.contains("Generate") && !n.contains("Window"), s"$mode level plans $n")
+    }
+  }
+
   test("tfidf construction is lazy: the corpus count is in-plan, not an eager job") {
     // the parquet READ may cost a schema-inference job; the operator must not
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")

@@ -1,15 +1,15 @@
 package graft.tree
 
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.{col, lit, when}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
 /** Hand-computed split-search values on a tiny fixture, plus agreement
-  * between the oracle-shaped pipeline, the trainer's exact single-job
-  * path, and the binned histogram search. */
+  * between the oracle-shaped pipeline, the trainer's exact histogram
+  * search, and the binned histogram search. */
 class SplitSearchSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
@@ -87,19 +87,58 @@ class SplitSearchSpec extends AnyFunSuite {
     }
   }
 
-  test("exactCumulativePartitions trainer mode builds the identical tree") {
+  test("exact kernel search equals the reference pipeline exactly, across partial merges") {
+    // ExactHistogram + the shared gain scan against the melt/window
+    // pipeline (bestSplitsPerFeature, cumulativeCounts, bestSplit): ==
+    // on thresholds, gains and counts. Hash-partitioning on the 3-valued
+    // target into 8 partitions leaves at least 5 empty, and the shuffle
+    // means every partial buffer is serialized, deserialized and merged.
+    // f_edge holds nulls, NaN, and -0.0 (flag N) next to 0.0: merged as
+    // in the pipeline's grouping, its one threshold is 0.0 with only the
+    // NaN rows on the right; split apart, -0.0 would cut off flag N.
     val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-      .select("l_quantity", "l_discount", "l_tax", "l_returnflag")
-    val a = DecisionTreeClassifier(maxDepth = Some(3)).fit(li, "l_returnflag")
-    val b = DecisionTreeClassifier(maxDepth = Some(3), exactCumulativePartitions = Some(8))
-      .fit(li, "l_returnflag")
-    assert(a.tree == b.tree)
+      .select(col("l_quantity"), col("l_discount"), col("l_extendedprice"),
+        when(col("l_linenumber") === 1, lit(null).cast("double"))
+          .when(col("l_linenumber") === 2, lit(Double.NaN))
+          .when(col("l_returnflag") === "N", lit(-0.0))
+          .otherwise(lit(0.0)).as("f_edge"),
+        col("l_returnflag"))
+      .repartition(8, col("l_returnflag"))
+    assert(li.rdd.glom().map(_.isEmpty).collect().count(identity) >= 5)
+    val features = Seq("l_quantity", "l_discount", "l_extendedprice", "f_edge")
+    val targets = Seq[Any]("A", "N", "R")
+    val cum = SplitSearch.cumulativeCounts(
+      SplitSearch.meltedHistogram(li, features, "l_returnflag", targets), 3).collect()
+      .map(r => (r.getAs[String]("feature"), r.getAs[Double]("feature_value")) -> r).toMap
+    val classCounts = li.groupBy("l_returnflag").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    for (crit <- Seq(Criterion.Entropy, Criterion.Gini)) {
+      val search = SplitSearch.searchWithStats(li, features, "l_returnflag", targets, crit)
+      assert(search.nodeDistribution == targets.map(t => classCounts(t.toString)))
+      val ref = SplitSearch.bestSplitsPerFeature(li, features, "l_returnflag", targets, crit)
+        .collect().map(r => r.getAs[String]("feature") -> r).toMap
+      val got = search.candidates.map(c => c.candidate.feature -> c).toMap
+      assert(got.keySet == features.toSet && ref.keySet == got.keySet)
+      got.foreach { case (f, cs) =>
+        val r = ref(f)
+        assert(cs.candidate == SplitSearch.Candidate(f, r.getAs[Double]("feature_value"),
+          r.getAs[Double]("information_gain"), r.getAs[Double]("parent_criterion")), s"$f candidate")
+        val c = cum((f, cs.candidate.threshold))
+        assert(cs.leftClassCounts == (0 until 3).map(i => c.getAs[Long](s"cum_sum_class_${i}_count")),
+          s"$f left counts")
+        assert(cs.featureClassTotals == (0 until 3).map(i => c.getAs[Long](s"sum_class_${i}_count")),
+          s"$f totals")
+      }
+      assert(got("f_edge").featureClassTotals.sum < li.count()) // nulls left out
+      assert(search.best.map(_.candidate) ==
+        SplitSearch.bestSplit(li, features, "l_returnflag", targets, crit))
+    }
   }
 
   test("aggregated single-pass histogram search matches the DataFrame pipeline") {
     // the binned search (MultiFeatureHistogram + driver gain math) must
-    // equal the exact melt pipeline run over the same rows with every
-    // feature snapped to its bin edge: same candidate set, exact counts
+    // equal the exact search run over the same rows with every feature
+    // snapped to its bin edge: same candidate set, exact counts
     val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
     val features = Seq("l_quantity", "l_discount", "l_tax", "l_extendedprice")
     val targets = Seq[Any]("A", "N", "R")
@@ -122,8 +161,9 @@ class SplitSearchSpec extends AnyFunSuite {
       a.foreach { case (f, ca) =>
         val cp = p(f)
         assert(ca.candidate.threshold == cp.candidate.threshold, s"$f threshold")
-        assert(math.abs(ca.candidate.informationGain - cp.candidate.informationGain) < 1e-12, s"$f gain")
-        assert(math.abs(ca.candidate.parentCriterion - cp.candidate.parentCriterion) < 1e-12, s"$f crit")
+        // one shared gain scan: bit-identical, not just close
+        assert(ca.candidate.informationGain == cp.candidate.informationGain, s"$f gain")
+        assert(ca.candidate.parentCriterion == cp.candidate.parentCriterion, s"$f crit")
         assert(ca.leftClassCounts == cp.leftClassCounts, s"$f left counts")
         assert(ca.featureClassTotals == cp.featureClassTotals, s"$f totals")
       }

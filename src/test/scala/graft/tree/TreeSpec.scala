@@ -217,7 +217,7 @@ class TreeSpec extends AnyFunSuite {
   }
 
   test("maxBins edge cases: all-null, constant, +Inf edge, NaN, -0.0 features") {
-    // the binned histogram's boundary semantics on adversarial columns:
+    // both histograms' boundary semantics on adversarial columns. Binned:
     // f_null has no edges; f_const has one; a quarter of f_inf is +Inf, so
     // the 7/8 quantile is an interior +Inf edge; NaN sorts above every
     // value (Spark ordering), so it lands in the catch-all bucket; -0.0 and
@@ -245,57 +245,61 @@ class TreeSpec extends AnyFunSuite {
       StructField("target", IntegerType, nullable = false))
     val df = spark.createDataFrame(spark.sparkContext.parallelize(
       data.map { case (vs, c) => Row.fromSeq(vs.toSeq :+ c) }, 4), schema)
-    val model = DecisionTreeClassifier(maxDepth = Some(4), maxBins = Some(8)).fit(df, "target")
-    val used = {
-      def feats(t: TreeNode): Set[String] = t match {
-        case s: SplitNode => Set(s.feature) ++ feats(s.left) ++ feats(s.right)
-        case _: LeafNode  => Set.empty
+    // exact mode (None) keys the same columns by distinct value: one
+    // bucket per value, NaN last, -0.0 merged into 0.0
+    for (bins <- Seq(Some(8), None)) {
+      val model = DecisionTreeClassifier(maxDepth = Some(4), maxBins = bins).fit(df, "target")
+      val used = {
+        def feats(t: TreeNode): Set[String] = t match {
+          case s: SplitNode => Set(s.feature) ++ feats(s.left) ++ feats(s.right)
+          case _: LeafNode  => Set.empty
+        }
+        feats(model.tree)
       }
-      feats(model.tree)
-    }
-    assert(Set("f_inf", "f_nan", "f_zero").subsetOf(used), s"edge-case features unused: ${model.tree}")
+      assert(Set("f_inf", "f_nan", "f_zero").subsetOf(used), s"maxBins=$bins: edge-case features unused: ${model.tree}")
 
-    // every split's targetDistribution == class counts of the rows routed
-    // to it under Spark's comparison semantics (NULL leaves both sides);
-    // its stored gain == the entropy gain recomputed from the routed rows
-    // (this is what checks the histogram's bin counts); every leaf with
-    // rows holds their majority class (depth-capped leaves take theirs
-    // from the histogram's left/right counts)
-    def counts(rows: Seq[(Array[java.lang.Double], Int)]): Seq[Long] =
-      (0 until 3).map(c => rows.count(_._2 == c).toLong)
-    def entropy(cs: Seq[Long]): Double = {
-      val tot = cs.sum.toDouble
-      -cs.filter(_ > 0).map { c => val p = c / tot; p * math.log(p) / math.log(2) }.sum
-    }
-    def routed(t: TreeNode, rows: Seq[(Array[java.lang.Double], Int)]): Unit = t match {
-      case LeafNode(v) =>
-        if (rows.nonEmpty) {
-          val cs = counts(rows)
-          assert(v == cs.indexOf(cs.max), s"leaf $v over class counts $cs")
-        }
-      case s: SplitNode =>
-        val at = s"split ${s.feature} <= ${s.threshold}"
-        assert(s.targetDistribution == counts(rows), s"distribution of $at")
-        val present = rows.filter(_._1(names.indexOf(s.feature)) != null)
-        val (l, r) = present.partition { case (vs, _) =>
-          val v: Double = vs(names.indexOf(s.feature))
-          !v.isNaN && v <= s.threshold
-        }
-        val n = present.size.toDouble
-        val gain = entropy(counts(present)) -
-          (l.size / n * entropy(counts(l)) + r.size / n * entropy(counts(r)))
-        assert(math.abs(s.informationGain - gain) < 1e-9, s"gain of $at: ${s.informationGain} vs $gain")
-        routed(s.left, l)
-        routed(s.right, r)
-    }
-    routed(model.tree, data)
+      // every split's targetDistribution == class counts of the rows routed
+      // to it under Spark's comparison semantics (NULL leaves both sides);
+      // its stored gain == the entropy gain recomputed from the routed rows
+      // (this is what checks the histogram's bin counts); every leaf with
+      // rows holds their majority class (depth-capped leaves take theirs
+      // from the histogram's left/right counts)
+      def counts(rows: Seq[(Array[java.lang.Double], Int)]): Seq[Long] =
+        (0 until 3).map(c => rows.count(_._2 == c).toLong)
+      def entropy(cs: Seq[Long]): Double = {
+        val tot = cs.sum.toDouble
+        -cs.filter(_ > 0).map { c => val p = c / tot; p * math.log(p) / math.log(2) }.sum
+      }
+      def routed(t: TreeNode, rows: Seq[(Array[java.lang.Double], Int)]): Unit = t match {
+        case LeafNode(v) =>
+          if (rows.nonEmpty) {
+            val cs = counts(rows)
+            assert(v == cs.indexOf(cs.max), s"maxBins=$bins: leaf $v over class counts $cs")
+          }
+        case s: SplitNode =>
+          val at = s"maxBins=$bins split ${s.feature} <= ${s.threshold}"
+          assert(s.targetDistribution == counts(rows), s"distribution of $at")
+          val present = rows.filter(_._1(names.indexOf(s.feature)) != null)
+          val (l, r) = present.partition { case (vs, _) =>
+            val v: Double = vs(names.indexOf(s.feature))
+            !v.isNaN && v <= s.threshold
+          }
+          val n = present.size.toDouble
+          val gain = entropy(counts(present)) -
+            (l.size / n * entropy(counts(l)) + r.size / n * entropy(counts(r)))
+          assert(math.abs(s.informationGain - gain) < 1e-9, s"gain of $at: ${s.informationGain} vs $gain")
+          routed(s.left, l)
+          routed(s.right, r)
+      }
+      routed(model.tree, data)
 
-    // differential: local walker == engine scorer on every row
-    val preds = Predict.predictMany(model, df).collect()
-    assert(preds.length == n)
-    preds.foreach { r =>
-      val sample = names.zipWithIndex.map { case (f, i) => f -> r.get(i) }.toMap
-      assert(Predict.predictRow(model.tree, sample) == r.getAs[Any]("prediction"), s"at $sample")
+      // differential: local walker == engine scorer on every row
+      val preds = Predict.predictMany(model, df).collect()
+      assert(preds.length == n)
+      preds.foreach { r =>
+        val sample = names.zipWithIndex.map { case (f, i) => f -> r.get(i) }.toMap
+        assert(Predict.predictRow(model.tree, sample) == r.getAs[Any]("prediction"), s"at $sample")
+      }
     }
   }
 
