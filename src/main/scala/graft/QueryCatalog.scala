@@ -777,9 +777,8 @@ object QueryCatalog {
           transform(col("__jw"), e => e.getField("weight")).as("vec"))
         .localCheckpoint(true)
         .where(Similarity.dot(col("vec"), col("vec")) > 0)
-      val w = Similarity.knnWidthFor(vecs, bands = 2)
-      val edges = Similarity.knnGraphAuto(vecs, "node", "vec", k = 3,
-        dim = 16, bands = 2, rerankFactor = 4, width = Some(w))
+      val edges = Similarity.knnGraphQuantized(vecs, "node", "vec", k = 3,
+        dim = 16, bands = 2, rerankFactor = 4)
       val labels = Communities.labelPropagation(edges, "id", "nbr", iterations = 4)
       Communities.communitySizes(labels).orderBy("label")
     }),
@@ -1460,9 +1459,7 @@ object QueryCatalog {
       Decontamination.semanticPairs(
           planted.where(col("vec_id") >= 100),
           planted.where(col("vec_id") < 100),
-          "vec_id", "embedding", threshold = 0.9,
-          nBits = 0, bands = 2, dim = Some(64),
-          signature = (c, n, d) => Similarity.lshSignatureMd5(c, n, d.get))
+          "vec_id", "embedding", threshold = 0.9, dim = 64, bands = 2)
         .select(col("vec_id"), col("bench_id"),
           round(col("cosine"), 6).as("cosine"))
         .orderBy("vec_id", "bench_id")
@@ -1473,9 +1470,7 @@ object QueryCatalog {
       Decontamination.semanticFlag(
           planted.where(col("vec_id") >= 100),
           planted.where(col("vec_id") < 100),
-          "vec_id", "embedding", threshold = 0.9,
-          nBits = 0, bands = 2, dim = Some(64),
-          signature = (c, n, d) => Similarity.lshSignatureMd5(c, n, d.get))
+          "vec_id", "embedding", threshold = 0.9, dim = 64, bands = 2)
         .select(col("vec_id"), col("n_bench_matches"),
           round(col("max_cosine"), 6).as("max_cosine"))
         .orderBy("vec_id")
@@ -1586,8 +1581,9 @@ object QueryCatalog {
     // embeddings the engine MADE, not just ones it was handed.
     // The vector column is MATERIALIZED before the graph: downstream
     // consumers expand their input column expression per plane
-    // projection, which would re-run the per-token fold ~2·nBits times
-    // per row (compute embeddings once, then index — the production
+    // projection, which would re-run the per-token fold once per plane
+    // (bands·rowsPerBand times) per row (compute embeddings once, then
+    // index — the production
     // shape anyway).
     "hashed_doc_knn" -> ((s, dir) => {
       val vecs = documents(s, dir).select(col("doc_id"),
@@ -1595,9 +1591,7 @@ object QueryCatalog {
             g => Dedup.md5TokenHash60(g)).as("hvec"))
         .localCheckpoint(true)
         .where(Similarity.dot(col("hvec"), col("hvec")) > 0)
-      Similarity.knnGraph(vecs, "doc_id", "hvec", k = 3,
-          nBits = 0, bands = 2, dim = Some(64),
-          signature = (c, n, d) => Similarity.lshSignatureMd5(c, n, d.get))
+      Similarity.knnGraph(vecs, "doc_id", "hvec", k = 3, dim = 64, bands = 2)
         .select(col("id"), col("nbr"), round(col("cosine"), 6).as("cosine"),
           col("rank"))
         .orderBy("id", "rank")
@@ -1998,8 +1992,8 @@ object QueryCatalog {
         "vec_id", "embedding", threshold = 0.9)
         .select(col("id_a"), col("id_b"), round(col("cosine"), 6).as("cosine"))
         .orderBy("id_a", "id_b")),
-    // Banded-LSH scale path over the full planted corpus, md5-flavored
-    // signature: plane weights, projection fold, banding, and the exact
+    // Banded-LSH scale path over the full planted corpus (md5 plane
+    // weights): plane weights, projection fold, banding, and the exact
     // cosine verify all have DuckDB twins, so this is hash-checked against
     // a SQL reimplementation (the simhash60 move). At threshold 0.9 the
     // S-curve starves candidates (8-bit bands ~ n^2/256 per band before
@@ -2007,29 +2001,25 @@ object QueryCatalog {
     "embedding_neardup_lsh" -> ((s, dir) =>
       Similarity.cosineNearDupPairs(
         plantedEmbeddings(s, dir), "vec_id", "embedding", threshold = 0.9,
-        nBits = 0, bands = 2, dim = Some(64),
-        signature = (c, n, d) => Similarity.lshSignatureMd5(c, n, d.get))
+        dim = 64, bands = 2)
         .select(col("id_a"), col("id_b"), round(col("cosine"), 6).as("cosine"))
         .orderBy("id_a", "id_b")),
-    // Width-dispatching FRONT DOOR (r16 verdict #4): one sizing count,
-    // packed-vs-wide chosen at the saturation boundary. At gate scale
-    // it dispatches packed at the same auto width, so the packed twin's
-    // oracle prices the dispatch being right; the boundary itself is
-    // spec-walked on both sides (WidthDispatchSpec).
+    // The same operator at the auto width (one sizing count); kept
+    // under its name, it shares embedding_neardup_lsh's oracle.
     "embedding_neardup_auto" -> ((s, dir) =>
-      Similarity.cosineNearDupAuto(
+      Similarity.cosineNearDupPairs(
         plantedEmbeddings(s, dir), "vec_id", "embedding", threshold = 0.9,
         dim = 64, bands = 2)
         .select(col("id_a"), col("id_b"), round(col("cosine"), 6).as("cosine"))
         .orderBy("id_a", "id_b")),
-    // Wide (multi-long) twin of embedding_neardup_lsh: per-band md5
-    // buckets at the uncapped auto width — the near-dup pair operator
-    // stays occupancy-pinned past the packed signature's 62-bit
-    // budget. Widths coincide at gate scale, pinning the equivalence.
+    // embedding_neardup_lsh replayed by the per-band-grouped SQL twin
+    // (each band's bucket summed from its own plane range, the layout
+    // Similarity.bandBuckets computes) — two SQL formulations, one
+    // operator.
     "embedding_neardup_lsh_wide" -> ((s, dir) =>
-      Similarity.cosineNearDupPairsWide(
+      Similarity.cosineNearDupPairs(
         plantedEmbeddings(s, dir), "vec_id", "embedding", threshold = 0.9,
-        dim = 64, rowsPerBand = 0, bands = 2)
+        dim = 64, bands = 2)
         .select(col("id_a"), col("id_b"), round(col("cosine"), 6).as("cosine"))
         .orderBy("id_a", "id_b")),
     // Approximate kNN graph (directed top-3 among banded-LSH
@@ -2041,8 +2031,7 @@ object QueryCatalog {
     "knn_graph" -> ((s, dir) =>
       Similarity.knnGraph(
         plantedEmbeddings(s, dir), "vec_id", "embedding", k = 3,
-        nBits = 0, bands = 2, dim = Some(64),
-        signature = (c, n, d) => Similarity.lshSignatureMd5(c, n, d.get))
+        dim = 64, bands = 2)
         .select(col("id"), col("nbr"),
           round(col("cosine"), 6).as("cosine"), col("rank"))
         .orderBy("id", "rank")),
@@ -2055,31 +2044,24 @@ object QueryCatalog {
     "knn_graph_quantized" -> ((s, dir) =>
       Similarity.knnGraphQuantized(
         plantedEmbeddings(s, dir), "vec_id", "embedding", k = 3, dim = 64,
-        nBits = 0, bands = 2, rerankFactor = 4,
-        signature = (c, n, d) => Similarity.lshSignatureMd5(c, n, d.get))
+        bands = 2, rerankFactor = 4)
         .select(col("id"), col("nbr"),
           round(col("cosine"), 6).as("cosine"), col("rank"))
         .orderBy("id", "rank")),
-    // The wide (multi-long) twin of knn_graph_quantized: per-band
-    // buckets computed directly from each band's plane range, so the
-    // total width is unbounded past the packed signature's 62-bit
-    // budget (where the packed family saturates and silently returns
-    // to quadratic occupancy growth — bands=4 saturates at ~524k
-    // vectors, the probe's own third decade). At this corpus size the
-    // auto width matches the packed family's, so the oracle ALSO
-    // pins the families' documented equivalence.
+    // knn_graph_quantized replayed by the per-band-grouped SQL twin
+    // (each band's bucket summed from its own plane range, the layout
+    // Similarity.bandBuckets computes).
     "knn_graph_quantized_wide" -> ((s, dir) =>
-      Similarity.knnGraphQuantizedWide(
+      Similarity.knnGraphQuantized(
         plantedEmbeddings(s, dir), "vec_id", "embedding", k = 3, dim = 64,
-        rowsPerBand = 0, bands = 2, rerankFactor = 4)
+        bands = 2, rerankFactor = 4)
         .select(col("id"), col("nbr"),
           round(col("cosine"), 6).as("cosine"), col("rank"))
         .orderBy("id", "rank")),
-    // kNN front door (r16 verdict #4): dispatches packed here (below
-    // saturation), at exactly the width knn_graph_quantized auto-sizes
-    // to — same oracle; the boundary crossing is WidthDispatchSpec's.
+    // Kept under its name: knn_graph_quantized at the auto width,
+    // same oracle.
     "knn_graph_auto" -> ((s, dir) =>
-      Similarity.knnGraphAuto(
+      Similarity.knnGraphQuantized(
         plantedEmbeddings(s, dir), "vec_id", "embedding", k = 3, dim = 64,
         bands = 2, rerankFactor = 4)
         .select(col("id"), col("nbr"),
@@ -2093,13 +2075,8 @@ object QueryCatalog {
     // twin replays edge generation AND the 4 LPA vote rounds CTE for
     // CTE, so the hash gate prices the COMPOSITION, not just the parts.
     "semantic_communities" -> ((s, dir) => {
-      // the width-dispatching front door: ONE sizing count, threaded
-      // (a second auto operator on this corpus would reuse `w`, not
-      // re-count — the r16-flagged composition pattern)
-      val corpus = plantedEmbeddings(s, dir)
-      val w = Similarity.knnWidthFor(corpus, bands = 2)
-      val edges = Similarity.knnGraphAuto(corpus, "vec_id", "embedding",
-        k = 3, dim = 64, bands = 2, rerankFactor = 4, width = Some(w))
+      val edges = Similarity.knnGraphQuantized(plantedEmbeddings(s, dir),
+        "vec_id", "embedding", k = 3, dim = 64, bands = 2, rerankFactor = 4)
       val labels = Communities.labelPropagation(edges, "id", "nbr", iterations = 4)
       Communities.communitySizes(labels).orderBy("label")
     }),
@@ -2139,22 +2116,18 @@ object QueryCatalog {
           round(col("cosine"), 6).as("cosine"), col("rank"))
         .orderBy("id", "rank")
     }),
-    // The WIDE (multi-long) twin of knn_graph_incremental: the same
-    // standing/batch ingest split, but the index bands at the uncapped
-    // wide width (knnGraphIndexWide's direct per-band buckets packed
-    // into bkey) — the ingest path stays occupancy-pinned past the
-    // packed signature's 62-bit saturation point. At this corpus size
-    // the auto widths coincide, so the oracle also pins the families'
-    // documented equivalence on the probe path.
+    // knn_graph_incremental without the persisted index: build the
+    // standing index in-entry and probe it, replayed by the
+    // per-band-grouped SQL twin (the layout Similarity.bandBuckets
+    // computes, packed into bkey).
     "knn_graph_incremental_wide" -> ((s, dir) => {
       val e = embeddings(s, dir)
       val standing = e.where(col("vec_id") >= 100)
       val batch = e.where(col("vec_id") < 100)
-      val rpb = math.max(
-        Similarity.suggestedRowsPerBandWide(standing.count()), 8)
-      val (banded, payload, params) = Similarity.knnGraphIndexWide(
+      val rpb = Similarity.autoRowsPerBand(standing.count(), bands = 2)
+      val (banded, payload, params) = Similarity.knnGraphIndex(
         standing, "vec_id", "embedding", dim = 64, rowsPerBand = rpb, bands = 2)
-      Similarity.knnGraphAgainstIndexWide(banded, payload, params,
+      Similarity.knnGraphAgainstIndex(banded, payload, params,
           batch, "vec_id", "embedding", k = 3, dim = 64,
           rowsPerBand = rpb, bands = 2, rerankFactor = 4)
         .select(col("id"), col("nbr"),
@@ -2369,7 +2342,7 @@ object QueryCatalog {
     "semantic_dedup_pairs_banded" -> ((s, dir) =>
       Similarity.semanticNearDupPairs(
         plantedEmbeddings(s, dir), "vec_id", "embedding", threshold = 0.9, nlist = 16,
-        bandWithinCell = Some((16, 4)), dim = Some(64))
+        bandWithinCell = Some((4, 4)), dim = Some(64))
         .select(col("id_a"), col("id_b"), round(col("cosine"), 6).as("cosine"))
         .orderBy("id_a", "id_b")),
     // Keep-set materialization, min-id greedy policy (duplicate groups
@@ -3097,18 +3070,15 @@ object QueryCatalog {
     val x = sfx(dir)
     ensureOnce(s, "sem:" + x) {
       val standing = embeddings(s, dir).where(col("vec_id") >= 100)
-      val md5Sig = (c: Column, n: Int, d: Option[Int]) =>
-        Similarity.lshSignatureMd5(c, n, d.get)
-      val nb = Similarity.autoNBits(standing.count(), bands = 2)
+      val rpb = Similarity.autoRowsPerBand(standing.count(), bands = 2)
       val (banded, payload, params) = Similarity.knnGraphIndex(
-        standing, "vec_id", "embedding", dim = 64, nBits = nb, bands = 2,
-        signature = md5Sig)
+        standing, "vec_id", "embedding", dim = 64, rowsPerBand = rpb, bands = 2)
       IndexStore.writeBucketed(banded, "graft_sem_band_" + x, "bkey", 8)
       IndexStore.writeTable(payload, "graft_sem_payload_" + x)
       IndexStore.writeTable(params, "graft_sem_params_" + x)
       val standingEdges = Similarity.knnGraphQuantized(
         standing, "vec_id", "embedding", k = 3, dim = 64,
-        nBits = nb, bands = 2, rerankFactor = 4, signature = md5Sig)
+        rowsPerBand = rpb, bands = 2, rerankFactor = 4)
         .select(col("id"), col("nbr"), col("cosine"), col("rank"))
         .localCheckpoint(true) // consumed three times below
       IndexStore.writeTable(standingEdges, "graft_sem_edges_" + x)
@@ -3130,14 +3100,13 @@ object QueryCatalog {
     * index builder sized it). */
   private def semanticBatchEdges(s: SparkSession, dir: String, x: String): DataFrame = {
     val e = embeddings(s, dir)
-    val nb = Similarity.autoNBits(e.where(col("vec_id") >= 100).count(), bands = 2)
+    val rpb = Similarity.autoRowsPerBand(e.where(col("vec_id") >= 100).count(), bands = 2)
     Similarity.knnGraphAgainstIndex(
       IndexStore.read(s, "graft_sem_band_" + x),
       IndexStore.read(s, "graft_sem_payload_" + x),
       IndexStore.read(s, "graft_sem_params_" + x),
       e.where(col("vec_id") < 100), "vec_id", "embedding",
-      k = 3, dim = 64, nBits = nb, bands = 2, rerankFactor = 4,
-      signature = (c, n, d) => Similarity.lshSignatureMd5(c, n, d.get))
+      k = 3, dim = 64, rowsPerBand = rpb, bands = 2, rerankFactor = 4)
   }
 
   /** Standing artifacts of the DUP-CLUSTER refresh entry (documents,
@@ -3179,8 +3148,7 @@ object QueryCatalog {
       IndexStore.writeTable(
         Similarity.knnGraphQuantized(
             plantedEmbeddings(s, dir), "vec_id", "embedding", k = 3, dim = 64,
-            nBits = 0, bands = 2, rerankFactor = 4,
-            signature = (c, n, d) => Similarity.lshSignatureMd5(c, n, d.get))
+            bands = 2, rerankFactor = 4)
           .select(col("id"), col("nbr"), col("cosine"), col("rank")),
         "graft_pke_" + x)
     }
@@ -3619,20 +3587,25 @@ object QueryCatalog {
       |      AS REAL) AS DOUBLE) FOR i IN range(0, len(embedding))] AS v
       |  FROM embeddings WHERE vec_id < 100)""".stripMargin
 
-  /** DuckDB twin of [[graft.operators.Similarity.autoNBits]] for
-    * bands = 2 — the width the kNN family auto-sizes to when `nBits = 0`:
-    * one row `rpb` (bits per band) = `greatest(8, least(31, needed))`
-    * where `needed` is the smallest b with `16 * 2^b >= count(src)`.
-    * Integer-exact (`16::BIGINT << b`, no floating log), so the twin
-    * steps at exactly the corpus sizes the Scala side steps at. */
+  /** DuckDB twin of [[graft.operators.Similarity.autoRowsPerBand]] for
+    * bands = 2 — the width the banded operators auto-size to when
+    * `rowsPerBand = 0`: one row `rpb` (bits per band) =
+    * `greatest(8, least(31, needed))` where `needed` is the smallest b
+    * with `16 * 2^b >= count(src)`. Integer-exact (`16::BIGINT << b`, no
+    * floating log), so the twin steps at exactly the corpus sizes the
+    * Scala side steps at. The Scala rule has no cap of 31 (a 62-bit
+    * whole-width signature at 2 bands); the two agree below 16·2^31
+    * vectors, i.e. at every gate sf. */
   private def autoRpbCte(src: String): String =
     s"""w AS (SELECT greatest(8, least(31,
        |    (SELECT min(b.b) FROM range(0, 48) b(b)
        |     WHERE (16::BIGINT << b.b) >= (SELECT count(*) FROM $src)))) AS rpb)""".stripMargin
 
-  /** SQL twin of the md5-flavored banded LSH near-dup pipeline
-    * ([[graft.operators.Similarity.lshSignatureMd5]] + banding + exact
-    * cosine verify): plane weight = first 60 bits of md5("p_i") mapped to
+  /** SQL twin of the banded LSH near-dup pipeline
+    * ([[graft.operators.Similarity.cosineNearDupPairs]]: the whole-width
+    * [[graft.operators.Similarity.lshSignatureMd5]] shifted and masked
+    * per band, bit-identical to `bandBuckets`, + exact cosine verify):
+    * plane weight = first 60 bits of md5("p_i") mapped to
     * [-1,1), projection summed in list order, sign bit per plane, 2 bands
     * of AUTO-sized width (the autoRpbCte occupancy-pinned rule — 8 bits
     * per band until the corpus outgrows 16·2^8 rows, then growing with
@@ -3803,13 +3776,13 @@ object QueryCatalog {
        |$quantizedVerifyCtes""".stripMargin
   }
 
-  /** SQL twin of [[graft.operators.Similarity.knnGraphQuantizedWide]]
-    * on the planted corpus (bands = 2): per-band buckets computed
-    * DIRECTLY from each band's plane range (bit at p % rpb), width
-    * auto-sized WITHOUT the packed family's 31-bit/band cap, then the
-    * shared SQ8 verify tail. At corpus sizes both families express,
-    * the buckets — and therefore the whole result — equal the packed
-    * twin's. */
+  /** Per-band-grouped SQL twin of
+    * [[graft.operators.Similarity.knnGraphQuantized]] on the planted
+    * corpus (bands = 2): per-band buckets computed DIRECTLY from each
+    * band's plane range (bit at p % rpb, the `bandBuckets` layout),
+    * width auto-sized without the 31-bit/band cap of [[autoRpbCte]],
+    * then the shared SQ8 verify tail. Below that cap the buckets — and
+    * therefore the whole result — equal [[knnGraphQuantizedSql]]'s. */
   private lazy val knnGraphQuantizedWideSql = {
     val weight = """(('0x' || substr(md5(p.p::VARCHAR || '_' || i::VARCHAR), 1, 15))::BIGINT
       | / 576460752303423488.0 - 1.0)""".stripMargin
@@ -3868,9 +3841,10 @@ object QueryCatalog {
     * bkey = band·2^rpb + bucket, batch-vs-standing candidates, SQ8
     * params FROZEN on the standing side, ADC top-(3·4) survivors,
     * exact-cosine top-3. */
-  /** Incremental split + banding header, PACKED flavor: standing/batch
-    * frames, the capped auto width on the STANDING count, one packed
-    * signature per vector, bkey = band·2^rpb + bucket. Produces `bk`
+  /** Incremental split + banding header, whole-width flavor:
+    * standing/batch frames, the capped auto width on the STANDING count,
+    * one md5 signature per vector shifted and masked per band,
+    * bkey = band·2^rpb + bucket. Produces `bk`
     * for [[knnGraphIncrementalTailCtes]]. */
   private lazy val knnGraphIncrementalHeaderCtes = {
     val weight = """(('0x' || substr(md5(p.p::VARCHAR || '_' || i::VARCHAR), 1, 15))::BIGINT
@@ -3895,10 +3869,10 @@ object QueryCatalog {
        |  FROM sig, w, range(0, 2) b(b))""".stripMargin
   }
 
-  /** Same header at the WIDE (multi-long) width: rpb auto-sized on the
-    * standing count WITHOUT the packed 31-bit cap, per-band buckets
+  /** Same header, per-band-grouped: rpb auto-sized on the standing
+    * count without the 31-bit cap of [[autoRpbCte]], per-band buckets
     * summed directly from each band's plane range (twin of
-    * Similarity.bandBucketMd5 through knnGraphIndexWide's bkey). */
+    * Similarity.bandBuckets through knnGraphIndex's bkey). */
   private lazy val knnGraphIncrementalWideHeaderCtes = {
     val weight = """(('0x' || substr(md5(p.p::VARCHAR || '_' || i::VARCHAR), 1, 15))::BIGINT
       | / 576460752303423488.0 - 1.0)""".stripMargin

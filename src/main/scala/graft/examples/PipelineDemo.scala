@@ -72,7 +72,7 @@ object PipelineDemo {
     // 3. embedding-space pruning on the aligned embeddings table
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val embPairs = Similarity.cosineNearDupPairs(emb, "vec_id", "embedding",
-      threshold = 0.95, nBits = 16, bands = 4, dim = Some(64))
+      threshold = 0.95, dim = 64, rowsPerBand = 4, bands = 4)
     val embKept = Dedup.dropDuplicatePairs(emb, "vec_id", embPairs)
     val n3 = embKept.count()
 

@@ -650,9 +650,8 @@ object Communities {
     out
   }
 
-  /** Refresh-strategy FRONT DOOR (the [[graft.operators.Similarity]]
-    * `knnGraphAuto` pattern applied to community maintenance): measure
-    * the blast radius FIRST, then dispatch — the localized refresh
+  /** Refresh-strategy FRONT DOOR: measure the blast radius FIRST, then
+    * dispatch — the localized refresh
     * ([[labelPropagationLocalOnAdj]]'s restricted vote rounds) when the
     * `hops`-hop ball around `dirty` covers at most
     * `maxLocalBallFraction` of the graph, the full seeded refresh

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Benchmark decontamination: flag training documents that share word
@@ -104,14 +104,14 @@ object Decontamination {
     * corpus is scanned exactly once and never re-keyed: the
     * 100 TB-correct decontamination pass.
     *
-    * The signature width follows the kNN family's occupancy rule: `nBits
-    * = 0` (default) auto-sizes from a one-job CORPUS count via
-    * [[Similarity.autoNBits]], so the per-band bucket space grows with
-    * the corpus and broadcast-join fan-out stays pinned. Recall follows
-    * the OR-of-ANDs S-curve of `bands` (a leak sharing no band bucket
-    * with its source is missed — the standard LSH trade; raise `bands`
-    * for recall). `signature` defaults to [[Similarity.lshSignature]];
-    * pass the md5 flavor for cross-engine replay.
+    * The band width follows the kNN family's occupancy rule:
+    * `rowsPerBand = 0` (default) auto-sizes from a one-job CORPUS count
+    * via [[Similarity.autoRowsPerBand]], so the per-band bucket space
+    * grows with the corpus and broadcast-join fan-out stays pinned.
+    * Buckets are [[Similarity.bandBuckets]] (md5 planes, replayable in
+    * SQL). Recall follows the OR-of-ANDs S-curve of `bands` (a leak
+    * sharing no band bucket with its source is missed — the standard
+    * LSH trade; raise `bands` for recall).
     *
     * Zero-vector contract: rows whose embedding has zero norm are
     * DROPPED on both sides (cosine against them is 0/0 = NaN, and
@@ -124,14 +124,11 @@ object Decontamination {
       idCol: String,
       vecCol: String,
       threshold: Double,
-      nBits: Int = 0,
-      bands: Int = 2,
-      dim: Option[Int] = None,
-      signature: (Column, Int, Option[Int]) => Column = Similarity.lshSignature
+      dim: Int,
+      rowsPerBand: Int = 0,
+      bands: Int = 2
   ): DataFrame = {
-    val nb = Similarity.resolveNBits(corpus, nBits, bands, "semanticPairs")
-    val rowsPerBand = nb / bands
-    val bandMask = (1L << rowsPerBand) - 1
+    val rpb = Similarity.resolveRowsPerBand(corpus, rowsPerBand, bands)
     // zero-norm vectors are dropped on BOTH sides before the verify:
     // their cosine is 0/0 = NaN, and Spark orders NaN above every
     // double, so an unguarded `NaN >= threshold` would report a
@@ -139,12 +136,10 @@ object Decontamination {
     def banded(df: DataFrame, idAs: String, vecAs: String): DataFrame =
       df.select(col(idCol).as(idAs),
           transform(col(vecCol), x => x.cast("double")).as(vecAs),
-          signature(col(vecCol), nb, dim).as("__sig"))
+          Similarity.bandBuckets(col(vecCol), bands, rpb, dim).as("__buckets"))
         .where(Similarity.dot(col(vecAs), col(vecAs)) > 0)
         .select(col(idAs), col(vecAs),
-          posexplode(array((0 until bands).map(b =>
-            shiftright(col("__sig"), b * rowsPerBand).bitwiseAND(lit(bandMask))): _*))
-            .as(Seq("band", "bucket")))
+          posexplode(col("__buckets")).as(Seq("band", "bucket")))
     val corpusBanded = banded(corpus, "__doc", "__va")
     val benchBanded = banded(benchmark, "bench_id", "__vb")
     corpusBanded
@@ -167,13 +162,11 @@ object Decontamination {
       idCol: String,
       vecCol: String,
       threshold: Double,
-      nBits: Int = 0,
-      bands: Int = 2,
-      dim: Option[Int] = None,
-      signature: (Column, Int, Option[Int]) => Column = Similarity.lshSignature
+      dim: Int,
+      rowsPerBand: Int = 0,
+      bands: Int = 2
   ): DataFrame =
-    semanticPairs(corpus, benchmark, idCol, vecCol, threshold, nBits, bands,
-        dim, signature)
+    semanticPairs(corpus, benchmark, idCol, vecCol, threshold, dim, rowsPerBand, bands)
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_bench_matches"), max(col("cosine")).as("max_cosine"))
 }

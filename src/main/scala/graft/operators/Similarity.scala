@@ -181,42 +181,51 @@ object Similarity {
         s"signature shift budget; long shifts wrap mod 64 and would " +
         s"silently alias bits), got $nBits")
 
-  /** Shared literal-weights signature builder: bit p = [dot(vec, w_p) >= 0]
-    * with driver-precomputed per-plane weight arrays, a loud dim-hint
-    * check, and caller-chosen degenerate-input semantics (NULL vector ->
-    * NULL signature always; empty vector -> `emptySig`). */
-  private def signatureFromWeights(
-      vecCol: Column,
+  /** Bits j < nBits of `[dot(v, w_(firstPlane + j)) >= 0]` ORed into one
+    * long, over the already-cast double vector `v` and per-plane weight
+    * arrays embedded as plan literals, with a loud dim-hint check. Bit j lands at
+    * its LOCAL position; plane `firstPlane + j` only picks the weights —
+    * so a band reading planes [b·rpb, (b+1)·rpb) gets bit-identical
+    * buckets to the whole-width signature's `(sig >> b·rpb) & mask`. */
+  private def projectionBits(
+      v: Column,
+      firstPlane: Int,
       nBits: Int,
       dim: Int,
       component: (Int, Int) => Double,
-      emptySig: Long,
-      label: String,
-      planeOffset: Int = 0
-  ): Column = {
-    requireSignatureWidth(nBits, label)
-    val v = transform(vecCol, x => x.cast("double"))
-    val bits = (0 until nBits).map(j => planeOffset + j).zipWithIndex.map { case (p, j) =>
+      label: String
+  ): Column =
+    (0 until nBits).map { j =>
       // typedlit -> one ArrayType literal (array(lit...) would rebuild
       // a CreateArray of d children for every row)
-      val weights = typedLit((0 until dim).map(i => component(p, i)))
+      val weights = typedLit((0 until dim).map(i => component(firstPlane + j, i)))
       val proj = aggregate(zip_with(v, weights, (x, w) => x * w), lit(0.0d), (acc, x) => acc + x)
       // zip_with pads the shorter side with NULLs: a wrong dim hint
       // would silently zero every bit. Fail loudly instead.
       val checked = when(proj.isNotNull, proj).otherwise(raise_error(concat(
         lit(s"$label: dim hint $dim does not match vector length "),
         size(v).cast("string"))).cast("double"))
-      // bit lands at its LOCAL position j; plane p (offset + j) only
-      // picks the weights — so a banded consumer reading planes
-      // [b·rpb, (b+1)·rpb) gets bit-identical buckets to the packed
-      // signature's (sig >> b·rpb) & mask extraction
       when(checked >= 0, shiftleft(lit(1L), j)).otherwise(lit(0L))
-    }
+    }.reduce((a, b) => a.bitwiseOR(b))
+
+  /** Shared literal-weights signature: [[projectionBits]] over
+    * planes [0, nBits) with caller-chosen degenerate-input semantics
+    * (NULL vector -> NULL signature always; empty vector -> `emptySig`). */
+  private def signatureFromWeights(
+      vecCol: Column,
+      nBits: Int,
+      dim: Int,
+      component: (Int, Int) => Double,
+      emptySig: Long,
+      label: String
+  ): Column = {
+    requireSignatureWidth(nBits, label)
+    val v = transform(vecCol, x => x.cast("double"))
     // degenerate inputs resolve BEFORE the projection math so the
     // dim-hint raise_error never fires on them
     when(vecCol.isNull, lit(null).cast("long"))
       .when(size(v) === 0, lit(emptySig))
-      .otherwise(bits.reduce((a, b) => a.bitwiseOR(b)))
+      .otherwise(projectionBits(v, 0, nBits, dim, component, label))
   }
 
   /** Sign-random-projection signature: bit p = [dot(vec, plane_p) >= 0].
@@ -278,21 +287,111 @@ object Similarity {
     signatureFromWeights(vecCol, nBits, dim, md5Component,
       emptySig = 0L, label = "lshSignatureMd5")
 
-  /** Band `b`'s bucket computed DIRECTLY from its own plane range
-    * [b·rowsPerBand, (b+1)·rowsPerBand) — the multi-long escape from
-    * the packed signature's [[MaxSignatureBits]] budget: each band is
-    * its own long (≤ 62 bits), so the TOTAL width bands·rowsPerBand is
-    * unbounded. For widths that fit the packed signature the buckets
-    * are BIT-IDENTICAL to `(lshSignatureMd5(...) >> b·rowsPerBand) &
-    * mask` (same md5 plane weights, same fold, bit j at local position
-    * j — spec-gated equivalence), so the wide family is a strict
-    * extension, not a fork. md5-flavored on purpose: the width only
-    * matters at corpus scales where the oracle must replay the exact
-    * weights. */
-  def bandBucketMd5(vecCol: Column, band: Int, rowsPerBand: Int, dim: Int): Column = {
-    require(band >= 0, s"band must be >= 0, got $band")
-    signatureFromWeights(vecCol, rowsPerBand, dim, md5Component,
-      emptySig = 0L, label = "bandBucketMd5", planeOffset = band * rowsPerBand)
+  /** The LSH banding of every banded operator in graft (the kNN graph
+    * family, the embedding near-dup pairs, semantic decontamination):
+    * `array<long>` of `bands` buckets, band b's bucket computed directly
+    * from its own md5 plane range [b·rowsPerBand, (b+1)·rowsPerBand).
+    * Each band is its own long (≤ [[MaxSignatureBits]] bits), so the
+    * TOTAL width `bands · rowsPerBand` is unbounded. For widths ≤ 62
+    * bits the buckets are bit-identical to `(lshSignatureMd5(...) >>
+    * b·rowsPerBand) & mask` (same md5 plane weights, same fold, bit j
+    * at local position j — spec-gated), which is what the oracle SQL
+    * twins replay. The vector is cast once per row for all bands.
+    * NULL vector -> NULL array (no band rows); empty vector -> all-zero
+    * buckets (the md5 flavor's degenerate). */
+  private[graft] def bandBuckets(vec: Column, bands: Int, rowsPerBand: Int,
+      dim: Int): Column = {
+    require(bands >= 1, s"bandBuckets: bands must be >= 1, got $bands")
+    require(rowsPerBand >= 1 && rowsPerBand <= MaxSignatureBits,
+      s"bandBuckets: rowsPerBand must be in [1, $MaxSignatureBits] (each " +
+        s"band is one long; shifts wrap mod 64), got $rowsPerBand")
+    require(dim >= 1, s"bandBuckets: dim must be >= 1, got $dim")
+    val v = transform(vec, x => x.cast("double"))
+    when(vec.isNull, lit(null).cast("array<bigint>"))
+      .when(size(v) === 0, array(Seq.fill(bands)(lit(0L)): _*))
+      .otherwise(array((0 until bands).map(b =>
+        projectionBits(v, b * rowsPerBand, rowsPerBand, dim, md5Component,
+          "bandBuckets")): _*))
+  }
+
+  /** The band width (`rowsPerBand = 0`) every banded operator auto-sizes
+    * to for a corpus of `n` vectors: `max(4, ceil-log2(n / 16))` bits
+    * per band, floored at `ceil(16 / bands)` (tiny corpora keep a
+    * 16-bit total width). The per-(band, bucket) candidate join is
+    * quadratic in bucket occupancy, so a FIXED width silently goes
+    * quadratic as the corpus grows; growing one bit per band per corpus
+    * doubling pins the expected occupancy at ~16 rows. There is no cap
+    * on the total width (each band is its own long — see
+    * [[bandBuckets]]), and no long-valued `n` needs more than 59 bits
+    * per band. Integer-exact — the smallest b with `16 * 2^b >= n`, which
+    * a SQL oracle replays as `min(b) WHERE (16 << b) >= n` without
+    * floating-log edge cases. Public so an index build can record the
+    * width it auto-chose and hand it to [[knnGraphAgainstIndex]], which
+    * must probe at the BUILD width. */
+  def autoRowsPerBand(n: Long, bands: Int): Int = {
+    require(n >= 1, s"n must be >= 1, got $n")
+    require(bands >= 1, s"bands must be >= 1, got $bands")
+    var needed = 0
+    var cap = 16L
+    while (cap < n) {
+      needed += 1
+      cap = if (cap > (Long.MaxValue >> 1)) Long.MaxValue else cap << 1
+    }
+    math.max(math.max(4, needed), (16 + bands - 1) / bands)
+  }
+
+  /** Resolve the `rowsPerBand = 0` auto sentinel: one count job over the
+    * corpus (documented cost; pass an explicit width to skip it), then
+    * [[autoRowsPerBand]]. Explicit widths pass through; [[bandBuckets]]
+    * validates either. */
+  private[operators] def resolveRowsPerBand(df: DataFrame, rowsPerBand: Int,
+      bands: Int): Int =
+    if (rowsPerBand == 0) autoRowsPerBand(math.max(df.count(), 1L), bands)
+    else rowsPerBand
+
+  /** `(id, vec, buckets)`: ids, the cast vectors and their
+    * [[bandBuckets]], checkpointed so the banding runs once for every
+    * consumer (both join sides, the verify re-join). */
+  private def bandedFrame(df: DataFrame, idCol: String, vecCol: String,
+      bands: Int, rowsPerBand: Int, dim: Int): DataFrame =
+    df.select(col(idCol).as("id"),
+      transform(col(vecCol), x => x.cast("double")).as("vec"),
+      bandBuckets(col(vecCol), bands, rowsPerBand, dim).as("buckets"))
+      .localCheckpoint(true)
+
+  /** One `(id, band, bucket)` row per band membership. */
+  private def bandRows(banded: DataFrame): DataFrame =
+    banded.select(col("id"), posexplode(col("buckets")).as(Seq("band", "bucket")))
+
+  /** DIRECTED candidate pairs `(id, nbr)`, id != nbr, sharing any
+    * (band, bucket) — ids only, deduped on the pair. */
+  private def directedCandidates(banded: DataFrame): DataFrame = {
+    val rows = bandRows(banded)
+    rows.join(rows.select(col("band"), col("bucket"), col("id").as("nbr")),
+        Seq("band", "bucket"))
+      .where(col("id") =!= col("nbr"))
+      .select("id", "nbr")
+      .dropDuplicates("id", "nbr")
+  }
+
+  /** Bits the band index occupies above `rowsPerBand` in the index's
+    * `bkey = band·2^rpb + bucket` long — the index packs (band, bucket)
+    * into one probe column for bucket-persistence, so rpb + these bits
+    * must fit the shift budget (a non-binding bound in practice:
+    * bands=16 still leaves 2^58 bucket space per band). */
+  private def bandIndexBits(bands: Int): Int =
+    if (bands <= 1) 0 else 64 - java.lang.Long.numberOfLeadingZeros((bands - 1).toLong)
+
+  /** `(bkey, id)` rows of a banded frame, `bkey = band·2^rowsPerBand +
+    * bucket` — the probe column of [[knnGraphIndex]]/[[knnGraphAgainstIndex]]. */
+  private def bkeyRows(banded: DataFrame, bands: Int, rowsPerBand: Int,
+      label: String): DataFrame = {
+    require(rowsPerBand + bandIndexBits(bands) <= MaxSignatureBits,
+      s"$label: band index needs ${bandIndexBits(bands)} bits above " +
+        s"rowsPerBand=$rowsPerBand in the bkey long — lower one of them")
+    bandRows(banded).select(
+      (col("band").cast("long") * lit(1L << rowsPerBand) + col("bucket")).as("bkey"),
+      col("id"))
   }
 
   /** Embedding-cosine near-duplicate pairs, brute force: every id_a < id_b
@@ -315,19 +414,19 @@ object Similarity {
   }
 
   /** Embedding-cosine near-duplicate pairs at scale: banded
-    * sign-random-projection LSH. The signature (`nBits` wide; 0 = the
-    * default = auto-sized from a one-job corpus count via
-    * [[autoNBits]], so the width tracks corpus growth and the per-band
-    * bucket occupancy — and with it the candidate-join cost — stays
-    * pinned instead of silently going quadratic) splits into `bands`;
-    * vectors sharing ANY band bucket become candidates (recall follows the
-    * OR-of-ANDs S-curve: for cosine >= 0.95 with 16 bits in 4 bands,
-    * ~0.99), then exact cosine confirms. Shuffles are the band-bucket
-    * join and the candidate dedup — never all pairs.
+    * sign-random-projection LSH ([[bandBuckets]]). `rowsPerBand` bits
+    * per band (0 = the default = auto-sized from a one-job corpus count
+    * via [[autoRowsPerBand]], so the width tracks corpus growth and the
+    * per-band bucket occupancy — and with it the candidate-join cost —
+    * stays pinned instead of silently going quadratic); vectors sharing
+    * ANY band bucket become candidates (recall follows the OR-of-ANDs
+    * S-curve: for cosine >= 0.95 with 4 bits in 4 bands, ~0.99), then
+    * exact cosine confirms. Shuffles are the band-bucket join and the
+    * candidate dedup — never all pairs.
     *
     * The candidate stages carry IDs ONLY: the band self-join and the
     * (id_a, id_b) dedup shuffle metadata-sized rows, and the full vectors
-    * re-join from the checkpointed signature index afterwards (the
+    * re-join from the checkpointed banded frame afterwards (the
     * [[Dedup.minHashLshJaccardPairs]] pattern). At 100 TB embeddings this
     * is the difference between a metadata shuffle and shuffling
     * O(candidates x dim) doubles through the dedup exchange. */
@@ -336,65 +435,13 @@ object Similarity {
       idCol: String,
       vecCol: String,
       threshold: Double,
-      nBits: Int = 0,
-      bands: Int = 4,
-      dim: Option[Int] = None,
-      signature: (Column, Int, Option[Int]) => Column = lshSignature
-  ): DataFrame = {
-    val nb = resolveNBits(df, nBits, bands, "cosineNearDupPairs")
-    val rowsPerBand = nb / bands
-    val signed = df.select(col(idCol).as("id"),
-      transform(col(vecCol), x => x.cast("double")).as("vec"),
-      signature(col(vecCol), nb, dim).as("sig"))
-      .localCheckpoint(true) // signature index computed once for both sides
-    val bandMask = (1L << rowsPerBand) - 1
-    val banded = signed.select(col("id"),
-      posexplode(array((0 until bands).map(b =>
-        shiftright(col("sig"), b * rowsPerBand).bitwiseAND(lit(bandMask))): _*))
-        .as(Seq("band", "bucket")))
-    val a = banded.select(col("band"), col("bucket"), col("id").as("id_a"))
-    val b = banded.select(col("band"), col("bucket"), col("id").as("id_b"))
-    val candidates = a.join(b, Seq("band", "bucket"))
-      .where(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .dropDuplicates("id_a", "id_b")
-    val vecs = signed.select(col("id"), col("vec"))
-    candidates
-      .join(vecs.select(col("id").as("id_a"), col("vec").as("va")), Seq("id_a"))
-      .join(vecs.select(col("id").as("id_b"), col("vec").as("vb")), Seq("id_b"))
-      .withColumn("cosine", cosine(col("va"), col("vb")))
-      .where(col("cosine") >= lit(threshold))
-      .select("id_a", "id_b", "cosine")
-  }
-
-  /** [[cosineNearDupPairs]] at the wide (multi-long) width — the
-    * near-dup pair operator past the packed signature's 62-bit budget:
-    * per-band buckets from [[bandBucketMd5]] (md5 weights, so the
-    * width the operator NEEDS at these corpus sizes stays
-    * oracle-replayable), candidates from per-(band, bucket)
-    * equi-joins carrying ids only, exact cosine confirms.
-    * `rowsPerBand = 0` auto-sizes via [[suggestedRowsPerBandWide]]
-    * (floored to the packed family's 16-bit-total equivalent) —
-    * bucket occupancy stays pinned at ANY corpus size, where the
-    * packed auto width saturates (bands=4: at ~524k vectors). */
-  def cosineNearDupPairsWide(
-      df: DataFrame,
-      idCol: String,
-      vecCol: String,
-      threshold: Double,
       dim: Int,
       rowsPerBand: Int = 0,
       bands: Int = 4
   ): DataFrame = {
-    require(dim >= 1, s"dim must be >= 1, got $dim")
-    val rpb = resolveRpbWide(df, rowsPerBand, bands, "cosineNearDupPairsWide")
-    val signed = df.select(col(idCol).as("id"),
-      transform(col(vecCol), x => x.cast("double")).as("vec"),
-      array((0 until bands).map(b =>
-        bandBucketMd5(col(vecCol), b, rpb, dim)): _*).as("buckets"))
-      .localCheckpoint(true)
-    val banded = signed.select(col("id"),
-      posexplode(col("buckets")).as(Seq("band", "bucket")))
+    val rpb = resolveRowsPerBand(df, rowsPerBand, bands)
+    val signed = bandedFrame(df, idCol, vecCol, bands, rpb, dim)
+    val banded = bandRows(signed)
     val a = banded.select(col("band"), col("bucket"), col("id").as("id_a"))
     val b = banded.select(col("band"), col("bucket"), col("id").as("id_b"))
     val candidates = a.join(b, Seq("band", "bucket"))
@@ -428,7 +475,7 @@ object Similarity {
     * generation, so the gate pins the implementation, not brute force
     * (the brute twin exists as [[bruteForceTopK]]/[[topKForQueries]]).
     *
-    * Scale shape: signature index computed once (checkpoint; persist
+    * Scale shape: banded frame computed once (checkpoint; persist
     * bucketed-by-(band, bucket) at cluster scale), candidates from
     * per-(band, bucket) equi-joins — never all-pairs — deduped on the
     * directed pair, vectors re-joined by id (candidate rows carry ids
@@ -440,39 +487,24 @@ object Similarity {
     * AT SCALE prefer [[knnGraphQuantized]]: this variant's verify joins
     * ship the raw 8·dim-byte vectors per candidate row, which is the
     * measured spill bound a decade up; the quantized twin ships 1-byte
-    * SQ8 codes and exact-re-ranks only the per-node survivors. `nBits`
-    * defaults to 0 = auto ([[autoNBits]] over a one-job corpus count),
-    * so the width grows with log2(n) and bucket occupancy stays pinned
-    * — a FIXED width goes quadratic once the corpus outgrows its
-    * per-band bucket space. */
+    * SQ8 codes and exact-re-ranks only the per-node survivors.
+    * `rowsPerBand` defaults to 0 = auto ([[autoRowsPerBand]] over a
+    * one-job corpus count), so the width grows with log2(n) and bucket
+    * occupancy stays pinned — a FIXED width goes quadratic once the
+    * corpus outgrows its per-band bucket space. */
   def knnGraph(
       df: DataFrame,
       idCol: String,
       vecCol: String,
       k: Int,
-      nBits: Int = 0,
-      bands: Int = 4,
-      dim: Option[Int] = None,
-      signature: (Column, Int, Option[Int]) => Column = lshSignature
+      dim: Int,
+      rowsPerBand: Int = 0,
+      bands: Int = 4
   ): DataFrame = {
     require(k >= 1 && k <= 1000, s"k must be in [1, 1000], got $k")
-    val nb = resolveNBits(df, nBits, bands, "knnGraph")
-    val rowsPerBand = nb / bands
-    val signed = df.select(col(idCol).as("id"),
-      transform(col(vecCol), x => x.cast("double")).as("vec"),
-      signature(col(vecCol), nb, dim).as("sig"))
-      .localCheckpoint(true)
-    val bandMask = (1L << rowsPerBand) - 1
-    val banded = signed.select(col("id"),
-      posexplode(array((0 until bands).map(b =>
-        shiftright(col("sig"), b * rowsPerBand).bitwiseAND(lit(bandMask))): _*))
-        .as(Seq("band", "bucket")))
-    val a = banded.select(col("band"), col("bucket"), col("id"))
-    val b = banded.select(col("band"), col("bucket"), col("id").as("nbr"))
-    val candidates = a.join(b, Seq("band", "bucket"))
-      .where(col("id") =!= col("nbr"))
-      .select("id", "nbr")
-      .dropDuplicates("id", "nbr")
+    val rpb = resolveRowsPerBand(df, rowsPerBand, bands)
+    val signed = bandedFrame(df, idCol, vecCol, bands, rpb, dim)
+    val candidates = directedCandidates(signed)
     val vecs = signed.select(col("id"), col("vec"))
     val w = Window.partitionBy("id").orderBy(col("cosine").desc, col("nbr").asc)
     candidates
@@ -484,159 +516,8 @@ object Similarity {
       .select("id", "nbr", "cosine", "rank")
   }
 
-  /** Band-width guidance for [[knnGraph]]/[[knnGraphQuantized]]/
-    * [[cosineNearDupPairs]]: the smallest bands-divisible `nBits` whose
-    * per-band bucket space keeps the EXPECTED bucket occupancy at or
-    * under `targetBucketSize` rows, i.e. `rowsPerBand >=
-    * ceil(log2(n / targetBucketSize))`. The per-(band, bucket)
-    * candidate join is quadratic in bucket occupancy, so a FIXED nBits
-    * (the old 16-bit catalog default) silently goes quadratic as the
-    * corpus grows — occupancy doubles every time n does. Growing
-    * rowsPerBand with log2(n) pins occupancy (and with it per-bucket
-    * join cost) to a constant, at the usual banding recall trade
-    * (each extra bit per band multiplies the per-band miss odds for a
-    * given cosine by the S-curve factor; add a band to compensate).
-    * Floors at 4 bits/band (below that buckets are degenerate at any
-    * n) and caps the TOTAL width at [[MaxSignatureBits]] bits — `62 /
-    * bands` per band — because the single-long signature is the shift
-    * budget: a per-band-only cap returned widths > 64 whose high bands
-    * silently aliased low bits (JVM long shifts wrap mod 64), exactly
-    * the silent-quadratic failure this function exists to prevent.
-    * Past the cap (n around targetBucketSize * 2^(62/bands)) move to a
-    * multi-long or binary signature. `needed` is integer-exact — the
-    * smallest b with `targetBucketSize * 2^b >= n` — so a SQL oracle
-    * replays it without floating-log edge cases. */
-  /** Smallest b with `targetBucketSize * 2^b >= n`, capped at
-    * [[MaxSignatureBits]] — integer-exact (a SQL oracle replays it as
-    * `min(b) WHERE (tbs << b) >= n`, no floating-log edge cases). */
-  private def neededBits(n: Long, targetBucketSize: Int): Int = {
-    var needed = 0
-    var cap = targetBucketSize.toLong
-    while (cap < n && needed < MaxSignatureBits) {
-      needed += 1
-      cap = if (cap > (Long.MaxValue >> 1)) Long.MaxValue else cap << 1
-    }
-    needed
-  }
-
-  def suggestedNBits(n: Long, bands: Int, targetBucketSize: Int = 16): Int = {
-    require(n >= 1, s"n must be >= 1, got $n")
-    require(bands >= 1 && bands <= MaxSignatureBits / 4,
-      s"bands must be in [1, ${MaxSignatureBits / 4}] (the " +
-        s"$MaxSignatureBits-bit signature budget at >= 4 bits/band), got $bands")
-    require(targetBucketSize >= 1,
-      s"targetBucketSize must be >= 1, got $targetBucketSize")
-    bands * math.min(MaxSignatureBits / bands,
-      math.max(4, neededBits(n, targetBucketSize)))
-  }
-
-  /** [[suggestedNBits]]'s per-band guidance for the WIDE (multi-long)
-    * family, where each band is its own ≤62-bit long and the total
-    * width is unbounded: bits per band = `max(4, ceil-log2(n/target))`,
-    * capped only by the per-long budget — past the packed family's
-    * saturation point this keeps growing one bit per corpus doubling,
-    * which is the whole reason the wide family exists. */
-  def suggestedRowsPerBandWide(n: Long, targetBucketSize: Int = 16): Int = {
-    require(n >= 1, s"n must be >= 1, got $n")
-    require(targetBucketSize >= 1,
-      s"targetBucketSize must be >= 1, got $targetBucketSize")
-    math.max(4, neededBits(n, targetBucketSize))
-  }
-
-  /** Resolve the wide family's `rowsPerBand = 0` auto sentinel: one
-    * count job, [[suggestedRowsPerBandWide]], floored so tiny corpora
-    * match the packed family's 16-bit-total floor. */
-  private def resolveRpbWide(df: DataFrame, rowsPerBand: Int, bands: Int,
-      label: String): Int = {
-    require(bands >= 1 && bands <= 64, s"$label: bands must be in [1, 64], got $bands")
-    val rpb =
-      if (rowsPerBand == 0)
-        math.max(suggestedRowsPerBandWide(math.max(df.count(), 1L)),
-          (16 + bands - 1) / bands)
-      else rowsPerBand
-    require(rpb >= 1 && rpb <= MaxSignatureBits,
-      s"$label: rowsPerBand must be in [1, $MaxSignatureBits] (per-long " +
-        s"budget), got $rpb")
-    rpb
-  }
-
-  /** Bits the band index occupies above `rowsPerBand` in a packed
-    * `bkey = band·2^rpb + bucket` long — the wide INDEX variants pack
-    * (band, bucket) into one probe column for bucket-persistence, so
-    * rpb + these bits must fit the shift budget (a non-binding bound in
-    * practice: bands=16 still leaves 2^58 bucket space per band). */
-  private def bandIndexBits(bands: Int): Int =
-    if (bands <= 1) 0 else 64 - java.lang.Long.numberOfLeadingZeros((bands - 1).toLong)
-
-  /** The width the kNN-graph family uses when the caller passes
-    * `nBits = 0` (the auto default): [[suggestedNBits]] floored at 16
-    * TOTAL bits — tiny corpora would otherwise get sub-16-bit
-    * signatures whose buckets are coarser than the long-standing
-    * 16-bit demo default for no benefit. Public so an index builder
-    * can record the width it auto-chose and hand it to
-    * [[knnGraphAgainstIndex]] (which must probe with the BUILD width
-    * and therefore has no default). */
-  def autoNBits(n: Long, bands: Int, targetBucketSize: Int = 16): Int = {
-    val floor16 = bands * math.min(MaxSignatureBits / bands,
-      math.max(4, (16 + bands - 1) / bands))
-    math.max(suggestedNBits(n, bands, targetBucketSize), floor16)
-  }
-
-  /** A resolved LSH banding width + the family it dispatches to — the
-    * record an index builder persists next to its frames so probes band
-    * at the BUILD width and compositions invoking several banded
-    * operators on the same corpus pay the sizing count ONCE
-    * ([[knnWidthFor]]) instead of once per call.
-    *
-    * `packed` is the dispatch decision: true while the total width fits
-    * the single-long shift budget (`rowsPerBand · bands <=`
-    * [[MaxSignatureBits]]), i.e. up to `targetBucketSize ·
-    * 2^(MaxSignatureBits/bands)` vectors; past that the packed
-    * signature would saturate (bucket occupancy, and with it the
-    * candidate join, doubling per corpus doubling — the r16 width
-    * ladder measured 18.8B candidate rows at the saturated width where
-    * the wide family generates 124M) and the wide multi-long family is
-    * the only occupancy-pinned choice. */
-  final case class KnnWidth(n: Long, bands: Int, rowsPerBand: Int, packed: Boolean) {
-    /** Total packed width; callers must only consume it when `packed`. */
-    def nBits: Int = {
-      require(packed, s"nBits is a packed-family width; this corpus " +
-        s"(n=$n) resolved to the wide family at rowsPerBand=$rowsPerBand")
-      rowsPerBand * bands
-    }
-  }
-
-  /** Width resolution from a known corpus size — pure, integer-exact
-    * (the [[suggestedRowsPerBandWide]] ceil-log2 with the packed
-    * family's 16-bit-total floor), so a SQL oracle replays it and a
-    * spec can walk the saturation boundary without building 2^31
-    * vectors. Dispatch rule: packed while `rowsPerBand · bands <=`
-    * [[MaxSignatureBits]], wide after. */
-  def resolveKnnWidth(n: Long, bands: Int = 4, targetBucketSize: Int = 16): KnnWidth = {
-    require(n >= 1, s"n must be >= 1, got $n")
-    require(bands >= 1 && bands <= 64, s"bands must be in [1, 64], got $bands")
-    val rpb = math.max(suggestedRowsPerBandWide(n, targetBucketSize),
-      (16 + bands - 1) / bands)
-    KnnWidth(n, bands, rpb, packed = rpb.toLong * bands <= MaxSignatureBits)
-  }
-
-  /** [[resolveKnnWidth]] over a one-job corpus count — the ONE count a
-    * composition should pay: resolve here, then thread the width
-    * through every banded family member and persist it with any index
-    * built at it. */
-  def knnWidthFor(df: DataFrame, bands: Int = 4, targetBucketSize: Int = 16): KnnWidth =
-    resolveKnnWidth(math.max(df.count(), 1L), bands, targetBucketSize)
-
-  /** Width-dispatching front door for the quantized kNN graph
-    * (r16 verdict #4): resolves the width (or takes a pre-resolved
-    * [[KnnWidth]] so compositions don't re-count), then dispatches —
-    * packed md5 signature below the saturation boundary,
-    * [[knnGraphQuantizedWide]] above it. Both sides band identically at
-    * shared widths (the spec-gated family equivalence), so crossing
-    * the boundary changes the plan's signature layout, not the
-    * semantics; output contract is the family's:
-    * `(id, nbr, cosine, rank)`, exact-cosine top-k among the
-    * SQ8-top-(k·rerankFactor) banded candidates, md5-replayable. */
+  /** Forwarder kept for existing callers: [[knnGraphQuantized]] at the
+    * auto width. */
   def knnGraphAuto(
       df: DataFrame,
       idCol: String,
@@ -644,60 +525,9 @@ object Similarity {
       k: Int,
       dim: Int,
       bands: Int = 4,
-      rerankFactor: Int = 4,
-      width: Option[KnnWidth] = None
-  ): DataFrame = {
-    val w = width.getOrElse(knnWidthFor(df, bands))
-    require(w.bands == bands,
-      s"knnGraphAuto: width was resolved at bands=${w.bands}, called with $bands")
-    if (w.packed)
-      knnGraphQuantized(df, idCol, vecCol, k, dim, nBits = w.nBits, bands,
-        rerankFactor, signature = (c, n, d) => lshSignatureMd5(c, n, d.get))
-    else
-      knnGraphQuantizedWide(df, idCol, vecCol, k, dim,
-        rowsPerBand = w.rowsPerBand, bands, rerankFactor)
-  }
-
-  /** Width-dispatching front door for embedding near-dup pairs — the
-    * [[knnGraphAuto]] rule applied to [[cosineNearDupPairs]] /
-    * [[cosineNearDupPairsWide]]: same resolution, same boundary, same
-    * md5 banding on both sides, `(id_a, id_b, cosine)` out. */
-  def cosineNearDupAuto(
-      df: DataFrame,
-      idCol: String,
-      vecCol: String,
-      threshold: Double,
-      dim: Int,
-      bands: Int = 4,
-      width: Option[KnnWidth] = None
-  ): DataFrame = {
-    val w = width.getOrElse(knnWidthFor(df, bands))
-    require(w.bands == bands,
-      s"cosineNearDupAuto: width was resolved at bands=${w.bands}, called with $bands")
-    if (w.packed)
-      cosineNearDupPairs(df, idCol, vecCol, threshold, nBits = w.nBits, bands,
-        dim = Some(dim), signature = (c, n, d) => lshSignatureMd5(c, n, d.get))
-    else
-      cosineNearDupPairsWide(df, idCol, vecCol, threshold, dim,
-        rowsPerBand = w.rowsPerBand, bands)
-  }
-
-  /** Resolve the family's `nBits = 0` auto sentinel: one count job over
-    * the corpus (documented cost; pass an explicit width to skip it),
-    * then [[autoNBits]]. Explicit widths pass through untouched but are
-    * validated against the shift budget either way. */
-  private[operators] def resolveNBits(df: DataFrame, nBits: Int, bands: Int,
-      label: String): Int = {
-    require(bands >= 1, s"$label: bands must be >= 1, got $bands")
-    val nb = if (nBits == 0) autoNBits(math.max(df.count(), 1L), bands) else nBits
-    require(nb >= bands && nb <= MaxSignatureBits,
-      s"$label: nBits must be in [bands, $MaxSignatureBits] (single-long " +
-        s"signature shift budget — widths past it silently alias band " +
-        s"buckets), got $nb with bands=$bands")
-    require(nb % bands == 0, s"$label: nBits must be divisible by bands, " +
-      s"got nBits=$nb bands=$bands")
-    nb
-  }
+      rerankFactor: Int = 4
+  ): DataFrame =
+    knnGraphQuantized(df, idCol, vecCol, k, dim, bands = bands, rerankFactor = rerankFactor)
 
   /** [[knnGraph]] with a QUANTIZED verify stage — the 100-TB form. The
     * plain variant's verify joins ship the raw double vectors twice per
@@ -724,52 +554,39 @@ object Similarity {
     * bytes persisted; candidate exchanges and the survivor window carry
     * codes/scores only (the payload-free pair rule); the raw vectors
     * are touched by exactly n + n·k·rerankFactor join rows, linear in
-    * corpus size. `nBits` defaults to 0 = auto ([[autoNBits]] over a
-    * one-job corpus count) — a fixed width goes quadratic when the
-    * corpus outgrows its bucket space. */
+    * corpus size. `rowsPerBand` defaults to 0 = auto
+    * ([[autoRowsPerBand]] over a one-job corpus count) — a fixed width
+    * goes quadratic when the corpus outgrows its bucket space. */
   def knnGraphQuantized(
       df: DataFrame,
       idCol: String,
       vecCol: String,
       k: Int,
       dim: Int,
-      nBits: Int = 0,
+      rowsPerBand: Int = 0,
       bands: Int = 4,
-      rerankFactor: Int = 4,
-      signature: (Column, Int, Option[Int]) => Column = lshSignature
+      rerankFactor: Int = 4
   ): DataFrame = {
     require(k >= 1 && k <= 1000, s"k must be in [1, 1000], got $k")
     require(rerankFactor >= 1 && rerankFactor <= 64,
       s"rerankFactor must be in [1, 64], got $rerankFactor")
     require(dim >= 1, s"dim must be >= 1, got $dim")
-    val nb = resolveNBits(df, nBits, bands, "knnGraphQuantized")
-    val rowsPerBand = nb / bands
+    val rpb = resolveRowsPerBand(df, rowsPerBand, bands)
     val params = sq8Params(df.select(col(vecCol)), vecCol, dim)
-    val signed = df.select(col(idCol).as("id"),
-      transform(col(vecCol), x => x.cast("double")).as("vec"),
-      signature(col(vecCol), nb, Some(dim)).as("sig"))
-      .localCheckpoint(true)
-    // 1-byte code elements: sq8 codes are 0..255, shifted to tinyint
-    // range so the array packs at 1 byte/element in Tungsten rows —
-    // the 8x payload cut the verify joins exist to exploit
-    val codes = sq8Encode(signed.select(col("id"), col("vec")), "id", "vec", params)
-      .select(col("id"),
-        transform(col("codes"), c => (c - lit(128)).cast("tinyint")).as("codes8"))
-      .localCheckpoint(true)
-    val bandMask = (1L << rowsPerBand) - 1
-    val banded = signed.select(col("id"),
-      posexplode(array((0 until bands).map(b =>
-        shiftright(col("sig"), b * rowsPerBand).bitwiseAND(lit(bandMask))): _*))
-        .as(Seq("band", "bucket")))
-    val a = banded.select(col("band"), col("bucket"), col("id"))
-    val b = banded.select(col("band"), col("bucket"), col("id").as("nbr"))
-    val candidates = a.join(b, Seq("band", "bucket"))
-      .where(col("id") =!= col("nbr"))
-      .select("id", "nbr")
-      .dropDuplicates("id", "nbr")
-    quantizedVerifyTopK(candidates, codes, params,
+    val signed = bandedFrame(df, idCol, vecCol, bands, rpb, dim)
+    val codes = sq8Codes8(signed, params).localCheckpoint(true)
+    quantizedVerifyTopK(directedCandidates(signed), codes, params,
       signed.select(col("id"), col("vec")), k, rerankFactor)
   }
+
+  /** `(id, codes8)`: SQ8 codes as 1-byte elements — codes are 0..255,
+    * shifted to tinyint range so the array packs at 1 byte/element in
+    * Tungsten rows, the 8x payload cut the verify joins exist to
+    * exploit. */
+  private def sq8Codes8(signed: DataFrame, params: DataFrame): DataFrame =
+    sq8Encode(signed.select(col("id"), col("vec")), "id", "vec", params)
+      .select(col("id"),
+        transform(col("codes"), c => (c - lit(128)).cast("tinyint")).as("codes8"))
 
   /** Shared SQ8-verify tail of the quantized kNN family: ADC-score the
     * candidate pairs on 1-byte codes, window to the per-node
@@ -831,63 +648,6 @@ object Similarity {
       .select("id", "nbr", "cosine", "rank")
   }
 
-  /** [[knnGraphQuantized]] past the packed signature's 62-bit budget —
-    * the multi-long wide family: each band's bucket is computed
-    * DIRECTLY from its own plane range as its own long
-    * ([[bandBucketMd5]]), so the total width `bands · rowsPerBand` is
-    * unbounded while every band keeps the ≤62-bit per-long budget.
-    * With bands=4 the PACKED family saturates at 15 bits/band — i.e.
-    * at `16·2^15 ≈ 524k` vectors, exactly the probe corpus's measured
-    * third decade — after which its bucket occupancy (and the
-    * per-bucket candidate join) doubles with every corpus doubling.
-    * This variant keeps growing one bit per band per doubling
-    * (`rowsPerBand = 0` auto-sizes via [[suggestedRowsPerBandWide]]
-    * over a one-job count, floored so tiny corpora match the packed
-    * family's 16-bit-total floor), so occupancy stays pinned at any n.
-    *
-    * Buckets are bit-identical to the packed md5 path at widths both
-    * families can express (spec-gated), and the verify tail is the
-    * SAME code ([[quantizedVerifyTopK]]) — identical output contract:
-    * exact-cosine top-k among the SQ8-top-(k·rerankFactor) banded
-    * candidates, `(id, nbr, cosine, rank)`, fully oracle-replayable
-    * (md5 weights by construction). */
-  def knnGraphQuantizedWide(
-      df: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int,
-      dim: Int,
-      rowsPerBand: Int = 0,
-      bands: Int = 4,
-      rerankFactor: Int = 4
-  ): DataFrame = {
-    require(k >= 1 && k <= 1000, s"k must be in [1, 1000], got $k")
-    require(rerankFactor >= 1 && rerankFactor <= 64,
-      s"rerankFactor must be in [1, 64], got $rerankFactor")
-    require(dim >= 1, s"dim must be >= 1, got $dim")
-    val rpb = resolveRpbWide(df, rowsPerBand, bands, "knnGraphQuantizedWide")
-    val params = sq8Params(df.select(col(vecCol)), vecCol, dim)
-    val signed = df.select(col(idCol).as("id"),
-      transform(col(vecCol), x => x.cast("double")).as("vec"),
-      array((0 until bands).map(b =>
-        bandBucketMd5(col(vecCol), b, rpb, dim)): _*).as("buckets"))
-      .localCheckpoint(true)
-    val codes = sq8Encode(signed.select(col("id"), col("vec")), "id", "vec", params)
-      .select(col("id"),
-        transform(col("codes"), c => (c - lit(128)).cast("tinyint")).as("codes8"))
-      .localCheckpoint(true)
-    val banded = signed.select(col("id"),
-      posexplode(col("buckets")).as(Seq("band", "bucket")))
-    val a = banded.select(col("band"), col("bucket"), col("id"))
-    val b = banded.select(col("band"), col("bucket"), col("id").as("nbr"))
-    val candidates = a.join(b, Seq("band", "bucket"))
-      .where(col("id") =!= col("nbr"))
-      .select("id", "nbr")
-      .dropDuplicates("id", "nbr")
-    quantizedVerifyTopK(candidates, codes, params,
-      signed.select(col("id"), col("vec")), k, rerankFactor)
-  }
-
   /** Persisted quantized kNN-graph index — the three frames the
     * incremental edge probe ([[knnGraphAgainstIndex]]) consumes,
     * completing the ingestion story for the semantic-neighborhood
@@ -913,36 +673,24 @@ object Similarity {
     * append never silently re-encodes the standing corpus.
     *
     * The band WIDTH freezes at build time too: with the auto default
-    * (`nBits = 0`) it is [[autoNBits]] of the build-time corpus count —
-    * record that number next to the persisted frames (the probe's
-    * `nBits` has no default for exactly this reason). */
+    * (`rowsPerBand = 0`) it is [[autoRowsPerBand]] of the build-time
+    * corpus count — record that number next to the persisted frames
+    * (the probe's `rowsPerBand` has no default for exactly this
+    * reason). */
   def knnGraphIndex(
       df: DataFrame,
       idCol: String,
       vecCol: String,
       dim: Int,
-      nBits: Int = 0,
-      bands: Int = 4,
-      signature: (Column, Int, Option[Int]) => Column = lshSignature
+      rowsPerBand: Int = 0,
+      bands: Int = 4
   ): (DataFrame, DataFrame, DataFrame) = {
     require(dim >= 1, s"dim must be >= 1, got $dim")
-    val nb = resolveNBits(df, nBits, bands, "knnGraphIndex")
-    val rowsPerBand = nb / bands
+    val rpb = resolveRowsPerBand(df, rowsPerBand, bands)
     val params = sq8Params(df.select(col(vecCol)), vecCol, dim)
-    val signed = df.select(col(idCol).as("id"),
-      transform(col(vecCol), x => x.cast("double")).as("vec"),
-      signature(col(vecCol), nb, Some(dim)).as("sig"))
-      .localCheckpoint(true)
-    val bandMask = (1L << rowsPerBand) - 1
-    val banded = signed.select(col("id"),
-      posexplode(array((0 until bands).map(b =>
-        shiftright(col("sig"), b * rowsPerBand).bitwiseAND(lit(bandMask))): _*))
-        .as(Seq("band", "bucket")))
-      .select((col("band") * lit(1L << rowsPerBand) + col("bucket")).as("bkey"),
-        col("id"))
-    val payload = sq8Encode(signed.select(col("id"), col("vec")), "id", "vec", params)
-      .select(col("id"),
-        transform(col("codes"), c => (c - lit(128)).cast("tinyint")).as("codes8"))
+    val signed = bandedFrame(df, idCol, vecCol, bands, rpb, dim)
+    val banded = bkeyRows(signed, bands, rpb, "knnGraphIndex")
+    val payload = sq8Codes8(signed, params)
       .join(signed.select(col("id"), col("vec")), Seq("id"))
     (banded, payload, params)
   }
@@ -956,112 +704,20 @@ object Similarity {
     * `nbr` a corpus node; cosine is exact (re-ranked), the
     * [[knnGraphQuantized]] contract.
     *
-    * Scale shape: the batch side computes its own signatures and codes
-    * (frozen params broadcast — out-of-range batch values clamp, the
-    * documented SQ8 rule); the candidate equi-join on `bkey` needs no
-    * index-side exchange when `banding` is the bucketed read-back;
+    * Scale shape: the batch side computes its own band buckets and
+    * codes (frozen params broadcast — out-of-range batch values clamp,
+    * the documented SQ8 rule); the candidate equi-join on `bkey` needs
+    * no index-side exchange when `banding` is the bucketed read-back;
     * verify ships 1-byte codes; raw vectors are touched only by the
     * batch rows and the <= batch·k·rerankFactor survivor joins. The
     * standing corpus is never re-scanned beyond its banded candidates.
     *
-    * `nBits`/`bands` have NO defaults here: the probe MUST band with
-    * the width the index was built at (a mismatch probes the wrong
-    * buckets), so the builder records it — explicit, or [[autoNBits]]
-    * of the standing count when the build auto-sized. */
+    * `rowsPerBand`/`bands` have NO defaults here: the probe MUST band
+    * with the width the index was built at (a mismatch probes the wrong
+    * buckets), so it is recorded at build time — explicit, or
+    * [[autoRowsPerBand]] of the standing count when the build
+    * auto-sized. */
   def knnGraphAgainstIndex(
-      banding: DataFrame,
-      payload: DataFrame,
-      params: DataFrame,
-      batch: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int,
-      dim: Int,
-      nBits: Int,
-      bands: Int,
-      rerankFactor: Int = 4,
-      signature: (Column, Int, Option[Int]) => Column = lshSignature
-  ): DataFrame = {
-    require(k >= 1 && k <= 1000, s"k must be in [1, 1000], got $k")
-    require(rerankFactor >= 1 && rerankFactor <= 64,
-      s"rerankFactor must be in [1, 64], got $rerankFactor")
-    require(nBits >= 1, s"knnGraphAgainstIndex: nBits must be the BUILD " +
-      s"width (no auto here — a mismatched probe bands into the wrong " +
-      s"buckets), got $nBits")
-    val nbChecked = resolveNBits(batch, nBits, bands, "knnGraphAgainstIndex")
-    val rowsPerBand = nbChecked / bands
-    val bandMask = (1L << rowsPerBand) - 1
-    val qsigned = batch.select(col(idCol).as("id"),
-      transform(col(vecCol), x => x.cast("double")).as("vec"),
-      signature(col(vecCol), nBits, Some(dim)).as("sig"))
-      .localCheckpoint(true)
-    val qband = qsigned.select(col("id"),
-      posexplode(array((0 until bands).map(b =>
-        shiftright(col("sig"), b * rowsPerBand).bitwiseAND(lit(bandMask))): _*))
-        .as(Seq("band", "bucket")))
-      .select((col("band") * lit(1L << rowsPerBand) + col("bucket")).as("bkey"),
-        col("id"))
-    val qcodes = sq8Encode(qsigned.select(col("id"), col("vec")), "id", "vec", params)
-      .select(col("id"),
-        transform(col("codes"), c => (c - lit(128)).cast("tinyint")).as("codes8"))
-    val candidates = qband
-      .join(banding.select(col("bkey"), col("id").as("nbr")), Seq("bkey"))
-      .where(col("id") =!= col("nbr"))
-      .select("id", "nbr")
-      .dropDuplicates("id", "nbr")
-    quantizedVerifyTopK2(candidates,
-      qcodes, payload.select(col("id"), col("codes8")), params,
-      qsigned.select(col("id"), col("vec")),
-      payload.select(col("id"), col("vec")),
-      k, rerankFactor)
-  }
-
-  /** [[knnGraphIndex]] at the wide (multi-long) width — the persisted
-    * ingest frames for corpora past the packed signature's 62-bit
-    * budget: banding `(bkey, id)` with `bkey = band·2^rowsPerBand +
-    * bucket` (the band index occupies [[bandIndexBits]] above the
-    * bucket, so rowsPerBand + those bits must fit the long — a
-    * non-binding bound: bands=16 still leaves 2^58 buckets per band),
-    * per-band buckets from [[bandBucketMd5]], payload and frozen SQ8
-    * params exactly the packed index's. Record the resolved
-    * rowsPerBand next to the frames — [[knnGraphAgainstIndexWide]]
-    * must probe at the BUILD width. */
-  def knnGraphIndexWide(
-      df: DataFrame,
-      idCol: String,
-      vecCol: String,
-      dim: Int,
-      rowsPerBand: Int = 0,
-      bands: Int = 4
-  ): (DataFrame, DataFrame, DataFrame) = {
-    require(dim >= 1, s"dim must be >= 1, got $dim")
-    val rpb = resolveRpbWide(df, rowsPerBand, bands, "knnGraphIndexWide")
-    require(rpb + bandIndexBits(bands) <= MaxSignatureBits,
-      s"knnGraphIndexWide: band index needs ${bandIndexBits(bands)} bits above " +
-        s"rowsPerBand=$rpb in the packed bkey — lower one of them")
-    val params = sq8Params(df.select(col(vecCol)), vecCol, dim)
-    val signed = df.select(col(idCol).as("id"),
-      transform(col(vecCol), x => x.cast("double")).as("vec"),
-      array((0 until bands).map(b =>
-        bandBucketMd5(col(vecCol), b, rpb, dim)): _*).as("buckets"))
-      .localCheckpoint(true)
-    val banded = signed.select(col("id"),
-      posexplode(col("buckets")).as(Seq("band", "bucket")))
-      .select((col("band").cast("long") * lit(1L << rpb) + col("bucket")).as("bkey"),
-        col("id"))
-    val payload = sq8Encode(signed.select(col("id"), col("vec")), "id", "vec", params)
-      .select(col("id"),
-        transform(col("codes"), c => (c - lit(128)).cast("tinyint")).as("codes8"))
-      .join(signed.select(col("id"), col("vec")), Seq("id"))
-    (banded, payload, params)
-  }
-
-  /** [[knnGraphAgainstIndex]] for a [[knnGraphIndexWide]] index: the
-    * batch bands at the BUILD's wide width (no auto — a mismatched
-    * probe bands into the wrong buckets) and codes against the frozen
-    * params (clamp rule), then the shared two-sided verify tail.
-    * Output contract identical to the packed probe. */
-  def knnGraphAgainstIndexWide(
       banding: DataFrame,
       payload: DataFrame,
       params: DataFrame,
@@ -1077,32 +733,17 @@ object Similarity {
     require(k >= 1 && k <= 1000, s"k must be in [1, 1000], got $k")
     require(rerankFactor >= 1 && rerankFactor <= 64,
       s"rerankFactor must be in [1, 64], got $rerankFactor")
-    require(rowsPerBand >= 1 && rowsPerBand <= MaxSignatureBits,
-      s"knnGraphAgainstIndexWide: rowsPerBand must be the BUILD width, " +
-        s"got $rowsPerBand")
-    require(bands >= 1 && bands <= 64, s"bands must be in [1, 64], got $bands")
-    require(rowsPerBand + bandIndexBits(bands) <= MaxSignatureBits,
-      s"knnGraphAgainstIndexWide: band index needs ${bandIndexBits(bands)} " +
-        s"bits above rowsPerBand=$rowsPerBand in the packed bkey")
-    val qsigned = batch.select(col(idCol).as("id"),
-      transform(col(vecCol), x => x.cast("double")).as("vec"),
-      array((0 until bands).map(b =>
-        bandBucketMd5(col(vecCol), b, rowsPerBand, dim)): _*).as("buckets"))
-      .localCheckpoint(true)
-    val qband = qsigned.select(col("id"),
-      posexplode(col("buckets")).as(Seq("band", "bucket")))
-      .select((col("band").cast("long") * lit(1L << rowsPerBand) + col("bucket"))
-        .as("bkey"), col("id"))
-    val qcodes = sq8Encode(qsigned.select(col("id"), col("vec")), "id", "vec", params)
-      .select(col("id"),
-        transform(col("codes"), c => (c - lit(128)).cast("tinyint")).as("codes8"))
-    val candidates = qband
+    require(rowsPerBand >= 1, s"knnGraphAgainstIndex: rowsPerBand must be " +
+      s"the BUILD width (no auto here — a mismatched probe bands into the " +
+      s"wrong buckets), got $rowsPerBand")
+    val qsigned = bandedFrame(batch, idCol, vecCol, bands, rowsPerBand, dim)
+    val candidates = bkeyRows(qsigned, bands, rowsPerBand, "knnGraphAgainstIndex")
       .join(banding.select(col("bkey"), col("id").as("nbr")), Seq("bkey"))
       .where(col("id") =!= col("nbr"))
       .select("id", "nbr")
       .dropDuplicates("id", "nbr")
     quantizedVerifyTopK2(candidates,
-      qcodes, payload.select(col("id"), col("codes8")), params,
+      sq8Codes8(qsigned, params), payload.select(col("id"), col("codes8")), params,
       qsigned.select(col("id"), col("vec")),
       payload.select(col("id"), col("vec")),
       k, rerankFactor)
@@ -1125,14 +766,15 @@ object Similarity {
     * data-adaptive cells concentrate true neighbors, and the same trained
     * quantizer is shared with the ANN index, so a pipeline that serves
     * ANN gets semantic dedup from the index it already built. */
-  /** @param bandWithinCell when `Some((nBits, bands))`, candidate
+  /** @param bandWithinCell when `Some((rowsPerBand, bands))`, candidate
     *        generation INSIDE each cell goes through sign-LSH banding
     *        (the [[cosineNearDupPairs]] machinery with `cell` added to
-    *        the band join key): a pathological mega-cell no longer costs
-    *        n_c^2 — candidates are bounded per (cell, band, bucket) — at
-    *        the usual OR-of-ANDs recall (for cosine >= 0.99 with 16 bits
-    *        in 4 bands, P(miss) ~ 4e-7). The skew guard for the same
-    *        reason [[graft.operators.Dedup.jaccardPairs]] has `maxDf`. */
+    *        the band join key; `dim` is then required): a pathological
+    *        mega-cell no longer costs n_c^2 — candidates are bounded per
+    *        (cell, band, bucket) — at the usual OR-of-ANDs recall (for
+    *        cosine >= 0.99 with 4 bits in 4 bands, P(miss) ~ 4e-7). The
+    *        skew guard for the same reason
+    *        [[graft.operators.Dedup.jaccardPairs]] has `maxDf`. */
   def semanticNearDupPairs(
       df: DataFrame,
       idCol: String,
@@ -1157,17 +799,13 @@ object Similarity {
           .withColumn("cosine", cosine(col("va"), col("vb")))
           .where(col("cosine") >= lit(threshold))
           .select("id_a", "id_b", "cosine")
-      case Some((nBits, bands)) =>
-        require(nBits % bands == 0, "nBits must be divisible by bands")
-        val rowsPerBand = nBits / bands
+      case Some((rowsPerBand, bands)) =>
+        require(dim.isDefined, "semanticNearDupPairs: bandWithinCell needs dim")
         val signed = cast.select(col("id"), col("cell"), col("v"),
-          lshSignature(col("v"), nBits, dim).as("sig"))
-          .localCheckpoint(true) // signature index computed once for both sides
-        val bandMask = (1L << rowsPerBand) - 1
+          bandBuckets(col("v"), bands, rowsPerBand, dim.get).as("buckets"))
+          .localCheckpoint(true) // band buckets computed once for both sides
         val banded = signed.select(col("id"), col("cell"),
-          posexplode(array((0 until bands).map(b =>
-            shiftright(col("sig"), b * rowsPerBand).bitwiseAND(lit(bandMask))): _*))
-            .as(Seq("band", "bucket")))
+          posexplode(col("buckets")).as(Seq("band", "bucket")))
         val a = banded.select(col("cell"), col("band"), col("bucket"), col("id").as("id_a"))
         val b = banded.select(col("cell"), col("band"), col("bucket"), col("id").as("id_b"))
         val candidates = a.join(b, Seq("cell", "band", "bucket"))

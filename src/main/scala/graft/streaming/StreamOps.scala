@@ -596,35 +596,30 @@ object StreamOps {
     * INGEST. The benchmark's banded LSH table (band, bucket, bench_id,
     * vector) collapses to ONE broadcast row ([[decontaminate]]'s
     * bounded-bench rule, guarded by `maxBenchRows`); each stream row
-    * computes its own signature, probes the in-row bench array for
+    * computes its own band buckets, probes the in-row bench array for
     * band-bucket collisions, verifies exact cosine, and dedups multi-band
     * hits with `array_distinct` — completely STATELESS (no state store,
     * no aggregation), so any micro-batch slicing gives the batch
     * operator's exact pair rows.
     *
-    * `nBits` is REQUIRED explicit (no auto default): a stream cannot
-    * count its corpus, and the probe must band at the width the batch
-    * pass resolved — the [[graft.operators.Similarity.knnGraphAgainstIndex]]
-    * frozen-width rule. Emits `(idCol, bench_id, cosine)` per
-    * contaminated pair; clean documents emit nothing. */
+    * `rowsPerBand` is REQUIRED explicit (no auto default): a stream
+    * cannot count its corpus, and the probe must band at the width the
+    * batch pass resolved — the
+    * [[graft.operators.Similarity.knnGraphAgainstIndex]] frozen-width
+    * rule. Emits `(idCol, bench_id, cosine)` per contaminated pair;
+    * clean documents emit nothing. */
   def semanticDecontaminate(
       docs: DataFrame,
       benchmark: DataFrame,
       idCol: String,
       vecCol: String,
       threshold: Double,
-      nBits: Int,
+      dim: Int,
+      rowsPerBand: Int,
       bands: Int = 2,
-      dim: Option[Int] = None,
-      signature: (Column, Int, Option[Int]) => Column = Similarity.lshSignature,
       maxBenchRows: Long = 100000L
   ): DataFrame = {
-    require(nBits >= bands && nBits <= 62 && nBits % bands == 0,
-      s"semanticDecontaminate: explicit nBits in [bands, 62] divisible by " +
-        s"bands required (band at the batch pass's resolved width), got $nBits")
     require(maxBenchRows >= 1, s"maxBenchRows must be >= 1, got $maxBenchRows")
-    val rpb = nBits / bands
-    val mask = (1L << rpb) - 1
     // bench_id keeps the benchmark id's ORIGINAL type (the batch
     // Decontamination.semanticPairs contract) — a cast("long") here
     // silently nulled every non-numeric id; zero-norm vectors are
@@ -635,11 +630,9 @@ object StreamOps {
         transform(col(vecCol), x => x.cast("double"))) > 0)
       .select(col(idCol).as("bench_id"),
         transform(col(vecCol), x => x.cast("double")).as("v"),
-        signature(col(vecCol), nBits, dim).as("__sig"))
+        Similarity.bandBuckets(col(vecCol), bands, rowsPerBand, dim).as("__bk"))
       .select(col("bench_id"), col("v"),
-        posexplode(array((0 until bands).map(b =>
-          shiftright(col("__sig"), b * rpb).bitwiseAND(lit(mask))): _*))
-          .as(Seq("band", "bucket")))
+        posexplode(col("__bk")).as(Seq("band", "bucket")))
       .agg(collect_list(struct(col("band"), col("bucket"),
         col("bench_id"), col("v"))).as("__bench"))
       .select(when(size(col("__bench")) > maxBenchRows,
@@ -652,9 +645,7 @@ object StreamOps {
     docs
       .withColumn("__vd", transform(col(vecCol), x => x.cast("double")))
       .where(Similarity.dot(col("__vd"), col("__vd")) > 0)
-      .withColumn("__sig", signature(col(vecCol), nBits, dim))
-      .withColumn("__bk", array((0 until bands).map(b =>
-        shiftright(col("__sig"), b * rpb).bitwiseAND(lit(mask))): _*))
+      .withColumn("__bk", Similarity.bandBuckets(col(vecCol), bands, rowsPerBand, dim))
       .crossJoin(broadcast(benchBanded))
       .withColumn("__hits", array_distinct(transform(
         filter(col("__bench"), e =>
@@ -823,16 +814,16 @@ object StreamOps {
         ()
       }
 
-  /** Streaming kNN ingest against a persisted WIDE-width index — the
-    * micro-batch twin of [[graft.operators.Similarity
-    * .knnGraphAgainstIndexWide]] (the r16 wide family's last missing
-    * delivery mode): every arriving vector gets its exact-cosine top-k
-    * standing-corpus neighbors by banding at the index's BUILD width,
+  /** Streaming kNN ingest against a persisted [[graft.operators
+    * .Similarity.knnGraphIndex]] — the micro-batch twin of
+    * [[graft.operators.Similarity.knnGraphAgainstIndex]]: every
+    * arriving vector gets its exact-cosine top-k standing-corpus
+    * neighbors by banding at the index's BUILD width,
     * equi-joining the bkey-bucketed banding table, ADC-scoring 1-byte
     * codes, and exact-re-ranking only the survivors — the standing side
     * is never re-scanned beyond its banded candidates, so per-batch
     * cost is batch-proportional (the flat-probe shape ScalingProbe
-    * `incremental_knn` measures for the packed twin).
+    * `incremental_knn` measures).
     *
     * Same [[incrementalDedup]] contract: `foreachBatch`, because the
     * probe needs the checkpoint/join machinery a pure stream-static
@@ -844,7 +835,7 @@ object StreamOps {
     *
     * @param rowsPerBand the index's BUILD width — no auto here; a
     *        mismatched probe bands into the wrong buckets */
-  def knnIngestWide(
+  def knnIngest(
       vectors: DataFrame,
       banding: => DataFrame,
       payload: => DataFrame,
@@ -861,7 +852,7 @@ object StreamOps {
     vectors.writeStream
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        sink(graft.operators.Similarity.knnGraphAgainstIndexWide(
+        sink(graft.operators.Similarity.knnGraphAgainstIndex(
           banding, payload, params, batch, idCol, vecCol, k, dim,
           rowsPerBand, bands, rerankFactor), batchId)
         ()

@@ -80,21 +80,17 @@ object BallFractionProbe {
       // batch = vec_id < 100 probe edges, hops = 4
       val e = spark.read.parquet(s"$dir/embeddings.parquet")
       val standingE = e.where(col("vec_id") >= 100)
-      val md5Sig = (c: org.apache.spark.sql.Column, n: Int, d: Option[Int]) =>
-        graft.operators.Similarity.lshSignatureMd5(c, n, d.get)
-      val nb = graft.operators.Similarity.autoNBits(standingE.count(), bands = 2)
+      val rpb = graft.operators.Similarity.autoRowsPerBand(standingE.count(), bands = 2)
       val sEdges = graft.operators.Similarity.knnGraphQuantized(
           standingE, "vec_id", "embedding", k = 3, dim = 64,
-          nBits = nb, bands = 2, rerankFactor = 4, signature = md5Sig)
+          rowsPerBand = rpb, bands = 2, rerankFactor = 4)
         .select(col("id"), col("nbr"))
       val (banded, payload, params) = graft.operators.Similarity.knnGraphIndex(
-        standingE, "vec_id", "embedding", dim = 64, nBits = nb, bands = 2,
-        signature = md5Sig)
+        standingE, "vec_id", "embedding", dim = 64, rowsPerBand = rpb, bands = 2)
       val bEdges = graft.operators.Similarity.knnGraphAgainstIndex(
           banded, payload, params,
           e.where(col("vec_id") < 100), "vec_id", "embedding",
-          k = 3, dim = 64, nBits = nb, bands = 2, rerankFactor = 4,
-          signature = md5Sig)
+          k = 3, dim = 64, rowsPerBand = rpb, bands = 2, rerankFactor = 4)
         .select(col("id"), col("nbr"))
       val (sb, st, sf_) = fraction(sEdges, bEdges, hops = 4)
       println(f"[ball-fraction] $dir semantic_communities_incremental_auto " +

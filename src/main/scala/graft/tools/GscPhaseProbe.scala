@@ -65,10 +65,9 @@ object GscPhaseProbe {
           .where(Similarity.dot(col("vec"), col("vec")) > 0)
       }
       var edges: org.apache.spark.sql.DataFrame = null
-      time(s"$run 4 width-dispatched kNN graph -> checkpoint") {
-        val w = Similarity.knnWidthFor(vecs, bands = 2)
-        edges = Similarity.knnGraphAuto(vecs, "node", "vec", k = 3,
-          dim = 16, bands = 2, rerankFactor = 4, width = Some(w))
+      time(s"$run 4 quantized kNN graph -> checkpoint") {
+        edges = Similarity.knnGraphQuantized(vecs, "node", "vec", k = 3,
+          dim = 16, bands = 2, rerankFactor = 4)
           .localCheckpoint(true)
       }
       time(s"$run 5 LPA x4 + community sizes (noop)") {

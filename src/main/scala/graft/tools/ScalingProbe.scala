@@ -465,9 +465,9 @@ object ScalingProbe {
       // against SQ8/PQ codes instead of raw vectors to cut the payload
       // 8-64x (the Similarity PQ stack exists for exactly this).
       ("knn_graph", Seq(1, 10, 100), nx => {
-        val nBits = if (nx >= 100) 56 else if (nx >= 10) 32 else 16
+        val rpb = if (nx >= 100) 14 else if (nx >= 10) 8 else 4
         Similarity.knnGraph(embs(nx), "vec_id", "embedding", k = 5,
-            nBits = nBits, bands = 4)
+            dim = 64, rowsPerBand = rpb, bands = 4)
           .write.format("noop").mode("overwrite").save()
       }),
       // r15: the quantized-verify twin at the SAME signature ladder, so
@@ -477,18 +477,18 @@ object ScalingProbe {
       // row's 8.23 first-decade step was the raw payload crossing from
       // RAM into spill; this row is the cure, measured.
       ("knn_graph_quantized", Seq(1, 10, 100), nx => {
-        val nBits = if (nx >= 100) 56 else if (nx >= 10) 32 else 16
+        val rpb = if (nx >= 100) 14 else if (nx >= 10) 8 else 4
         Similarity.knnGraphQuantized(embs(nx), "vec_id", "embedding", k = 5,
-            dim = 64, nBits = nBits, bands = 4, rerankFactor = 4)
+            dim = 64, rowsPerBand = rpb, bands = 4, rerankFactor = 4)
           .write.format("noop").mode("overwrite").save()
       }),
       // r15 composed flagship: quantized kNN edges -> 4 LPA vote rounds
       // -> community rollup. The per-operator curves don't price the
       // composition (the dedup lesson) — this row does.
       ("semantic_communities", Seq(1, 10, 100), nx => {
-        val nBits = if (nx >= 100) 56 else if (nx >= 10) 32 else 16
+        val rpb = if (nx >= 100) 14 else if (nx >= 10) 8 else 4
         val edges = Similarity.knnGraphQuantized(embs(nx), "vec_id", "embedding",
-          k = 5, dim = 64, nBits = nBits, bands = 4, rerankFactor = 4)
+          k = 5, dim = 64, rowsPerBand = rpb, bands = 4, rerankFactor = 4)
         val labels = Communities.labelPropagation(edges, "id", "nbr", iterations = 4)
         Communities.communitySizes(labels)
           .write.format("noop").mode("overwrite").save()
@@ -565,7 +565,7 @@ object ScalingProbe {
             TextFunctions.hashedVector(col("text"), 64).as("hvec"))
           .localCheckpoint(true)
           .where(Similarity.dot(col("hvec"), col("hvec")) > 0)
-        Similarity.knnGraph(vecs, "doc_id", "hvec", k = 3, nBits = 0, bands = 2)
+        Similarity.knnGraph(vecs, "doc_id", "hvec", k = 3, dim = 64, bands = 2)
           .write.format("noop").mode("overwrite").save()
       }))
 
@@ -657,7 +657,7 @@ object ScalingProbe {
     // The knn_graph analogue of incremental_dedup: what does giving ONE
     // 500-vector ingest batch its exact-cosine top-5 corpus neighbors
     // cost as the standing corpus grows 100x? Index width follows
-    // suggestedNBits (the occupancy-pinned guidance), build+write is
+    // autoRowsPerBand (the occupancy-pinned guidance), build+write is
     // reported separately from the per-batch probe — the build is paid
     // once, the probe is the recurring ingest cost.
     if (opFilter.forall("incremental_knn".contains)) {
@@ -665,13 +665,13 @@ object ScalingProbe {
         .select((col("vec_id") + 20000000L).as("vec_id"), col("embedding"))
       for (nx <- Seq(1, 10, 100)) {
         val corpus = embs(nx)
-        val nBits = Similarity.suggestedNBits(embRows(nx), bands = 4)
+        val rpb = Similarity.autoRowsPerBand(embRows(nx), bands = 4)
         val pre = s"graft_scaling_knn_${nx}x"
-        // t0 BEFORE knnGraphIndex: its signature checkpoint is eager, so
-        // the expensive signing pass belongs to the build window
+        // t0 BEFORE knnGraphIndex: its banding checkpoint is eager, so
+        // the expensive banding pass belongs to the build window
         val t0 = System.nanoTime()
         val (banded, payload, params) = Similarity.knnGraphIndex(
-          corpus, "vec_id", "embedding", dim = 64, nBits = nBits, bands = 4)
+          corpus, "vec_id", "embedding", dim = 64, rowsPerBand = rpb, bands = 4)
         graft.sources.IndexStore.writeBucketed(banded, pre + "_banding", "bkey", 8)
         graft.sources.IndexStore.writeTable(payload, pre + "_payload")
         graft.sources.IndexStore.writeTable(params, pre + "_params")
@@ -681,11 +681,11 @@ object ScalingProbe {
             graft.sources.IndexStore.read(spark, pre + "_payload"),
             graft.sources.IndexStore.read(spark, pre + "_params"),
             batch, "vec_id", "embedding", k = 5, dim = 64,
-            nBits = nBits, bands = 4)
+            rowsPerBand = rpb, bands = 4)
           .write.format("noop").mode("overwrite").save()
         time(probe()) // warmup
         val t = math.min(time(probe()), time(probe()))
-        println(f"[scaling] incremental_knn corpus ${nx}%3dx nBits=$nBits%2d " +
+        println(f"[scaling] incremental_knn corpus ${nx}%3dx rowsPerBand=$rpb%2d " +
           f"build+write=$tBuild%7.2fs probe=$t%7.2fs")
       }
     }
@@ -705,17 +705,17 @@ object ScalingProbe {
         .select((col("vec_id") + 20000000L).as("vec_id"), col("embedding"))
       for (nx <- Seq(1, 10, 100)) {
         val corpus = embs(nx)
-        val nBits = Similarity.suggestedNBits(embRows(nx), bands = 4)
+        val rpb = Similarity.autoRowsPerBand(embRows(nx), bands = 4)
         val pre = s"graft_scaling_lpa_${nx}x"
         val t0 = System.nanoTime()
         val (banded, payload, params) = Similarity.knnGraphIndex(
-          corpus, "vec_id", "embedding", dim = 64, nBits = nBits, bands = 4)
+          corpus, "vec_id", "embedding", dim = 64, rowsPerBand = rpb, bands = 4)
         graft.sources.IndexStore.writeBucketed(banded, pre + "_banding", "bkey", 8)
         graft.sources.IndexStore.writeTable(payload, pre + "_payload")
         graft.sources.IndexStore.writeTable(params, pre + "_params")
         graft.sources.IndexStore.writeTable(
           Similarity.knnGraphQuantized(corpus, "vec_id", "embedding", k = 5,
-            dim = 64, nBits = nBits, bands = 4),
+            dim = 64, rowsPerBand = rpb, bands = 4),
           pre + "_edges")
         // the persisted community state the LOCALIZED refresh seeds
         // from — built once with the index, like the labels table a
@@ -731,7 +731,7 @@ object ScalingProbe {
           graft.sources.IndexStore.read(spark, pre + "_payload"),
           graft.sources.IndexStore.read(spark, pre + "_params"),
           batch, "vec_id", "embedding", k = 5, dim = 64,
-          nBits = nBits, bands = 4)
+          rowsPerBand = rpb, bands = 4)
         def probeOnly(): Unit =
           probeEdges().write.format("noop").mode("overwrite").save()
         def refresh(): Unit = {
@@ -777,7 +777,7 @@ object ScalingProbe {
           .distinct().count()
         val nBall = graft.operators.Paths.bfsDistances(
           all, "id", "nbr", dirty, "node", maxHops = 4).count()
-        println(f"[scaling] incremental_lpa corpus ${nx}%3dx nBits=$nBits%2d " +
+        println(f"[scaling] incremental_lpa corpus ${nx}%3dx rowsPerBand=$rpb%2d " +
           f"build+write=$tBuild%7.2fs probe=$tp%7.2fs probe+refresh=$tr%7.2fs " +
           f"probe+local_refresh=$tl%7.2fs ball=${nBall}%d/${nNodes}%d")
       }
@@ -852,64 +852,6 @@ object ScalingProbe {
           f"seed_build=$tBuild%7.2fs full_refresh=$tf%7.2fs " +
           f"local_refresh=$tl%7.2fs local_on_adj=$ta%7.2fs " +
           f"auto=$tu%7.2fs ball=$nBall%d/$n%d")
-      }
-    }
-
-    // ---- width ladder: packed saturation vs the wide family's pin -----
-    // The packed signature caps TOTAL width at 62 bits, so at bands=8
-    // it saturates at 7 bits/band — i.e. at 16*2^7 = 2048 vectors —
-    // after which per-band bucket occupancy (and the quadratic
-    // candidate volume) doubles with every corpus doubling. The wide
-    // (multi-long) family keeps growing bits per band. This drill
-    // measures BOTH the candidate volume (sum over (band, bucket) of
-    // c*(c-1), the exact pre-dedup join row count) and the edge-build
-    // wall at each width on the same corpus.
-    if (opFilter.forall("width_ladder".contains)) {
-      for (nx <- Seq(10, 100)) {
-        val n = embRows(nx)
-        val corpus = embs(nx)
-        val bands = 8
-        val packedBits = Similarity.suggestedNBits(n, bands)   // saturates at 56
-        val wideRpb = Similarity.suggestedRowsPerBandWide(n)   // keeps growing
-        def candVolume(banded: DataFrame): Long =
-          banded.groupBy("band", "bucket").count()
-            .agg(sum(col("count") * (col("count") - 1))).head().getLong(0)
-        val packedRpb = packedBits / bands
-        val packedBanded = corpus.select(
-            Similarity.lshSignatureMd5(col("embedding"), packedBits, 64).as("sig"))
-          .select(posexplode(array((0 until bands).map(b =>
-            shiftright(col("sig"), b * packedRpb)
-              .bitwiseAND(lit((1L << packedRpb) - 1))): _*)).as(Seq("band", "bucket")))
-        val wideBanded = corpus.select(posexplode(array((0 until bands).map(b =>
-            Similarity.bandBucketMd5(col("embedding"), b, wideRpb, 64)): _*))
-          .as(Seq("band", "bucket")))
-        val cp = candVolume(packedBanded)
-        val cw = candVolume(wideBanded)
-        println(f"[scaling] width_ladder corpus ${nx}%3dx n=$n%7d bands=$bands " +
-          f"packed(rpb=$packedRpb%2d)=${cp}%12d cand-rows  " +
-          f"wide(rpb=$wideRpb%2d)=${cw}%12d cand-rows  ratio=${cp.toDouble / cw}%6.1f")
-        def buildPacked(): Unit = Similarity.knnGraphQuantized(corpus, "vec_id",
-            "embedding", k = 5, dim = 64, nBits = packedBits, bands = bands,
-            signature = (c, nb, d) => Similarity.lshSignatureMd5(c, nb, d.get))
-          .write.format("noop").mode("overwrite").save()
-        def buildWide(): Unit = Similarity.knnGraphQuantizedWide(corpus, "vec_id",
-            "embedding", k = 5, dim = 64, rowsPerBand = wideRpb, bands = bands)
-          .write.format("noop").mode("overwrite").save()
-        buildWide() // warmup (wide first: smaller)
-        val tw = math.min(time(buildWide()), time(buildWide()))
-        // the packed build IS the quadratic trap past saturation: at
-        // 100x its candidate volume is ~18.8e9 rows (hours of ADC) —
-        // the count above already prices it, so the wall is measured
-        // only while the volume is tractable
-        if (cp <= (1L << 28)) {
-          buildPacked()
-          val tp = math.min(time(buildPacked()), time(buildPacked()))
-          println(f"[scaling] width_ladder corpus ${nx}%3dx edge-build " +
-            f"packed=${tp}%7.2fs wide=${tw}%7.2fs speedup=${tp / tw}%5.2fx")
-        } else {
-          println(f"[scaling] width_ladder corpus ${nx}%3dx edge-build " +
-            f"packed=SKIPPED(cand-volume $cp%d > 2^28) wide=${tw}%7.2fs")
-        }
       }
     }
 

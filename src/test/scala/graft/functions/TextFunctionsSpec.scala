@@ -256,7 +256,7 @@ class TextFunctionsSpec extends AnyFunSuite {
     val vecs = df.select(col("doc_id"),
       TextFunctions.hashedVector(col("text"), 32).as("hvec"))
     val knn = graft.operators.Similarity
-      .knnGraph(vecs, "doc_id", "hvec", k = 1, nBits = 16, bands = 2)
+      .knnGraph(vecs, "doc_id", "hvec", k = 1, dim = 32, rowsPerBand = 8, bands = 2)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
     assert(knn(1L)._1 == 2L && math.abs(knn(1L)._2 - 1.0) < 1e-12)
     assert(knn(2L)._1 == 1L && math.abs(knn(2L)._2 - 1.0) < 1e-12)

@@ -87,7 +87,7 @@ class DecontaminationSpec extends AnyFunSuite {
       1L -> Seq(0.6, -2.4, 1.4, 4.0),
       2L -> Seq(-0.3, 1.2, -0.7, -2.0))
     val out = Decontamination.semanticPairs(corpus, bench, "vec_id", "embedding",
-        threshold = 0.9, nBits = 16, bands = 2)
+        threshold = 0.9, dim = 4, rowsPerBand = 8, bands = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(out.map(t => (t._1, t._2)).toSet == Set((1L, 100L)))
     assert(math.abs(out.head._3 - 1.0) < 1e-12)
@@ -101,7 +101,7 @@ class DecontaminationSpec extends AnyFunSuite {
     val cos = 33.0 / (2.0 * math.sqrt(903.0)) // ~0.549
     assert(cos < 0.9)
     val out = Decontamination.semanticPairs(corpus, bench, "vec_id", "embedding",
-      threshold = 0.9, nBits = 16, bands = 2).collect()
+      threshold = 0.9, dim = 4, rowsPerBand = 8, bands = 2).collect()
     assert(out.isEmpty)
   }
 
@@ -111,7 +111,7 @@ class DecontaminationSpec extends AnyFunSuite {
     val bench = vecs(100L -> v, 200L -> v)
     val corpus = vecs(1L -> v.map(_ * 2.0), 2L -> v.map(x => -x))
     val out = Decontamination.semanticFlag(corpus, bench, "vec_id", "embedding",
-        threshold = 0.9, nBits = 16, bands = 2)
+        threshold = 0.9, dim = 4, rowsPerBand = 8, bands = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(out.length == 1)
     assert(out.head._1 == 1L && out.head._2 == 2L)
@@ -125,7 +125,7 @@ class DecontaminationSpec extends AnyFunSuite {
       (Seq(1L -> (0 until 6).map(d => math.sin(0 * 6 + d + 1.0) * 1.5)) ++
         (2L until 10L).map(i => i -> (0 until 6).map(d => math.cos(i * 13 + d * 7 + 0.5)))): _*)
     val got = Decontamination.semanticPairs(corpus, bench, "vec_id", "embedding",
-        threshold = 0.9, nBits = 16, bands = 2)
+        threshold = 0.9, dim = 6, rowsPerBand = 8, bands = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // brute: every cross pair at cosine >= 0.9
     val bv = bench.collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
@@ -147,7 +147,7 @@ class DecontaminationSpec extends AnyFunSuite {
     val corpus = vecs((1L to 30L).map(i =>
       i -> Seq(i * 0.1, -1.0, 0.5, 1.0 + i * 0.01)): _*)
     val plan = Decontamination.semanticPairs(corpus, bench, "vec_id", "embedding",
-        threshold = 0.9, nBits = 16, bands = 2)
+        threshold = 0.9, dim = 4, rowsPerBand = 8, bands = 2)
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), s"bench join must broadcast:\n$plan")
     assert(!plan.contains("SortMergeJoin"), s"corpus must not re-key for the probe:\n$plan")

@@ -34,7 +34,7 @@ class NearDupSpec extends AnyFunSuite {
 
   test("banded LSH near-dup recalls the planted pairs without all-pairs work") {
     val pairs = Similarity.cosineNearDupPairs(corpus, "vec_id", "embedding", 0.95,
-      nBits = 16, bands = 4, dim = Some(32))
+      dim = 32, rowsPerBand = 4, bands = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs == Set((1L, 2L), (3L, 4L)))
   }
@@ -45,7 +45,7 @@ class NearDupSpec extends AnyFunSuite {
     val brute = Similarity.cosineNearDupPairsBrute(real, "vec_id", "embedding", 0.3)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     val lsh = Similarity.cosineNearDupPairs(real, "vec_id", "embedding", 0.3,
-      nBits = 8, bands = 4, dim = Some(64))
+      dim = 64, rowsPerBand = 2, bands = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     assert(lsh.keySet.subsetOf(brute.keySet))
     lsh.foreach { case (k, c) => assert(c == brute(k)) } // exact same cosine

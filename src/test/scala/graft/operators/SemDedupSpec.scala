@@ -52,7 +52,7 @@ class SemDedupSpec extends AnyFunSuite {
   }
 
   test("banded within-cell candidates equal the plain within-cell scorer") {
-    // same two-cluster fixture; 16-bit/4-band signatures: near-identical
+    // same two-cluster fixture; 4 bands of 4 bits: near-identical
     // twins share a band (P(miss) ~ 4e-7), so the banded candidate path
     // must reproduce the full within-cell result exactly
     val d = emb(
@@ -63,7 +63,7 @@ class SemDedupSpec extends AnyFunSuite {
     def pairs(banded: Boolean) =
       Similarity.semanticNearDupPairs(d, "vec_id", "embedding", threshold = 0.999,
           trainedCentroids = cents,
-          bandWithinCell = if (banded) Some((16, 4)) else None, dim = Some(4))
+          bandWithinCell = if (banded) Some((4, 4)) else None, dim = Some(4))
         .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val plain = pairs(banded = false)
     assert(plain == Set((1L, 2L), (3L, 4L)))

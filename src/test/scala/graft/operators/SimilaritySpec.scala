@@ -504,7 +504,7 @@ class SimilaritySpec extends AnyFunSuite {
       4L -> Seq(0.1, 1.0), 5L -> Seq(0.2, 0.9))
     val d = emb(vecs.toSeq: _*)
     val out = Similarity.knnGraph(d, "vec_id", "embedding", k = 2,
-        nBits = 8, bands = 8)
+        dim = 2, rowsPerBand = 1, bands = 8)
       .collect().map(r => (r.getLong(0), r.getInt(3)) -> r.getLong(1)).toMap
     def cos(a: Seq[Double], b: Seq[Double]) = {
       val dot = a.zip(b).map { case (x, y) => x * y }.sum
@@ -522,7 +522,7 @@ class SimilaritySpec extends AnyFunSuite {
     val d = emb((1L to 12L).map(i =>
       i -> Seq(math.cos(i * 0.5), math.sin(i * 0.5))): _*)
     val rows = Similarity.knnGraph(d, "vec_id", "embedding", k = 3,
-        nBits = 8, bands = 4)
+        dim = 2, rowsPerBand = 2, bands = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3)))
     rows.groupBy(_._1).foreach { case (id, es) =>
       assert(es.length <= 3, s"node $id over k: $es")
@@ -541,11 +541,11 @@ class SimilaritySpec extends AnyFunSuite {
       i -> Seq(math.cos(i * 0.7), math.sin(i * 0.7), (i % 3) * 0.2))
     val d = emb(vecs: _*)
     val plain = Similarity.knnGraph(d, "vec_id", "embedding", k = 3,
-        nBits = 8, bands = 8)
+        dim = 3, rowsPerBand = 1, bands = 8)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
       .sortBy(t => (t._1, t._4)).toSeq
     val quant = Similarity.knnGraphQuantized(d, "vec_id", "embedding", k = 3,
-        dim = 3, nBits = 8, bands = 8, rerankFactor = 8)
+        dim = 3, rowsPerBand = 1, bands = 8, rerankFactor = 8)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
       .sortBy(t => (t._1, t._4)).toSeq
     assert(quant == plain,
@@ -556,7 +556,7 @@ class SimilaritySpec extends AnyFunSuite {
     val d = emb((1L to 20L).map(i =>
       i -> Seq(math.cos(i * 0.3), math.sin(i * 0.3))): _*)
     val rows = Similarity.knnGraphQuantized(d, "vec_id", "embedding", k = 2,
-        dim = 2, nBits = 8, bands = 4, rerankFactor = 2)
+        dim = 2, rowsPerBand = 2, bands = 4, rerankFactor = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3)))
     rows.groupBy(_._1).foreach { case (id, es) =>
       assert(es.length <= 2, s"node $id over k: ${es.toSeq}")
@@ -571,81 +571,75 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("suggestedNBits: occupancy-pinned width grows with log2(n), floors and caps") {
-    // 16 rows/bucket target: n = 2^20 needs 16 bits/band
-    assert(Similarity.suggestedNBits(1L << 20, bands = 2) == 2 * 16)
-    // at bands=4 the same corpus wants 16 bits/band but the 62-bit
-    // TOTAL budget caps it at 15 (the old per-band-only cap returned 64
-    // here — one band fully aliased)
-    assert(Similarity.suggestedNBits(1L << 20, bands = 4) == 4 * 15)
+    // the occupancy-pinned width is autoRowsPerBand: 16 rows/bucket
+    // target, so n = 2^20 needs 16 bits/band at any band count
+    assert(Similarity.autoRowsPerBand(1L << 20, bands = 2) == 16)
+    assert(Similarity.autoRowsPerBand(1L << 20, bands = 4) == 16)
     // doubling n adds one bit per band — the anti-quadratic property
-    assert(Similarity.suggestedNBits(1L << 21, bands = 2) == 2 * 17)
-    // small corpora floor at 4 bits/band; the 62-bit single-long shift
-    // budget caps the TOTAL (not per band — a per-band cap used to
-    // return widths > 64 whose high bands alias low bits mod 64)
-    assert(Similarity.suggestedNBits(10L, bands = 4) == 4 * 4)
-    assert(Similarity.suggestedNBits(Long.MaxValue, bands = 2,
-      targetBucketSize = 1) == 62)
-    assert(Similarity.suggestedNBits(Long.MaxValue, bands = 4,
-      targetBucketSize = 1) == 60)
-    (1 to 15).foreach { b =>
-      assert(Similarity.suggestedNBits(Long.MaxValue, bands = b) <= 62,
-        s"total width must respect the shift budget at bands=$b")
+    assert(Similarity.autoRowsPerBand(1L << 21, bands = 2) == 17)
+    // small corpora floor at 4 bits/band
+    assert(Similarity.autoRowsPerBand(10L, bands = 4) == 4)
+    assert(Similarity.autoRowsPerBand(10L, bands = 8) == 4)
+    // each band is its own long: no cap on the total, and even a
+    // Long.MaxValue corpus needs only 59 bits per band (16·2^59 = 2^63)
+    (1 to 16).foreach { b =>
+      assert(Similarity.autoRowsPerBand(Long.MaxValue, bands = b) == 59, s"bands=$b")
     }
     // integer-exact boundary: needed bits step exactly when 16*2^b < n
-    assert(Similarity.suggestedNBits(32L * 16, bands = 2) == 2 * 5)
-    assert(Similarity.suggestedNBits(32L * 16 + 1, bands = 2) == 2 * 6)
-    intercept[IllegalArgumentException] { Similarity.suggestedNBits(0L, 2) }
-    intercept[IllegalArgumentException] { Similarity.suggestedNBits(10L, 0) }
-    intercept[IllegalArgumentException] { Similarity.suggestedNBits(10L, 16) }
+    assert(Similarity.autoRowsPerBand(32L * 16, bands = 16) == 5)
+    assert(Similarity.autoRowsPerBand(32L * 16 + 1, bands = 16) == 6)
+    intercept[IllegalArgumentException] { Similarity.autoRowsPerBand(0L, 2) }
+    intercept[IllegalArgumentException] { Similarity.autoRowsPerBand(10L, 0) }
   }
 
   test("autoNBits: floors at 16 total bits, tracks corpus growth, caps at the shift budget") {
-    // tiny corpora keep the 16-bit floor...
-    assert(Similarity.autoNBits(100L, bands = 2) == 16)
-    assert(Similarity.autoNBits(100L, bands = 4) == 16)
+    // tiny corpora keep a 16-bit total width (bands * rowsPerBand)...
+    assert(2 * Similarity.autoRowsPerBand(100L, bands = 2) == 16)
+    assert(4 * Similarity.autoRowsPerBand(100L, bands = 4) == 16)
     // ...and the width GROWS with the corpus — one bit per band per
-    // doubling once past the floor (the anti-quadratic contract the
-    // fixed-16 default silently broke)
-    assert(Similarity.autoNBits(1L << 20, bands = 2) == 2 * 16)
-    assert(Similarity.autoNBits(1L << 21, bands = 2) == 2 * 17)
-    assert(Similarity.autoNBits(1L << 30, bands = 2) == 2 * 26)
+    // doubling once past the floor
+    assert(Similarity.autoRowsPerBand(1L << 20, bands = 2) == 16)
+    assert(Similarity.autoRowsPerBand(1L << 21, bands = 2) == 17)
+    assert(Similarity.autoRowsPerBand(1L << 30, bands = 2) == 26)
     val decades = Seq(1L << 10, 1L << 12, 1L << 14, 1L << 16, 1L << 18, 1L << 40)
-    val widths = decades.map(n => Similarity.autoNBits(n, bands = 4))
+    val widths = decades.map(n => Similarity.autoRowsPerBand(n, bands = 4))
     assert(widths == widths.sorted && widths.distinct.size >= 5,
       s"auto width must track corpus growth, got $widths")
-    assert(widths.forall(w => w % 4 == 0 && w <= 62))
-    // past the budget the width saturates (move to a wider signature)
-    assert(widths.last == 60)
-    assert(Similarity.autoNBits(Long.MaxValue, bands = 2) == 62)
+    assert(widths.last == 36)
+    // the per-band shift budget is 62 bits; the auto width saturates
+    // below it for any Long corpus size
+    assert(widths.forall(_ <= 62))
+    assert(Similarity.autoRowsPerBand(Long.MaxValue, bands = 2) <= 62)
   }
 
-  test("knnGraph family: nBits=0 auto-sizes; oversized explicit widths fail loudly") {
+  test("knnGraph family: rowsPerBand=0 auto-sizes; rowsPerBand past 62 fails loudly") {
     val d = emb((1L to 10L).map(i =>
       i -> Seq(math.cos(i * 0.5), math.sin(i * 0.5))): _*)
-    // 10 vectors -> autoNBits floor 16 binds, so auto == explicit 16
-    val auto = Similarity.knnGraph(d, "vec_id", "embedding", k = 2, bands = 4)
+    // 10 vectors -> the 4-bit floor binds, so auto == explicit 4
+    val auto = Similarity.knnGraph(d, "vec_id", "embedding", k = 2, dim = 2, bands = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).sortBy(t => (t._1, t._3)).toSeq
     val explicit = Similarity.knnGraph(d, "vec_id", "embedding", k = 2,
-        nBits = 16, bands = 4)
+        dim = 2, rowsPerBand = 4, bands = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).sortBy(t => (t._1, t._3)).toSeq
     assert(auto == explicit, "auto width must equal its floor on a tiny corpus")
-    // widths past the 62-bit single-long budget fail loudly instead of
-    // silently aliasing band buckets (shift distances wrap mod 64)
+    // a band past one long's 62-bit budget fails loudly instead of
+    // silently aliasing bucket bits (shift distances wrap mod 64)
     val e = intercept[IllegalArgumentException] {
-      Similarity.knnGraph(d, "vec_id", "embedding", k = 2, nBits = 124, bands = 2)
+      Similarity.knnGraph(d, "vec_id", "embedding", k = 2, dim = 2, rowsPerBand = 63, bands = 2)
     }
     assert(e.getMessage.contains("62"), s"want the budget named, got: ${e.getMessage}")
     intercept[IllegalArgumentException] {
       Similarity.knnGraphQuantized(d, "vec_id", "embedding", k = 2, dim = 2,
-        nBits = 68, bands = 4)
+        rowsPerBand = 63, bands = 4)
     }
     intercept[IllegalArgumentException] {
       Similarity.cosineNearDupPairs(d, "vec_id", "embedding", threshold = 0.9,
-        nBits = 64, bands = 4)
+        dim = 2, rowsPerBand = 63, bands = 4)
     }
+    // the index's bkey packs the band index above the bucket bits
     intercept[IllegalArgumentException] {
       Similarity.knnGraphIndex(d, "vec_id", "embedding", dim = 2,
-        nBits = 66, bands = 2)
+        rowsPerBand = 61, bands = 8)
     }
   }
 
@@ -661,9 +655,9 @@ class SimilaritySpec extends AnyFunSuite {
     val sd = emb(standing: _*)
     val bd = emb(batch: _*)
     val (banded, payload, params) = Similarity.knnGraphIndex(
-      sd, "vec_id", "embedding", dim = 3, nBits = 8, bands = 8)
+      sd, "vec_id", "embedding", dim = 3, rowsPerBand = 1, bands = 8)
     val out = Similarity.knnGraphAgainstIndex(banded, payload, params,
-        bd, "vec_id", "embedding", k = 2, dim = 3, nBits = 8, bands = 8,
+        bd, "vec_id", "embedding", k = 2, dim = 3, rowsPerBand = 1, bands = 8,
         rerankFactor = 8)
       .collect().map(r => (r.getLong(0), r.getInt(3)) -> r.getLong(1)).toMap
     def cos(a: Seq[Double], b: Seq[Double]) = {
@@ -694,130 +688,24 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("bandBucketMd5: bit-identical to the packed signature's band extraction") {
+    // bandBuckets (the banding of every banded operator) against the
+    // whole-width md5 signature shifted and masked per band — the form
+    // the oracle SQL twins replay
     import org.apache.spark.sql.functions._
     val d = emb((1L to 8L).map(i =>
       i -> Seq(math.cos(i * 0.9), math.sin(i * 0.9), (i % 3) * 0.4)): _*)
-    val rpb = 5; val bands = 3 // 15 bits total, both families express it
+    val rpb = 5; val bands = 3 // 15 bits in total, one long holds it
     val packed = d.select(col("vec_id"),
         Similarity.lshSignatureMd5(col("embedding"), rpb * bands, 3).as("sig"))
       .select(col("vec_id"), array((0 until bands).map(b =>
         shiftright(col("sig"), b * rpb).bitwiseAND(lit((1L << rpb) - 1))): _*).as("pb"))
-    val wide = d.select(col("vec_id"), array((0 until bands).map(b =>
-        Similarity.bandBucketMd5(col("embedding"), b, rpb, 3)): _*).as("wb"))
-    val joined = packed.join(wide, "vec_id")
+    val banded = d.select(col("vec_id"),
+      Similarity.bandBuckets(col("embedding"), bands, rpb, 3).as("wb"))
+    val joined = packed.join(banded, "vec_id")
       .collect().map(r => (r.getSeq[Long](1), r.getSeq[Long](2)))
+    assert(joined.length == 8)
     joined.foreach { case (p, w) =>
-      assert(p == w, s"band buckets diverged: packed $p vs wide $w")
-    }
-  }
-
-  test("knnGraphQuantizedWide: equals the packed family at expressible widths; works past 62 bits") {
-    import org.apache.spark.sql.{Column}
-    val vecs = (1L to 14L).map(i =>
-      i -> Seq(math.cos(i * 0.6), math.sin(i * 0.6), (i % 4) * 0.25))
-    val d = emb(vecs: _*)
-    val md5Sig = (c: Column, n: Int, dim: Option[Int]) =>
-      Similarity.lshSignatureMd5(c, n, dim.get)
-    val packed = Similarity.knnGraphQuantized(d, "vec_id", "embedding", k = 3,
-        dim = 3, nBits = 12, bands = 4, rerankFactor = 4, signature = md5Sig)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-      .sortBy(t => (t._1, t._4)).toSeq
-    val wide = Similarity.knnGraphQuantizedWide(d, "vec_id", "embedding", k = 3,
-        dim = 3, rowsPerBand = 3, bands = 4, rerankFactor = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-      .sortBy(t => (t._1, t._4)).toSeq
-    assert(wide == packed,
-      s"wide family must equal packed at a shared width:\n$wide\nvs\n$packed")
-    // a width the packed family REJECTS (4 x 20 = 80 bits > 62)...
-    intercept[IllegalArgumentException] {
-      Similarity.knnGraphQuantized(d, "vec_id", "embedding", k = 2, dim = 3,
-        nBits = 80, bands = 4, signature = md5Sig)
-    }
-    // ...the wide family accepts, and near-identical planted twins
-    // still pair up (cosine ~1 -> per-plane agreement stays high at
-    // ANY width; what 80 bits starves is the unrelated-pair noise)
-    val twins = emb((vecs :+ (100L -> Seq(math.cos(0.6) * 1.0001,
-      math.sin(0.6) * 1.0001, 0.25 * 1.0001))): _*)
-    val out = Similarity.knnGraphQuantizedWide(twins, "vec_id", "embedding",
-        k = 2, dim = 3, rowsPerBand = 20, bands = 4, rerankFactor = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(out.contains((100L, 1L)),
-      s"planted twin must find its original at 80 bits: ${out.toSeq}")
-    // auto width floors at the packed family's 16-bit-total equivalent
-    val auto = Similarity.knnGraphQuantizedWide(d, "vec_id", "embedding",
-        k = 3, dim = 3, bands = 4, rerankFactor = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3)))
-      .sortBy(t => (t._1, t._3)).toSeq
-    val explicit = Similarity.knnGraphQuantizedWide(d, "vec_id", "embedding",
-        k = 3, dim = 3, rowsPerBand = 4, bands = 4, rerankFactor = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3)))
-      .sortBy(t => (t._1, t._3)).toSeq
-    assert(auto == explicit, "auto rowsPerBand must equal its floor on a tiny corpus")
-  }
-
-  test("cosineNearDupPairsWide: equals the packed md5 pairs at a shared width") {
-    val d = emb((1L to 20L).map(i =>
-      i -> Seq(math.cos(i * 0.3), math.sin(i * 0.3), (i % 5) * 0.1)): _*)
-    val packed = Similarity.cosineNearDupPairs(d, "vec_id", "embedding",
-        threshold = 0.8, nBits = 12, bands = 4, dim = Some(3),
-        signature = (c, n, dm) => Similarity.lshSignatureMd5(c, n, dm.get))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .sortBy(t => (t._1, t._2)).toSeq
-    val wide = Similarity.cosineNearDupPairsWide(d, "vec_id", "embedding",
-        threshold = 0.8, dim = 3, rowsPerBand = 3, bands = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .sortBy(t => (t._1, t._2)).toSeq
-    assert(wide == packed, s"wide pairs must equal packed:\n$wide\nvs\n$packed")
-    assert(wide.nonEmpty, "fixture must produce pairs")
-  }
-
-  test("knnGraphIndexWide/AgainstIndexWide: equals brute vs standing and the packed probe") {
-    // single-bit bands admit all pairs -> the wide incremental probe
-    // must equal exhaustive per-batch-node top-2 against the STANDING
-    // side (the packed AgainstIndex differential, wide flavor)
-    val standing = (10L to 19L).map(i =>
-      i -> Seq(math.cos(i * 0.4), math.sin(i * 0.4), (i % 4) * 0.1))
-    val batch = (1L to 3L).map(i =>
-      i -> Seq(math.cos(i * 1.1), math.sin(i * 1.1), 0.15))
-    val sd = emb(standing: _*)
-    val bd = emb(batch: _*)
-    val (banded, payload, params) = Similarity.knnGraphIndexWide(
-      sd, "vec_id", "embedding", dim = 3, rowsPerBand = 1, bands = 8)
-    val out = Similarity.knnGraphAgainstIndexWide(banded, payload, params,
-        bd, "vec_id", "embedding", k = 2, dim = 3, rowsPerBand = 1, bands = 8,
-        rerankFactor = 8)
-      .collect().map(r => (r.getLong(0), r.getInt(3)) -> r.getLong(1)).toMap
-    def cos(a: Seq[Double], b: Seq[Double]) = {
-      val dot = a.zip(b).map { case (x, y) => x * y }.sum
-      dot / (math.sqrt(a.map(x => x * x).sum) * math.sqrt(b.map(x => x * x).sum))
-    }
-    val sm = standing.toMap
-    batch.foreach { case (id, v) =>
-      val brute = sm.keys.toSeq.sortBy(n => (-cos(v, sm(n)), n)).take(2)
-      assert(out((id, 1)) == brute.head && out((id, 2)) == brute(1),
-        s"batch node $id: got ${out.filter(_._1._1 == id)}, brute $brute")
-    }
-    // at a width BOTH families express, the wide probe's rows equal
-    // the packed md5 probe's bit for bit (same buckets, same verify)
-    val md5Sig = (c: org.apache.spark.sql.Column, n: Int, d: Option[Int]) =>
-      Similarity.lshSignatureMd5(c, n, d.get)
-    val (pb, pp, ppar) = Similarity.knnGraphIndex(
-      sd, "vec_id", "embedding", dim = 3, nBits = 12, bands = 4,
-      signature = md5Sig)
-    val packed = Similarity.knnGraphAgainstIndex(pb, pp, ppar, bd,
-        "vec_id", "embedding", k = 2, dim = 3, nBits = 12, bands = 4,
-        signature = md5Sig)
-      .collect().map(_.toSeq).sortBy(_.toString).toSeq
-    val (wb, wp, wpar) = Similarity.knnGraphIndexWide(
-      sd, "vec_id", "embedding", dim = 3, rowsPerBand = 3, bands = 4)
-    val wide = Similarity.knnGraphAgainstIndexWide(wb, wp, wpar, bd,
-        "vec_id", "embedding", k = 2, dim = 3, rowsPerBand = 3, bands = 4)
-      .collect().map(_.toSeq).sortBy(_.toString).toSeq
-    assert(wide == packed, s"wide probe must equal packed at a shared width")
-    // bkey budget is fail-loud, not silent aliasing
-    intercept[IllegalArgumentException] {
-      Similarity.knnGraphIndexWide(sd, "vec_id", "embedding", dim = 3,
-        rowsPerBand = 61, bands = 8)
+      assert(p == w, s"band buckets diverged: packed $p vs bandBuckets $w")
     }
   }
 

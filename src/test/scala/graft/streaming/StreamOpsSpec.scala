@@ -455,19 +455,18 @@ class StreamOpsSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val standing = emb.where(col("vec_id") >= 100)
-    val rpb = math.max(
-      Similarity.suggestedRowsPerBandWide(standing.count()), 8)
-    val (banded, payload, params) = Similarity.knnGraphIndexWide(
-      standing, "vec_id", "embedding", dim = 64, rowsPerBand = rpb, bands = 2)
+    // 8 bands of 8 bits: a 64-bit total, past the single-long budget
+    val (banded, payload, params) = Similarity.knnGraphIndex(
+      standing, "vec_id", "embedding", dim = 64, rowsPerBand = 8, bands = 8)
     val b = banded.localCheckpoint(true)
     val p = payload.localCheckpoint(true)
     val pr = params.localCheckpoint(true)
     val ingested = scala.collection.mutable.ArrayBuffer[(Long, Seq[Float])]()
     val edges = scala.collection.mutable.Set[(Long, Long, Int)]()
     val input = MemoryStream[(Long, Seq[Float])]
-    val q = StreamOps.knnIngestWide(
+    val q = StreamOps.knnIngest(
         input.toDF().toDF("vec_id", "embedding"), b, p, pr,
-        dim = 64, rowsPerBand = rpb, bands = 2, k = 3) { (out, _) =>
+        dim = 64, rowsPerBand = 8, bands = 8, k = 3) { (out, _) =>
         val got = out.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3)))
         edges.synchronized { edges ++= got }
         ()
@@ -481,9 +480,9 @@ class StreamOpsSpec extends AnyFunSuite {
       val b2 = rows(23L, 42L)
       ingested ++= b1; input.addData(b1: _*); q.processAllAvailable()
       ingested ++= b2; input.addData(b2: _*); q.processAllAvailable()
-      val batchRun = Similarity.knnGraphAgainstIndexWide(b, p, pr,
+      val batchRun = Similarity.knnGraphAgainstIndex(b, p, pr,
           ingested.toSeq.toDF("vec_id", "embedding"),
-          "vec_id", "embedding", k = 3, dim = 64, rowsPerBand = rpb, bands = 2)
+          "vec_id", "embedding", k = 3, dim = 64, rowsPerBand = 8, bands = 8)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
       assert(edges.toSet == batchRun,
         s"stream union must equal the one-shot batch probe:\n ${edges.toSet}\n vs $batchRun")
@@ -619,12 +618,12 @@ class StreamOpsSpec extends AnyFunSuite {
       (4L, Seq(0.1, 0.2, 0.3, 0.4)))    // unrelated
     val batch = graft.operators.Decontamination
       .semanticPairs(docRows.toDF("vec_id", "embedding"), bench,
-        "vec_id", "embedding", threshold = 0.9, nBits = 16, bands = 2)
+        "vec_id", "embedding", threshold = 0.9, dim = 4, rowsPerBand = 8, bands = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val input = MemoryStream[(Long, Seq[Double])]
     val flagged = StreamOps.semanticDecontaminate(
       input.toDF().toDF("vec_id", "embedding"), bench,
-      "vec_id", "embedding", threshold = 0.9, nBits = 16, bands = 2)
+      "vec_id", "embedding", threshold = 0.9, dim = 4, rowsPerBand = 8, bands = 2)
     val q = flagged.writeStream.format("memory").queryName("semdecon_out")
       .outputMode(OutputMode.Append()).start()
     try {

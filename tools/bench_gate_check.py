@@ -34,6 +34,9 @@ QueryCatalog helper (`def x`) whose body changed. Changed files whose
 identifier no entry mentions are listed as UNMAPPED — the drift
 estimate may be contaminated and a human should glance at them.
 
+A candidate entry recorded as a negative time (graft.Bench writes -1
+for an entry that failed) is listed as FAILED and fails the check.
+
 Usage: python3 tools/bench_gate_check.py [candidate.json] [--top N]
        [--base REV] [--no-git]
 """
@@ -57,11 +60,18 @@ EXTRA_MENTIONS = {
 ENTRY_RE = re.compile(r'^\s*\(?"([a-z0-9_]+)"\s*(?:->|,)', re.M)
 
 
-def load(path):
+def load_all(path):
+    """Every numeric entry of a record, including the -1 graft.Bench
+    writes for an entry that failed."""
     with open(path) as f:
         d = json.load(f)
     qs = d.get("queries") or {}
-    return {k: v for k, v in qs.items() if isinstance(v, (int, float)) and v >= 0}
+    return {k: v for k, v in qs.items() if isinstance(v, (int, float))}
+
+
+def load(path):
+    """The entries that ran (failed entries set no floor and no ratio)."""
+    return {k: v for k, v in load_all(path).items() if v >= 0}
 
 
 def git(repo, *args):
@@ -186,7 +196,9 @@ def main():
               "floor. Falling back to the scaled cross-era check only.")
     floor = floors_from(era, cand_path)
     pre_floor = floors_from(pre, cand_path)
-    cand = load(cand_path)
+    cand_all = load_all(cand_path)
+    failed = sorted(k for k, v in cand_all.items() if v < 0)
+    cand = {k: v for k, v in cand_all.items() if v >= 0}
 
     changed, warnings = (None, [])
     if use_git:
@@ -280,7 +292,12 @@ def main():
                       "regression candidates — get a MiniBench receipt):")
                 for n, k, r in sorted(flagged, reverse=True):
                     print(f"  {k:45s} raw {r:5.2f}x  scaled {n:5.2f}x")
-    sys.exit(1 if signal else 0)
+    if failed:
+        print(f"\nFAILED ({len(failed)} entries recorded a negative time — "
+              "the entry crashed):")
+        for k in failed:
+            print(f"  {k}")
+    sys.exit(1 if signal or failed else 0)
 
 
 if __name__ == "__main__":
