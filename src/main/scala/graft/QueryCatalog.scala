@@ -2173,7 +2173,7 @@ object QueryCatalog {
     // RefreshDispatchSpec walks the boundary both ways. The oracle
     // HARDCODES the full branch, which is safe because the measured
     // fraction sits far past the 0.5 dispatch line at every gated sf
-    // (tools/BallFractionProbe, r19: 0.984 at sf0.01, 1.000 at sf0.1) —
+    // (r19 BallFractionProbe, since deleted: 0.984 at sf0.01, 1.000 at sf0.1) —
     // if a future corpus drifts it toward 0.5, a gate failure here is
     // dispatch drift, not an operator bug.
     "semantic_communities_incremental_auto" -> ((s, dir) => {
@@ -2195,7 +2195,7 @@ object QueryCatalog {
     // handful of docs with diameter <= 2, so hops=2 / iterations=2 is
     // the right radius and the ball around an ingest batch's new pairs
     // stays batch-sized: measured fraction 0.234 at sf0.01 / 0.021 at
-    // sf0.1 (tools/BallFractionProbe, r19 — both far under the 0.5
+    // sf0.1 (r19 BallFractionProbe, since deleted — both far under the 0.5
     // dispatch line at every gated sf, so the oracle's hardcoded LOCAL
     // branch is safe; drift toward 0.5 is a corpus-shape change, not an
     // operator bug). Standing shingle

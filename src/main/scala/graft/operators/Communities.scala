@@ -39,7 +39,7 @@ object Communities {
     * 8 MB of longs — comfortably under executor broadcast budgets; a
     * blast radius bigger than this is effectively a global refresh and
     * the shuffle path is the right plan for it). Lowered 2^21 -> 2^20 in
-    * r19: tools/RefreshHeapProbe measured 3.94 GB post-GC live driver
+    * r19: the since-deleted RefreshHeapProbe measured 3.94 GB post-GC live driver
     * heap at a 2^21-node frontier on an 8 GB heap (the boxed
     * GenericRow LocalRelation copies the driver-resident path holds) —
     * half the heap for one frontier is not headroom, and past the gate
@@ -50,7 +50,7 @@ object Communities {
     * — deliberately tighter than the frontier gate: at the refuse
     * boundary the driver concurrently holds the canonical pairs, a
     * ~3x-batch probe frame, the new-node self-loops, and a ~2x deltaAdj
-    * (tools/RefreshHeapProbe, r19: 6.96 GB post-GC live at 2^21 pairs
+    * (r19 RefreshHeapProbe, since deleted: 6.96 GB post-GC live at 2^21 pairs
     * on an 8 GB heap — effectively exhausted). 2^19 pairs measures
     * ~1/4 of that, leaving real headroom, and a batch beyond half a
     * million novel pairs is not an incremental batch — the refusal

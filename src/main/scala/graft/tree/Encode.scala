@@ -1,8 +1,10 @@
 package graft.tree
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Ordinal target encoding for categorical feature columns.
   *
@@ -26,6 +28,14 @@ object TargetEncoder {
     * broadcast join. */
   val WhenChainThreshold = 128
 
+  /** One aggregate job per column. Its <= #levels rows are sorted on the
+    * driver in exactly Spark's `orderBy(avg.asc_nulls_last,
+    * cast(c as string).asc)` order, which spares the range-partition
+    * sampling jobs an `orderBy` runs: means ascending under
+    * `SQLOrderingUtil.compareDoubles` (-0.0 == 0.0, NaN above every
+    * number), null means last, then the category string, null first,
+    * in UTF-8 byte order (`UTF8String.binaryCompare`, not `String.compareTo`,
+    * which orders UTF-16 code units). */
   def fitMappings(
       df: DataFrame,
       categoricalColumns: Seq[String],
@@ -35,11 +45,30 @@ object TargetEncoder {
       val rows = df
         .groupBy(col(c))
         .agg(avg(col(targetName).cast(DoubleType)).as("avg"))
-        .orderBy(col("avg").asc_nulls_last, col(c).cast(StringType).asc)
-        .select(col(c).cast(StringType))
+        .select(col(c).cast(StringType), col("avg"))
         .collect()
-      c -> rows.iterator.zipWithIndex.map { case (r, i) => r.getString(0) -> i }.toMap
+        .map(r => (r.getString(0), if (r.isNullAt(1)) None else Some(r.getDouble(1))))
+        .sorted(SparkOrder)
+      c -> rows.iterator.zipWithIndex.map { case ((k, _), i) => k -> i }.toMap
     }.toMap
+
+  private object SparkOrder extends Ordering[(String, Option[Double])] {
+    def compare(a: (String, Option[Double]), b: (String, Option[Double])): Int = {
+      val byMean = (a._2, b._2) match {
+        case (Some(x), Some(y)) => SQLOrderingUtil.compareDoubles(x, y)
+        case (None, None)       => 0
+        case (None, _)          => 1 // nulls last
+        case (_, None)          => -1
+      }
+      if (byMean != 0) byMean
+      else (a._1, b._1) match {
+        case (null, null) => 0
+        case (null, _)    => -1 // nulls first
+        case (_, null)    => 1
+        case (x, y)       => UTF8String.fromString(x).binaryCompare(UTF8String.fromString(y))
+      }
+    }
+  }
 
   private def recodeColumn(df: DataFrame, c: String, mapping: Map[String, Int],
       whenChainThreshold: Int): DataFrame =

@@ -312,10 +312,11 @@ object SplitSearch {
   /** Exact-mode level search: ONE [[graft.functions.ExactHistogram]]
     * aggregate job per tree LEVEL over un-melted rows. `nodeId` assigns
     * every row to a pending node in [0, numNodes) (NULL = row settled in a
-    * finalized leaf or dropped by a NULL split feature — excluded). The
-    * aggregate's one binary row carries, per (node, feature), the class
-    * counts of every distinct value; the driver sorts each slot and runs
-    * [[bestThreshold]] over it, so candidates, counts, gains and
+    * finalized leaf or dropped by a NULL split feature — excluded); it is
+    * evaluated over [[pack]]'s frame, so it routes on `__arr[i]`, feature
+    * i. The aggregate's one binary row carries, per (node, feature), the
+    * class counts of every distinct value; the driver sorts each slot and
+    * runs [[bestThreshold]] over it, so candidates, counts, gains and
     * tie-breaks equal the reference pipeline's ([[bestSplit]] /
     * [[gainPerThreshold]], asserted with `==` in SplitSearchSpec). Rows
     * whose target is not in `targets` count nowhere. Nodes with no rows are
@@ -329,9 +330,20 @@ object SplitSearch {
       targetName: String,
       targets: Seq[Any],
       criterion: Criterion
+  ): Map[Int, NodeSearch] =
+    exactSearch(pack(df, features, targetName, targets), nodeId, numNodes, features,
+      targets.size, criterion)
+
+  /** [[searchLevelExact]] over an already [[pack]]ed frame. */
+  private[graft] def exactSearch(
+      packed: DataFrame,
+      nodeId: Column,
+      numNodes: Int,
+      features: Seq[String],
+      k: Int,
+      criterion: Criterion
   ): Map[Int, NodeSearch] = {
-    val k = targets.size
-    val bytes = exactLevelQuery(df, nodeId, numNodes, features, targetName, targets)
+    val bytes = exactLevelQuery(packed, nodeId, numNodes, features.size, k)
       .head().getAs[Array[Byte]](0)
     val hist = graft.functions.ExactHistogram.decode(bytes, numNodes, features.size, k)
     (0 until numNodes).flatMap { node =>
@@ -347,14 +359,15 @@ object SplitSearch {
   /** Binned-mode level search: ONE [[graft.functions.MultiFeatureHistogram]]
     * aggregate job per tree LEVEL (no melt — a single pass over un-exploded
     * rows; the buffer = nodes x (F+1) x (B+1) x K longs merged to one row)
-    * and the entire gain computation on the driver. Requires bin edges for
-    * every splittable feature (all-null features have none and are
-    * skipped) and non-null targets. On null-free features with finite
-    * edges, candidate set, counts and gains match the exact
-    * [[searchWithStats]] run over [[snapToEdges]]-snapped features
-    * (asserted in SplitSearchSpec). Unlike the snap, null feature values
-    * count in no bin, and an interior +Inf edge keeps its own bin apart
-    * from NaN. Nodes with no rows are absent from the result map.
+    * and the entire gain computation on the driver. `nodeId` routes over
+    * [[pack]]'s frame, as in [[searchLevelExact]]. Features without bin
+    * edges (all-null features have none) yield no candidate; targets must
+    * be non-null. On null-free features with finite edges, candidate set,
+    * counts and gains match the exact [[searchWithStats]] run over
+    * [[snapToEdges]]-snapped features (asserted in SplitSearchSpec). Unlike
+    * the snap, null feature values count in no bin, and an interior +Inf
+    * edge keeps its own bin apart from NaN. Nodes with no rows are absent
+    * from the result map.
     */
   def searchLevelAggregated(
       df: DataFrame,
@@ -365,88 +378,101 @@ object SplitSearch {
       targets: Seq[Any],
       criterion: Criterion,
       binEdges: Map[String, Seq[Double]]
+  ): Map[Int, NodeSearch] =
+    binnedSearch(pack(df, features, targetName, targets), nodeId, numNodes, features,
+      targets.size, criterion, binEdges)
+
+  /** [[searchLevelAggregated]] over an already [[pack]]ed frame. */
+  private[graft] def binnedSearch(
+      packed: DataFrame,
+      nodeId: Column,
+      numNodes: Int,
+      features: Seq[String],
+      k: Int,
+      criterion: Criterion,
+      binEdges: Map[String, Seq[Double]]
   ): Map[Int, NodeSearch] = {
-    val k = targets.size
-    val feats = features.filter(binEdges.contains) // all-null features have no edges
-    val edges = feats.map(binEdges)
-    val buffer: Array[Long] = binnedLevelQuery(df, nodeId, numNodes, features, targetName,
-      targets, binEdges).head().getSeq[Long](0).toArray
+    val edges = features.map(binEdges.getOrElse(_, Nil))
+    val buffer: Array[Long] = binnedLevelQuery(packed, nodeId, numNodes, edges, k)
+      .head().getSeq[Long](0).toArray
     val block = (edges.map(_.size).max + 1) * k
-    val nodeLen = (feats.size + 1) * block
+    val nodeLen = (features.size + 1) * block
     (0 until numNodes).flatMap { node =>
       val base = node * nodeLen
-      val nodeDist = buffer.slice(base + feats.size * block, base + feats.size * block + k)
-        .toVector // node sentinel block, bin 0
+      val sentinel = base + features.size * block
+      val nodeDist = buffer.slice(sentinel, sentinel + k).toVector // node sentinel block, bin 0
       if (nodeDist.sum == 0) None
-      else Some(node -> NodeSearch(feats.indices.flatMap { f =>
+      else Some(node -> NodeSearch(features.indices.flatMap { f =>
         val off = base + f * block
-        bestThreshold(feats(f), edges(f).toArray,
+        bestThreshold(features(f), edges(f).toArray,
           buffer.slice(off, off + (edges(f).size + 1) * k), k, criterion)
       }, nodeDist))
     }.toMap
   }
 
-  /** Both level searches' input projection: the packed feature array
-    * `__arr`, the class index `__cls` (-1 = no class) and the pending-node
-    * id `__node`. Pre-projected through whole-stage codegen (r21): an
-    * imperative aggregate evaluates its children interpreted per row, so a
-    * bare CreateArray would box every feature of every row (at 190
-    * features that boxing dominated the histogram scan); bound attribute
-    * reads allocate nothing. */
-  private def levelInputs(
+  /** The level searches' one input layout: the packed feature array
+    * `__arr` (slot i = feature i as a double; the features in `shrink`
+    * pass through Float32 first) and the class index `__cls` (position in
+    * `targets`, -1 = no class). The trainer projects and caches it once
+    * per fit, so no level query rebuilds the array or the class when-chain
+    * from feature columns. The array must be a projected column, not an
+    * aggregate child: an imperative aggregate evaluates its children
+    * interpreted per row, so a bare CreateArray would box every feature of
+    * every row (at 190 features that boxing dominated the histogram scan);
+    * bound attribute reads allocate nothing. */
+  private[graft] def pack(
       df: DataFrame,
-      nodeId: Column,
       features: Seq[String],
       targetName: String,
-      targets: Seq[Any]
+      targets: Seq[Any],
+      shrink: Set[String] = Set.empty
   ): DataFrame = {
     val classIdx = targets.zipWithIndex.foldLeft(
       when(lit(false), lit(-1))) { case (chain, (v, i)) =>
       chain.when(col(targetName) === lit(v), lit(i))
     }.otherwise(lit(-1)).cast("int")
-    df.select(array(features.map(f => col(f).cast(DoubleType)): _*).as("__arr"),
-      classIdx.as("__cls"), nodeId.cast("int").as("__node"))
+    df.select(array(features.map { f =>
+      if (shrink(f)) col(f).cast("float").cast(DoubleType) else col(f).cast(DoubleType)
+    }: _*).as("__arr"), classIdx.as("__cls"))
   }
 
-  /** The exact level's single aggregate query: one row, one binary
-    * [[graft.functions.ExactHistogram]] buffer. */
+  /** A packed frame plus the level's node id as a bound `__node` column. */
+  private def routed(packed: DataFrame, nodeId: Column): DataFrame =
+    packed.select(col("__arr"), col("__cls"), nodeId.cast("int").as("__node"))
+
+  /** The exact level's single aggregate query over a [[pack]]ed frame: one
+    * row, one binary [[graft.functions.ExactHistogram]] buffer. */
   private[graft] def exactLevelQuery(
-      df: DataFrame,
+      packed: DataFrame,
       nodeId: Column,
       numNodes: Int,
-      features: Seq[String],
-      targetName: String,
-      targets: Seq[Any]
+      numFeatures: Int,
+      numClasses: Int
   ): DataFrame = {
     import org.apache.spark.sql.graft.ColumnBridge
     val agg = graft.functions.ExactHistogram(
       ColumnBridge.expression(col("__arr")),
       ColumnBridge.expression(col("__cls")),
-      ColumnBridge.expression(col("__node")), features.size, targets.size, numNodes)
-    levelInputs(df, nodeId, features, targetName, targets)
-      .select(ColumnBridge.column(agg.toAggregateExpression()).as("hist"))
+      ColumnBridge.expression(col("__node")), numFeatures, numClasses, numNodes)
+    routed(packed, nodeId).select(ColumnBridge.column(agg.toAggregateExpression()).as("hist"))
   }
 
-  /** The binned level's single aggregate query: one row, one flat
-    * [[graft.functions.MultiFeatureHistogram]] count array over the
-    * features that have edges. */
+  /** The binned level's single aggregate query over a [[pack]]ed frame:
+    * one row, one flat [[graft.functions.MultiFeatureHistogram]] count
+    * array, one block per slot of `__arr` (`edges` aligned to the slots). */
   private[graft] def binnedLevelQuery(
-      df: DataFrame,
+      packed: DataFrame,
       nodeId: Column,
       numNodes: Int,
-      features: Seq[String],
-      targetName: String,
-      targets: Seq[Any],
-      binEdges: Map[String, Seq[Double]]
+      edges: Seq[Seq[Double]],
+      numClasses: Int
   ): DataFrame = {
     import org.apache.spark.sql.graft.ColumnBridge
-    val feats = features.filter(binEdges.contains)
     val agg = graft.functions.MultiFeatureHistogram(
       ColumnBridge.expression(col("__arr")),
       ColumnBridge.expression(col("__cls")),
-      ColumnBridge.expression(col("__node")), feats.map(binEdges), targets.size, numNodes)
-    levelInputs(df, nodeId, feats, targetName, targets)
-      .select(ColumnBridge.column(agg.toAggregateExpression()).as("hist"))
+      ColumnBridge.expression(col("__node")), edges, numClasses, numNodes)
+    routed(packed, nodeId).select(ColumnBridge.column(agg.toAggregateExpression()).as("hist"))
   }
 
   private val Log2 = StrictMath.log(2.0)

@@ -1,23 +1,33 @@
 package graft.tree
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, FloatType}
 import org.apache.spark.storage.StorageLevel
 
 /** Memory-efficient decision-tree classifier, trained entirely as
   * DataFrame dataflow — the Spark-native rebuild of the reference's
   * Polars-backed `DecisionTreeClassifier` (reference: efficient_trees/tree.py:16-385).
   *
-  * Execution shape: ONE level-wise loop. Each tree level runs ONE native
-  * aggregate over un-melted rows that answers every pending node at once —
-  * per-feature class-count histograms AND each node's class distribution;
-  * one driver-side gain scan picks the splits, and the children's
-  * distributions fall out of the winner's cumulative counts, so leaves
-  * cost zero jobs. `maxBins` picks the histogram's key layout: exact mode
-  * runs [[SplitSearch.searchLevelExact]] (a sparse
-  * [[graft.functions.ExactHistogram]] keyed by distinct value), binned
-  * mode runs [[SplitSearch.searchLevelAggregated]] (a dense
-  * [[graft.functions.MultiFeatureHistogram]] keyed by bin index). The
+  * Fit pipeline: ONE stats pass, ONE pack, then one query per level.
+  *  1. Stats pass: a single aggregate over the input answers the distinct
+  *     targets, the f32 shrink gate and, in binned mode, every feature's
+  *     quantile bin edges ([[graft.functions.MultiQuantileSketch]]).
+  *  2. Pack: the rows are projected once into [[SplitSearch.pack]]'s
+  *     `(__arr array<double>, __cls int)` frame, with the shrink casts and
+  *     the class index folded in, and that frame is cached.
+  *  3. Levels: each tree level runs ONE native aggregate over the packed
+  *     rows that answers every pending node at once — per-feature
+  *     class-count histograms AND each node's class distribution; one
+  *     driver-side gain scan picks the splits, and the children's
+  *     distributions fall out of the winner's cumulative counts, so leaves
+  *     cost zero jobs. `maxBins` picks the histogram's key layout: exact
+  *     mode runs [[SplitSearch.searchLevelExact]]'s sparse
+  *     [[graft.functions.ExactHistogram]] keyed by distinct value, binned
+  *     mode runs [[SplitSearch.searchLevelAggregated]]'s dense
+  *     [[graft.functions.MultiFeatureHistogram]] keyed by bin index.
+  * A fit that reaches its depth cap d with c categorical columns runs c + 1 + d SQL
+  * executions (one per categorical for its target-encoding means). The
   * reference runs ~3 executions per NODE (per-feature `collect_all`
   * fan-out + mask collect + distribution collect, tree.py:339-372).
   *
@@ -51,8 +61,8 @@ import org.apache.spark.storage.StorageLevel
   *                       chosen edges stay exact; only the candidate set
   *                       shrinks. None = exact mode (reference parity,
   *                       golden tests).
-  * @param cacheNodes     persist the training rows (MEMORY_AND_DISK) for the
-  *                       duration of the build. The reference's
+  * @param cacheNodes     persist the packed training frame (MEMORY_AND_DISK)
+  *                       for the duration of the build. The reference's
   *                       lazy/streaming mode re-derives every level from the
   *                       root scan instead (tree.py:233-234, SURVEY.md §3
   *                       EP1) — set false to reproduce that
@@ -82,10 +92,12 @@ final case class DecisionTreeClassifier(
   private final case class BPending(inherited: Option[Seq[Long]]) extends Building
 
   /** Train. Pipeline mirrors the reference's `fit` (tree.py:79-115):
-    * schema introspection -> (dtype shrink: a no-op under Tungsten) ->
-    * target-encode categoricals -> collect distinct targets ->
-    * (maxBins mode: one [[graft.functions.MultiQuantileSketch]] pass for
-    * bin edges) -> level-wise build.
+    * schema introspection -> target-encode categoricals -> ONE stats pass
+    * (distinct targets, the dtype-shrink gate and, in maxBins mode, the
+    * [[graft.functions.MultiQuantileSketch]] bin edges) -> pack the rows
+    * once into [[SplitSearch.pack]]'s `(__arr, __cls)` frame, with the
+    * f32 shrink and the class index folded in -> level-wise build over
+    * that one cached frame.
     */
   def fit(data: DataFrame, targetName: String): DecisionTreeModel = {
     val featureNames = data.schema.fieldNames.filterNot(_ == targetName).toSeq
@@ -101,31 +113,35 @@ final case class DecisionTreeClassifier(
     // before fit — amex_default.py:23.)
     val nonNullTarget = data.where(col(targetName).isNotNull)
 
-    val (encoded0, mappings) =
+    val (encoded, mappings) =
       if (categoricalColumns.nonEmpty) {
         val m = TargetEncoder.fitMappings(nonNullTarget, categoricalColumns, targetName)
         (TargetEncoder.applyMappings(nonNullTarget, m), m)
       } else (nonNullTarget, Map.empty[String, Map[String, Int]])
+
+    // Distinct target values (tree.py:110-113) exactly as
+    // `distinct().orderBy(t)` returns them, folded into the stats pass.
+    // collect_set keeps one element per NaN ROW (its hash set finds NaN
+    // unequal to itself), so NaN is gathered as a flag and appended last,
+    // where Spark's ordering puts it; -0.0 joins 0.0, as grouping keys do.
+    // The reference's order is engine-arbitrary; we sort for deterministic
+    // class indexing.
+    val t = col(targetName)
+    val (targetAggs, nan) = targetType match {
+      case FloatType | DoubleType =>
+        (Seq(array_sort(collect_set(when(t === 0, lit(0).cast(targetType)).when(!isnan(t), t))),
+          max(isnan(t))), Some(if (targetType == FloatType) Float.NaN: Any else Double.NaN: Any))
+      case _ => (Seq(array_sort(collect_set(t))), None)
+    }
+    def targetsOf(r: Row, i: Int): Seq[Any] =
+      r.getSeq[Any](i).toSeq ++ nan.filter(_ => r.getAs[Any](i + 1) == true)
 
     // shrink_dtype parity (tree.py:90): double features lose to f32 grid
     // during fit only. Like Polars, shrink is a COLUMN-level decision
     // gated on the values fitting f32 range — a feature with magnitudes
     // beyond Float.MaxValue stays f64 rather than collapsing to Infinity.
     // Encoded categoricals are small ints — untouched.
-    val doubleFeatures = featureNames.filter(f =>
-      encoded0.schema(f).dataType == org.apache.spark.sql.types.DoubleType)
-    def shrinkWith(absMax: String => Option[Double]): DataFrame =
-      if (shrinkDtype && doubleFeatures.nonEmpty) {
-        // one select, not a withColumn fold — each withColumn re-analyzes
-        // the accumulated plan, O(width^2) driver time at 190 features
-        // (measured on the 190-feature bench fit)
-        val shrinkSet = doubleFeatures.filter(f =>
-          // absent = all-null/all-NaN feature: the cast is a no-op either way
-          absMax(f).forall(_ <= Float.MaxValue.toDouble)).toSet
-        encoded0.select(encoded0.columns.map { c =>
-          if (shrinkSet(c)) col(c).cast("float").cast("double").as(c) else col(c)
-        }: _*)
-      } else encoded0
+    val doubleFeatures = featureNames.filter(f => encoded.schema(f).dataType == DoubleType)
 
     // maxBins mode: per-feature quantile edges, computed once on the root
     // data and reused for every node (MLlib-style binning). One
@@ -136,84 +152,78 @@ final case class DecisionTreeClassifier(
     // the whole binned fit). The SAME pass also answers the shrink
     // decision: GK summaries retain the exact extremes, so querying
     // probabilities 0 and 1 yields each feature's exact min/max and the
-    // f32-fit gate costs no second corpus scan (exact mode keeps its
-    // dedicated max(abs) aggregate). Edges are therefore computed on the
-    // PRE-shrink doubles — still valid cut points for the f32-shrunk
-    // training values (counts AT the chosen edges stay exact; only the
-    // candidate grid shifts within the sketch's error bound). NaN is
-    // ignored throughout: a NaN never blocks shrink (NaN survives the
+    // f32-fit gate costs no second corpus scan (exact mode asks a max(abs)
+    // aggregate in its stats pass instead). Edges are therefore computed
+    // on the PRE-shrink doubles — still valid cut points for the
+    // f32-shrunk training values (counts AT the chosen edges stay exact;
+    // only the candidate grid shifts within the sketch's error bound). NaN
+    // is ignored throughout: a NaN never blocks shrink (NaN survives the
     // f32 cast value-preserved), unlike a max(abs) aggregate where NaN
     // would poison the comparison.
-    val (encoded: DataFrame, binEdges: Map[String, Seq[Double]]) = maxBins match {
+    val (targets, absMax, binEdges) = maxBins match {
       case Some(b) =>
         require(b >= 2, s"maxBins must be >= 2, got $b")
         import org.apache.spark.sql.graft.ColumnBridge
         val probs = 0.0 +: (1 until b).map(_.toDouble / b) :+ 1.0
-        val packed = array(featureNames.map(f => col(f).cast("double")): _*)
         val agg = graft.functions.MultiQuantileSketch(
           ColumnBridge.expression(col("__arr")), featureNames.size, 1.0 / (4 * b), probs)
-        // Pre-project the packed array through whole-stage codegen (r21):
-        // an imperative aggregate evaluates its child expressions with
-        // interpreted eval per row, so the bare CreateArray boxed every
-        // feature of every row (at 190 features the boxing dominated the
-        // pass and its garbage drove the 32-core page-churn pathology the
-        // r20 scaling block exposed). A bound attribute read is free.
-        val quantiles: Seq[Seq[Double]] = encoded0
-          .select(packed.as("__arr"))
-          .select(ColumnBridge.column(agg.toAggregateExpression()).as("qs"))
-          .head().getSeq[scala.collection.Seq[Double]](0).map(_.toSeq)
-        val absMax: Map[String, Double] = featureNames.zip(quantiles).collect {
-          case (f, qs) if qs.nonEmpty =>
-            f -> math.max(math.abs(qs.head), math.abs(qs.last))
+        // the sketch reads a projected array column: see SplitSearch.pack
+        val r = encoded
+          .select(array(featureNames.map(f => col(f).cast(DoubleType)): _*).as("__arr"), t)
+          .select(ColumnBridge.column(agg.toAggregateExpression()) +: targetAggs: _*)
+          .head()
+        val quantiles = r.getSeq[scala.collection.Seq[Double]](0).map(_.toSeq)
+        val absMax = featureNames.zip(quantiles).collect {
+          case (f, qs) if qs.nonEmpty => f -> math.max(math.abs(qs.head), math.abs(qs.last))
         }.toMap
         val edges = featureNames
           .zip(quantiles.map(qs =>
             if (qs.isEmpty) qs else qs.drop(1).dropRight(1).distinct.sorted))
           .filter(_._2.nonEmpty).toMap
-        (shrinkWith(absMax.get), edges)
+        (targetsOf(r, 1), absMax, edges)
       case None =>
-        val maxAbs: Map[String, Double] =
-          if (shrinkDtype && doubleFeatures.nonEmpty) {
-            val aggs = doubleFeatures.map(f => max(abs(col(f))).as(s"__ma_$f"))
-            val r = encoded0.agg(aggs.head, aggs.tail: _*).head()
-            doubleFeatures.flatMap { f =>
-              Option(r.getAs[Any](s"__ma_$f")).map { case m: Double => f -> m }
-            }.toMap
-          } else Map.empty
-        (shrinkWith(maxAbs.get), Map.empty[String, Seq[Double]])
+        // reads the rows before target encoding: neither the targets nor
+        // the (non-categorical) double features depend on it, and a large
+        // mapping's broadcast join would cost the pass an extra job
+        val shrinkable = if (shrinkDtype) doubleFeatures else Nil
+        val r = nonNullTarget.agg(targetAggs.head,
+          targetAggs.tail ++ shrinkable.map(f => max(abs(col(f)))): _*).head()
+        val absMax = shrinkable.zipWithIndex.collect {
+          case (f, i) if !r.isNullAt(targetAggs.size + i) => f -> r.getDouble(targetAggs.size + i)
+        }.toMap
+        (targetsOf(r, 0), absMax, Map.empty[String, Seq[Double]])
     }
+    // absent = all-null/all-NaN feature: the cast is a no-op either way
+    val shrink = if (shrinkDtype) {
+      doubleFeatures.filter(f => absMax.get(f).forall(_ <= Float.MaxValue.toDouble)).toSet
+    } else Set.empty[String]
 
-    // Distinct target values (tree.py:110-113). The reference's order is
-    // engine-arbitrary; we sort for deterministic class indexing.
-    val targets: Seq[Any] =
-      encoded.select(col(targetName)).distinct().orderBy(col(targetName)).collect().map(_.get(0)).toSeq
-
-    val tree = trainLevels(encoded, featureNames, targetName, targets, binEdges)
-    DecisionTreeModel(tree, mappings, targetType)
+    val packed = SplitSearch.pack(encoded, featureNames, targetName, targets, shrink)
+    DecisionTreeModel(trainLevels(packed, featureNames, targets, binEdges), mappings, targetType)
   }
 
   // ---- level-wise construction (one Spark job per tree LEVEL) -------------
 
-  /** Breadth-first trainer: each level runs ONE aggregate job
-    * ([[SplitSearch.searchLevelExact]], or
+  /** Breadth-first trainer over [[SplitSearch.pack]]'s frame: each level
+    * runs ONE aggregate job ([[SplitSearch.searchLevelExact]], or
     * [[SplitSearch.searchLevelAggregated]] in binned mode) that answers
-    * every pending node at once — rows are routed to
-    * their pending node by a when-chain id expression over the partial
-    * tree. Jobs per tree = depth, not node count; the source is cached
-    * once. Node membership follows the reference's filter/negated-filter
-    * recursion (tree.py:351-358; pinned against RefTree in TreeSpec and
+    * every pending node at once — rows are routed to their pending node by
+    * a when-chain id expression over `__arr` and the partial tree. Jobs per
+    * tree = depth, not node count; the packed frame is cached once. Node
+    * membership follows the reference's filter/negated-filter recursion
+    * (tree.py:351-358; pinned against RefTree in TreeSpec and
     * SplitSearchSpec). The id when-chain has one branch per node at the
     * current frontier, so keep depth <= ~12 (the reference's own examples
     * cap at 4-8).
     */
   private def trainLevels(
-      data: DataFrame,
+      packed: DataFrame,
       featureNames: Seq[String],
-      targetName: String,
       targets: Seq[Any],
       binEdges: Map[String, Seq[Double]]
   ): TreeNode = {
-    val source = if (cacheNodes) data.persist(StorageLevel.MEMORY_AND_DISK) else data
+    val source = if (cacheNodes) packed.persist(StorageLevel.MEMORY_AND_DISK) else packed
+    val slot = featureNames.zipWithIndex.toMap
 
     def countPendings(b: Building): Int = b match {
       case s: BSplit   => countPendings(s.left) + countPendings(s.right)
@@ -221,8 +231,9 @@ final case class DecisionTreeClassifier(
       case _: BPending => 1
     }
 
-    /** Pre-order pending-node id routing expression over the partial tree.
-      * NULL id = row sits in a finalized leaf or drops out at a NULL split
+    /** Pre-order pending-node id routing expression over the partial tree,
+      * reading split features from their `__arr` slot (a NULL slot is a
+      * NULL feature). NULL id = row sits in a finalized leaf or drops out at a NULL split
       * feature (3-valued logic — the reference's mask + ~mask drops
       * NULL-feature rows from both children, tree.py:351-358). */
     def idExpr(b: Building): org.apache.spark.sql.Column = {
@@ -232,7 +243,7 @@ final case class DecisionTreeClassifier(
         case _: BPending =>
           idx += 1; lit(idx).cast("int")
         case s: BSplit =>
-          val c = col(s.feature).cast("double")
+          val c = col("__arr").getItem(slot(s.feature))
           val lc = walk(s.left)
           val rc = walk(s.right)
           when(c <= lit(s.threshold), lc).when(c > lit(s.threshold), rc)
@@ -251,7 +262,7 @@ final case class DecisionTreeClassifier(
         // distributionJob over the ROOT source there would silently
         // compute the wrong majority — make the invariant loud instead.
         val dist = inherited.getOrElse {
-          if (isRoot) distributionJob(source, targetName, targets)
+          if (isRoot) distributionJob(source, targets.size)
           else throw new IllegalStateException(
             "pending node below the root hit the depth cap without an inherited distribution")
         }
@@ -279,11 +290,11 @@ final case class DecisionTreeClassifier(
             // every feature is all-null — then the exact search (which finds
             // no candidates either) still answers the node distributions
             if (binEdges.nonEmpty)
-              SplitSearch.searchLevelAggregated(source, nodeId, numPendings,
-                featureNames, targetName, targets, criterion, binEdges)
+              SplitSearch.binnedSearch(source, nodeId, numPendings,
+                featureNames, targets.size, criterion, binEdges)
             else
-              SplitSearch.searchLevelExact(source, nodeId, numPendings,
-                featureNames, targetName, targets, criterion)
+              SplitSearch.exactSearch(source, nodeId, numPendings,
+                featureNames, targets.size, criterion)
           var idx = -1
           def rebuild(b: Building): Building = b match {
             case s: BSplit => s.copy(left = rebuild(s.left), right = rebuild(s.right))
@@ -332,10 +343,10 @@ final case class DecisionTreeClassifier(
   }
 
   /** Fallback single job for the rare no-inherited-distribution case
-    * (depth cap at the root). */
-  private def distributionJob(df: DataFrame, targetName: String, targets: Seq[Any]): Seq[Long] = {
-    val counts = df.groupBy(col(targetName)).agg(count(lit(1)).as("n"))
-      .collect().map(r => r.get(0) -> r.getAs[Long]("n")).toMap
-    targets.map(t => counts.getOrElse(t, 0L))
+    * (depth cap at the root), over the packed frame's class index. */
+  private def distributionJob(packed: DataFrame, k: Int): Seq[Long] = {
+    val counts = packed.groupBy(col("__cls")).count()
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    (0 until k).map(counts.getOrElse(_, 0L))
   }
 }

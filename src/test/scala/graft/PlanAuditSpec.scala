@@ -76,28 +76,103 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("tree level searches plan no Generate and no Window node") {
+    import org.apache.spark.sql.catalyst.expressions.CreateArray
+    import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.functions.{col, lit, when}
-    import graft.tree.{Criterion, SplitSearch}
-    def nodes(df: DataFrame): Seq[String] =
-      withConf("spark.sql.adaptive.enabled" -> "false") {
-        df.queryExecution.executedPlan.collect { case n => n.nodeName }
-      }
+    import graft.functions.{ExactHistogram, MultiFeatureHistogram}
+    import graft.tree.{Criterion, DecisionTreeClassifier, SplitSearch}
+    def static(df: DataFrame): SparkPlan =
+      withConf("spark.sql.adaptive.enabled" -> "false")(df.queryExecution.executedPlan)
+    def nodes(p: SparkPlan): Seq[String] = p.collect { case n => n.nodeName }
     val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
     val features = Seq("l_quantity", "l_discount", "l_tax", "l_extendedprice")
     val targets = Seq[Any]("A", "N", "R")
-    val nodeId = when(col("l_quantity") <= 25.0, lit(0)).otherwise(lit(1))
-    // detector proof: the reference pipeline melts and windows
-    val ref = nodes(SplitSearch.gainPerThreshold(li, features, "l_returnflag", targets,
-      Criterion.Entropy))
-    assert(ref.contains("Generate") && ref.contains("Window"), s"detector is vacuous: $ref")
-    val levels = Seq(
-      "exact" -> SplitSearch.exactLevelQuery(li, nodeId, 2, features, "l_returnflag", targets),
-      "binned" -> SplitSearch.binnedLevelQuery(li, nodeId, 2, features, "l_returnflag", targets,
-        features.map(_ -> Seq(0.05, 10.0)).toMap))
-    levels.foreach { case (mode, q) =>
-      val n = nodes(q)
-      assert(!n.contains("Generate") && !n.contains("Window"), s"$mode level plans $n")
+    // arrays built from the named feature columns anywhere in the plan
+    def featureArrays(p: SparkPlan): Seq[CreateArray] =
+      p.collect { case n => n.expressions }.flatten.flatMap(
+        _.collect { case a: CreateArray if a.references.exists(r => features.contains(r.name)) => a })
+    def check(what: String, p: SparkPlan): Unit = {
+      val n = nodes(p)
+      assert(!n.contains("Generate") && !n.contains("Window"), s"$what plans $n")
+      assert(featureArrays(p).isEmpty, s"$what re-packs feature columns: ${featureArrays(p)}")
     }
+    // detector proofs: the reference pipeline melts and windows, and the
+    // packing itself builds the feature array
+    val ref = nodes(static(SplitSearch.gainPerThreshold(li, features, "l_returnflag", targets,
+      Criterion.Entropy)))
+    assert(ref.contains("Generate") && ref.contains("Window"), s"detector is vacuous: $ref")
+    assert(featureArrays(static(SplitSearch.pack(li, features, "l_returnflag", targets))).nonEmpty,
+      "CreateArray detector is vacuous")
+    // the level queries over the input as the trainer holds it: packed once, cached
+    val packed = SplitSearch.pack(li, features, "l_returnflag", targets).cache()
+    try {
+      val nodeId = when(col("__arr").getItem(0) <= 25.0, lit(0)).otherwise(lit(1))
+      check("exact level", static(
+        SplitSearch.exactLevelQuery(packed, nodeId, 2, features.size, targets.size)))
+      check("binned level", static(SplitSearch.binnedLevelQuery(packed, nodeId, 2,
+        features.map(_ => Seq(0.05, 10.0)), targets.size)))
+    } finally packed.unpersist()
+    // and the level executions a real fit runs, exact and binned
+    val executed = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = executed.add(qe.executedPlan)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try withConf("spark.sql.adaptive.enabled" -> "false") {
+      val rows = li.select((features :+ "l_returnflag").map(col): _*)
+      for (bins <- Seq(None, Some(8)))
+        DecisionTreeClassifier(maxDepth = Some(2), maxBins = bins).fit(rows, "l_returnflag")
+      org.apache.spark.sql.graft.ListenerBridge.waitUntilListenerBusEmpty(spark)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    val levels = executed.asScala.toSeq.filter(_.exists(_.expressions.exists(_.exists {
+      case _: ExactHistogram | _: MultiFeatureHistogram => true
+      case _ => false
+    })))
+    assert(levels.size == 4, s"expected 2 exact + 2 binned level executions, saw ${levels.size}")
+    levels.foreach(check("fit level", _))
+  }
+
+  test("a tree fit runs one stats pass, one query per categorical and one per level") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import graft.tree.DecisionTreeClassifier
+    val rnd = new scala.util.Random(3)
+    val rows = (0 until 400).map { i =>
+      val c = i % 3
+      Row(c * 1.5 + rnd.nextGaussian(), rnd.nextGaussian() - c, s"g${(i + c) % 5}", c)
+    }
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), StructType(Seq(
+      StructField("x", DoubleType), StructField("y", DoubleType),
+      StructField("cat", StringType), StructField("target", IntegerType))))
+    def executions(body: => graft.tree.DecisionTreeModel): (Int, Int) = {
+      val n = new java.util.concurrent.atomic.AtomicInteger(0)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+          case _: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart => n.incrementAndGet()
+          case _ =>
+        }
+      }
+      org.apache.spark.sql.graft.ListenerBridge.waitUntilListenerBusEmpty(spark)
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        val depth = body.tree.depth
+        org.apache.spark.sql.graft.ListenerBridge.waitUntilListenerBusEmpty(spark)
+        (n.get(), depth)
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    val d = 3
+    val (exact, exactDepth) = executions(DecisionTreeClassifier(maxDepth = Some(d),
+      categoricalColumns = Seq("cat")).fit(df, "target"))
+    assert(exactDepth == d, "the fit must reach the depth cap for the count to pin every level")
+    assert(exact == 1 + 1 + d, s"exact fit: 1 categorical + 1 stats pass + $d levels, ran $exact")
+    val (binned, binnedDepth) = executions(DecisionTreeClassifier(maxDepth = Some(d),
+      maxBins = Some(8)).fit(df.drop("cat"), "target"))
+    assert(binnedDepth == d, "the fit must reach the depth cap for the count to pin every level")
+    assert(binned == 1 + d, s"binned fit: 1 stats pass + $d levels, ran $binned")
   }
 
   test("tfidf construction is lazy: the corpus count is in-plan, not an eager job") {

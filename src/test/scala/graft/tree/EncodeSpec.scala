@@ -32,6 +32,30 @@ class EncodeSpec extends AnyFunSuite {
     assert(m == Map("x" -> 0, "y" -> 1, "z" -> 2)) // y before z on tied mean
   }
 
+  test("fitMappings sorts like Spark's orderBy on adversarial keys and means") {
+    import org.apache.spark.sql.functions.{avg, col}
+    val smile = "\uD83D\uDE00" // U+1F600: below "\uFFFF" in UTF-16, above it in UTF-8
+    val rows = Seq(
+      Row("\uFFFF", 1.0), Row(smile, 1.0), Row(null, 1.0), // tied means, null key
+      Row("b", 0.5), Row("a", 0.25), Row("a", 0.75),        // tied means
+      Row("m", -0.0), Row("l", 0.0),                        // -0.0 ties 0.0
+      Row("nan", Double.NaN), Row("nan", 1.0),              // NaN mean: above every number
+      Row("nul", null), Row("z", 2.0))                      // null mean: last
+    val d = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3),
+      StructType(Seq(StructField("cat", StringType), StructField("target", DoubleType))))
+    // the yardstick: the query fitMappings replaced
+    val viaOrderBy = d.groupBy(col("cat"))
+      .agg(avg(col("target").cast(DoubleType)).as("avg"))
+      .orderBy(col("avg").asc_nulls_last, col("cat").cast(StringType).asc)
+      .select(col("cat").cast(StringType)).collect()
+      .zipWithIndex.map { case (r, i) => r.getString(0) -> i }.toMap
+    assert(smile.compareTo("\uFFFF") < 0 && viaOrderBy("\uFFFF") < viaOrderBy(smile),
+      "fixture must order differently under String.compareTo and UTF-8 bytes")
+    assert(viaOrderBy(null) < viaOrderBy("\uFFFF") && viaOrderBy("l") < viaOrderBy("m") &&
+      viaOrderBy("z") < viaOrderBy("nan") && viaOrderBy("nan") < viaOrderBy("nul"))
+    assert(TargetEncoder.fitMappings(d, Seq("cat"), "target")("cat") == viaOrderBy)
+  }
+
   test("when-chain and broadcast-join recode paths agree; unseen -> null") {
     val m = Map("cat" -> TargetEncoder.fitMappings(df, Seq("cat"), "target")("cat"))
     val withUnseen = df.union(spark.createDataFrame(

@@ -329,4 +329,50 @@ class TreeSpec extends AnyFunSuite {
     val indexed = Predict.withRowIndex(df, "idx")
     assert(Predict.planScore(model, indexed, Seq("idx")).count() == 4)
   }
+
+  test("floating targets: classes are distinct()'s, one NaN class and 0.0 == -0.0") {
+    import org.apache.spark.sql.functions.{col, collect_set}
+    // x -> target: one class per x value under bitwise identity, but
+    // distinct() (the trainer's target-set semantics) groups -0.0 with
+    // 0.0 and every NaN bit pattern together: classes 0.0, 1.0, NaN
+    val xs = Seq(1.0, 2.0, 3.0, 4.0, 5.0, 6.0)
+    val reps = Seq(3, 3, 2, 3, 2, 2)
+    val dbl = Seq(0.0, -0.0, java.lang.Double.longBitsToDouble(0x7ff8000000000000L), 1.0,
+      java.lang.Double.longBitsToDouble(0x7ff8000000000001L),
+      java.lang.Double.longBitsToDouble(0xfff8000000000000L))
+    val flt = Seq(0.0f, -0.0f, java.lang.Float.intBitsToFloat(0x7fc00000), 1.0f,
+      java.lang.Float.intBitsToFloat(0x7fc00001), java.lang.Float.intBitsToFloat(0xffc00000))
+    for ((ys, dt) <- Seq[(Seq[Any], DataType)]((dbl, DoubleType), (flt, FloatType))) {
+      val rows = xs.zip(ys).zip(reps).flatMap { case ((x, y), n) => Seq.fill(n)(Row(x, y)) }
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3),
+        StructType(Seq(StructField("x", DoubleType), StructField("target", dt))))
+      val expected = df.select("target").distinct().orderBy("target").collect().map(_.get(0)).toSeq
+      def num(v: Any): Double = v match {
+        case d: Double => d
+        case f: Float  => f.toDouble
+      }
+      // fixture proof: the rows carry more bit patterns than classes
+      assert(expected.size == 3 && num(expected.last).isNaN)
+      assert(df.select(collect_set(col("target"))).head().getSeq[Any](0).size > expected.size,
+        s"$dt: NaN bit patterns did not survive into the frame")
+      val classOf: Any => Int = v => expected.indexWhere(e =>
+        if (num(v).isNaN) num(e).isNaN else num(e) == num(v))
+      val ref = RefTree.fit(rows.map(r => Map("x" -> Option(r.getDouble(0)))),
+        rows.map(r => classOf(r.get(1))), Seq("x"), Criterion.Entropy, maxDepth = 3)
+      def same(a: TreeNode, b: TreeNode): Boolean = (a, b) match {
+        case (LeafNode(v), LeafNode(i: Int)) => v.equals(expected(i)) // bitwise, NaN == NaN
+        case (SplitNode(f1, t1, g1, c1, d1, l1, r1), SplitNode(f2, t2, g2, c2, d2, l2, r2)) =>
+          f1 == f2 && t1 == t2 && d1 == d2 && math.abs(g1 - g2) < 1e-9 &&
+            math.abs(c1 - c2) < 1e-9 && same(l1, l2) && same(r1, r2)
+        case _ => false
+      }
+      val model = DecisionTreeClassifier(maxDepth = Some(3)).fit(df, "target")
+      model.tree match {
+        case s: SplitNode =>
+          assert(s.targetDistribution == Seq(6L, 3L, 6L), s"$dt target_distribution ${s.targetDistribution}")
+        case leaf         => fail(s"$dt: no split at the root: $leaf")
+      }
+      assert(same(model.tree, ref.tree), s"$dt\nengine: ${model.tree}\nref: ${ref.tree}")
+    }
+  }
 }
