@@ -1758,7 +1758,7 @@ object QueryCatalog {
       val e = embeddings(s, dir)
       val q = queryVector(e)
       Similarity.annTopK(
-        Similarity.lshIndex(e, "vec_id", "embedding", nBits = 4, dim = Some(q.size)),
+        Similarity.lshIndex(e, "vec_id", "embedding", nBits = 4, dim = q.size),
         q, nBits = 4, k = 10, probeRadius = 2)
         .select(col("id"), round(col("cosine"), 6).as("cosine"))
         .orderBy(col("cosine").desc, col("id").asc)
@@ -2361,9 +2361,9 @@ object QueryCatalog {
     // production shape (production: nBits ~16, radius 1).
     "batch_ann_topk" -> ((s, dir) => {
       val e = embeddings(s, dir)
-      val index = Similarity.lshIndex(e, "vec_id", "embedding", nBits = 4, dim = Some(64))
+      val index = Similarity.lshIndex(e, "vec_id", "embedding", nBits = 4, dim = 64)
       Similarity.annTopKForQueries(index, e.where(col("vec_id") < 5),
-          "vec_id", "embedding", nBits = 4, k = 5, probeRadius = 4, dim = Some(64))
+          "vec_id", "embedding", nBits = 4, k = 5, probeRadius = 4, dim = 64)
         .select(col("query_id"), col("corpus_id"), round(col("cosine"), 6).as("cosine"), col("rank"))
         .orderBy("query_id", "rank")
     }),
@@ -2473,11 +2473,11 @@ object QueryCatalog {
     // oracle as batch_ann_topk.
     "batch_ann_topk_bucketed" -> ((s, dir) => {
       val e = embeddings(s, dir)
-      val index = Similarity.lshIndex(e, "vec_id", "embedding", nBits = 4, dim = Some(64))
+      val index = Similarity.lshIndex(e, "vec_id", "embedding", nBits = 4, dim = 64)
       val tbl = "graft_lsh_index_" + dir.replaceAll("[^A-Za-z0-9]", "_")
       IndexStore.writeBucketed(index, tbl, "bucket", 8)
       Similarity.annTopKForQueries(IndexStore.read(s, tbl), e.where(col("vec_id") < 5),
-          "vec_id", "embedding", nBits = 4, k = 5, probeRadius = 4, dim = Some(64))
+          "vec_id", "embedding", nBits = 4, k = 5, probeRadius = 4, dim = 64)
         .select(col("query_id"), col("corpus_id"), round(col("cosine"), 6).as("cosine"), col("rank"))
         .orderBy("query_id", "rank")
     }),

@@ -18,6 +18,16 @@ import org.apache.spark.sql.graft.CheckpointBridge
   * Everything is pure `functions._` column algebra (codegen'd) — no UDFs.
   * Token hashing uses `xxhash64`, seeded per hash function, so signatures
   * are deterministic across runs and cluster layouts.
+  *
+  * The pair operators are compositions of a few shared stages, each
+  * written once: [[shingleIndex]] (the inverted `(id, set_size,
+  * shingle)` rows), `capDf` (the `maxDf` hot-key cap), `sharedCounts`
+  * (the shared-shingle self-join count), `probeCounts` (a batch probed
+  * against a corpus index), and `minHashes` / `bandCandidates` (the
+  * MinHash signature aggregate and its LSH band join). Each pair operator
+  * checkpoints the index or signature table its join sides share
+  * (`localCheckpoint`) when the DataFrame is built, so a Spark job runs
+  * at construction time; there is no lazy mode.
   */
 object Dedup {
 
@@ -304,44 +314,52 @@ object Dedup {
     * Shuffle is keyed by shingle then by pair — no cross join anywhere.
     * At 100 TB, add a document-frequency cap on shingles (stop-shingle
     * removal) to bound the hottest inverted-index keys; `maxDf` does that.
+    * The index is checkpointed before the self-join: the shingle
+    * computation is the expensive part, and both join sides read it.
     */
-  /** @param materialize eagerly `localCheckpoint` the inverted index before
-    *        the self-join — the shingle computation is the expensive
-    *        (interpreted higher-order) part, and without materialization
-    *        both join sides recompute it. At cluster scale this is the
-    *        standard persist-the-index step. NOTE: eager means a Spark job
-    *        runs when the DataFrame is CONSTRUCTED, not when it is first
-    *        acted on — pass false for plan-only inspection or lazy
-    *        composition (same applies to the other pair operators). */
   def jaccardPairs(
       df: DataFrame,
       idCol: String,
       textCol: String,
       n: Int = 1,
       threshold: Double = 0.8,
-      maxDf: Option[Long] = None,
-      materialize: Boolean = true
-  ): DataFrame = {
-    val sets = df.select(col(idCol).as("id"), shingleSet(col(textCol), n).as("sh"))
+      maxDf: Option[Long] = None
+  ): DataFrame =
+    sharedCounts(df, idCol, textCol, n, maxDf)
+      .withColumn("jaccard", jaccardOf("size_a", "size_b"))
+      .where(col("jaccard") >= lit(threshold))
+      .select("id_a", "id_b", "jaccard")
+
+  /** `n_common / (|A| + |B| - n_common)` — the one association every
+    * Jaccard operator here and its SQL twins use. */
+  private def jaccardOf(sizeA: String, sizeB: String): Column =
+    col("n_common") / (col(sizeA) + col(sizeB) - col("n_common"))
+
+  /** Per-document shingle sets `(id, sh, set_size)`. */
+  private def shingleSets(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
+    df.select(col(idCol).as("id"), shingleSet(col(textCol), n).as("sh"))
       .withColumn("set_size", size(col("sh")))
-    val inv1 = sets.select(col("id"), col("set_size"), explode(col("sh")).as("shingle"))
-    val inv0 = if (materialize) inv1.localCheckpoint(true) else inv1
-    val inv = maxDf match {
-      case Some(cap) =>
-        val dfreq = inv0.groupBy("shingle").agg(count(lit(1)).as("df")).where(col("df") <= cap)
-        inv0.join(dfreq.select("shingle"), Seq("shingle"))
-      case None => inv0
+
+  /** Drop the rows whose `key` occurs in more than `maxDf` rows — the
+    * stop-key cap that bounds the hottest inverted-index keys. */
+  private def capDf(rows: DataFrame, key: String, maxDf: Option[Long]): DataFrame =
+    maxDf.fold(rows) { cap =>
+      val dfreq = rows.groupBy(key).agg(count(lit(1)).as("df")).where(col("df") <= cap)
+      rows.join(dfreq.select(key), Seq(key))
     }
+
+  /** Shared-shingle counts of every document pair that shares a shingle:
+    * `(id_a, id_b, size_a, size_b, n_common)` with `id_a < id_b`, from one
+    * self-join of the checkpointed, `maxDf`-capped [[shingleIndex]]. */
+  private def sharedCounts(
+      df: DataFrame, idCol: String, textCol: String, n: Int, maxDf: Option[Long]): DataFrame = {
+    val inv = capDf(shingleIndex(df, idCol, textCol, n).localCheckpoint(true), "shingle", maxDf)
     val a = inv.select(col("shingle"), col("id").as("id_a"), col("set_size").as("size_a"))
     val b = inv.select(col("shingle"), col("id").as("id_b"), col("set_size").as("size_b"))
     a.join(b, Seq("shingle"))
       .where(col("id_a") < col("id_b"))
       .groupBy("id_a", "id_b", "size_a", "size_b")
       .agg(count(lit(1)).as("n_common"))
-      .withColumn("jaccard",
-        col("n_common") / (col("size_a") + col("size_b") - col("n_common")))
-      .where(col("jaccard") >= lit(threshold))
-      .select("id_a", "id_b", "jaccard")
   }
 
   /** [[jaccardPairs]] with PREFIX-FILTERED candidate generation (the
@@ -372,15 +390,12 @@ object Dedup {
       idCol: String,
       textCol: String,
       n: Int = 1,
-      threshold: Double = 0.8,
-      materialize: Boolean = true
+      threshold: Double = 0.8
   ): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
-    val sets0 = df.select(col(idCol).as("id"), shingleSet(col(textCol), n).as("sh"))
-      .withColumn("set_size", size(col("sh")))
-    val sets = if (materialize) sets0.localCheckpoint(true) else sets0
-    val inv = sets.select(col("id"), col("set_size"), explode(col("sh")).as("shingle"))
+    val sets = shingleSets(df, idCol, textCol, n).localCheckpoint(true)
+    val inv = invert(sets)
     val dfreq = inv.groupBy("shingle").agg(count(lit(1)).as("df"))
     val prefixLen =
       (col("set_size") - floor(lit(threshold) * col("set_size")) + 1).cast("int")
@@ -402,8 +417,7 @@ object Dedup {
       .join(sets.select(col("id").as("id_b"), col("sh").as("__sh_b"),
         col("set_size").as("size_b")), Seq("id_b"))
       .withColumn("n_common", size(array_intersect(col("__sh_a"), col("__sh_b"))))
-      .withColumn("jaccard",
-        col("n_common") / (col("size_a") + col("size_b") - col("n_common")))
+      .withColumn("jaccard", jaccardOf("size_a", "size_b"))
       .where(col("jaccard") >= lit(threshold))
       .select("id_a", "id_b", "jaccard")
   }
@@ -433,22 +447,14 @@ object Dedup {
       idCol: String,
       textCol: String,
       n: Int = 3,
-      minDf: Long = 2L,
-      materialize: Boolean = true
+      minDf: Long = 2L
   ): DataFrame = {
     require(minDf >= 2L, s"minDf must be >= 2 (a doc always contains itself), got $minDf")
-    val sets = df.select(col(idCol).as("doc_id"), shingleSet(col(textCol), n).as("sh"))
-    val inv0 = sets
-      .select(col("doc_id"), size(col("sh")).cast("long").as("n_shingles"),
-        explode(col("sh")).as("shingle"))
-    // materialize=true computes the exploded index once for its two
-    // consumers (df table + probe side); false keeps the plan lazy for
-    // plan-only inspection / composition — same contract as the pair
-    // operators' flag
-    val inv = if (materialize) inv0.localCheckpoint(true) else inv0
+    // checkpointed: the index feeds both the df table and the probe side
+    val inv = shingleIndex(df, idCol, textCol, n).localCheckpoint(true)
     val dfreq = inv.groupBy("shingle").agg(count(lit(1)).as("sh_df"))
     inv.join(dfreq, Seq("shingle"))
-      .groupBy("doc_id", "n_shingles")
+      .groupBy(col("id").as("doc_id"), col("set_size").cast("long").as("n_shingles"))
       .agg(sum(when(col("sh_df") >= minDf, 1L).otherwise(0L)).as("n_dup_shingles"))
       .select(col("doc_id"), col("n_shingles"), col("n_dup_shingles"),
         round(col("n_dup_shingles") / col("n_shingles"), 6).as("dup_frac"))
@@ -473,25 +479,9 @@ object Dedup {
       textCol: String,
       n: Int = 1,
       threshold: Double = 0.8,
-      maxDf: Option[Long] = None,
-      materialize: Boolean = true
+      maxDf: Option[Long] = None
   ): DataFrame = {
-    val sets = df.select(col(idCol).as("id"), shingleSet(col(textCol), n).as("sh"))
-      .withColumn("set_size", size(col("sh")))
-    val inv1 = sets.select(col("id"), col("set_size"), explode(col("sh")).as("shingle"))
-    val inv0 = if (materialize) inv1.localCheckpoint(true) else inv1
-    val inv = maxDf match {
-      case Some(cap) =>
-        val dfreq = inv0.groupBy("shingle").agg(count(lit(1)).as("df")).where(col("df") <= cap)
-        inv0.join(dfreq.select("shingle"), Seq("shingle"))
-      case None => inv0
-    }
-    val a = inv.select(col("shingle"), col("id").as("id_a"), col("set_size").as("size_a"))
-    val b = inv.select(col("shingle"), col("id").as("id_b"), col("set_size").as("size_b"))
-    val pairs = a.join(b, Seq("shingle"))
-      .where(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b", "size_a", "size_b")
-      .agg(count(lit(1)).as("n_common"))
+    val pairs = sharedCounts(df, idCol, textCol, n, maxDf)
     pairs.select(col("id_a").as("id_sub"), col("id_b").as("id_super"),
         (col("n_common") / col("size_a")).as("containment"))
       .unionByName(pairs.select(col("id_b").as("id_sub"), col("id_a").as("id_super"),
@@ -527,24 +517,9 @@ object Dedup {
       n: Int = 1,
       threshold: Double = 0.8,
       broadcastBatch: Boolean = true
-  ): DataFrame = {
-    def inverted(d: DataFrame) = d
-      .select(col(idCol).as("id"), shingleSet(col(textCol), n).as("sh"))
-      .withColumn("set_size", size(col("sh")))
-      .select(col("id"), col("set_size"), explode(col("sh")).as("shingle"))
-    val batch0 = inverted(newDf)
-      .select(col("shingle"), col("id").as("id_new"), col("set_size").as("size_new"))
-    val batch = if (broadcastBatch) broadcast(batch0) else batch0
-    val corpus = inverted(corpusDf)
-      .select(col("shingle"), col("id").as("id_corpus"), col("set_size").as("size_corpus"))
-    corpus.join(batch, Seq("shingle"))
-      .groupBy("id_new", "id_corpus", "size_new", "size_corpus")
-      .agg(count(lit(1)).as("n_common"))
-      .withColumn("jaccard",
-        col("n_common") / (col("size_new") + col("size_corpus") - col("n_common")))
-      .where(col("jaccard") >= lit(threshold))
-      .select("id_new", "id_corpus", "jaccard")
-  }
+  ): DataFrame =
+    jaccardPairsAgainstIndex(newDf, shingleIndex(corpusDf, idCol, textCol, n),
+      idCol, textCol, n, threshold, broadcastBatch)
 
   /** Incremental ASYMMETRIC-containment check: directed shingle
     * containment between an INCOMING batch and the EXISTING corpus —
@@ -571,24 +546,13 @@ object Dedup {
       n: Int = 1,
       threshold: Double = 0.8,
       broadcastBatch: Boolean = true
-  ): DataFrame = {
-    def inverted(d: DataFrame) = d
-      .select(col(idCol).as("id"), shingleSet(col(textCol), n).as("sh"))
-      .withColumn("set_size", size(col("sh")))
-      .select(col("id"), col("set_size"), explode(col("sh")).as("shingle"))
-    val batch0 = inverted(newDf)
-      .select(col("shingle"), col("id").as("id_new"), col("set_size").as("size_new"))
-    val batch = if (broadcastBatch) broadcast(batch0) else batch0
-    val corpus = inverted(corpusDf)
-      .select(col("shingle"), col("id").as("id_corpus"), col("set_size").as("size_corpus"))
-    corpus.join(batch, Seq("shingle"))
-      .groupBy("id_new", "id_corpus", "size_new", "size_corpus")
-      .agg(count(lit(1)).as("n_common"))
+  ): DataFrame =
+    probeCounts(newDf, shingleIndex(corpusDf, idCol, textCol, n),
+        idCol, textCol, n, broadcastBatch)
       .withColumn("containment_new", col("n_common") / col("size_new"))
       .withColumn("containment_corpus", col("n_common") / col("size_corpus"))
       .where(greatest(col("containment_new"), col("containment_corpus")) >= lit(threshold))
       .select("id_new", "id_corpus", "containment_new", "containment_corpus")
-  }
 
   /** The standing corpus's inverted shingle index as ROWS — one
     * (shingle, id, set_size) row per (document, distinct n-gram). This is
@@ -600,9 +564,12 @@ object Dedup {
     * join. At 100 TB the index is written when the corpus is, and every
     * subsequent ingest batch probes storage. */
   def shingleIndex(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
-    df.select(col(idCol).as("id"), shingleSet(col(textCol), n).as("sh"))
-      .withColumn("set_size", size(col("sh")))
-      .select(col("id"), col("set_size"), explode(col("sh")).as("shingle"))
+    invert(shingleSets(df, idCol, textCol, n))
+
+  /** [[shingleIndex]] rows `(id, set_size, shingle)` of a [[shingleSets]]
+    * frame — the one explode of a shingle set into the inverted index. */
+  private def invert(sets: DataFrame): DataFrame =
+    sets.select(col("id"), col("set_size"), explode(col("sh")).as("shingle"))
 
   /** [[jaccardPairsAgainst]] with the corpus side supplied as a
     * PRE-BUILT inverted index (the [[shingleIndex]] schema, normally an
@@ -632,18 +599,33 @@ object Dedup {
     // anyway. The full index scan IS the right per-batch cost here;
     // it is columnar, regex-free, and already 1.4x faster than
     // re-shingling at 1x corpus with a flat 1x -> 10x curve.
+    probeCounts(newDf, corpusIndex, idCol, textCol, n, broadcastBatch)
+      .withColumn("jaccard", jaccardOf("size_new", "size_corpus"))
+      .where(col("jaccard") >= lit(threshold))
+      .select("id_new", "id_corpus", "jaccard")
+  }
+
+  /** Shared-shingle counts of an incoming batch against a corpus index
+    * in the [[shingleIndex]] schema: `(id_new, id_corpus, size_new,
+    * size_corpus, n_common)` for every pair sharing a shingle. With
+    * `broadcastBatch` the batch index broadcasts onto the corpus scan,
+    * so the corpus never shuffles. */
+  private def probeCounts(
+      newDf: DataFrame,
+      corpusIndex: DataFrame,
+      idCol: String,
+      textCol: String,
+      n: Int,
+      broadcastBatch: Boolean
+  ): DataFrame = {
     val batch0 = shingleIndex(newDf, idCol, textCol, n)
       .select(col("shingle"), col("id").as("id_new"), col("set_size").as("size_new"))
     val batch = if (broadcastBatch) broadcast(batch0) else batch0
-    val corpus = corpusIndex
+    corpusIndex
       .select(col("shingle"), col("id").as("id_corpus"), col("set_size").as("size_corpus"))
-    corpus.join(batch, Seq("shingle"))
+      .join(batch, Seq("shingle"))
       .groupBy("id_new", "id_corpus", "size_new", "size_corpus")
       .agg(count(lit(1)).as("n_common"))
-      .withColumn("jaccard",
-        col("n_common") / (col("size_new") + col("size_corpus") - col("n_common")))
-      .where(col("jaccard") >= lit(threshold))
-      .select("id_new", "id_corpus", "jaccard")
   }
 
   /** Exact-dedup ingest gate via a Bloom filter of corpus fingerprints:
@@ -672,21 +654,18 @@ object Dedup {
     * once, not twice (pass the known corpus size at scale and skip the
     * cache entirely).
     *
-    * @param materialize eagerly evaluate the result (localCheckpoint)
-    *        so the ~`n`-item bloom broadcast can be DESTROYED before
-    *        returning — at the documented scale the filter bits are
-    *        ~1.2 GB, and per-epoch calls would otherwise accumulate
-    *        them on the driver and every executor until session death.
-    *        Pass false for plan-only inspection or lazy composition;
-    *        the broadcast then lives until the session GCs it. */
+    * The result is evaluated eagerly (localCheckpoint) so the
+    * ~`n`-item bloom broadcast is DESTROYED before returning — at the
+    * documented scale the filter bits are ~1.2 GB, and per-epoch calls
+    * would otherwise accumulate them on the driver and every executor
+    * until session death. */
   def newDocsViaBloom(
       newDf: DataFrame,
       corpusDf: DataFrame,
       idCol: String,
       textCol: String,
       fpp: Double = 0.01,
-      expectedItems: Option[Long] = None,
-      materialize: Boolean = true
+      expectedItems: Option[Long] = None
   ): DataFrame = {
     import graft.functions.TextFunctions
     val corpusFp0 = corpusDf.select(TextFunctions.fingerprint(col(textCol)).as("__fp"))
@@ -715,18 +694,13 @@ object Dedup {
       .join(broadcast(maybes.select("__fp").distinct()), Seq("__fp"))
       .distinct()
     val confirmedNew = maybes.join(broadcast(present), Seq("__fp"), "left_anti")
-    val out = definitelyNew.unionByName(confirmedNew).drop("__fp", "__maybe")
-    if (materialize) {
-      // evaluate now (probe + confirm scan), then free the bloom bits and
-      // the fingerprint cache — the checkpointed result reads neither
-      val pinned = out.localCheckpoint(true)
-      bc.destroy()
-      if (cacheFp) corpusFp.unpersist(blocking = false)
-      pinned
-    } else {
-      if (cacheFp) corpusFp.unpersist(blocking = false)
-      out
-    }
+    // evaluate now (probe + confirm scan), then free the bloom bits and
+    // the fingerprint cache — the checkpointed result reads neither
+    val pinned = definitelyNew.unionByName(confirmedNew).drop("__fp", "__maybe")
+      .localCheckpoint(true)
+    bc.destroy()
+    if (cacheFp) corpusFp.unpersist(blocking = false)
+    pinned
   }
 
   /** POSITIONAL word k-grams of trimmed lowered `textCol` — like
@@ -808,17 +782,10 @@ object Dedup {
       w: Int = 4,
       minShared: Int = 2,
       maxDf: Option[Long] = None,
-      tokHash: Column => Column = c => xxhash64(c),
-      materialize: Boolean = true
+      tokHash: Column => Column = c => xxhash64(c)
   ): DataFrame = {
-    val fps0 = winnowedFingerprints(df, idCol, textCol, k, w, tokHash)
-    val fps1 = if (materialize) fps0.localCheckpoint(true) else fps0
-    val fps = maxDf match {
-      case Some(cap) =>
-        val dfreq = fps1.groupBy("fp").agg(count(lit(1)).as("df")).where(col("df") <= cap)
-        fps1.join(dfreq.select("fp"), Seq("fp"))
-      case None => fps1
-    }
+    val fps = capDf(
+      winnowedFingerprints(df, idCol, textCol, k, w, tokHash).localCheckpoint(true), "fp", maxDf)
     val a = fps.select(col("fp"), col("id").as("id_a"))
     val b = fps.select(col("fp"), col("id").as("id_b"))
     a.join(b, Seq("fp"))
@@ -846,16 +813,40 @@ object Dedup {
       textCol: String,
       numHashes: Int = 32,
       shingleN: Int = 2
-  ): DataFrame = {
-    val exploded = df.select(col(idCol).as("id"),
-      explode(shingleSet(col(textCol), shingleN)).as("__shingle"))
+  ): DataFrame =
+    minHashes(shingleSets(df, idCol, textCol, shingleN), numHashes)
+
+  /** The MinHash signature aggregate over an `(id, sh)` shingle-set frame:
+    * `(id, signature)`, one row per document. */
+  private def minHashes(sets: DataFrame, numHashes: Int): DataFrame = {
     val mins = (0 until numHashes).map(i =>
       min(xxhash64(col("__shingle"), lit(i))).as(s"__h_$i"))
-    exploded
+    sets.select(col("id"), explode(col("sh")).as("__shingle"))
       .groupBy("id")
       .agg(mins.head, mins.tail: _*)
       .select(col("id"),
         array((0 until numHashes).map(i => col(s"__h_$i")): _*).as("signature"))
+  }
+
+  /** LSH band-candidate pairs of a MinHash signature frame: each of
+    * `bands` bands of `numHashes / bands` positions hashes to one bucket,
+    * and two documents sharing any (band, bucket) become one candidate
+    * `(id_a, id_b)`, `id_a < id_b`. Only ids travel through the join and
+    * the pair dedup; callers rejoin whatever they verify with. */
+  private def bandCandidates(sigs: DataFrame, numHashes: Int, bands: Int): DataFrame = {
+    val rowsPerBand = numHashes / bands
+    val banded = sigs.select(
+      col("id"),
+      posexplode(array((0 until bands).map { b =>
+        xxhash64(concat_ws(",",
+          (0 until rowsPerBand).map(r => col("signature")(b * rowsPerBand + r)): _*), lit(b))
+      }: _*)).as(Seq("band", "bucket")))
+    val a = banded.select(col("band"), col("bucket"), col("id").as("id_a"))
+    val b = banded.select(col("band"), col("bucket"), col("id").as("id_b"))
+    a.join(b, Seq("band", "bucket"))
+      .where(col("id_a") < col("id_b"))
+      .select("id_a", "id_b")
+      .dropDuplicates("id_a", "id_b")
   }
 
   /** LSH banding: split the signature into `bands` bands of `rowsPerBand`
@@ -871,53 +862,20 @@ object Dedup {
       numHashes: Int = 32,
       shingleN: Int = 2,
       bands: Int = 8,
-      threshold: Double = 0.7,
-      materialize: Boolean = true
+      threshold: Double = 0.7
   ): DataFrame = {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    val rowsPerBand = numHashes / bands
-    val sigs0 = minHashSignatures(df, idCol, textCol, numHashes, shingleN)
-    // the signature table (one row per doc) feeds both join sides; compute
-    // it once — at scale this is the persisted signature index
-    val sigs = if (materialize) sigs0.localCheckpoint(true) else sigs0
-    val banded = sigs.select(
-      col("id"), col("signature"),
-      posexplode(array((0 until bands).map { b =>
-        xxhash64(concat_ws(",",
-          (0 until rowsPerBand).map(r => col("signature")(b * rowsPerBand + r)): _*), lit(b))
-      }: _*)).as(Seq("band", "bucket"))
-    )
+    // the signature table (one row per doc) feeds both join sides and the
+    // verify rejoins; compute it once — at scale the persisted signature
+    // index. Candidate stages carry ids only, so the pair-dedup exchange
+    // shuffles metadata-sized rows
+    val sigs = minHashSignatures(df, idCol, textCol, numHashes, shingleN).localCheckpoint(true)
     val agree = (0 until numHashes)
       .map(i => when(col("sig_a")(i) === col("sig_b")(i), 1).otherwise(0))
       .reduce(_ + _)
-    val paired =
-      if (materialize) {
-        // candidate stages carry IDs only; the numHashes-long signatures
-        // re-join from the CHECKPOINTED signature index after the dedup,
-        // so the pair-dedup exchange shuffles metadata-sized rows
-        val a = banded.select(col("band"), col("bucket"), col("id").as("id_a"))
-        val b = banded.select(col("band"), col("bucket"), col("id").as("id_b"))
-        a.join(b, Seq("band", "bucket"))
-          .where(col("id_a") < col("id_b"))
-          .select("id_a", "id_b")
-          .dropDuplicates("id_a", "id_b")
-          .join(sigs.select(col("id").as("id_a"), col("signature").as("sig_a")), Seq("id_a"))
-          .join(sigs.select(col("id").as("id_b"), col("signature").as("sig_b")), Seq("id_b"))
-      } else {
-        // non-materialized (plan-only / lazy composition): without a
-        // checkpoint, an id-only dedup plus rejoins would RECOMPUTE the
-        // signature pipeline two extra times — carry the signatures
-        // through the dedup instead (the pre-r5 shape)
-        val a = banded.select(col("band"), col("bucket"), col("id").as("id_a"),
-          col("signature").as("sig_a"))
-        val b = banded.select(col("band"), col("bucket"), col("id").as("id_b"),
-          col("signature").as("sig_b"))
-        a.join(b, Seq("band", "bucket"))
-          .where(col("id_a") < col("id_b"))
-          .select("id_a", "id_b", "sig_a", "sig_b")
-          .dropDuplicates("id_a", "id_b")
-      }
-    paired
+    bandCandidates(sigs, numHashes, bands)
+      .join(sigs.select(col("id").as("id_a"), col("signature").as("sig_a")), Seq("id_a"))
+      .join(sigs.select(col("id").as("id_b"), col("signature").as("sig_b")), Seq("id_b"))
       .withColumn("est_jaccard", agree.cast("double") / lit(numHashes.toDouble))
       .where(col("est_jaccard") >= lit(threshold))
       .select("id_a", "id_b", "est_jaccard")
@@ -944,40 +902,17 @@ object Dedup {
       numHashes: Int = 32,
       shingleN: Int = 3,
       bands: Int = 16,
-      threshold: Double = 0.8,
-      materialize: Boolean = true
+      threshold: Double = 0.8
   ): DataFrame = {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    val rowsPerBand = numHashes / bands
-    val sets0 = df.select(col(idCol).as("id"), shingleSet(col(textCol), shingleN).as("sh"))
-      .withColumn("set_size", size(col("sh")))
-    val sets = if (materialize) sets0.localCheckpoint(true) else sets0
-    val exploded = sets.select(col("id"), explode(col("sh")).as("__shingle"))
-    val mins = (0 until numHashes).map(i =>
-      min(xxhash64(col("__shingle"), lit(i))).as(s"__h_$i"))
-    val sigs = exploded.groupBy("id").agg(mins.head, mins.tail: _*)
-      .select(col("id"),
-        array((0 until numHashes).map(i => col(s"__h_$i")): _*).as("signature"))
-    val banded = sigs.select(
-      col("id"),
-      posexplode(array((0 until bands).map { b =>
-        xxhash64(concat_ws(",",
-          (0 until rowsPerBand).map(r => col("signature")(b * rowsPerBand + r)): _*), lit(b))
-      }: _*)).as(Seq("band", "bucket")))
-    val ca = banded.select(col("band"), col("bucket"), col("id").as("id_a"))
-    val cb = banded.select(col("band"), col("bucket"), col("id").as("id_b"))
-    val candidates = ca.join(cb, Seq("band", "bucket"))
-      .where(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .dropDuplicates("id_a", "id_b")
+    val sets = shingleSets(df, idCol, textCol, shingleN).localCheckpoint(true)
+    val candidates = bandCandidates(minHashes(sets, numHashes), numHashes, bands)
     val sa = sets.select(col("id").as("id_a"), col("sh").as("sh_a"), col("set_size").as("size_a"))
     val sb = sets.select(col("id").as("id_b"), col("sh").as("sh_b"), col("set_size").as("size_b"))
     candidates.join(sa, "id_a").join(sb, "id_b")
       .withColumn("n_common", size(array_intersect(col("sh_a"), col("sh_b"))))
-      // same association as the inverted-index formulation (and the SQL
-      // twin): n_common / (size_a + size_b - n_common)
-      .withColumn("jaccard",
-        col("n_common") / (col("size_a") + col("size_b") - col("n_common")))
+      // same association as the inverted-index formulation and the SQL twin
+      .withColumn("jaccard", jaccardOf("size_a", "size_b"))
       .where(col("jaccard") >= lit(threshold))
       .select("id_a", "id_b", "jaccard")
   }
@@ -1029,7 +964,8 @@ object Dedup {
     * pair within `maxHamming` bit flips shares at least one identical
     * chunk, so the banding proposes a candidate superset of the answer
     * (EXACT recall, not probabilistic) — then confirm with the true
-    * hamming distance. */
+    * hamming distance. The hash frame is checkpointed first: it feeds
+    * both join sides. */
   private def simHashPairsFrom(
       hashed: DataFrame, nBits: Int, maxHamming: Int): DataFrame = {
     val nChunks = maxHamming + 1
@@ -1037,7 +973,7 @@ object Dedup {
       s"simHash banding: $nBits bits must divide into ${nChunks} chunks (maxHamming + 1)")
     val chunkBits = nBits / nChunks
     val mask = if (chunkBits >= 64) -1L else (1L << chunkBits) - 1
-    val banded = hashed.select(
+    val banded = hashed.localCheckpoint(true).select(
       col("id"), col("simhash"),
       posexplode(array((0 until nChunks).map(b =>
         shiftright(col("simhash"), b * chunkBits).bitwiseAND(lit(mask))): _*))
@@ -1066,28 +1002,20 @@ object Dedup {
       idCol: String,
       hashCol: String,
       nBits: Int,
-      maxHamming: Int,
-      materialize: Boolean = true
-  ): DataFrame = {
-    val h = hashed
-      .select(col(idCol).as("id"), col(hashCol).as("simhash"))
-      .where(col("simhash").isNotNull)
+      maxHamming: Int
+  ): DataFrame =
     simHashPairsFrom(
-      if (materialize) h.localCheckpoint(true) else h, nBits, maxHamming)
-  }
+      hashed.select(col(idCol).as("id"), col(hashCol).as("simhash")).where(col("simhash").isNotNull),
+      nBits, maxHamming)
 
   /** SimHash near-dup candidates, 64-bit xxhash64 flavor. */
   def simHashPairs(
       df: DataFrame,
       idCol: String,
       textCol: String,
-      maxHamming: Int = 3,
-      materialize: Boolean = true
-  ): DataFrame = {
-    val hashed0 = simHash(df, idCol, textCol)
-    simHashPairsFrom(
-      if (materialize) hashed0.localCheckpoint(true) else hashed0, 64, maxHamming)
-  }
+      maxHamming: Int = 3
+  ): DataFrame =
+    simHashPairsFrom(simHash(df, idCol, textCol), 64, maxHamming)
 
   /** SimHash near-dup pairs, 60-bit md5 flavor — every stage has an exact
     * SQL twin, so the full result is oracle-checkable against a
@@ -1096,13 +1024,9 @@ object Dedup {
       df: DataFrame,
       idCol: String,
       textCol: String,
-      maxHamming: Int = 3,
-      materialize: Boolean = true
-  ): DataFrame = {
-    val hashed0 = simHash60(df, idCol, textCol)
-    simHashPairsFrom(
-      if (materialize) hashed0.localCheckpoint(true) else hashed0, 60, maxHamming)
-  }
+      maxHamming: Int = 3
+  ): DataFrame =
+    simHashPairsFrom(simHash60(df, idCol, textCol), 60, maxHamming)
 
   // ---- substring-level exact dedup (Lee et al. 2022) ----------------------
   //
@@ -1151,24 +1075,17 @@ object Dedup {
       textCol: String,
       k: Int = 50,
       minSpanTokens: Option[Int] = None,
-      maxDf: Option[Long] = None,
-      materialize: Boolean = true
+      maxDf: Option[Long] = None
   ): DataFrame = {
     require(k >= 2, s"sharedSpans: k=$k must be >= 2 (k=1 pairs every shared token)")
-    val grams0 = df
+    val positional = df
       .select(col(idCol).as("id"),
         size(split(trim(coalesce(col(textCol), lit(""))), "\\s+")).as("__n_toks"),
         shingleSeq(col(textCol), k).as("__grams"))
       .where(col("__n_toks") >= k) // short docs: no k-token span possible
       .select(col("id"), posexplode(col("__grams")).as(Seq("pos", "gram")))
       .select(col("id"), col("pos"), substring(md5(col("gram")), 1, 16).as("g"))
-    val grams1 = if (materialize) grams0.localCheckpoint(true) else grams0
-    val grams = maxDf match {
-      case Some(cap) =>
-        val dfreq = grams1.groupBy("g").agg(count(lit(1)).as("df")).where(col("df") <= cap)
-        grams1.join(dfreq.select("g"), Seq("g"))
-      case None => grams1
-    }
+    val grams = capDf(positional.localCheckpoint(true), "g", maxDf)
     val a = grams.select(col("g"), col("id").as("id_a"), col("pos").as("pos_a"))
     val b = grams.select(col("g"), col("id").as("id_b"), col("pos").as("pos_b"))
     // consecutive matches on one alignment diagonal merge into maximal
@@ -1221,11 +1138,10 @@ object Dedup {
       idCol: String,
       textCol: String,
       k: Int = 50,
-      maxDf: Option[Long] = None,
-      materialize: Boolean = true
+      maxDf: Option[Long] = None
   ): DataFrame =
     mergeSpans(
-      sharedSpans(df, idCol, textCol, k, None, maxDf, materialize)
+      sharedSpans(df, idCol, textCol, k, None, maxDf)
         .select(col("id_b").as("__doc"), col("b_start"), col("b_end")),
       "__doc", "b_start", "b_end")
 

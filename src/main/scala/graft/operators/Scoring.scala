@@ -556,24 +556,17 @@ object Scoring {
     * token aggregate rolled up from it (never a second scan), a
     * token-keyed equi-join of the two (a hot token meets at most
     * #sources rows), a broadcast S-row totals join, one source rollup.
-    *
-    * @param materialize eagerly `localCheckpoint` the (source, token)
-    *        count table: three plan branches read it (the join side,
-    *        the corpus rollup, the totals), and without materialization
-    *        each re-tokenizes the corpus.
+    * The (source, token) count table is checkpointed when the frame is
+    * built: three plan branches read it (the join side, the corpus
+    * rollup, the totals), and each would otherwise re-tokenize the
+    * corpus.
     */
-  def sourceEntropy(
-      df: DataFrame,
-      srcCol: String,
-      textCol: String,
-      materialize: Boolean = true
-  ): DataFrame = {
+  def sourceEntropy(df: DataFrame, srcCol: String, textCol: String): DataFrame = {
     val norm = regexp_replace(
       lower(trim(coalesce(col(textCol), lit("")))), "\\s+", " ")
     val tok = df.select(col(srcCol).as("__src"), explode(split(norm, " ")).as("__t"))
       .where(length(col("__t")) > 0)
-    val counts0 = tok.groupBy("__src", "__t").agg(count(lit(1)).as("__c"))
-    val counts = if (materialize) counts0.localCheckpoint(true) else counts0
+    val counts = tok.groupBy("__src", "__t").agg(count(lit(1)).as("__c")).localCheckpoint(true)
     val corpus = counts.groupBy("__t").agg(sum("__c").as("__ct"))
     val srcTotals = counts.groupBy("__src")
       .agg(sum("__c").as("__ts"), count(lit(1)).as("__types"))

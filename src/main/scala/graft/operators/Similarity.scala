@@ -154,13 +154,9 @@ object Similarity {
   }
 
   /** Deterministic pseudo-random hyperplane component for (plane, dim):
-    * xxhash64 folded into [-1, 1). Stateless, reproducible everywhere. */
-  private def planeComponent(plane: Int, dim: Column): Column =
-    (xxhash64(lit(plane), dim).cast("double") / lit(Long.MaxValue.toDouble))
-
-  /** The same component computed on the driver (identical bits — it goes
-    * through the same Catalyst XxHash64 evaluation). */
-  private def planeComponentLocal(plane: Int, dim: Int): Double = {
+    * xxhash64 folded into [-1, 1), computed on the driver through the
+    * Catalyst XxHash64 evaluation. Stateless, reproducible everywhere. */
+  private def planeComponent(plane: Int, dim: Int): Double = {
     import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
     val h = XxHash64(Seq(Literal(plane), Literal(dim)), 42L).eval(null).asInstanceOf[Long]
     h.toDouble / Long.MaxValue.toDouble
@@ -230,37 +226,21 @@ object Similarity {
 
   /** Sign-random-projection signature: bit p = [dot(vec, plane_p) >= 0].
     *
-    * When the embedding dimension is known (`dim`), the plane weights are
-    * precomputed on the driver and embedded as literal arrays — the
-    * per-element `xxhash64(plane, i)` otherwise re-evaluates inside an
-    * interpreted higher-order function for every row. Both paths produce
-    * bitwise-identical signatures (same hash, same fold order). A NULL
-    * vector yields a NULL signature (bucket joins drop it); an empty
-    * vector folds to proj = 0.0 >= 0 on every plane — all bits set —
-    * exactly matching [[lshSignatureLocal]]'s driver-side fold. */
-  def lshSignature(vecCol: Column, nBits: Int, dim: Option[Int] = None): Column = dim match {
-    case Some(d) =>
-      signatureFromWeights(vecCol, nBits, d, planeComponentLocal,
-        emptySig = (1L << nBits) - 1, label = "lshSignature")
-    case None =>
-      requireSignatureWidth(nBits, "lshSignature")
-      val v = transform(vecCol, x => x.cast("double"))
-      val bits = (0 until nBits).map { p =>
-        val proj = aggregate(
-          zip_with(v, sequence(lit(0), size(v) - 1), (x, i) => x * planeComponent(p, i)),
-          lit(0.0d), (acc, x) => acc + x)
-        when(proj >= 0, shiftleft(lit(1L), p)).otherwise(lit(0L))
-      }
-      when(vecCol.isNull, lit(null).cast("long"))
-        .when(size(v) === 0, lit((1L << nBits) - 1))
-        .otherwise(bits.reduce((a, b) => a.bitwiseOR(b)))
-  }
+    * The plane weights for the embedding dimension `dim` are computed on
+    * the driver and embedded as literal arrays, bitwise-identical to
+    * [[lshSignatureLocal]] (same hash, same fold order); a vector of
+    * another length fails loudly. A NULL vector yields a NULL signature
+    * (bucket joins drop it); an empty vector folds to proj = 0.0 >= 0 on
+    * every plane — all bits set — exactly matching the driver-side fold. */
+  def lshSignature(vecCol: Column, nBits: Int, dim: Int): Column =
+    signatureFromWeights(vecCol, nBits, dim, planeComponent,
+      emptySig = (1L << nBits) - 1, label = "lshSignature")
 
   /** Index the corpus into LSH buckets (one row per vector, keyed by
-    * signature). At scale, persist this partitioned by `bucket`. Pass the
-    * embedding dimension when known — see [[lshSignature]]. */
+    * signature). At scale, persist this partitioned by `bucket`. `dim` is
+    * the embedding dimension — see [[lshSignature]]. */
   def lshIndex(df: DataFrame, idCol: String, vecCol: String, nBits: Int = 12,
-      dim: Option[Int] = None): DataFrame =
+      dim: Int): DataFrame =
     df.select(col(idCol).as("id"), col(vecCol).as("vec"),
       lshSignature(col(vecCol), nBits, dim).as("bucket"))
 
@@ -575,8 +555,9 @@ object Similarity {
     val params = sq8Params(df.select(col(vecCol)), vecCol, dim)
     val signed = bandedFrame(df, idCol, vecCol, bands, rpb, dim)
     val codes = sq8Codes8(signed, params).localCheckpoint(true)
-    quantizedVerifyTopK(directedCandidates(signed), codes, params,
-      signed.select(col("id"), col("vec")), k, rerankFactor)
+    val vecs = signed.select(col("id"), col("vec"))
+    quantizedVerifyTopK(directedCandidates(signed), codes, codes, params, vecs, vecs,
+      k, rerankFactor)
   }
 
   /** `(id, codes8)`: SQ8 codes as 1-byte elements — codes are 0..255,
@@ -597,22 +578,11 @@ object Similarity {
     * here runs interpreted per element and costs ~4x wall, measured)
     * against the broadcast param row; the projection to (id, nbr,
     * qcos) collapses the payload BEFORE the survivor window's
-    * exchange, and only n·k·rerankFactor rows ever touch raw vectors. */
+    * exchange, and only n·k·rerankFactor rows ever touch raw vectors.
+    * The `id` and `nbr` sides take their codes and vectors from separate
+    * frames: the same frame for a self-graph, the batch and the standing
+    * corpus for the incremental probe. */
   private def quantizedVerifyTopK(
-      candidates: DataFrame,
-      codes: DataFrame,
-      params: DataFrame,
-      vecs: DataFrame,
-      k: Int,
-      rerankFactor: Int
-  ): DataFrame =
-    quantizedVerifyTopK2(candidates, codes, codes, params, vecs, vecs,
-      k, rerankFactor)
-
-  /** Two-sided form of the verify tail (the incremental probe's shape:
-    * the `id` side is the batch, the `nbr` side the standing corpus —
-    * codes and vectors come from different frames). */
-  private def quantizedVerifyTopK2(
       candidates: DataFrame,
       idCodes: DataFrame,
       nbrCodes: DataFrame,
@@ -742,7 +712,7 @@ object Similarity {
       .where(col("id") =!= col("nbr"))
       .select("id", "nbr")
       .dropDuplicates("id", "nbr")
-    quantizedVerifyTopK2(candidates,
+    quantizedVerifyTopK(candidates,
       sq8Codes8(qsigned, params), payload.select(col("id"), col("codes8")), params,
       qsigned.select(col("id"), col("vec")),
       payload.select(col("id"), col("vec")),
@@ -1553,7 +1523,7 @@ object Similarity {
   def lshSignatureLocal(vec: Seq[Double], nBits: Int): Long =
     (0 until nBits).map { p =>
       val proj = vec.zipWithIndex
-        .map { case (x, i) => x * planeComponentLocal(p, i) }
+        .map { case (x, i) => x * planeComponent(p, i) }
         .foldLeft(0.0d)(_ + _)
       if (proj >= 0) 1L << p else 0L
     }.reduce(_ | _)
@@ -1636,7 +1606,7 @@ object Similarity {
       vecCol: String,
       nBits: Int,
       probeRadius: Int,
-      dim: Option[Int]
+      dim: Int
   ): DataFrame = {
     val masks = probeBallMasks(nBits, probeRadius)
     queries
@@ -1655,7 +1625,7 @@ object Similarity {
       nBits: Int,
       k: Int,
       probeRadius: Int = 1,
-      dim: Option[Int] = None
+      dim: Int
   ): DataFrame = {
     val probed = probeBuckets(queries, idCol, vecCol, nBits, probeRadius, dim)
     val scored = probed.join(index, Seq("bucket"))

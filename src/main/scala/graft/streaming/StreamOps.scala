@@ -324,7 +324,7 @@ object StreamOps {
       vecCol: String = "embedding",
       nBits: Int = 12,
       probeRadius: Int = 1,
-      dim: Option[Int] = None
+      dim: Int
   ): DataFrame = {
     // the tie-break negates the corpus id inside a max(), which needs a
     // numeric id — fail at plan-build time, not per-row under ANSI

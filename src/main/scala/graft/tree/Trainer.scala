@@ -157,9 +157,10 @@ final case class DecisionTreeClassifier(
     // on the PRE-shrink doubles — still valid cut points for the
     // f32-shrunk training values (counts AT the chosen edges stay exact;
     // only the candidate grid shifts within the sketch's error bound). NaN
-    // is ignored throughout: a NaN never blocks shrink (NaN survives the
-    // f32 cast value-preserved), unlike a max(abs) aggregate where NaN
-    // would poison the comparison.
+    // is ignored in both modes, as Polars' max ignores it: a NaN never
+    // blocks shrink (NaN survives the f32 cast value-preserved). Spark's
+    // max orders NaN above every value, so the exact-mode max(abs) masks
+    // NaN to null before it aggregates.
     val (targets, absMax, binEdges) = maxBins match {
       case Some(b) =>
         require(b >= 2, s"maxBins must be >= 2, got $b")
@@ -187,7 +188,7 @@ final case class DecisionTreeClassifier(
         // mapping's broadcast join would cost the pass an extra job
         val shrinkable = if (shrinkDtype) doubleFeatures else Nil
         val r = nonNullTarget.agg(targetAggs.head,
-          targetAggs.tail ++ shrinkable.map(f => max(abs(col(f)))): _*).head()
+          targetAggs.tail ++ shrinkable.map(f => max(abs(when(!isnan(col(f)), col(f))))): _*).head()
         val absMax = shrinkable.zipWithIndex.collect {
           case (f, i) if !r.isNullAt(targetAggs.size + i) => f -> r.getDouble(targetAggs.size + i)
         }.toMap

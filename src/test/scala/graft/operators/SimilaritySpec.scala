@@ -59,7 +59,7 @@ class SimilaritySpec extends AnyFunSuite {
     val vecs = Seq(
       Seq(0.2, -0.7, 1.1, 0.4), Seq(-1.0, 0.3, 0.0, 2.2), Seq(5.0, 5.0, 5.0, 5.0))
     val d = emb(vecs.zipWithIndex.map { case (v, i) => (i.toLong, v) }: _*)
-    val dist = Similarity.lshIndex(d, "vec_id", "embedding", nBits = 12)
+    val dist = Similarity.lshIndex(d, "vec_id", "embedding", nBits = 12, dim = 4)
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     vecs.zipWithIndex.foreach { case (v, i) =>
       assert(Similarity.lshSignatureLocal(v, 12) == dist(i.toLong),
@@ -73,9 +73,9 @@ class SimilaritySpec extends AnyFunSuite {
     val queries = real.where(col("vec_id") < 3)
     val brute = Similarity.topKForQueries(real, queries, "vec_id", "embedding", k = 4)
       .collect().map(r => (r.getLong(0), r.getInt(3)) -> r.getLong(1)).toMap
-    val index = Similarity.lshIndex(real, "vec_id", "embedding", nBits = 4, dim = Some(64))
+    val index = Similarity.lshIndex(real, "vec_id", "embedding", nBits = 4, dim = 64)
     val batch = Similarity.annTopKForQueries(index, queries, "vec_id", "embedding",
-      nBits = 4, k = 4, probeRadius = 4, dim = Some(64)) // full ball: recall 1.0
+      nBits = 4, k = 4, probeRadius = 4, dim = 64) // full ball: recall 1.0
       .collect().map(r => (r.getLong(0), r.getInt(3)) -> r.getLong(1)).toMap
     assert(batch == brute)
   }
@@ -166,7 +166,7 @@ class SimilaritySpec extends AnyFunSuite {
     val real = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val q = real.where(org.apache.spark.sql.functions.col("vec_id") === 7)
       .head().getSeq[Float](1).map(_.toDouble)
-    val idx = Similarity.lshIndex(real, "vec_id", "embedding", nBits = 8)
+    val idx = Similarity.lshIndex(real, "vec_id", "embedding", nBits = 8, dim = 64)
     val top = Similarity.annTopK(idx, q, nBits = 8, k = 5).collect()
     assert(top.nonEmpty)
     assert(top.head.getLong(0) == 7L) // self-match first, cosine 1
@@ -179,7 +179,7 @@ class SimilaritySpec extends AnyFunSuite {
       .head().getSeq[Float](1).map(_.toDouble)
     val truth = Similarity.bruteForceTopK(real, "vec_id", "embedding", q, 10)
       .collect().map(_.getLong(0)).toSet
-    val idx = Similarity.lshIndex(real, "vec_id", "embedding", nBits = 8, dim = Some(64))
+    val idx = Similarity.lshIndex(real, "vec_id", "embedding", nBits = 8, dim = 64)
     def recall(probeRadius: Int): Double = {
       val got = Similarity.annTopK(idx, q, nBits = 8, k = 10, probeRadius = probeRadius)
         .collect().map(_.getLong(0)).toSet
@@ -215,7 +215,7 @@ class SimilaritySpec extends AnyFunSuite {
   test("wrong dim hint fails loudly instead of zeroing signatures") {
     val d = emb(1L -> Seq(1.0, 2.0, 3.0, 4.0))
     val e = intercept[Exception] {
-      Similarity.lshIndex(d, "vec_id", "embedding", nBits = 4, dim = Some(2)).collect()
+      Similarity.lshIndex(d, "vec_id", "embedding", nBits = 4, dim = 2).collect()
     }
     assert(e.getMessage.contains("dim hint") || e.getMessage.contains("USER_RAISED_EXCEPTION"),
       s"unexpected error: ${e.getMessage}")
@@ -227,13 +227,11 @@ class SimilaritySpec extends AnyFunSuite {
         Row(1L, Seq(1.0, -2.0)), Row(2L, null), Row(3L, Seq.empty[Double])), 2),
       StructType(Seq(StructField("vec_id", LongType),
         StructField("embedding", ArrayType(DoubleType)))))
-    for (dim <- Seq(None, Some(2))) {
-      val sigs = Similarity.lshIndex(d, "vec_id", "embedding", nBits = 4, dim = dim)
-        .collect().map(r => r.getLong(0) -> (if (r.isNullAt(2)) None else Some(r.getLong(2)))).toMap
-      assert(sigs(2L).isEmpty, s"null vector must get a null signature (dim=$dim)")
-      assert(sigs(3L).contains(15L), s"empty vector: all $dim bits set, matching the driver fold")
-      assert(sigs(1L).contains(Similarity.lshSignatureLocal(Seq(1.0, -2.0), 4)))
-    }
+    val sigs = Similarity.lshIndex(d, "vec_id", "embedding", nBits = 4, dim = 2)
+      .collect().map(r => r.getLong(0) -> (if (r.isNullAt(2)) None else Some(r.getLong(2)))).toMap
+    assert(sigs(2L).isEmpty, "null vector must get a null signature")
+    assert(sigs(3L).contains(15L), "empty vector: all 4 bits set, matching the driver fold")
+    assert(sigs(1L).contains(Similarity.lshSignatureLocal(Seq(1.0, -2.0), 4)))
     assert(Similarity.lshSignatureLocal(Seq.empty, 4) == 15L)
   }
 

@@ -26,7 +26,7 @@ class IndexStoreSpec extends AnyFunSuite {
   private lazy val corpus = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
 
   private lazy val bucketed = {
-    val index = Similarity.lshIndex(corpus, "vec_id", "embedding", nBits = 4, dim = Some(64))
+    val index = Similarity.lshIndex(corpus, "vec_id", "embedding", nBits = 4, dim = 64)
     IndexStore.writeBucketed(index, Table, "bucket", NBuckets)
     IndexStore.read(spark, Table)
   }
@@ -38,7 +38,7 @@ class IndexStoreSpec extends AnyFunSuite {
   test("candidate equi-join on a bucketed index shuffles ONLY the probe side") {
     val queries = corpus.where(col("vec_id") < 3)
     val probed = Similarity.probeBuckets(queries, "vec_id", "embedding",
-      nBits = 4, probeRadius = 1, dim = Some(64))
+      nBits = 4, probeRadius = 1, dim = 64)
     // force the sort-merge path: a broadcast of the small test index would
     // trivially have no index-side exchange without proving bucketing
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -46,7 +46,7 @@ class IndexStoreSpec extends AnyFunSuite {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       val bucketedJoin = probed.join(bucketed, Seq("bucket"))
       val plainJoin = probed.join(
-        Similarity.lshIndex(corpus, "vec_id", "embedding", nBits = 4, dim = Some(64)),
+        Similarity.lshIndex(corpus, "vec_id", "embedding", nBits = 4, dim = 64),
         Seq("bucket"))
       assert(exchanges(plainJoin) == 2, "control: unbucketed join shuffles both sides")
       assert(exchanges(bucketedJoin) == 1,
@@ -73,10 +73,10 @@ class IndexStoreSpec extends AnyFunSuite {
     val queries = corpus.where(col("vec_id") < 3)
     def run(index: org.apache.spark.sql.DataFrame) =
       Similarity.annTopKForQueries(index, queries, "vec_id", "embedding",
-        nBits = 4, k = 4, probeRadius = 4, dim = Some(64))
+        nBits = 4, k = 4, probeRadius = 4, dim = 64)
         .collect().map(r => (r.getLong(0), r.getInt(3)) -> r.getLong(1)).toMap
     val inMemory = run(
-      Similarity.lshIndex(corpus, "vec_id", "embedding", nBits = 4, dim = Some(64)))
+      Similarity.lshIndex(corpus, "vec_id", "embedding", nBits = 4, dim = 64))
     assert(run(bucketed) == inMemory)
   }
 

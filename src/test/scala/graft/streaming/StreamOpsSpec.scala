@@ -124,7 +124,7 @@ class StreamOpsSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val corpus = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val index = Similarity.lshIndex(corpus, "vec_id", "embedding", nBits = 4, dim = Some(64))
+    val index = Similarity.lshIndex(corpus, "vec_id", "embedding", nBits = 4, dim = 64)
       .localCheckpoint(true) // the persisted static index
     // queries = corpus vectors 3 and 4; at the exhaustive probe setting the
     // best non-self match must equal the batch brute-force answer
@@ -137,7 +137,7 @@ class StreamOpsSpec extends AnyFunSuite {
     val input = MemoryStream[(Long, Seq[Double])]
     val best = StreamOps.annProbe(
       input.toDF().toDF("query_id", "embedding"), index,
-      nBits = 4, probeRadius = 4, dim = Some(64))
+      nBits = 4, probeRadius = 4, dim = 64)
     val q = best.writeStream.format("memory").queryName("ann_out")
       .outputMode(OutputMode.Complete()).start()
     try {

@@ -303,6 +303,32 @@ class TreeSpec extends AnyFunSuite {
     }
   }
 
+  test("exact-mode f32 shrink ignores NaN: one NaN row does not keep a feature f64") {
+    // Spark's max orders NaN above every value, so a max(abs) shrink gate
+    // that saw the NaN row would keep `f` f64 and split on unshrunk
+    // values; the gate skips NaN like binned mode's sketch extremes and
+    // Polars' max do
+    val rnd = new scala.util.Random(7)
+    val rows = (0 until 300).map { i =>
+      val c = i % 3
+      Row(if (i == 0) Double.NaN else c + 0.1 + rnd.nextGaussian() * 0.4, c)
+    }
+    assert(rows.exists { r => val v = r.getDouble(0); !v.isNaN && v.toFloat.toDouble != v })
+    val schema = StructType(Seq(StructField("f", DoubleType),
+      StructField("target", IntegerType, nullable = false)))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), schema)
+    val model = DecisionTreeClassifier(maxDepth = Some(3)).fit(df, "target")
+    def splits(t: TreeNode): Seq[SplitNode] = t match {
+      case s: SplitNode => s +: (splits(s.left) ++ splits(s.right))
+      case _: LeafNode  => Nil
+    }
+    assert(splits(model.tree).nonEmpty, s"no split on f: ${model.tree}")
+    splits(model.tree).foreach { s =>
+      assert(s.threshold == s.threshold.toFloat.toDouble,
+        s"split ${s.feature} <= ${s.threshold} is off the f32 grid: the NaN row blocked the shrink")
+    }
+  }
+
   test("planScore (reference EP2 plan shape) agrees with expression scorer") {
     val df = makeDf(strTarget = true, withCat = false)
     val model = DecisionTreeClassifier(maxDepth = Some(3), criterion = Criterion.Gini)

@@ -6,7 +6,11 @@ loads each <out>/<name> parquet (Spark result), runs the matching SQL from
 (columns sorted by name, rows sorted by all columns, values compared
 exactly with float tolerance only for diagnostics).
 
-Usage: python3 tools/oracle_check.py /root/testdata/sf0.01 /tmp/verify_out
+Usage: python3 tools/oracle_check.py <sf dir> <verify out dir>
+
+Exit status: 0 when every entry is OK (or ROWS_ONLY: no oracle SQL to
+compare with); 1 when any entry is a mismatch, an oracle SQL error, or
+has no Spark output, or when <verify out dir> holds no entry at all.
 """
 import glob
 import json
@@ -82,13 +86,21 @@ def main():
             if bad:
                 break
         results[name] = bad or f"OK rows={len(s)}"
+    if not results:
+        print(f"== no query outputs under {out} ==")
+        return 1
     width = max(len(n) for n in results)
     n_ok = sum(1 for v in results.values() if v.startswith("OK"))
     for name, v in sorted(results.items()):
         print(f"{name:<{width}}  {v}")
     print(f"== {n_ok}/{len([n for n in results if n in oracle])} oracle-checked OK, "
           f"{len(results)} total queries ==")
+    failed = sorted(n for n, v in results.items()
+                    if not v.startswith(("OK", "ROWS_ONLY")))
+    if failed:
+        print(f"== FAILED: {', '.join(failed)} ==")
+    return 1 if failed else 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())
