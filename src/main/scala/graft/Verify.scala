@@ -2,7 +2,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare, and
+  * verify_failed.json: `{name: error message}` of every entry whose query
+  * threw (`tools/oracle_check.py` reports each one as failed). */
 object Verify {
   def main(args: Array[String]): Unit = {
     // optional 3rd arg: comma-separated query-name filter for fast builder
@@ -24,13 +26,15 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
+    val failed = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      .toSeq.flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name -> String.valueOf(e.getMessage))
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -45,9 +49,12 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    def obj(kv: Iterable[(String, String)]): String =
+      kv.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), obj(SparkEntry.oracleSql))
+    // entries whose query threw: a stale parquet dir of an earlier run
+    // must not pass for this run's output
+    Files.writeString(Paths.get(s"$outDir/verify_failed.json"), obj(failed))
     spark.stop()
   }
 }

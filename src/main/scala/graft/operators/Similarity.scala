@@ -44,7 +44,7 @@ object Similarity {
       k: Int
   ): DataFrame = {
     val q = array(query.map(lit): _*)
-    val v = transform(col(vecCol), x => x.cast("double"))
+    val v = col(vecCol).cast("array<double>")
     df.select(col(idCol).as("id"), cosine(v, q).as("cosine"))
       .orderBy(col("cosine").desc, col("id").asc)
       .limit(k)
@@ -67,9 +67,9 @@ object Similarity {
       k: Int
   ): DataFrame = {
     val c = corpus.select(col(idCol).as("corpus_id"),
-      transform(col(vecCol), x => x.cast("double")).as("cvec"))
+      col(vecCol).cast("array<double>").as("cvec"))
     val q = queries.select(col(idCol).as("query_id"),
-      transform(col(vecCol), x => x.cast("double")).as("qvec"))
+      col(vecCol).cast("array<double>").as("qvec"))
     val scored = c.join(broadcast(q), col("corpus_id") =!= col("query_id"))
       .withColumn("cosine", cosine(col("cvec"), col("qvec")))
     val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("corpus_id").asc)
@@ -177,64 +177,45 @@ object Similarity {
         s"signature shift budget; long shifts wrap mod 64 and would " +
         s"silently alias bits), got $nBits")
 
-  /** Bits j < nBits of `[dot(v, w_(firstPlane + j)) >= 0]` ORed into one
-    * long, over the already-cast double vector `v` and per-plane weight
-    * arrays embedded as plan literals, with a loud dim-hint check. Bit j lands at
-    * its LOCAL position; plane `firstPlane + j` only picks the weights —
-    * so a band reading planes [b·rpb, (b+1)·rpb) gets bit-identical
-    * buckets to the whole-width signature's `(sig >> b·rpb) & mask`. */
-  private def projectionBits(
-      v: Column,
-      firstPlane: Int,
-      nBits: Int,
+  /** `array<bigint>` of `bands` buckets of `rowsPerBand` sign bits, the
+    * projections of the vector (cast to `array<double>` once) onto planes
+    * [0, bands·rowsPerBand) with `component` weights — one native
+    * [[graft.functions.SignProjectionBuckets]] loop. Bit j of band b
+    * reads plane `b·rowsPerBand + j` and lands at its LOCAL position j,
+    * so a band's bucket is bit-identical to the whole-width signature's
+    * `(sig >> b·rowsPerBand) & mask`. NULL vector -> NULL; empty vector
+    * -> `emptyBucket` in every band; another length or a null element
+    * fails loudly with a `dim hint` message. */
+  private def signProjection(
+      vec: Column,
+      bands: Int,
+      rowsPerBand: Int,
       dim: Int,
       component: (Int, Int) => Double,
-      label: String
-  ): Column =
-    (0 until nBits).map { j =>
-      // typedlit -> one ArrayType literal (array(lit...) would rebuild
-      // a CreateArray of d children for every row)
-      val weights = typedLit((0 until dim).map(i => component(firstPlane + j, i)))
-      val proj = aggregate(zip_with(v, weights, (x, w) => x * w), lit(0.0d), (acc, x) => acc + x)
-      // zip_with pads the shorter side with NULLs: a wrong dim hint
-      // would silently zero every bit. Fail loudly instead.
-      val checked = when(proj.isNotNull, proj).otherwise(raise_error(concat(
-        lit(s"$label: dim hint $dim does not match vector length "),
-        size(v).cast("string"))).cast("double"))
-      when(checked >= 0, shiftleft(lit(1L), j)).otherwise(lit(0L))
-    }.reduce((a, b) => a.bitwiseOR(b))
-
-  /** Shared literal-weights signature: [[projectionBits]] over
-    * planes [0, nBits) with caller-chosen degenerate-input semantics
-    * (NULL vector -> NULL signature always; empty vector -> `emptySig`). */
-  private def signatureFromWeights(
-      vecCol: Column,
-      nBits: Int,
-      dim: Int,
-      component: (Int, Int) => Double,
-      emptySig: Long,
+      emptyBucket: Long,
       label: String
   ): Column = {
-    requireSignatureWidth(nBits, label)
-    val v = transform(vecCol, x => x.cast("double"))
-    // degenerate inputs resolve BEFORE the projection math so the
-    // dim-hint raise_error never fires on them
-    when(vecCol.isNull, lit(null).cast("long"))
-      .when(size(v) === 0, lit(emptySig))
-      .otherwise(projectionBits(v, 0, nBits, dim, component, label))
+    import org.apache.spark.sql.graft.ColumnBridge
+    val weights = for (p <- 0 until bands * rowsPerBand; i <- 0 until dim)
+      yield component(p, i)
+    ColumnBridge.column(graft.functions.SignProjectionBuckets(
+      ColumnBridge.expression(vec.cast("array<double>")), weights, bands, rowsPerBand, dim,
+      emptyBucket, label))
   }
 
   /** Sign-random-projection signature: bit p = [dot(vec, plane_p) >= 0].
     *
     * The plane weights for the embedding dimension `dim` are computed on
-    * the driver and embedded as literal arrays, bitwise-identical to
+    * the driver and held by the native [[signProjection]] kernel, bitwise-identical to
     * [[lshSignatureLocal]] (same hash, same fold order); a vector of
     * another length fails loudly. A NULL vector yields a NULL signature
     * (bucket joins drop it); an empty vector folds to proj = 0.0 >= 0 on
     * every plane — all bits set — exactly matching the driver-side fold. */
-  def lshSignature(vecCol: Column, nBits: Int, dim: Int): Column =
-    signatureFromWeights(vecCol, nBits, dim, planeComponent,
-      emptySig = (1L << nBits) - 1, label = "lshSignature")
+  def lshSignature(vecCol: Column, nBits: Int, dim: Int): Column = {
+    requireSignatureWidth(nBits, "lshSignature")
+    signProjection(vecCol, 1, nBits, dim, planeComponent,
+      emptyBucket = (1L << nBits) - 1, label = "lshSignature").getItem(0)
+  }
 
   /** Index the corpus into LSH buckets (one row per vector, keyed by
     * signature). At scale, persist this partitioned by `bucket`. `dim` is
@@ -256,16 +237,18 @@ object Similarity {
   }
 
   /** Oracle-flavor twin of [[lshSignature]]: identical banding semantics,
-    * md5-derived plane weights embedded as literals (dim must be known).
+    * md5-derived plane weights (dim must be known).
     * Every piece — weight, projection fold order, sign, bit position — has
     * an exact DuckDB twin, so LSH pair queries built on it hash-match a
     * SQL reimplementation. Divergence from the xxhash flavor on the
     * empty-vector degenerate: signature 0, because the SQL twin's
     * `list_sum([])` is NULL and `CASE WHEN NULL >= 0` takes the 0 arm —
     * twin-exactness is this flavor's whole contract. */
-  def lshSignatureMd5(vecCol: Column, nBits: Int, dim: Int): Column =
-    signatureFromWeights(vecCol, nBits, dim, md5Component,
-      emptySig = 0L, label = "lshSignatureMd5")
+  def lshSignatureMd5(vecCol: Column, nBits: Int, dim: Int): Column = {
+    requireSignatureWidth(nBits, "lshSignatureMd5")
+    signProjection(vecCol, 1, nBits, dim, md5Component,
+      emptyBucket = 0L, label = "lshSignatureMd5").getItem(0)
+  }
 
   /** The LSH banding of every banded operator in graft (the kNN graph
     * family, the embedding near-dup pairs, semantic decontamination):
@@ -276,7 +259,9 @@ object Similarity {
     * bits the buckets are bit-identical to `(lshSignatureMd5(...) >>
     * b·rowsPerBand) & mask` (same md5 plane weights, same fold, bit j
     * at local position j — spec-gated), which is what the oracle SQL
-    * twins replay. The vector is cast once per row for all bands.
+    * twins replay. One native kernel ([[signProjection]]) computes all
+    * `bands · rowsPerBand` bits in one codegen'd loop, the vector cast
+    * once per row.
     * NULL vector -> NULL array (no band rows); empty vector -> all-zero
     * buckets (the md5 flavor's degenerate). */
   private[graft] def bandBuckets(vec: Column, bands: Int, rowsPerBand: Int,
@@ -286,12 +271,8 @@ object Similarity {
       s"bandBuckets: rowsPerBand must be in [1, $MaxSignatureBits] (each " +
         s"band is one long; shifts wrap mod 64), got $rowsPerBand")
     require(dim >= 1, s"bandBuckets: dim must be >= 1, got $dim")
-    val v = transform(vec, x => x.cast("double"))
-    when(vec.isNull, lit(null).cast("array<bigint>"))
-      .when(size(v) === 0, array(Seq.fill(bands)(lit(0L)): _*))
-      .otherwise(array((0 until bands).map(b =>
-        projectionBits(v, b * rowsPerBand, rowsPerBand, dim, md5Component,
-          "bandBuckets")): _*))
+    signProjection(vec, bands, rowsPerBand, dim, md5Component, emptyBucket = 0L,
+      label = "bandBuckets")
   }
 
   /** The band width (`rowsPerBand = 0`) every banded operator auto-sizes
@@ -334,10 +315,42 @@ object Similarity {
     * consumer (both join sides, the verify re-join). */
   private def bandedFrame(df: DataFrame, idCol: String, vecCol: String,
       bands: Int, rowsPerBand: Int, dim: Int): DataFrame =
+    bandedProjection(df, idCol, vecCol, bands, rowsPerBand, dim).localCheckpoint(true)
+
+  /** [[bandedFrame]] before its checkpoint. */
+  private def bandedProjection(df: DataFrame, idCol: String, vecCol: String,
+      bands: Int, rowsPerBand: Int, dim: Int): DataFrame =
     df.select(col(idCol).as("id"),
-      transform(col(vecCol), x => x.cast("double")).as("vec"),
+      col(vecCol).cast("array<double>").as("vec"),
       bandBuckets(col(vecCol), bands, rowsPerBand, dim).as("buckets"))
+
+  /** `(id, vec, buckets, codes8)`: [[bandedFrame]] plus each vector's
+    * [[sq8Codes8]] against the collected params, in ONE checkpoint — the
+    * banding, the cast and the encode all run in one pass. */
+  private def quantizedBandedFrame(df: DataFrame, idCol: String, vecCol: String,
+      bands: Int, rowsPerBand: Int, dim: Int, params: Sq8Row): DataFrame =
+    bandedProjection(df, idCol, vecCol, bands, rowsPerBand, dim)
+      .select(col("id"), col("vec"), col("buckets"),
+        sq8Codes8(col("vec"), params.mins, params.widths).as("codes8"))
       .localCheckpoint(true)
+
+  /** The SQ8 params row ([[sq8Params]], or a persisted params table)
+    * collected once to the driver — 2·dim doubles — and handed to the
+    * encode and the ADC verify as literal arrays, so neither re-runs the
+    * per-dimension min/max aggregate over the corpus. Literals rather
+    * than a crossJoined one-row frame: a cross join in the checkpointed
+    * plan multiplies its size estimate, and the candidate joins over the
+    * checkpoint then shuffle instead of broadcasting. */
+  private final case class Sq8Row(row: org.apache.spark.sql.Row) {
+    val mins: Column = typedLit(row.getAs[Seq[Double]]("mins"))
+    val widths: Column = typedLit(row.getAs[Seq[Double]]("widths"))
+  }
+
+  private def collectParams(params: DataFrame): Sq8Row = {
+    val rows = params.collect()
+    require(rows.length == 1, s"SQ8 params must be one row, got ${rows.length}")
+    Sq8Row(rows.head)
+  }
 
   /** One `(id, band, bucket)` row per band membership. */
   private def bandRows(banded: DataFrame): DataFrame =
@@ -384,9 +397,9 @@ object Similarity {
       threshold: Double
   ): DataFrame = {
     val a = df.select(col(idCol).as("id_a"),
-      transform(col(vecCol), x => x.cast("double")).as("va"))
+      col(vecCol).cast("array<double>").as("va"))
     val b = df.select(col(idCol).as("id_b"),
-      transform(col(vecCol), x => x.cast("double")).as("vb"))
+      col(vecCol).cast("array<double>").as("vb"))
     a.join(b, col("id_a") < col("id_b"))
       .withColumn("cosine", cosine(col("va"), col("vb")))
       .where(col("cosine") >= lit(threshold))
@@ -529,7 +542,11 @@ object Similarity {
     * break (score desc, nbr asc) at both stages, so every row is
     * deterministic and the hash gate pins the full pipeline.
     *
-    * Scale shape: params are ONE broadcast row ([[sq8Params]]); the
+    * Scale shape: the input is scanned three times — the auto-width
+    * count, the ONE [[sq8Params]] aggregate (collected to the driver as
+    * 2·dim doubles and reused as literals by the encode and the ADC
+    * verify) and ONE checkpoint of `(id, vec, buckets, codes8)`, where
+    * the banding is one native kernel per row ([[bandBuckets]]). The
     * code table is dim bytes/row in-plan (tinyint elements) and ~dim
     * bytes persisted; candidate exchanges and the survivor window carry
     * codes/scores only (the payload-free pair rule); the raw vectors
@@ -552,22 +569,19 @@ object Similarity {
       s"rerankFactor must be in [1, 64], got $rerankFactor")
     require(dim >= 1, s"dim must be >= 1, got $dim")
     val rpb = resolveRowsPerBand(df, rowsPerBand, bands)
-    val params = sq8Params(df.select(col(vecCol)), vecCol, dim)
-    val signed = bandedFrame(df, idCol, vecCol, bands, rpb, dim)
-    val codes = sq8Codes8(signed, params).localCheckpoint(true)
+    val params = collectParams(sq8Params(df.select(col(vecCol)), vecCol, dim))
+    val signed = quantizedBandedFrame(df, idCol, vecCol, bands, rpb, dim, params)
+    val codes = signed.select(col("id"), col("codes8"))
     val vecs = signed.select(col("id"), col("vec"))
     quantizedVerifyTopK(directedCandidates(signed), codes, codes, params, vecs, vecs,
       k, rerankFactor)
   }
 
-  /** `(id, codes8)`: SQ8 codes as 1-byte elements — codes are 0..255,
-    * shifted to tinyint range so the array packs at 1 byte/element in
-    * Tungsten rows, the 8x payload cut the verify joins exist to
-    * exploit. */
-  private def sq8Codes8(signed: DataFrame, params: DataFrame): DataFrame =
-    sq8Encode(signed.select(col("id"), col("vec")), "id", "vec", params)
-      .select(col("id"),
-        transform(col("codes"), c => (c - lit(128)).cast("tinyint")).as("codes8"))
+  /** SQ8 codes as 1-byte elements — codes are 0..255, shifted to tinyint
+    * range so the array packs at 1 byte/element in Tungsten rows, the 8x
+    * payload cut the verify joins exist to exploit. */
+  private def sq8Codes8(vec: Column, mins: Column, widths: Column): Column =
+    transform(vec, (x, i) => (sq8Code(x, i, mins, widths) - lit(128)).cast("tinyint"))
 
   /** Shared SQ8-verify tail of the quantized kNN family: ADC-score the
     * candidate pairs on 1-byte codes, window to the per-node
@@ -576,7 +590,7 @@ object Similarity {
     * .Sq8AdcCosine]] (dequantize + three inner products in ONE
     * codegen'd allocation-free loop — a dequantizing `transform` HOF
     * here runs interpreted per element and costs ~4x wall, measured)
-    * against the broadcast param row; the projection to (id, nbr,
+    * against the collected params; the projection to (id, nbr,
     * qcos) collapses the payload BEFORE the survivor window's
     * exchange, and only n·k·rerankFactor rows ever touch raw vectors.
     * The `id` and `nbr` sides take their codes and vectors from separate
@@ -586,7 +600,7 @@ object Similarity {
       candidates: DataFrame,
       idCodes: DataFrame,
       nbrCodes: DataFrame,
-      params: DataFrame,
+      params: Sq8Row,
       idVecs: DataFrame,
       nbrVecs: DataFrame,
       k: Int,
@@ -596,12 +610,11 @@ object Similarity {
       import org.apache.spark.sql.graft.ColumnBridge
       ColumnBridge.column(graft.functions.Sq8AdcCosine(
         ColumnBridge.expression(a), ColumnBridge.expression(b),
-        ColumnBridge.expression(col("mins")), ColumnBridge.expression(col("widths"))))
+        ColumnBridge.expression(params.mins), ColumnBridge.expression(params.widths)))
     }
     val qcos = candidates
       .join(idCodes, Seq("id"))
       .join(nbrCodes.select(col("id").as("nbr"), col("codes8").as("__cb")), Seq("nbr"))
-      .crossJoin(broadcast(params))
       .select(col("id"), col("nbr"),
         adcCosine(col("codes8"), col("__cb")).as("qcos"))
     val wq = Window.partitionBy("id").orderBy(col("qcos").desc, col("nbr").asc)
@@ -633,9 +646,13 @@ object Similarity {
     *   - payload `(id, codes8, vec)`: 1-byte SQ8 codes for the
     *     quantized verify plus the raw vector for the exact re-rank,
     *     stored ONCE per id (never per band);
-    *   - params: the 1-row SQ8 range table
-    *     ([[graft.sources.IndexStore.writeTable]] sidecar, broadcast
-    *     at probe time).
+    *   - params: the 1-row SQ8 range table, a local frame of the row
+    *     the build collected once ([[graft.sources.IndexStore.writeTable]]
+    *     sidecar, collected once more at probe time).
+    *
+    * The build scans the input for the params aggregate and for ONE
+    * checkpoint of `(id, vec, buckets, codes8)`; banding and payload
+    * are both projections of it.
     *
     * The SQ8 ranges FREEZE at build time (the IVF frozen-centroid
     * rule): appended or probed vectors outside the trained range clamp
@@ -658,11 +675,13 @@ object Similarity {
     require(dim >= 1, s"dim must be >= 1, got $dim")
     val rpb = resolveRowsPerBand(df, rowsPerBand, bands)
     val params = sq8Params(df.select(col(vecCol)), vecCol, dim)
-    val signed = bandedFrame(df, idCol, vecCol, bands, rpb, dim)
-    val banded = bkeyRows(signed, bands, rpb, "knnGraphIndex")
-    val payload = sq8Codes8(signed, params)
-      .join(signed.select(col("id"), col("vec")), Seq("id"))
-    (banded, payload, params)
+    val collected = collectParams(params)
+    val signed = quantizedBandedFrame(df, idCol, vecCol, bands, rpb, dim, collected)
+    val banding = bkeyRows(signed, bands, rpb, "knnGraphIndex")
+    val payload = signed.select(col("id"), col("codes8"), col("vec"))
+    val paramsRow = df.sparkSession.createDataFrame(
+      java.util.Collections.singletonList(collected.row), params.schema)
+    (banding, payload, paramsRow)
   }
 
   /** Incremental kNN-graph edges for a NEW batch against a persisted
@@ -675,7 +694,7 @@ object Similarity {
     * [[knnGraphQuantized]] contract.
     *
     * Scale shape: the batch side computes its own band buckets and
-    * codes (frozen params broadcast — out-of-range batch values clamp,
+    * codes (frozen params collected once — out-of-range batch values clamp,
     * the documented SQ8 rule); the candidate equi-join on `bkey` needs
     * no index-side exchange when `banding` is the bucketed read-back;
     * verify ships 1-byte codes; raw vectors are touched only by the
@@ -706,15 +725,16 @@ object Similarity {
     require(rowsPerBand >= 1, s"knnGraphAgainstIndex: rowsPerBand must be " +
       s"the BUILD width (no auto here — a mismatched probe bands into the " +
       s"wrong buckets), got $rowsPerBand")
-    val qsigned = bandedFrame(batch, idCol, vecCol, bands, rowsPerBand, dim)
+    val frozen = collectParams(params)
+    val qsigned = quantizedBandedFrame(batch, idCol, vecCol, bands, rowsPerBand, dim, frozen)
     val candidates = bkeyRows(qsigned, bands, rowsPerBand, "knnGraphAgainstIndex")
       .join(banding.select(col("bkey"), col("id").as("nbr")), Seq("bkey"))
       .where(col("id") =!= col("nbr"))
       .select("id", "nbr")
       .dropDuplicates("id", "nbr")
     quantizedVerifyTopK(candidates,
-      sq8Codes8(qsigned, params), payload.select(col("id"), col("codes8")), params,
-      qsigned.select(col("id"), col("vec")),
+      qsigned.select(col("id"), col("codes8")), payload.select(col("id"), col("codes8")),
+      frozen, qsigned.select(col("id"), col("vec")),
       payload.select(col("id"), col("vec")),
       k, rerankFactor)
   }
@@ -759,7 +779,7 @@ object Similarity {
     val (index, _) = ivfIndex(df, idCol, vecCol, nlist = nlist,
       sampleSize = sampleSize, trainedCentroids = trainedCentroids)
     val cast = index.select(col("id"), col("cell"),
-      transform(col("vec"), x => x.cast("double")).as("v"))
+      col("vec").cast("array<double>").as("v"))
     bandWithinCell match {
       case None =>
         val a = cast.select(col("cell"), col("id").as("id_a"), col("v").as("va"))
@@ -821,7 +841,7 @@ object Similarity {
     val (index, centroids) = ivfIndex(df, idCol, vecCol, nlist = nlist,
       sampleSize = sampleSize, trainedCentroids = trainedCentroids)
     val cast = index.select(col("id"), col("cell"),
-      transform(col("vec"), x => x.cast("double")).as("v"))
+      col("vec").cast("array<double>").as("v"))
     val a = cast.select(col("cell"), col("id").as("id_a"), col("v").as("va"))
     val b = cast.select(col("cell"), col("id").as("id_b"), col("v").as("vb"))
     val pairs = a.join(b, Seq("cell"))
@@ -918,7 +938,7 @@ object Similarity {
   ): (DataFrame, Seq[Seq[Double]]) = {
     val sample: Array[Array[Double]] = df
       .select(col(idCol).cast("long").as("__id"),
-        transform(col(vecCol), x => x.cast("double")).as("__v"))
+        col(vecCol).cast("array<double>").as("__v"))
       .where(col("__v").isNotNull && size(col("__v")) > 0)
       .orderBy("__id").limit(sampleSize)
       .collect().map(_.getSeq[Double](1).toArray)
@@ -966,7 +986,7 @@ object Similarity {
       vecCol: String,
       centroids: IndexedSeq[IndexedSeq[Double]]
   ): DataFrame = {
-    val v = transform(col(vecCol), x => x.cast("double"))
+    val v = col(vecCol).cast("array<double>")
     val scored = centroids.zipWithIndex.map { case (c, i) =>
       val cNorm2 = c.map(x => x * x).sum
       struct((lit(cNorm2) - dot(v, typedLit(c.toSeq)) * 2).as("d"), lit(i).as("i"))
@@ -993,7 +1013,7 @@ object Similarity {
     import spark.implicits._
     val cb = spark.sparkContext.broadcast(centroids.map(_.toArray).toArray)
     df.select(col(idCol).cast("long"),
-        transform(col(vecCol), x => x.cast("double")))
+        col(vecCol).cast("array<double>"))
       .as[(Long, Seq[Double])]
       .mapPartitions { it =>
         val cs = cb.value
@@ -1042,7 +1062,7 @@ object Similarity {
       .take(math.max(1, nprobe))
       .map(_._1)
     val qArr = array(query.map(lit): _*)
-    val v = transform(col("vec"), x => x.cast("double"))
+    val v = col("vec").cast("array<double>")
     index.where(col("cell").isin(probes: _*))
       .select(col("id"), cosine(v, qArr).as("cosine"))
       .orderBy(col("cosine").desc, col("id").asc)
@@ -1069,7 +1089,7 @@ object Similarity {
       k: Int
   ): DataFrame = {
     require(centroids.nonEmpty, "ivfTopKForQueries: empty centroid list")
-    val qv = transform(col(vecCol), x => x.cast("double"))
+    val qv = col(vecCol).cast("array<double>")
     val scoredCells = centroids.toIndexedSeq.zipWithIndex.map { case (c, i) =>
       val cNorm2 = c.map(x => x * x).sum
       struct((lit(cNorm2) - dot(qv, typedLit(c)) * 2).as("d"), lit(i).as("i"))
@@ -1100,7 +1120,7 @@ object Similarity {
       probed: DataFrame, index: DataFrame, k: Int): DataFrame = {
     val scored = probed.join(index, Seq("cell"))
       .where(col("query_id") =!= col("id"))
-      .withColumn("cosine", cosine(col("qvec"), transform(col("vec"), x => x.cast("double"))))
+      .withColumn("cosine", cosine(col("qvec"), col("vec").cast("array<double>")))
     val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("id").asc)
     scored
       .withColumn("rank", row_number().over(w))
@@ -1141,7 +1161,7 @@ object Similarity {
       df: DataFrame, idCol: String, vecCol: String, m: Int, k: Int
   ): IndexedSeq[IndexedSeq[IndexedSeq[Double]]] = {
     val seeds = df
-      .select(col(idCol).as("id"), transform(col(vecCol), x => x.cast("double")).as("v"))
+      .select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
       .orderBy("id").limit(k)
       .collect().map(_.getSeq[Double](1).toIndexedSeq)
     require(seeds.length == k, s"need >= $k vectors for $k codes, got ${seeds.length}")
@@ -1167,7 +1187,7 @@ object Similarity {
       case d =>
         require(d % m == 0, s"dim $d not divisible by m=$m subspaces"); d / m
     }
-    val v = transform(col(vecCol), x => x.cast("double"))
+    val v = col(vecCol).cast("array<double>")
     val sliced = df.select(col(idCol).as("vec_id"),
       posexplode(array((0 until m).map(s => slice(v, s * subDim + 1, subDim)): _*))
         .as(Seq("sub", "embedding")))
@@ -1205,7 +1225,7 @@ object Similarity {
     val cb = spark.sparkContext.broadcast(
       codebooks.map(_.map(_.toArray).toArray).toArray)
     df.select(col(idCol).cast("long"),
-        transform(col(vecCol), x => x.cast("double")))
+        col(vecCol).cast("array<double>"))
       .as[(Long, Seq[Double])]
       .mapPartitions { it =>
         val books = cb.value
@@ -1275,7 +1295,7 @@ object Similarity {
     val subDim = codebooks.head.head.length
     val qs = queries
       .select(col(queryIdCol).cast("long"),
-        transform(col(vecCol), x => x.cast("double")))
+        col(vecCol).cast("array<double>"))
       .as[(Long, Seq[Double])].limit(maxQueries + 1).collect()
     require(qs.length <= maxQueries,
       s"pqTopKForQueries builds a driver-side LUT per query and is bounded to " +
@@ -1439,7 +1459,7 @@ object Similarity {
   def residualFrame(index: DataFrame, centroids: Seq[Seq[Double]]): DataFrame = {
     val centsLit = typedLit(centroids.map(_.toSeq))
     index.select(col("id"), col("cell"),
-      zip_with(transform(col("vec"), x => x.cast("double")),
+      zip_with(col("vec").cast("array<double>"),
         element_at(centsLit, col("cell") + 1), (a, b) => a - b).as("residual"))
   }
 
@@ -1491,9 +1511,9 @@ object Similarity {
       nprobe: Int,
       k: Int
   ): DataFrame = {
-    val qv = transform(col(vecCol), x => x.cast("double"))
+    val qv = col(vecCol).cast("array<double>")
     val cents = centroidTbl.select(col("cell"),
-      transform(col("centroid"), x => x.cast("double")).as("cvec"))
+      col("centroid").cast("array<double>").as("cvec"))
     // NULL query vectors can't rank cells — drop them up front (the
     // null-signature-drops semantics); then the same loud dim guard as
     // the literal path: the truncating dot must never silently rank
@@ -1560,7 +1580,7 @@ object Similarity {
   ): DataFrame = {
     val qArr = array(query.map(lit): _*)
     val probes = probeBall(lshSignatureLocal(query, nBits), nBits, probeRadius)
-    val v = transform(col("vec"), x => x.cast("double"))
+    val v = col("vec").cast("array<double>")
     index.where(col("bucket").isin(probes: _*))
       .select(col("id"), cosine(v, qArr).as("cosine"))
       .orderBy(col("cosine").desc, col("id").asc)
@@ -1611,7 +1631,7 @@ object Similarity {
     val masks = probeBallMasks(nBits, probeRadius)
     queries
       .select(col(idCol).as("query_id"),
-        transform(col(vecCol), x => x.cast("double")).as("qvec"),
+        col(vecCol).cast("array<double>").as("qvec"),
         lshSignature(col(vecCol), nBits, dim).as("qsig"))
       .select(col("query_id"), col("qvec"),
         explode(array(masks.map(m => col("qsig").bitwiseXOR(lit(m))): _*)).as("bucket"))
@@ -1630,7 +1650,7 @@ object Similarity {
     val probed = probeBuckets(queries, idCol, vecCol, nBits, probeRadius, dim)
     val scored = probed.join(index, Seq("bucket"))
       .where(col("query_id") =!= col("id"))
-      .withColumn("cosine", cosine(col("qvec"), transform(col("vec"), x => x.cast("double"))))
+      .withColumn("cosine", cosine(col("qvec"), col("vec").cast("array<double>")))
     val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("id").asc)
     scored
       .withColumn("rank", row_number().over(w))
@@ -1677,7 +1697,7 @@ object Similarity {
     * one codegen'd [[dot]] against a literal row per output dimension —
     * a single narrow scan, no shuffle, no UDF. */
   def projectColumn(vecCol: Column, matrix: IndexedSeq[Seq[Double]]): Column = {
-    val v = transform(vecCol, x => x.cast("double"))
+    val v = vecCol.cast("array<double>")
     array(matrix.map(row => dot(v, array(row.map(lit): _*))): _*)
   }
 
@@ -1715,10 +1735,10 @@ object Similarity {
     val inDim = vectorDimOf(corpus, vecCol)
     val m = randomProjectionMatrix(inDim, outDim, seed)
     val c = corpus.select(col(idCol).as("corpus_id"),
-      transform(col(vecCol), x => x.cast("double")).as("cvec"),
+      col(vecCol).cast("array<double>").as("cvec"),
       projectColumn(col(vecCol), m).as("cproj"))
     val q = queries.select(col(idCol).as("query_id"),
-      transform(col(vecCol), x => x.cast("double")).as("qvec"),
+      col(vecCol).cast("array<double>").as("qvec"),
       projectColumn(col(vecCol), m).as("qproj"))
     val wCand = Window.partitionBy("query_id")
       .orderBy(col("rp_cosine").desc, col("corpus_id").asc)
@@ -1776,7 +1796,7 @@ object Similarity {
     val oneMinus = 1.0 - lambdaRel // SQL twins must replay 1.0 - lambda, not a rounded literal
     val cands = topKForQueries(corpus, queries, idCol, vecCol, candidateK)
     val cvecs = corpus.select(col(idCol).as("corpus_id"),
-      transform(col(vecCol), x => x.cast("double")).as("__cv"))
+      col(vecCol).cast("array<double>").as("__cv"))
     val withVec = cands.join(cvecs, Seq("corpus_id"))
       .select(col("query_id"), col("corpus_id"), col("cosine").as("rel"),
         transform(col("__cv"), x => x / norm(col("__cv"))).as("vn"))
@@ -1887,7 +1907,7 @@ object Similarity {
     // fall into the raise_error branch with a useless null message.
     val checked = when(col(vecCol).isNull, lit(null).cast("array<double>"))
       .when(size(col(vecCol)) === dim,
-        transform(col(vecCol), x => x.cast("double")))
+        col(vecCol).cast("array<double>"))
       .otherwise(raise_error(concat(
         lit(s"sq8Params: expected dim=$dim vectors, got size="),
         size(col(vecCol)).cast("string"))))
@@ -1917,13 +1937,16 @@ object Similarity {
   ): DataFrame =
     df.crossJoin(broadcast(params))
       .select(col(idCol).as("id"),
-        transform(col(vecCol), (x, i) => {
-          val mn = element_at(col("mins"), i + 1)
-          val wd = element_at(col("widths"), i + 1)
-          when(wd === 0.0, lit(0)).otherwise(
-            least(lit(255.0), greatest(lit(0.0),
-              floor((x.cast("double") - mn) / wd * lit(255.0) + lit(0.5)))).cast("int"))
-        }).as("codes"))
+        transform(col(vecCol), (x, i) => sq8Code(x, i, col("mins"), col("widths"))).as("codes"))
+
+  /** The SQ8 code of element `x` at index `i` against the params arrays. */
+  private def sq8Code(x: Column, i: Column, mins: Column, widths: Column): Column = {
+    val mn = element_at(mins, i + 1)
+    val wd = element_at(widths, i + 1)
+    when(wd === 0.0, lit(0)).otherwise(
+      least(lit(255.0), greatest(lit(0.0),
+        floor((x.cast("double") - mn) / wd * lit(255.0) + lit(0.5)))).cast("int"))
+  }
 
   /** Asymmetric SQ8 top-k: full-precision queries score against
     * DEQUANTIZED codes (`x_hat = min + code*width/255`) — the classic
@@ -1944,7 +1967,7 @@ object Similarity {
   ): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val q = queries.select(col(idCol).as("query_id"),
-      transform(col(vecCol), x => x.cast("double")).as("qvec"))
+      col(vecCol).cast("array<double>").as("qvec"))
     val dequant = codes.crossJoin(broadcast(params))
       .select(col("id").as("corpus_id"),
         transform(col("codes"), (c, i) =>
@@ -2006,7 +2029,7 @@ object Similarity {
     require(zThreshold > 0, s"zThreshold must be > 0, got $zThreshold")
     val checked = when(col(vecCol).isNull, lit(null).cast("array<double>"))
       .when(size(col(vecCol)) === dim,
-        transform(col(vecCol), x => x.cast("double")))
+        col(vecCol).cast("array<double>"))
       .otherwise(raise_error(concat(
         lit(s"outlierScores: expected dim=$dim vectors, got size="),
         size(col(vecCol)).cast("string"))))

@@ -334,7 +334,7 @@ object StreamOps {
     val probed = Similarity.probeBuckets(queries, queryIdCol, vecCol, nBits, probeRadius, dim)
     val scored = probed.join(index, Seq("bucket"))
       .withColumn("cosine",
-        Similarity.cosine(col("qvec"), transform(col("vec"), x => x.cast("double"))))
+        Similarity.cosine(col("qvec"), col("vec").cast("array<double>")))
     scored
       .groupBy("query_id")
       .agg(max(struct(col("cosine"), (-col("id").cast("long")).as("nid"))).as("best"))
@@ -439,14 +439,14 @@ object StreamOps {
     // data, not a plan literal, so nlist 10^4-10^5 stays codegen-safe
     val centsRow = centroidTbl
       .select(struct(col("cell"),
-        transform(col("centroid"), x => x.cast("double")).as("cvec")).as("c"))
+        col("centroid").cast("array<double>").as("cvec")).as("c"))
       .agg(array_sort(collect_list(col("c"))).as("__cents"))
     // project qv FIRST (bare attribute references are free inside the
     // per-centroid lambda; an unprojected cast expression would
     // re-evaluate per centroid)
     val q0 = queries
       .select(col(queryIdCol).as("query_id"),
-        transform(col(vecCol), x => x.cast("double")).as("qv"))
+        col(vecCol).cast("array<double>").as("qv"))
       .where(col("qv").isNotNull)
       .crossJoin(centsRow) // 1-row static side: broadcast, no state
     // rank cells with the batch probe's exact arithmetic: full squared
@@ -626,10 +626,10 @@ object StreamOps {
     // dropped on both sides (cosine is 0/0 = NaN, and NaN compares
     // ABOVE every double, so an unguarded NaN >= threshold is TRUE)
     val benchBanded = benchmark
-      .where(Similarity.dot(transform(col(vecCol), x => x.cast("double")),
-        transform(col(vecCol), x => x.cast("double"))) > 0)
+      .where(Similarity.dot(col(vecCol).cast("array<double>"),
+        col(vecCol).cast("array<double>")) > 0)
       .select(col(idCol).as("bench_id"),
-        transform(col(vecCol), x => x.cast("double")).as("v"),
+        col(vecCol).cast("array<double>").as("v"),
         Similarity.bandBuckets(col(vecCol), bands, rowsPerBand, dim).as("__bk"))
       .select(col("bench_id"), col("v"),
         posexplode(col("__bk")).as(Seq("band", "bucket")))
@@ -643,7 +643,7 @@ object StreamOps {
               "Decontamination.semanticPairs broadcast-join shape"))))
         .otherwise(col("__bench")).as("__bench"))
     docs
-      .withColumn("__vd", transform(col(vecCol), x => x.cast("double")))
+      .withColumn("__vd", col(vecCol).cast("array<double>"))
       .where(Similarity.dot(col("__vd"), col("__vd")) > 0)
       .withColumn("__bk", Similarity.bandBuckets(col(vecCol), bands, rowsPerBand, dim))
       .crossJoin(broadcast(benchBanded))

@@ -31,3 +31,12 @@ object ListenerBridge {
   def waitUntilListenerBusEmpty(spark: org.apache.spark.sql.SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
 }
+
+/** The exception `raise_error(msg)` throws — a `USER_RAISED_EXCEPTION`
+  * SparkRuntimeException, whose constructor is `private[spark]` — so a
+  * native expression's loud failure reads the same as the `raise_error`
+  * check it replaced. */
+object ErrorBridge {
+  def userRaised(msg: String): RuntimeException =
+    new org.apache.spark.SparkRuntimeException("USER_RAISED_EXCEPTION", Map("errorMessage" -> msg))
+}

@@ -257,4 +257,47 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(pf.isDefined && !pf.get.contains("PartitionFilters: []"),
       s"the sink scan must carry a step partition filter:\n$p")
   }
+
+  test("a quantized kNN graph bands natively and scans its input three times") {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate, ZipWith}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.functions.{aggregate, col, lit, zip_with}
+    val input = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    def hofs(p: SparkPlan): Seq[String] = p.collect { case n => n.expressions }.flatten
+      .flatMap(_.collect { case e @ (_: ZipWith | _: ArrayAggregate) => e.prettyName })
+    def scans(p: SparkPlan): Int = p.collect {
+      case s: FileSourceScanExec if s.relation.location.rootPaths.exists(
+        _.toString.endsWith("embeddings.parquet")) => s
+    }.size
+    def executions(body: => Unit): Seq[SparkPlan] = {
+      val executed = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+        override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+            ns: Long): Unit = executed.add(qe.executedPlan)
+        override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+            e: Exception): Unit = ()
+      }
+      org.apache.spark.sql.graft.ListenerBridge.waitUntilListenerBusEmpty(spark)
+      spark.listenerManager.register(listener)
+      try withConf("spark.sql.adaptive.enabled" -> "false") {
+        body
+        org.apache.spark.sql.graft.ListenerBridge.waitUntilListenerBusEmpty(spark)
+      } finally spark.listenerManager.unregister(listener)
+      import scala.jdk.CollectionConverters._
+      executed.asScala.toSeq
+    }
+    // detector proofs: the HOF dot product plans both nodes, a count scans once
+    val hofDot = aggregate(zip_with(col("embedding"), col("embedding"), (a, b) => a * b),
+      lit(0.0d), (acc, x) => acc + x)
+    val proof = executions(input.select(hofDot).collect())
+    assert(proof.flatMap(hofs).toSet == Set("zip_with", "aggregate"), "HOF detector is vacuous")
+    assert(proof.map(scans).sum == 1, "scan detector is vacuous")
+    val plans = executions(graft.operators.Similarity.knnGraphQuantized(
+      input, "vec_id", "embedding", k = 3, dim = 64).collect())
+    assert(plans.nonEmpty && plans.forall(hofs(_).isEmpty),
+      s"the banding must run in the native kernel: ${plans.flatMap(hofs)}")
+    assert(plans.map(scans).sum == 3,
+      s"count + params + checkpoint scan the input; saw ${plans.map(scans)} over " +
+        s"${plans.size} executions")
+  }
 }

@@ -10,7 +10,10 @@ Usage: python3 tools/oracle_check.py <sf dir> <verify out dir>
 
 Exit status: 0 when every entry is OK (or ROWS_ONLY: no oracle SQL to
 compare with); 1 when any entry is a mismatch, an oracle SQL error, or
-has no Spark output, or when <verify out dir> holds no entry at all.
+has no Spark output, when <verify out dir>/verify_failed.json names an
+entry whose query threw in graft.Verify (VERIFY_FAILED, whatever parquet
+an earlier run left under its name), or when <verify out dir> holds no
+entry at all.
 """
 import glob
 import json
@@ -86,6 +89,10 @@ def main():
             if bad:
                 break
         results[name] = bad or f"OK rows={len(s)}"
+    failed_path = os.path.join(out, "verify_failed.json")
+    if os.path.exists(failed_path):
+        for name, msg in json.load(open(failed_path)).items():
+            results[name] = f"VERIFY_FAILED: {msg}"
     if not results:
         print(f"== no query outputs under {out} ==")
         return 1

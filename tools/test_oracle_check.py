@@ -27,9 +27,10 @@ DOCS_ROWS = "SELECT * FROM (VALUES (1, 3), (2, 5)) t(doc_id, n)"
 
 class OracleCheckTest(unittest.TestCase):
 
-    def run_check(self, entries, oracle, empty=()):
+    def run_check(self, entries, oracle, empty=(), verify_failed=None):
         """entries: {name: SQL producing the Spark-side rows};
-        oracle: {name: oracle SQL}; empty: entry dirs with no parquet.
+        oracle: {name: oracle SQL}; empty: entry dirs with no parquet;
+        verify_failed: {name: error} written as verify_failed.json.
         Returns (exit code, stdout)."""
         with tempfile.TemporaryDirectory() as root:
             sf, out = os.path.join(root, "sf"), os.path.join(root, "out")
@@ -47,6 +48,9 @@ class OracleCheckTest(unittest.TestCase):
                 os.makedirs(os.path.join(out, name))
             with open(os.path.join(out, "oracle_sql.json"), "w") as f:
                 json.dump(oracle, f)
+            if verify_failed is not None:
+                with open(os.path.join(out, "verify_failed.json"), "w") as f:
+                    json.dump(verify_failed, f)
             p = subprocess.run([sys.executable, CHECKER, sf, out],
                                capture_output=True, text=True)
             return p.returncode, p.stdout
@@ -98,6 +102,25 @@ class OracleCheckTest(unittest.TestCase):
         self.assertEqual(code, 1, out)
         self.assertIn("OK rows=2", out)
         self.assertIn("FAILED: bad", out)
+
+    def test_query_that_threw_fails(self):
+        code, out = self.run_check({"docs": DOCS_ROWS}, {"docs": DOCS_SQL, "boom": DOCS_SQL},
+                                   verify_failed={"boom": "dim hint 64 does not match"})
+        self.assertEqual(code, 1, out)
+        self.assertIn("OK rows=2", out)
+        self.assertIn("VERIFY_FAILED: dim hint 64", out)
+        self.assertIn("FAILED: boom", out)
+
+    def test_query_that_threw_fails_over_stale_output(self):
+        # an earlier run's parquet under the name must not pass for this run
+        code, out = self.run_check({"docs": DOCS_ROWS}, {"docs": DOCS_SQL},
+                                   verify_failed={"docs": "boom"})
+        self.assertEqual(code, 1, out)
+        self.assertIn("VERIFY_FAILED: boom", out)
+
+    def test_no_failed_queries_passes(self):
+        code, out = self.run_check({"docs": DOCS_ROWS}, {"docs": DOCS_SQL}, verify_failed={})
+        self.assertEqual(code, 0, out)
 
     def test_empty_out_dir_fails(self):
         code, out = self.run_check({}, {"docs": DOCS_SQL})
