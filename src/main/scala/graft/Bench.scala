@@ -457,10 +457,22 @@ object Bench {
           f"""{"peak_mb":$peakMb%.0f,"max_mb":$maxJson}"""
       }.mkString("{", ",", "}")
     val leadJson = leadEntries.map("\"" + _._1 + "\"").mkString("[", ",", "]")
+    // the harness the record was taken on, resolved from the session
+    // rather than from the env var that asked for it, so a record whose
+    // cores or heap differ from its label shows it
+    val LocalMaster = """local\[(\d+|\*)(?:,\s*\d+)?\]""".r
+    val resolvedCpus = spark.sparkContext.master match {
+      case "local" => 1
+      case LocalMaster("*") => Runtime.getRuntime.availableProcessors
+      case LocalMaster(n) => n.toInt
+      case _ => spark.sparkContext.defaultParallelism
+    }
+    val harness = f""""cpus":$resolvedCpus,"default_parallelism":""" +
+      f"""${spark.sparkContext.defaultParallelism},"xmx_gb":${Runtime.getRuntime.maxMemory / 1e9}%.2f"""
     val line = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,""" +
       f""""sweeps":$sweepsRun,"lead":$leadJson,"warmup":$wu,"retries":$rt,"gc_ms":$gcj,""" +
       f""""peak_heap_gb":$peakGb%.2f,"peak_live_gb":$liveGb%.2f,"peaks_gb":$pk,""" +
-      f""""peaks_live_gb":$lv,"code_cache":$codePools,"sf":"$sfDir"}"""
+      f""""peaks_live_gb":$lv,"code_cache":$codePools,$harness,"sf":"$sfDir"}"""
     // The driver's stdout capture keeps only a ~2 KB tail: the full
     // ~150-entry line was truncated mid-JSON every round since r8
     // ("parsed": null in BENCH_r*.json). Stdout therefore carries a
@@ -498,7 +510,8 @@ object Bench {
     val compact = f"""{"metric":"total","value":$total%.3f,"unit":"sec",""" +
       f""""queries":$hqs,"n_entries":${results.size},"sweeps":$sweepsRun,""" +
       f""""anomalies":$anoJson,"peak_heap_gb":$peakGb%.2f,""" +
-      f""""peak_live_gb":$liveGb%.2f,"full":"target/bench_latest.json","sf":"$sfDir"}"""
+      f""""peak_live_gb":$liveGb%.2f,$harness,"full":"target/bench_latest.json",""" +
+      f""""sf":"$sfDir"}"""
     println(compact)
     // Provenance copy: the driver captures stdout, but BENCH_r06's
     // per-entry timings were lost to tail truncation there — a file

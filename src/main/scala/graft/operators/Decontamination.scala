@@ -128,7 +128,7 @@ object Decontamination {
       rowsPerBand: Int = 0,
       bands: Int = 2
   ): DataFrame = {
-    val rpb = Similarity.resolveRowsPerBand(corpus, rowsPerBand, bands)
+    val rpb = Similarity.resolveRowsPerBand(corpus.count(), rowsPerBand, bands)
     // zero-norm vectors are dropped on BOTH sides before the verify:
     // their cosine is 0/0 = NaN, and Spark orders NaN above every
     // double, so an unguarded `NaN >= threshold` would report a

@@ -301,13 +301,14 @@ object Similarity {
     math.max(math.max(4, needed), (16 + bands - 1) / bands)
   }
 
-  /** Resolve the `rowsPerBand = 0` auto sentinel: one count job over the
-    * corpus (documented cost; pass an explicit width to skip it), then
-    * [[autoRowsPerBand]]. Explicit widths pass through; [[bandBuckets]]
+  /** Resolve the `rowsPerBand = 0` auto sentinel: [[autoRowsPerBand]] of
+    * the corpus row count `n` (a count job over the corpus unless the
+    * caller already has it; pass an explicit width to skip it). Explicit
+    * widths pass through and `n` is not evaluated; [[bandBuckets]]
     * validates either. */
-  private[operators] def resolveRowsPerBand(df: DataFrame, rowsPerBand: Int,
+  private[operators] def resolveRowsPerBand(n: => Long, rowsPerBand: Int,
       bands: Int): Int =
-    if (rowsPerBand == 0) autoRowsPerBand(math.max(df.count(), 1L), bands)
+    if (rowsPerBand == 0) autoRowsPerBand(math.max(n, 1L), bands)
     else rowsPerBand
 
   /** `(id, vec, buckets)`: ids, the cast vectors and their
@@ -325,22 +326,23 @@ object Similarity {
       bandBuckets(col(vecCol), bands, rowsPerBand, dim).as("buckets"))
 
   /** `(id, vec, buckets, codes8)`: [[bandedFrame]] plus each vector's
-    * [[sq8Codes8]] against the collected params, in ONE checkpoint — the
-    * banding, the cast and the encode all run in one pass. */
+    * 1-byte [[sq8Codes]] against the collected params, in ONE checkpoint —
+    * the banding, the cast and the encode are native kernels of one pass. */
   private def quantizedBandedFrame(df: DataFrame, idCol: String, vecCol: String,
       bands: Int, rowsPerBand: Int, dim: Int, params: Sq8Row): DataFrame =
     bandedProjection(df, idCol, vecCol, bands, rowsPerBand, dim)
       .select(col("id"), col("vec"), col("buckets"),
-        sq8Codes8(col("vec"), params.mins, params.widths).as("codes8"))
+        sq8Codes(col("vec"), params.mins, params.widths, shifted = true).as("codes8"))
       .localCheckpoint(true)
 
-  /** The SQ8 params row ([[sq8Params]], or a persisted params table)
-    * collected once to the driver — 2·dim doubles — and handed to the
-    * encode and the ADC verify as literal arrays, so neither re-runs the
-    * per-dimension min/max aggregate over the corpus. Literals rather
-    * than a crossJoined one-row frame: a cross join in the checkpointed
-    * plan multiplies its size estimate, and the candidate joins over the
-    * checkpoint then shuffle instead of broadcasting. */
+  /** The SQ8 params row (`mins`, `widths`: a [[corpusStats]] row, or a
+    * persisted [[sq8Params]] table) collected once to the driver —
+    * 2·dim doubles — and handed to the encode and the ADC verify as
+    * literal arrays, so neither re-runs the per-dimension min/max
+    * aggregate over the corpus. Literals rather than a crossJoined
+    * one-row frame: a cross join in the checkpointed plan multiplies its
+    * size estimate, and the candidate joins over the checkpoint then
+    * shuffle instead of broadcasting. */
   private final case class Sq8Row(row: org.apache.spark.sql.Row) {
     val mins: Column = typedLit(row.getAs[Seq[Double]]("mins"))
     val widths: Column = typedLit(row.getAs[Seq[Double]]("widths"))
@@ -352,19 +354,62 @@ object Similarity {
     Sq8Row(rows.head)
   }
 
+  /** The native [[graft.functions.Sq8Stats]] aggregate of a vector column:
+    * `(n, mins, widths)` in one map-side-combined pass. */
+  private def sq8Stats(vec: Column, dim: Int): Column = {
+    import org.apache.spark.sql.graft.ColumnBridge
+    ColumnBridge.column(graft.functions.Sq8Stats(
+      ColumnBridge.expression(vec.cast("array<double>")), dim).toAggregateExpression())
+  }
+
+  /** ONE execution over the corpus, collected: its row count (for the
+    * auto band width) and its SQ8 params. */
+  private def corpusStats(df: DataFrame, vecCol: String, dim: Int): (Long, Sq8Row) = {
+    val row = df.select(sq8Stats(col(vecCol), dim).as("s")).select("s.*").head()
+    (row.getAs[Long]("n"), Sq8Row(row))
+  }
+
   /** One `(id, band, bucket)` row per band membership. */
   private def bandRows(banded: DataFrame): DataFrame =
     banded.select(col("id"), posexplode(col("buckets")).as(Seq("band", "bucket")))
 
   /** DIRECTED candidate pairs `(id, nbr)`, id != nbr, sharing any
-    * (band, bucket) — ids only, deduped on the pair. */
+    * (band, bucket) — ids only, deduped on the pair ([[byId]]). */
   private def directedCandidates(banded: DataFrame): DataFrame = {
     val rows = bandRows(banded)
-    rows.join(rows.select(col("band"), col("bucket"), col("id").as("nbr")),
+    byId(rows.join(rows.select(col("band"), col("bucket"), col("id").as("nbr")),
         Seq("band", "bucket"))
-      .where(col("id") =!= col("nbr"))
-      .select("id", "nbr")
-      .dropDuplicates("id", "nbr")
+      .where(col("id") =!= col("nbr")))
+  }
+
+  /** Candidate pairs `(id, nbr)` shuffled ONCE, by `id`, and deduped on
+    * that partitioning: the pair dedup and both per-node windows of the
+    * verify tails require clustering by `id`, which this one exchange
+    * satisfies (a dedup shuffled by the pair would need a second exchange
+    * for the windows). Ids only — the payload-free pair rule. */
+  private def byId(pairs: DataFrame): DataFrame =
+    pairs.select("id", "nbr").repartition(col("id")).dropDuplicates("id", "nbr")
+
+  /** `(key, value)` of a payload frame's `id` and `column`, renamed for
+    * one join side. The id side and the nbr side of a self-graph project
+    * the same frame the same way, so their broadcasts canonicalize alike
+    * and the second is a `ReusedExchange`. */
+  private def payloadSide(frame: DataFrame, column: String, key: String,
+      value: String): DataFrame =
+    frame.select(col("id").as(key), col(column).as(value))
+
+  /** Exact-cosine top-k of each node among its candidate `pairs`: both
+    * vectors joined by id (broadcast payload, reused for a self-graph),
+    * ranked (cosine desc, nbr asc) on the pairs' `id` partitioning. */
+  private def exactTopK(pairs: DataFrame, idVecs: DataFrame, nbrVecs: DataFrame,
+      k: Int): DataFrame = {
+    val w = Window.partitionBy("id").orderBy(col("cosine").desc, col("nbr").asc)
+    pairs
+      .join(payloadSide(idVecs, "vec", "__ia", "__va"), col("id") === col("__ia"))
+      .join(payloadSide(nbrVecs, "vec", "__ib", "__vb"), col("nbr") === col("__ib"))
+      .select(col("id"), col("nbr"), cosine(col("__va"), col("__vb")).as("cosine"))
+      .withColumn("rank", row_number().over(w))
+      .where(col("rank") <= k)
   }
 
   /** Bits the band index occupies above `rowsPerBand` in the index's
@@ -432,7 +477,7 @@ object Similarity {
       rowsPerBand: Int = 0,
       bands: Int = 4
   ): DataFrame = {
-    val rpb = resolveRowsPerBand(df, rowsPerBand, bands)
+    val rpb = resolveRowsPerBand(df.count(), rowsPerBand, bands)
     val signed = bandedFrame(df, idCol, vecCol, bands, rpb, dim)
     val banded = bandRows(signed)
     val a = banded.select(col("band"), col("bucket"), col("id").as("id_a"))
@@ -470,10 +515,12 @@ object Similarity {
     *
     * Scale shape: banded frame computed once (checkpoint; persist
     * bucketed-by-(band, bucket) at cluster scale), candidates from
-    * per-(band, bucket) equi-joins — never all-pairs — deduped on the
-    * directed pair, vectors re-joined by id (candidate rows carry ids
-    * only, the payload-free pair-dedup rule), and the per-node top-k is
-    * a row_number window whose partition is one node's candidate set —
+    * per-(band, bucket) equi-joins — never all-pairs — shuffled ONCE,
+    * by `id`, and deduped on the directed pair there ([[byId]]);
+    * vectors re-joined by id (candidate rows carry ids only, the
+    * payload-free pair-dedup rule; one broadcast serves both sides),
+    * and the per-node top-k is a row_number window on that same
+    * partitioning whose partition is one node's candidate set —
     * bounded by the S-curve's bucket volumes, the same bound the pair
     * operator's verify stage already accepts.
     *
@@ -495,18 +542,9 @@ object Similarity {
       bands: Int = 4
   ): DataFrame = {
     require(k >= 1 && k <= 1000, s"k must be in [1, 1000], got $k")
-    val rpb = resolveRowsPerBand(df, rowsPerBand, bands)
+    val rpb = resolveRowsPerBand(df.count(), rowsPerBand, bands)
     val signed = bandedFrame(df, idCol, vecCol, bands, rpb, dim)
-    val candidates = directedCandidates(signed)
-    val vecs = signed.select(col("id"), col("vec"))
-    val w = Window.partitionBy("id").orderBy(col("cosine").desc, col("nbr").asc)
-    candidates
-      .join(vecs, Seq("id"))
-      .join(vecs.select(col("id").as("nbr"), col("vec").as("__vb")), Seq("nbr"))
-      .withColumn("cosine", cosine(col("vec"), col("__vb")))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("id", "nbr", "cosine", "rank")
+    exactTopK(directedCandidates(signed), signed, signed, k)
   }
 
   /** Forwarder kept for existing callers: [[knnGraphQuantized]] at the
@@ -542,17 +580,20 @@ object Similarity {
     * break (score desc, nbr asc) at both stages, so every row is
     * deterministic and the hash gate pins the full pipeline.
     *
-    * Scale shape: the input is scanned three times — the auto-width
-    * count, the ONE [[sq8Params]] aggregate (collected to the driver as
-    * 2·dim doubles and reused as literals by the encode and the ADC
-    * verify) and ONE checkpoint of `(id, vec, buckets, codes8)`, where
-    * the banding is one native kernel per row ([[bandBuckets]]). The
-    * code table is dim bytes/row in-plan (tinyint elements) and ~dim
-    * bytes persisted; candidate exchanges and the survivor window carry
-    * codes/scores only (the payload-free pair rule); the raw vectors
-    * are touched by exactly n + n·k·rerankFactor join rows, linear in
-    * corpus size. `rowsPerBand` defaults to 0 = auto
-    * ([[autoRowsPerBand]] over a one-job corpus count) — a fixed width
+    * Scale shape: three executions, two of them input scans. (1) ONE
+    * native [[graft.functions.Sq8Stats]] aggregate returns the row
+    * count (the auto width) and the SQ8 params, collected to the driver
+    * as 2·dim doubles and reused as literals by the encode and the ADC
+    * verify. (2) ONE checkpoint of `(id, vec, buckets, codes8)`, where
+    * the banding ([[bandBuckets]]) and the encode
+    * ([[graft.functions.Sq8Codes]]) are native kernels per row. (3) The
+    * verify ([[quantizedVerifyTopK]]) over ONE shuffle. The code table
+    * is dim bytes/row in-plan (tinyint elements) and ~dim bytes
+    * persisted; the candidate exchange carries ids only and the
+    * survivor window codes/scores (the payload-free pair rule); the raw
+    * vectors are touched by exactly n + n·k·rerankFactor join rows,
+    * linear in corpus size. `rowsPerBand` defaults to 0 = auto
+    * ([[autoRowsPerBand]] of the stats pass's count) — a fixed width
     * goes quadratic when the corpus outgrows its bucket space. */
   def knnGraphQuantized(
       df: DataFrame,
@@ -568,20 +609,11 @@ object Similarity {
     require(rerankFactor >= 1 && rerankFactor <= 64,
       s"rerankFactor must be in [1, 64], got $rerankFactor")
     require(dim >= 1, s"dim must be >= 1, got $dim")
-    val rpb = resolveRowsPerBand(df, rowsPerBand, bands)
-    val params = collectParams(sq8Params(df.select(col(vecCol)), vecCol, dim))
+    val (n, params) = corpusStats(df, vecCol, dim)
+    val rpb = resolveRowsPerBand(n, rowsPerBand, bands)
     val signed = quantizedBandedFrame(df, idCol, vecCol, bands, rpb, dim, params)
-    val codes = signed.select(col("id"), col("codes8"))
-    val vecs = signed.select(col("id"), col("vec"))
-    quantizedVerifyTopK(directedCandidates(signed), codes, codes, params, vecs, vecs,
-      k, rerankFactor)
+    quantizedVerifyTopK(directedCandidates(signed), signed, signed, params, k, rerankFactor)
   }
-
-  /** SQ8 codes as 1-byte elements — codes are 0..255, shifted to tinyint
-    * range so the array packs at 1 byte/element in Tungsten rows, the 8x
-    * payload cut the verify joins exist to exploit. */
-  private def sq8Codes8(vec: Column, mins: Column, widths: Column): Column =
-    transform(vec, (x, i) => (sq8Code(x, i, mins, widths) - lit(128)).cast("tinyint"))
 
   /** Shared SQ8-verify tail of the quantized kNN family: ADC-score the
     * candidate pairs on 1-byte codes, window to the per-node
@@ -590,19 +622,21 @@ object Similarity {
     * .Sq8AdcCosine]] (dequantize + three inner products in ONE
     * codegen'd allocation-free loop — a dequantizing `transform` HOF
     * here runs interpreted per element and costs ~4x wall, measured)
-    * against the collected params; the projection to (id, nbr,
-    * qcos) collapses the payload BEFORE the survivor window's
-    * exchange, and only n·k·rerankFactor rows ever touch raw vectors.
-    * The `id` and `nbr` sides take their codes and vectors from separate
-    * frames: the same frame for a self-graph, the batch and the standing
-    * corpus for the incremental probe. */
+    * against the collected params, and only n·k·rerankFactor rows ever
+    * touch raw vectors ([[exactTopK]]).
+    *
+    * One shuffle: the `candidates` arrive shuffled by `id` and deduped
+    * there ([[byId]]); every payload join broadcasts and keeps that
+    * partitioning, so the survivor window and the exact window plan no
+    * exchange of their own. The `id` and `nbr` sides take their codes and
+    * vectors from `(id, codes8, vec)` frames: the same frame for a
+    * self-graph, whose nbr-side broadcasts then reuse the id side's, the
+    * batch and the standing corpus for the incremental probe. */
   private def quantizedVerifyTopK(
       candidates: DataFrame,
-      idCodes: DataFrame,
-      nbrCodes: DataFrame,
+      idSide: DataFrame,
+      nbrSide: DataFrame,
       params: Sq8Row,
-      idVecs: DataFrame,
-      nbrVecs: DataFrame,
       k: Int,
       rerankFactor: Int
   ): DataFrame = {
@@ -612,23 +646,15 @@ object Similarity {
         ColumnBridge.expression(a), ColumnBridge.expression(b),
         ColumnBridge.expression(params.mins), ColumnBridge.expression(params.widths)))
     }
-    val qcos = candidates
-      .join(idCodes, Seq("id"))
-      .join(nbrCodes.select(col("id").as("nbr"), col("codes8").as("__cb")), Seq("nbr"))
-      .select(col("id"), col("nbr"),
-        adcCosine(col("codes8"), col("__cb")).as("qcos"))
     val wq = Window.partitionBy("id").orderBy(col("qcos").desc, col("nbr").asc)
-    val survivors = qcos.withColumn("__qrank", row_number().over(wq))
+    val survivors = candidates
+      .join(payloadSide(idSide, "codes8", "__ia", "__ca"), col("id") === col("__ia"))
+      .join(payloadSide(nbrSide, "codes8", "__ib", "__cb"), col("nbr") === col("__ib"))
+      .select(col("id"), col("nbr"), adcCosine(col("__ca"), col("__cb")).as("qcos"))
+      .withColumn("__qrank", row_number().over(wq))
       .where(col("__qrank") <= k * rerankFactor)
       .select("id", "nbr")
-    val w = Window.partitionBy("id").orderBy(col("cosine").desc, col("nbr").asc)
-    survivors
-      .join(idVecs, Seq("id"))
-      .join(nbrVecs.select(col("id").as("nbr"), col("vec").as("__vb")), Seq("nbr"))
-      .withColumn("cosine", cosine(col("vec"), col("__vb")))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("id", "nbr", "cosine", "rank")
+    exactTopK(survivors, idSide, nbrSide, k)
   }
 
   /** Persisted quantized kNN-graph index — the three frames the
@@ -650,9 +676,10 @@ object Similarity {
     *     the build collected once ([[graft.sources.IndexStore.writeTable]]
     *     sidecar, collected once more at probe time).
     *
-    * The build scans the input for the params aggregate and for ONE
-    * checkpoint of `(id, vec, buckets, codes8)`; banding and payload
-    * are both projections of it.
+    * The build scans the input twice: ONE native stats pass (the row
+    * count for the auto width and the SQ8 params, [[knnGraphQuantized]]'s
+    * first execution) and ONE checkpoint of `(id, vec, buckets, codes8)`;
+    * banding and payload are both projections of it.
     *
     * The SQ8 ranges FREEZE at build time (the IVF frozen-centroid
     * rule): appended or probed vectors outside the trained range clamp
@@ -673,14 +700,13 @@ object Similarity {
       bands: Int = 4
   ): (DataFrame, DataFrame, DataFrame) = {
     require(dim >= 1, s"dim must be >= 1, got $dim")
-    val rpb = resolveRowsPerBand(df, rowsPerBand, bands)
-    val params = sq8Params(df.select(col(vecCol)), vecCol, dim)
-    val collected = collectParams(params)
-    val signed = quantizedBandedFrame(df, idCol, vecCol, bands, rpb, dim, collected)
+    val (n, params) = corpusStats(df, vecCol, dim)
+    val rpb = resolveRowsPerBand(n, rowsPerBand, bands)
+    val signed = quantizedBandedFrame(df, idCol, vecCol, bands, rpb, dim, params)
     val banding = bkeyRows(signed, bands, rpb, "knnGraphIndex")
     val payload = signed.select(col("id"), col("codes8"), col("vec"))
     val paramsRow = df.sparkSession.createDataFrame(
-      java.util.Collections.singletonList(collected.row), params.schema)
+      java.util.Collections.singletonList(params.row), graft.functions.Sq8Stats.Schema).drop("n")
     (banding, payload, paramsRow)
   }
 
@@ -697,7 +723,9 @@ object Similarity {
     * codes (frozen params collected once — out-of-range batch values clamp,
     * the documented SQ8 rule); the candidate equi-join on `bkey` needs
     * no index-side exchange when `banding` is the bucketed read-back;
-    * verify ships 1-byte codes; raw vectors are touched only by the
+    * the candidates then shuffle once, by batch `id`, for the shared
+    * verify tail ([[quantizedVerifyTopK]]), which ships 1-byte codes;
+    * raw vectors are touched only by the
     * batch rows and the <= batch·k·rerankFactor survivor joins. The
     * standing corpus is never re-scanned beyond its banded candidates.
     *
@@ -727,16 +755,10 @@ object Similarity {
       s"wrong buckets), got $rowsPerBand")
     val frozen = collectParams(params)
     val qsigned = quantizedBandedFrame(batch, idCol, vecCol, bands, rowsPerBand, dim, frozen)
-    val candidates = bkeyRows(qsigned, bands, rowsPerBand, "knnGraphAgainstIndex")
+    val candidates = byId(bkeyRows(qsigned, bands, rowsPerBand, "knnGraphAgainstIndex")
       .join(banding.select(col("bkey"), col("id").as("nbr")), Seq("bkey"))
-      .where(col("id") =!= col("nbr"))
-      .select("id", "nbr")
-      .dropDuplicates("id", "nbr")
-    quantizedVerifyTopK(candidates,
-      qsigned.select(col("id"), col("codes8")), payload.select(col("id"), col("codes8")),
-      frozen, qsigned.select(col("id"), col("vec")),
-      payload.select(col("id"), col("vec")),
-      k, rerankFactor)
+      .where(col("id") =!= col("nbr")))
+    quantizedVerifyTopK(candidates, qsigned, payload, frozen, k, rerankFactor)
   }
 
   /** SemDeDup-style semantic near-duplicate pairs (Abbas et al. 2023,
@@ -1891,40 +1913,24 @@ object Similarity {
 
   /** Per-dimension SQ8 range parameters: ONE row
     * `(mins: array<double>, widths: array<double>)` with
-    * `widths[d] = max_d - min_d`. The per-dimension min/max aggregate is
-    * map-side combined (shuffle volume: `dim` rows per map task) and the
-    * final fold to one row is `dim` rows — at 100 TB the parameter table
-    * is a few KB riding a broadcast, the FAISS `SQ8` train step. */
-  def sq8Params(df: DataFrame, vecCol: String, dim: Int): DataFrame = {
-    require(dim >= 1, s"dim must be >= 1, got $dim")
-    // `dim` is ENFORCED, not advisory: a ragged vector (or a caller
-    // passing the wrong dim) would otherwise yield silently mismatched
-    // mins/widths that sq8Encode/sq8TopKForQueries consume without
-    // complaint — fail the job at the first offending row instead.
-    // NULL vectors keep their pre-r13 behavior (the posexplode drops
-    // the row; params come from the non-null rows) — the isNull arm
-    // must come FIRST, because size(NULL) is NULL and would otherwise
-    // fall into the raise_error branch with a useless null message.
-    val checked = when(col(vecCol).isNull, lit(null).cast("array<double>"))
-      .when(size(col(vecCol)) === dim,
-        col(vecCol).cast("array<double>"))
-      .otherwise(raise_error(concat(
-        lit(s"sq8Params: expected dim=$dim vectors, got size="),
-        size(col(vecCol)).cast("string"))))
-    val perDim = df
-      .select(posexplode(checked).as(Seq("pos", "x")))
-      .groupBy("pos").agg(min("x").as("mn"), max("x").as("mx"))
-    perDim
-      .agg(array_sort(collect_list(struct(col("pos"), col("mn"), col("mx")))).as("pm"))
-      .select(
-        transform(col("pm"), s => s.getField("mn")).as("mins"),
-        transform(col("pm"), s => s.getField("mx") - s.getField("mn")).as("widths"))
-  }
+    * `widths[d] = max_d - min_d`, a projection of the native
+    * [[graft.functions.Sq8Stats]] aggregate: `dim` primitive (min, max)
+    * pairs per task, map-side combined (shuffle volume: one buffer per
+    * map task) — at 100 TB the parameter table is a few KB riding a
+    * broadcast, the FAISS `SQ8` train step. Spark `min`/`max` semantics
+    * (NaN largest, null elements skipped); NULL vectors drop out; no
+    * vector at all gives empty arrays; a non-null vector whose length is
+    * not `dim` fails the job (`dim` is enforced, not advisory — a ragged
+    * corpus would otherwise yield silently mismatched params). */
+  def sq8Params(df: DataFrame, vecCol: String, dim: Int): DataFrame =
+    df.select(sq8Stats(col(vecCol), dim).as("s"))
+      .select(col("s.mins").as("mins"), col("s.widths").as("widths"))
 
   /** SQ8 encode: each dimension rounds to its nearest of 256 uniform
     * levels across the corpus range — `code = floor((x-min)/width*255
     * + 0.5)` clamped to [0, 255], degenerate (width 0) dimensions code
-    * to 0. A scan-speed projection over a broadcast parameter row.
+    * to 0. A scan-speed projection over a broadcast parameter row: one
+    * native [[graft.functions.Sq8Codes]] loop per vector.
     * Codes are logically uint8: parquet dictionary/bit-pack encoding
     * stores the 0..255 int elements at ~1 byte, so the persisted index
     * is ~4x smaller than fp32 (the point of SQ8 — scan bandwidth at
@@ -1937,15 +1943,17 @@ object Similarity {
   ): DataFrame =
     df.crossJoin(broadcast(params))
       .select(col(idCol).as("id"),
-        transform(col(vecCol), (x, i) => sq8Code(x, i, col("mins"), col("widths"))).as("codes"))
+        sq8Codes(col(vecCol), col("mins"), col("widths"), shifted = false).as("codes"))
 
-  /** The SQ8 code of element `x` at index `i` against the params arrays. */
-  private def sq8Code(x: Column, i: Column, mins: Column, widths: Column): Column = {
-    val mn = element_at(mins, i + 1)
-    val wd = element_at(widths, i + 1)
-    when(wd === 0.0, lit(0)).otherwise(
-      least(lit(255.0), greatest(lit(0.0),
-        floor((x.cast("double") - mn) / wd * lit(255.0) + lit(0.5)))).cast("int"))
+  /** The native [[graft.functions.Sq8Codes]] encode of a vector column:
+    * `int` codes 0..255, or with `shifted` the 1-byte `code - 128`
+    * elements the quantized kNN ships (8x under `double` in Tungsten
+    * rows, the payload cut its verify joins exist to exploit). */
+  private def sq8Codes(vec: Column, mins: Column, widths: Column, shifted: Boolean): Column = {
+    import org.apache.spark.sql.graft.ColumnBridge
+    ColumnBridge.column(graft.functions.Sq8Codes(
+      ColumnBridge.expression(vec.cast("array<double>")), ColumnBridge.expression(mins),
+      ColumnBridge.expression(widths), shifted))
   }
 
   /** Asymmetric SQ8 top-k: full-precision queries score against

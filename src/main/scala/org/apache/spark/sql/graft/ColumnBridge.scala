@@ -32,11 +32,18 @@ object ListenerBridge {
     spark.sparkContext.listenerBus.waitUntilEmpty()
 }
 
-/** The exception `raise_error(msg)` throws — a `USER_RAISED_EXCEPTION`
-  * SparkRuntimeException, whose constructor is `private[spark]` — so a
-  * native expression's loud failure reads the same as the `raise_error`
-  * check it replaced. */
+/** The exceptions built-in checks throw — `raise_error(msg)`'s
+  * `USER_RAISED_EXCEPTION` SparkRuntimeException, whose constructor is
+  * `private[spark]`, and ANSI `element_at`'s out-of-bounds error — so a
+  * native expression's loud failure reads the same as the check it
+  * replaced. */
 object ErrorBridge {
   def userRaised(msg: String): RuntimeException =
     new org.apache.spark.SparkRuntimeException("USER_RAISED_EXCEPTION", Map("errorMessage" -> msg))
+
+  /** The ANSI `element_at(array, index)` error for a 1-based `index`
+    * past the array's `numElements`. */
+  def elementAtOutOfBounds(index: Int, numElements: Int): RuntimeException =
+    org.apache.spark.sql.errors.QueryExecutionErrors.invalidElementAtIndexError(
+      index, numElements, null)
 }

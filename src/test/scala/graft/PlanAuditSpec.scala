@@ -258,13 +258,20 @@ class PlanAuditSpec extends AnyFunSuite {
       s"the sink scan must carry a step partition filter:\n$p")
   }
 
-  test("a quantized kNN graph bands natively and scans its input three times") {
-    import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate, ZipWith}
+  test("a quantized kNN graph: three executions, two input scans, one verify shuffle") {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate, ArrayTransform,
+      LambdaFunction, ZipWith}
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.functions.{aggregate, col, lit, zip_with}
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec,
+      ShuffleExchangeExec}
+    import org.apache.spark.sql.functions.{aggregate, col, lit, transform, zip_with}
+    import org.apache.spark.sql.types.{ArrayType, ByteType, DoubleType}
     val input = spark.read.parquet(s"$sfDir/embeddings.parquet")
     def hofs(p: SparkPlan): Seq[String] = p.collect { case n => n.expressions }.flatten
-      .flatMap(_.collect { case e @ (_: ZipWith | _: ArrayAggregate) => e.prettyName })
+      .flatMap(_.collect {
+        case e @ (_: ZipWith | _: ArrayAggregate | _: ArrayTransform | _: LambdaFunction) =>
+          e.getClass.getSimpleName
+      })
     def scans(p: SparkPlan): Int = p.collect {
       case s: FileSourceScanExec if s.relation.location.rootPaths.exists(
         _.toString.endsWith("embeddings.parquet")) => s
@@ -286,18 +293,41 @@ class PlanAuditSpec extends AnyFunSuite {
       import scala.jdk.CollectionConverters._
       executed.asScala.toSeq
     }
-    // detector proofs: the HOF dot product plans both nodes, a count scans once
+    /** Broadcasts planned (not reused) whose rows carry an `elem` array. */
+    def broadcasts(p: SparkPlan, elem: org.apache.spark.sql.types.DataType): Int = p.collect {
+      case b: BroadcastExchangeExec if b.output.exists(_.dataType match {
+        case ArrayType(`elem`, _) => true
+        case _ => false
+      }) => b
+    }.size
+    // detector proofs: the HOF dot product and a transform plan every HOF
+    // node, a plain select scans once
     val hofDot = aggregate(zip_with(col("embedding"), col("embedding"), (a, b) => a * b),
       lit(0.0d), (acc, x) => acc + x)
-    val proof = executions(input.select(hofDot).collect())
-    assert(proof.flatMap(hofs).toSet == Set("zip_with", "aggregate"), "HOF detector is vacuous")
+    val proof = executions(input.select(hofDot, transform(col("embedding"), x => x + 1)).collect())
+    assert(proof.flatMap(hofs).toSet ==
+      Set("ZipWith", "ArrayAggregate", "ArrayTransform", "LambdaFunction"),
+      "HOF detector is vacuous")
     assert(proof.map(scans).sum == 1, "scan detector is vacuous")
     val plans = executions(graft.operators.Similarity.knnGraphQuantized(
       input, "vec_id", "embedding", k = 3, dim = 64).collect())
-    assert(plans.nonEmpty && plans.forall(hofs(_).isEmpty),
-      s"the banding must run in the native kernel: ${plans.flatMap(hofs)}")
-    assert(plans.map(scans).sum == 3,
-      s"count + params + checkpoint scan the input; saw ${plans.map(scans)} over " +
-        s"${plans.size} executions")
+    assert(plans.size == 3 && plans.forall(hofs(_).isEmpty),
+      s"stats + checkpoint + verify, every kernel native: ${plans.size} executions, " +
+        s"${plans.flatMap(hofs)}")
+    assert(plans.map(scans) == Seq(1, 1, 0),
+      s"the stats pass and the checkpoint scan the input; saw ${plans.map(scans)}")
+    val verify = plans.last
+    val shuffles = verify.collect { case s: ShuffleExchangeExec => s }
+    assert(shuffles.size == 1, s"the verify shuffles once, by id:\n$verify")
+    val keys = shuffles.head.outputPartitioning match {
+      case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning =>
+        h.references.map(_.name).toSet
+      case other => Set(other.toString)
+    }
+    assert(keys == Set("id"), s"the one shuffle is keyed by id: $keys")
+    assert(broadcasts(verify, ByteType) == 1 && broadcasts(verify, DoubleType) == 1,
+      s"the codes and the vectors are each broadcast once:\n$verify")
+    assert(verify.collect { case r: ReusedExchangeExec => r }.size == 2,
+      s"the nbr sides reuse both broadcasts:\n$verify")
   }
 }

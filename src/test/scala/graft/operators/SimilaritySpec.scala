@@ -674,6 +674,198 @@ class SimilaritySpec extends AnyFunSuite {
       s"edges must start at batch nodes only: $out")
   }
 
+  // ---- the two-shuffle kNN pipeline, kept as the reference ----------------
+  // As it shipped before the verify tails ran on one id-keyed exchange:
+  // params from a count plus the posexplode/min/max pipeline, 1-byte codes
+  // from the transform lambda, the candidate dedup shuffled by the pair and
+  // the windows by id, the payloads joined per side.
+
+  private object TwoShuffle {
+    import org.apache.spark.sql.{Column, DataFrame}
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+
+    def width(df: DataFrame, rowsPerBand: Int, bands: Int): Int =
+      if (rowsPerBand == 0) Similarity.autoRowsPerBand(math.max(df.count(), 1L), bands)
+      else rowsPerBand
+
+    def params(df: DataFrame, vecCol: String, dim: Int): (Column, Column) = {
+      val checked = when(col(vecCol).isNull, lit(null).cast("array<double>"))
+        .when(size(col(vecCol)) === dim, col(vecCol).cast("array<double>"))
+        .otherwise(raise_error(concat(
+          lit(s"sq8Params: expected dim=$dim vectors, got size="),
+          size(col(vecCol)).cast("string"))))
+      val row = df.select(posexplode(checked).as(Seq("pos", "x")))
+        .groupBy("pos").agg(min("x").as("mn"), max("x").as("mx"))
+        .agg(array_sort(collect_list(struct(col("pos"), col("mn"), col("mx")))).as("pm"))
+        .select(
+          transform(col("pm"), s => s.getField("mn")).as("mins"),
+          transform(col("pm"), s => s.getField("mx") - s.getField("mn")).as("widths"))
+        .head()
+      (typedLit(row.getSeq[Double](0)), typedLit(row.getSeq[Double](1)))
+    }
+
+    def codes8(vec: Column, mins: Column, widths: Column): Column =
+      transform(vec, (x, i) => {
+        val mn = element_at(mins, i + 1)
+        val wd = element_at(widths, i + 1)
+        (when(wd === 0.0, lit(0)).otherwise(
+          least(lit(255.0), greatest(lit(0.0),
+            floor((x.cast("double") - mn) / wd * lit(255.0) + lit(0.5)))).cast("int")) -
+          lit(128)).cast("tinyint")
+      })
+
+    def banded(df: DataFrame, bands: Int, rpb: Int, dim: Int,
+        params: Option[(Column, Column)]): DataFrame = {
+      val base = Seq(col("vec_id").as("id"), col("embedding").cast("array<double>").as("vec"),
+        Similarity.bandBuckets(col("embedding"), bands, rpb, dim).as("buckets"))
+      val codes = params.toSeq.map { case (m, w) =>
+        codes8(col("embedding").cast("array<double>"), m, w).as("codes8") }
+      df.select(base ++ codes: _*).localCheckpoint(true)
+    }
+
+    def bandRows(b: DataFrame): DataFrame =
+      b.select(col("id"), posexplode(col("buckets")).as(Seq("band", "bucket")))
+
+    def dedup(pairs: DataFrame): DataFrame =
+      pairs.where(col("id") =!= col("nbr")).select("id", "nbr").dropDuplicates("id", "nbr")
+
+    def candidates(b: DataFrame): DataFrame = {
+      val rows = bandRows(b)
+      dedup(rows.join(rows.select(col("band"), col("bucket"), col("id").as("nbr")),
+        Seq("band", "bucket")))
+    }
+
+    def exact(cands: DataFrame, idVecs: DataFrame, nbrVecs: DataFrame, k: Int): DataFrame = {
+      val w = Window.partitionBy("id").orderBy(col("cosine").desc, col("nbr").asc)
+      cands
+        .join(idVecs, Seq("id"))
+        .join(nbrVecs.select(col("id").as("nbr"), col("vec").as("__vb")), Seq("nbr"))
+        .withColumn("cosine", Similarity.cosine(col("vec"), col("__vb")))
+        .withColumn("rank", row_number().over(w))
+        .where(col("rank") <= k)
+        .select("id", "nbr", "cosine", "rank")
+    }
+
+    def verify(cands: DataFrame, idSide: DataFrame, nbrSide: DataFrame,
+        params: (Column, Column), k: Int, rerankFactor: Int): DataFrame = {
+      import org.apache.spark.sql.graft.ColumnBridge
+      val adc = ColumnBridge.column(graft.functions.Sq8AdcCosine(
+        ColumnBridge.expression(col("codes8")), ColumnBridge.expression(col("__cb")),
+        ColumnBridge.expression(params._1), ColumnBridge.expression(params._2)))
+      val wq = Window.partitionBy("id").orderBy(col("qcos").desc, col("nbr").asc)
+      val survivors = cands
+        .join(idSide.select(col("id"), col("codes8")), Seq("id"))
+        .join(nbrSide.select(col("id").as("nbr"), col("codes8").as("__cb")), Seq("nbr"))
+        .select(col("id"), col("nbr"), adc.as("qcos"))
+        .withColumn("__qrank", row_number().over(wq))
+        .where(col("__qrank") <= k * rerankFactor)
+        .select("id", "nbr")
+      exact(survivors, idSide.select(col("id"), col("vec")),
+        nbrSide.select(col("id"), col("vec")), k)
+    }
+
+    def knnGraph(df: DataFrame, k: Int, dim: Int, rowsPerBand: Int, bands: Int): DataFrame = {
+      val b = banded(df, bands, width(df, rowsPerBand, bands), dim, None)
+      val vecs = b.select(col("id"), col("vec"))
+      exact(candidates(b), vecs, vecs, k)
+    }
+
+    def knnGraphQuantized(df: DataFrame, k: Int, dim: Int, rowsPerBand: Int, bands: Int,
+        rerankFactor: Int): DataFrame = {
+      val rpb = width(df, rowsPerBand, bands)
+      val p = params(df, "embedding", dim)
+      val b = banded(df, bands, rpb, dim, Some(p))
+      verify(candidates(b), b, b, p, k, rerankFactor)
+    }
+
+    def knnGraphAgainstIndex(standing: DataFrame, batch: DataFrame, k: Int, dim: Int,
+        rowsPerBand: Int, bands: Int, rerankFactor: Int): DataFrame = {
+      val p = params(standing, "embedding", dim)
+      def bkeys(b: DataFrame) = bandRows(b).select(
+        (col("band").cast("long") * lit(1L << rowsPerBand) + col("bucket")).as("bkey"), col("id"))
+      val index = banded(standing, bands, rowsPerBand, dim, Some(p))
+      val probe = banded(batch, bands, rowsPerBand, dim, Some(p))
+      val cands = dedup(bkeys(probe)
+        .join(bkeys(index).select(col("bkey"), col("id").as("nbr")), Seq("bkey")))
+      verify(cands, probe, index, p, k, rerankFactor)
+    }
+  }
+
+  /** Ids 0..39 random; 40..47 exact copies of 0..7 (cosine and qcos ties);
+    * 48..55 copies of 8..15 nudged below one SQ8 level (qcos ties, distinct
+    * cosines); 56..59 doubled copies; two NULL vectors; and, for the
+    * operators that accept them, two empty vectors. */
+  private def knnCorpus(dim: Int, withEmpty: Boolean, seed: Int) = {
+    val rnd = new scala.util.Random(seed)
+    val base = (0L until 40L).map(i => i -> Seq.fill(dim)(rnd.nextGaussian()))
+    val copies = (0 until 8).map(i => (40L + i) -> base(i)._2)
+    val nudged = (8 until 16).map(i => (40L + i) -> base(i)._2.map(_ + 1e-9))
+    val doubled = (16 until 20).map(i => (40L + i) -> base(i)._2.map(_ * 2))
+    val rows = (base ++ copies ++ nudged ++ doubled).map { case (i, v) => Row(i, v) } ++
+      Seq(Row(60L, null), Row(61L, null)) ++
+      (if (withEmpty) Seq(Row(62L, Seq.empty[Double]), Row(63L, Seq.empty[Double])) else Nil)
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 3),
+      StructType(Seq(StructField("vec_id", LongType),
+        StructField("embedding", ArrayType(DoubleType)))))
+  }
+
+  /** The sorted edge rows, or the condition of the deepest Spark error. */
+  private def outcome(df: => org.apache.spark.sql.DataFrame): Either[String, Seq[Row]] =
+    try Right(df.collect().toSeq.sortBy(r => (r.getLong(0), r.getInt(3))))
+    catch { case e: Exception =>
+      Left(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collect { case t: org.apache.spark.SparkThrowable => t.getCondition }.toSeq.last)
+    }
+
+  test("kNN verify on one id-keyed shuffle: rows equal the two-shuffle pipeline") {
+    import org.apache.spark.sql.functions.col
+    val dim = 4
+    // (rowsPerBand, bands, k, rerankFactor): many shared bands so
+    // candidates repeat; wide bands so nodes hold fewer than k candidates;
+    // the auto width
+    val configs = Seq((2, 6, 3, 2), (8, 2, 5, 1), (0, 4, 4, 4))
+    var sawRepeats, sawShort, sawTies = false
+    for ((rpb, bands, k, rf) <- configs; withEmpty <- Seq(false, true)) {
+      val what = s"rowsPerBand=$rpb bands=$bands k=$k rerankFactor=$rf empty=$withEmpty"
+      val corpus = knnCorpus(dim, withEmpty, seed = 21)
+      val standing = corpus.where(col("vec_id") % 3 =!= 0)
+      val batch = corpus.where(col("vec_id") % 3 === 0)
+      val probeWidth = if (rpb == 0) 4 else rpb
+      val outcomes = Seq(
+        "knnGraph" -> (outcome(Similarity.knnGraph(corpus, "vec_id", "embedding", k, dim,
+          rpb, bands)), outcome(TwoShuffle.knnGraph(corpus, k, dim, rpb, bands))),
+        "knnGraphQuantized" -> (outcome(Similarity.knnGraphQuantized(corpus, "vec_id",
+          "embedding", k, dim, rpb, bands, rf)),
+          outcome(TwoShuffle.knnGraphQuantized(corpus, k, dim, rpb, bands, rf))),
+        "knnGraphAgainstIndex" -> (outcome {
+          val (banding, payload, params) = Similarity.knnGraphIndex(standing, "vec_id",
+            "embedding", dim, probeWidth, bands)
+          Similarity.knnGraphAgainstIndex(banding, payload, params, batch, "vec_id",
+            "embedding", k, dim, probeWidth, bands, rf)
+        }, outcome(TwoShuffle.knnGraphAgainstIndex(standing, batch, k, dim, probeWidth,
+          bands, rf))))
+      for ((op, (fast, ref)) <- outcomes) {
+        assert(fast == ref, s"$op $what")
+        // empty vectors fail both (a zero norm divides under ANSI; the
+        // quantized dim check); NULL vectors only drop out
+        if (!withEmpty) assert(ref.isRight, s"$op $what: $ref")
+        ref.foreach { edges =>
+          val perNode = edges.groupBy(_.getLong(0))
+          sawShort ||= perNode.values.exists(_.size < k)
+          sawTies ||= perNode.values.exists(es => es.map(_.getDouble(2)).distinct.size < es.size)
+        }
+      }
+      val rows = TwoShuffle.bandRows(TwoShuffle.banded(corpus, bands,
+        TwoShuffle.width(corpus, rpb, bands), dim, None))
+      sawRepeats ||= rows.join(rows.withColumnRenamed("id", "nbr"), Seq("band", "bucket"))
+        .where("id < nbr").groupBy("id", "nbr").count().where("count > 1").head(1).nonEmpty
+    }
+    assert(sawRepeats && sawShort && sawTies,
+      s"corpus must exercise repeated candidates ($sawRepeats), nodes short of k " +
+        s"($sawShort) and cosine ties ($sawTies)")
+  }
+
   test("hubness: k-occurrence counts with anti-hubs kept at zero") {
     import spark.implicits._
     val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 2L))

@@ -27,8 +27,9 @@ def record(queries):
 
 class BenchGateCheckTest(unittest.TestCase):
 
-    def run_check(self, gates, candidate):
-        """gates: {round: {entry: seconds}}; returns (exit code, stdout)."""
+    def run_check(self, gates, candidate, harness=None):
+        """gates: {round: {entry: seconds}}; harness: extra keys of the
+        candidate record; returns (exit code, stdout)."""
         with tempfile.TemporaryDirectory() as root:
             os.mkdir(os.path.join(root, "tools"))
             shutil.copy(CHECKER, os.path.join(root, "tools"))
@@ -37,7 +38,7 @@ class BenchGateCheckTest(unittest.TestCase):
                     json.dump(record(qs), f)
             cand = os.path.join(root, "candidate.json")
             with open(cand, "w") as f:
-                json.dump(record(candidate), f)
+                json.dump({**record(candidate), **(harness or {})}, f)
             p = subprocess.run(
                 [sys.executable, os.path.join(root, "tools", "bench_gate_check.py"),
                  cand, "--no-git"],
@@ -67,6 +68,15 @@ class BenchGateCheckTest(unittest.TestCase):
                                    {"a": 3.0, "b": 1.0})
         self.assertEqual(code, 0, out)
         self.assertIn("floor    2.00s", out)
+
+    def test_record_with_harness_keys_passes(self):
+        # graft.Bench records carry the resolved cores, parallelism and heap
+        harness = {"cpus": 4, "default_parallelism": 4, "xmx_gb": 8.59,
+                   "sf": "/data/sf0.1"}
+        code, out = self.run_check({18: {"a": 1.0, "b": 2.0}}, {"a": 1.5, "b": 2.5},
+                                   harness)
+        self.assertEqual(code, 0, out)
+        self.assertNotIn("FAILED", out)
 
     def test_regression_over_2x_fails(self):
         code, out = self.run_check({18: {"a": 1.0, "b": 2.0}}, {"a": 2.5, "b": 2.0})
