@@ -2672,11 +2672,12 @@ object QueryCatalog {
     }),
     // Cluster-id materialization: connected-component label (min reachable
     // doc_id) per doc via large-star/small-star contraction over the pair
-    // graph. On THIS corpus every near-dup component is a clique (the
-    // dedup_drop_exact structure check), so one contraction round reaches
-    // the fixpoint and cluster_id = least(doc_id, min(direct neighbor)) —
-    // giving the iterative operator a single-join exact SQL twin. Chain
-    // semantics (where the twin would NOT hold) are pinned by DedupSpec.
+    // graph, stopped by the exact star-forest test. On THIS corpus every
+    // near-dup component is a clique (the dedup_drop_exact structure
+    // check), so the contraction runs at most one round and cluster_id =
+    // least(doc_id, min(direct neighbor)) — giving the iterative operator
+    // a single-join exact SQL twin. Chain semantics (where the twin would
+    // NOT hold) are pinned by DedupSpec and DedupPropertiesSpec.
     "dedup_clusters" -> ((s, dir) => {
       val docs0 = documents(s, dir)
       val pairs = Dedup.jaccardPairsPrefix(docs0, "doc_id", "text", n = 3, threshold = 0.8)

@@ -724,10 +724,10 @@ object Communities {
     * is the COMPONENT-MINIMUM node id — the general-graph face of the
     * dedup pipeline's cluster machinery ([[Dedup.duplicateClusters]]'s
     * large-star/small-star contraction, O(log n) rounds over the edge
-    * list, probabilistic digest fixpoint — see that scaladoc for the
-    * collision bound). Isolated nodes never appear in an edge list, so
-    * every input node is emitted and labels are well-defined component
-    * minima on convergence — which is what makes a fixed-unroll
+    * list, stopped by an exact star-forest test — see that scaladoc for
+    * the round counts). Isolated nodes never appear in an edge list, so
+    * every input node is emitted and labels are exact component minima
+    * — which is what makes a fixed-unroll
     * min-propagation SQL replica exact once unrolled past the graph's
     * propagation depth.
     *

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.CheckpointBridge
+import org.apache.spark.sql.graft.{CheckpointBridge, ColumnBridge}
 
 /** Document deduplication for large-scale training-data pipelines.
   *
@@ -15,16 +15,17 @@ import org.apache.spark.sql.graft.CheckpointBridge
   *     -> bucket join -> exact-signature Jaccard confirm),
   *   - SimHash (64-bit, hamming-bucket by band).
   *
-  * Everything is pure `functions._` column algebra (codegen'd) — no UDFs.
-  * Token hashing uses `xxhash64`, seeded per hash function, so signatures
-  * are deterministic across runs and cluster layouts.
+  * Everything is `functions._` column algebra or a native Catalyst
+  * kernel (codegen'd) — no UDFs. Token hashing uses `xxhash64`, seeded
+  * per hash function, so signatures are deterministic across runs and
+  * cluster layouts.
   *
   * The pair operators are compositions of a few shared stages, each
   * written once: [[shingleIndex]] (the inverted `(id, set_size,
   * shingle)` rows), `capDf` (the `maxDf` hot-key cap), `sharedCounts`
   * (the shared-shingle self-join count), `probeCounts` (a batch probed
   * against a corpus index), and `minHashes` / `bandCandidates` (the
-  * MinHash signature aggregate and its LSH band join). Each pair operator
+  * MinHash signature projection and its LSH band join). Each pair operator
   * checkpoints the index or signature table its join sides share
   * (`localCheckpoint`) when the DataFrame is built, so a Spark job runs
   * at construction time; there is no lazy mode.
@@ -132,22 +133,20 @@ object Dedup {
     * argument), checkpointed to keep plans flat; `maxIter` still guards
     * the loop but the log bound means it never binds in practice.
     *
-    * On clique-shaped components (exact-dup groups; this corpus's
-    * near-dup components — see the dedup_drop_exact catalog note) one
-    * round reaches the fixpoint and the result equals the one-join SQL
-    * `least(id, min(neighbor id))`, which is what makes a catalog oracle
-    * possible. Chains exercise the real contraction and have no
-    * single-join SQL twin; chain cases are pinned by DedupSpec instead.
-    *
-    * Convergence detection is PROBABILISTIC: the per-round fixpoint test
-    * compares (count, two xor-folded row digests from different hash
-    * families) rather than running an exact `except()` — a digest
-    * collision would terminate contraction one round early and emit a
-    * not-yet-minimal label. The collision probability is ~2^-96 per
-    * round (64-bit xxhash64 + 32-bit Murmur3, independent families),
-    * negligible against any realistic corpus; callers that need the
-    * exact guarantee can re-run with the output fed back as pairs and
-    * assert labels are already stable. */
+    * The loop stops on an EXACT test, run on the initial edge set and
+    * after every round: the canonical `(child > parent)` edge set is a
+    * star forest iff no node has two parents and no parent is also a
+    * child (one group-by-node aggregate, `isStarForest`). A star forest
+    * is the alternation's only fixpoint, and in it every child points at
+    * its component minimum, so the labels are read off the edges then.
+    * Round counts: pairs that already form stars (disjoint pairs, a star
+    * centred on its minimum) run 0 rounds; clique-shaped components
+    * (exact-dup groups; this corpus's near-dup components — see the
+    * dedup_drop_exact catalog note) run 1, and the result equals the
+    * one-join SQL `least(id, min(neighbor id))`, which is what makes a
+    * catalog oracle possible. Chains exercise the real contraction and
+    * have no single-join SQL twin; chain cases are pinned by DedupSpec
+    * and DedupPropertiesSpec instead. */
   def duplicateClusters(
       df: DataFrame, idCol: String, pairs: DataFrame, maxIter: Int = 50): DataFrame = {
     // the output column is part of the contract; internal state columns
@@ -156,7 +155,7 @@ object Dedup {
     require(!df.columns.contains("cluster_id"),
       "duplicateClusters: input already has a cluster_id column")
     // canonical child>parent orientation; self-loops and duplicate pairs
-    // are normalized away up front so set-equality is the fixpoint test
+    // are normalized away up front so the star test counts parents
     // the INITIAL checkpoint evaluates the caller's whole pair plan (a
     // FastSS join, an inverted-index self-join, ...) and stores its
     // result; serialized storage keeps that unroll from competing with
@@ -171,25 +170,8 @@ object Dedup {
       .distinct()
       .localCheckpoint(true,
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    // one-job set digest: (count, xor of two row hashes from DIFFERENT
-    // hash families — 64-bit xxHash64 and 32-bit Murmur3 — so a single
-    // family's collision structure can't defeat both). The xor is
-    // order/partitioning-independent and, because the edge set is
-    // DISTINCT, equal digests mean equal sets up to a ~2^-96 random
-    // collision (see the scaladoc's probabilistic-convergence note) —
-    // replacing the previous `next.except(edges).isEmpty` fixpoint
-    // test, which cost a full extra shuffle of BOTH edge sets per
-    // round on top of the count job.
-    def digest(d: DataFrame): (Long, Long, Long) = {
-      val r = d.agg(count(lit(1)),
-        coalesce(expr("bit_xor(xxhash64(__dc_c, __dc_p))"), lit(0L)),
-        coalesce(expr("bit_xor(cast(hash(__dc_c, __dc_p) as bigint))"), lit(0L))).head()
-      (r.getLong(0), r.getLong(1), r.getLong(2))
-    }
-    var edgeDigest = digest(edges)
-    var stable = edgeDigest._1 == 0L
     var iter = 0
-    while (!stable) {
+    while (!isStarForest(edges)) {
       if (iter >= maxIter)
         throw new IllegalStateException(
           s"duplicateClusters: no convergence after $maxIter rounds")
@@ -216,26 +198,32 @@ object Dedup {
         .where(col("__dc_c") =!= col("__dc_p"))
         .distinct()
         .localCheckpoint(true)
-      // fixpoint = the (distinct, canonical) edge set is unchanged; the
-      // only fixpoint of the alternation is a star forest, so on
-      // convergence every child carries exactly its component-min root
-      val nextDigest = digest(next)
-      stable = nextDigest == edgeDigest
       // both intermediates are superseded; nothing reads them again
       CheckpointBridge.release(edges)
       CheckpointBridge.release(large)
       edges = next
-      edgeDigest = nextDigest
       iter += 1
     }
-    // at the fixpoint each child has a single parent (star forest); the
-    // min() is a belt-and-braces guard so a bug upstream could never
-    // row-multiply the corpus through the final join
-    val labels = edges.groupBy("__dc_c").agg(min("__dc_p").as("__dc_label"))
-    df.join(labels.select(col("__dc_c").as(idCol), col("__dc_label")), Seq(idCol), "left")
+    // a star forest: each child has exactly one parent, its component
+    // minimum, so the join cannot multiply a corpus row
+    val labels = edges.select(col("__dc_c").as(idCol), col("__dc_p").as("__dc_label"))
+    df.join(labels, Seq(idCol), "left")
       .select(df.columns.map(col).toIndexedSeq :+
         coalesce(col("__dc_label"), col(idCol)).as("cluster_id"): _*)
   }
+
+  /** Whether a canonical `(__dc_c > __dc_p)` edge set is a star forest:
+    * no node has two parents and no parent is also a child. Each edge
+    * gives its child a parent count of 1 and its parent a parent flag of
+    * 1; a node breaks the star shape iff its count plus its flag exceeds
+    * 1. One scan and one group-by-node aggregate, counted on the driver. */
+  private def isStarForest(edges: DataFrame): Boolean =
+    edges.select(inline(array(
+        struct(col("__dc_c").as("__dc_n"), lit(1).as("__dc_up"), lit(0).as("__dc_down")),
+        struct(col("__dc_p").as("__dc_n"), lit(0).as("__dc_up"), lit(1).as("__dc_down")))))
+      .groupBy("__dc_n").agg((sum("__dc_up") + max("__dc_down")).as("__dc_roles"))
+      .where(col("__dc_roles") > 1)
+      .agg(count(lit(1))).head().getLong(0) == 0L
 
   /** Cluster-size distribution of a [[duplicateClusters]] labeling —
     * the release-review audit table: `(cluster_size, n_clusters,
@@ -798,15 +786,17 @@ object Dedup {
   /** MinHash signature: `numHashes` independent 64-bit minima over the
     * shingle set. Hash i of shingle s = xxhash64(s, i) (seeded, stateless).
     *
-    * Shape matters here: the naive formulation — numHashes x
-    * `array_min(transform(shingles, ...))` — re-evaluates the shingle-set
-    * expression once per hash function, and higher-order functions run
-    * interpreted (outside whole-stage codegen), which measured 32x slower
-    * than this explode + hash-aggregate: one shingle computation per row,
-    * then `min(xxhash64(shingle, i))` per hash as codegen'd map-side-
-    * combined aggregates. Shuffle volume is one row per document (the
-    * signature), which is also the right 100 TB shape — at scale, persist
-    * this output as the signature index. */
+    * Shape: one narrow projection, the native
+    * [[graft.functions.MinHashSignature]] kernel per row — each shingle is
+    * hashed once and chained once per hash function, with no shuffle
+    * (`array_min(transform(...))` per hash would run interpreted, and
+    * re-read the set once per hash). At 100 TB, persist this output as
+    * the signature index.
+    *
+    * One row per input row whose shingle set is non-empty (NULL text is
+    * the empty string, see [[tokenSet]]; a set with no shingle has no
+    * signature). Ids are expected unique: rows sharing an id are not
+    * merged, and each keeps its own signature. */
   def minHashSignatures(
       df: DataFrame,
       idCol: String,
@@ -816,17 +806,12 @@ object Dedup {
   ): DataFrame =
     minHashes(shingleSets(df, idCol, textCol, shingleN), numHashes)
 
-  /** The MinHash signature aggregate over an `(id, sh)` shingle-set frame:
-    * `(id, signature)`, one row per document. */
-  private def minHashes(sets: DataFrame, numHashes: Int): DataFrame = {
-    val mins = (0 until numHashes).map(i =>
-      min(xxhash64(col("__shingle"), lit(i))).as(s"__h_$i"))
-    sets.select(col("id"), explode(col("sh")).as("__shingle"))
-      .groupBy("id")
-      .agg(mins.head, mins.tail: _*)
-      .select(col("id"),
-        array((0 until numHashes).map(i => col(s"__h_$i")): _*).as("signature"))
-  }
+  /** The MinHash signatures of an `(id, sh, set_size)` shingle-set frame:
+    * `(id, signature)`, one row per non-empty set. */
+  private def minHashes(sets: DataFrame, numHashes: Int): DataFrame =
+    sets.where(col("set_size") > 0).select(col("id"),
+      ColumnBridge.column(graft.functions.MinHashSignature(
+        ColumnBridge.expression(col("sh")), numHashes)).as("signature"))
 
   /** LSH band-candidate pairs of a MinHash signature frame: each of
     * `bands` bands of `numHashes / bands` positions hashes to one bucket,
@@ -928,7 +913,8 @@ object Dedup {
   /** SimHash over the token set: bit j of the hash is 1 iff the sum over
     * tokens of sign(bit j of tokHash(token)) is positive.
     *
-    * Shape lesson (same as [[minHashSignatures]]): nBits interpreted
+    * Shape lesson (the one [[minHashSignatures]] learned before its
+    * native kernel): nBits interpreted
     * `aggregate(transform(...))` higher-order functions re-evaluated the
     * token set per bit; exploding tokens once and summing ±1 per bit as
     * nBits codegen'd map-side-combined aggregates is an order of

@@ -524,6 +524,10 @@ object Similarity {
     * bounded by the S-curve's bucket volumes, the same bound the pair
     * operator's verify stage already accepts.
     *
+    * A NULL vector has no edges; an empty vector fails the call (the
+    * `USER_RAISED_EXCEPTION` "expected dim=... vectors, got size=0" that
+    * [[knnGraphQuantized]] raises), since it has no cosine.
+    *
     * AT SCALE prefer [[knnGraphQuantized]]: this variant's verify joins
     * ship the raw 8·dim-byte vectors per candidate row, which is the
     * measured spill bound a decade up; the quantized twin ships 1-byte
@@ -543,7 +547,12 @@ object Similarity {
   ): DataFrame = {
     require(k >= 1 && k <= 1000, s"k must be in [1, 1000], got $k")
     val rpb = resolveRowsPerBand(df.count(), rowsPerBand, bands)
-    val signed = bandedFrame(df, idCol, vecCol, bands, rpb, dim)
+    // an empty vector has no cosine (a zero norm divides): reject it in
+    // the checkpoint, as knnGraphQuantized's stats pass does
+    val signed = bandedProjection(df, idCol, vecCol, bands, rpb, dim)
+      .withColumn("vec", when(size(col("vec")) === 0, raise_error(
+        lit(s"knnGraph: expected dim=$dim vectors, got size=0"))).otherwise(col("vec")))
+      .localCheckpoint(true)
     exactTopK(directedCandidates(signed), signed, signed, k)
   }
 

@@ -29,6 +29,24 @@ class PlanAuditSpec extends AnyFunSuite {
 
   private def q(name: String): DataFrame = QueryCatalog.queries(name)(spark, sfDir)
 
+  /** The SQL executions `body` starts (AQE off), and its result. */
+  private def countExecutions[T](body: => T): (Int, T) = {
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case _: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart => n.incrementAndGet()
+        case _ =>
+      }
+    }
+    org.apache.spark.sql.graft.ListenerBridge.waitUntilListenerBusEmpty(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try withConf("spark.sql.adaptive.enabled" -> "false") {
+      val out = body
+      org.apache.spark.sql.graft.ListenerBridge.waitUntilListenerBusEmpty(spark)
+      (n.get(), out)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("the cartesian detector fires on an injected crossJoin (suite-red proof)") {
     withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val p = plan(spark.range(3).toDF("a").crossJoin(spark.range(3).toDF("b")))
@@ -148,31 +166,64 @@ class PlanAuditSpec extends AnyFunSuite {
     val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), StructType(Seq(
       StructField("x", DoubleType), StructField("y", DoubleType),
       StructField("cat", StringType), StructField("target", IntegerType))))
-    def executions(body: => graft.tree.DecisionTreeModel): (Int, Int) = {
-      val n = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
-          case _: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart => n.incrementAndGet()
-          case _ =>
-        }
-      }
-      org.apache.spark.sql.graft.ListenerBridge.waitUntilListenerBusEmpty(spark)
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        val depth = body.tree.depth
-        org.apache.spark.sql.graft.ListenerBridge.waitUntilListenerBusEmpty(spark)
-        (n.get(), depth)
-      } finally spark.sparkContext.removeSparkListener(listener)
-    }
     val d = 3
-    val (exact, exactDepth) = executions(DecisionTreeClassifier(maxDepth = Some(d),
-      categoricalColumns = Seq("cat")).fit(df, "target"))
+    val (exact, exactDepth) = countExecutions(DecisionTreeClassifier(maxDepth = Some(d),
+      categoricalColumns = Seq("cat")).fit(df, "target").tree.depth)
     assert(exactDepth == d, "the fit must reach the depth cap for the count to pin every level")
     assert(exact == 1 + 1 + d, s"exact fit: 1 categorical + 1 stats pass + $d levels, ran $exact")
-    val (binned, binnedDepth) = executions(DecisionTreeClassifier(maxDepth = Some(d),
-      maxBins = Some(8)).fit(df.drop("cat"), "target"))
+    val (binned, binnedDepth) = countExecutions(DecisionTreeClassifier(maxDepth = Some(d),
+      maxBins = Some(8)).fit(df.drop("cat"), "target").tree.depth)
     assert(binnedDepth == d, "the fit must reach the depth cap for the count to pin every level")
     assert(binned == 1 + d, s"binned fit: 1 stats pass + $d levels, ran $binned")
+  }
+
+  test("duplicate clusters: an edge checkpoint and one star test, one round per clique") {
+    import spark.implicits._
+    val docs = (1L to 12L).toDF("doc_id")
+    def clusters(pairs: (Long, Long)*): Map[Long, Long] =
+      graft.operators.Dedup.duplicateClusters(docs, "doc_id", pairs.toDF("id_a", "id_b"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val (disjoint, pairLabels) = countExecutions(clusters(2L -> 1L, 3L -> 4L, 5L -> 6L))
+    assert(pairLabels.filter { case (d, c) => d != c } == Map(2L -> 1L, 4L -> 3L, 6L -> 5L))
+    assert(disjoint == 3, s"edge checkpoint + star test + the labels, no round: ran $disjoint")
+    val (clique, cliqueLabels) = countExecutions(clusters(7L -> 8L, 8L -> 9L, 7L -> 9L, 9L -> 10L,
+      7L -> 10L, 8L -> 10L))
+    assert(cliqueLabels.filter { case (d, c) => d != c } == Map(8L -> 7L, 9L -> 7L, 10L -> 7L))
+    assert(clique == 3 + 3, s"one round: two checkpoints and a star test more; ran $clique")
+  }
+
+  test("MinHash signatures are a narrow projection: no Generate, no id-keyed aggregate") {
+    import org.apache.spark.sql.catalyst.expressions.PosExplode
+    import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.functions.{col, explode, lit, min, xxhash64}
+    import graft.operators.Dedup
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    def static(df: DataFrame): SparkPlan =
+      withConf("spark.sql.adaptive.enabled" -> "false")(df.queryExecution.executedPlan)
+    def generates(p: SparkPlan): Seq[GenerateExec] = p.collect { case g: GenerateExec => g }
+    def idAggregates(p: SparkPlan): Seq[BaseAggregateExec] = p.collect {
+      case a: BaseAggregateExec if a.groupingExpressions.map(_.name) == Seq("id") => a
+    }
+    // detector proof: the explode/groupBy signature it replaced
+    val sets = docs.select(col("doc_id").as("id"), Dedup.shingleSet(col("text"), 3).as("sh"))
+    val exploded = static(sets.select(col("id"), explode(col("sh")).as("s"))
+      .groupBy("id").agg(min(xxhash64(col("s"), lit(0)))))
+    assert(generates(exploded).nonEmpty && idAggregates(exploded).nonEmpty,
+      "Generate/aggregate detectors are vacuous")
+
+    val sigs = static(Dedup.minHashSignatures(docs, "doc_id", "text"))
+    assert(generates(sigs).isEmpty && idAggregates(sigs).isEmpty &&
+      sigs.collect { case e: ShuffleExchangeExec => e }.isEmpty,
+      s"minHashSignatures is one projection, no shuffle:\n$sigs")
+    // the pairs' only Generate is the band explode feeding the band self-join
+    val pairs = static(Dedup.minHashLshJaccardPairs(docs, "doc_id", "text"))
+    val gens = generates(pairs)
+    assert(gens.nonEmpty && gens.forall(g => g.generator.isInstanceOf[PosExplode] &&
+      g.generatorOutput.map(_.name) == Seq("band", "bucket")),
+      s"no shingle Generate before the band self-join:\n$pairs")
+    assert(idAggregates(pairs).isEmpty, s"no id-keyed signature aggregate:\n$pairs")
   }
 
   test("tfidf construction is lazy: the corpus count is in-plan, not an eager job") {

@@ -14,6 +14,9 @@ import graft.TestSpark
   * operator's output equals a driver-side brute force over all document
   * pairs, computed from an independent re-implementation of
   * [[Dedup.shingleSet]] that is itself pinned against the engine's sets.
+  * The cluster labelings ([[Dedup.duplicateClusters]],
+  * [[Communities.connectedComponents]]) equal a driver union-find's
+  * component minima on generated graphs.
   */
 class DedupPropertiesSpec extends AnyFunSuite {
 
@@ -158,5 +161,87 @@ class DedupPropertiesSpec extends AnyFunSuite {
       assert(gotScores == scores, s"duplicationScores minDf=$minDf: $at")
       true
     }, minSuccessful = 20)
+  }
+
+  /** Component minimum of every node of `pairs`, by union-find. */
+  private def unionFindMinima(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    // union by minimum, so every root is its component's minimum
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    parent.keys.toSeq.map(x => x -> find(x)).toMap
+  }
+
+  /** `(docs, pairs)`: components of every shape the contraction has to
+    * collapse, over distinct random ids, with self-loops, duplicate and
+    * reversed pairs mixed in, and docs outside the pair graph. */
+  private def graph(rnd: scala.util.Random): (Seq[Long], Seq[(Long, Long)]) = {
+    val ids = rnd.shuffle((1L to 400L).toVector).iterator
+    def take(n: Int): IndexedSeq[Long] = IndexedSeq.fill(n)(ids.next())
+    def chain(ns: IndexedSeq[Long]) = ns.zip(ns.tail)
+    val comps = (0 until rnd.nextInt(6)).map { _ =>
+      val n = 2 + rnd.nextInt(12)
+      rnd.nextInt(5) match {
+        case 0 => // a path walked in ascending id order ...
+          val ns = take(n).sorted; chain(ns)
+        case 1 => // ... and in descending order, the minimum at the far end
+          val ns = take(n).sorted.reverse; chain(ns)
+        case 2 => // a star centred on a node that is not the minimum
+          val ns = take(math.max(n, 3)).sorted
+          val centre = ns(1 + rnd.nextInt(ns.size - 1))
+          ns.filter(_ != centre).map(leaf => if (rnd.nextBoolean()) (centre, leaf) else (leaf, centre))
+        case 3 => // a clique
+          val ns = take(math.min(n, 7))
+          for (i <- ns.indices; j <- ns.indices if i < j) yield (ns(i), ns(j))
+        case _ => // a random sparse graph: a random tree plus a few extra edges
+          val ns = take(n)
+          val tree = (1 until n).map(i => (ns(i), ns(rnd.nextInt(i))))
+          tree ++ Seq.fill(rnd.nextInt(3))((ns(rnd.nextInt(n)), ns(rnd.nextInt(n))))
+      }
+    }
+    val pairs = comps.flatten
+    val noise = pairs.flatMap { case (a, b) =>
+      rnd.nextInt(6) match {
+        case 0 => Seq((b, a))        // reversed
+        case 1 => Seq((a, b))        // duplicated
+        case 2 => Seq((a, a))        // self-loop
+        case _ => Nil
+      }
+    }
+    val inGraph = pairs.flatMap { case (a, b) => Seq(a, b) }.distinct
+    (rnd.shuffle(inGraph ++ take(rnd.nextInt(5))), rnd.shuffle(pairs ++ noise))
+  }
+
+  test("cluster labels equal a union-find component minimum on generated graphs") {
+    import spark.implicits._
+    check(Prop.forAllNoShrink(Gen.choose(0L, 100000L)) { seed =>
+      val (docs, pairs) = graph(new scala.util.Random(seed))
+      val at = s"seed=$seed docs=${docs.sorted} pairs=$pairs"
+      val pairDf = spark.createDataFrame(
+        spark.sparkContext.parallelize(pairs.map { case (a, b) => Row(a, b) }, 2),
+        StructType(Seq(StructField("id_a", LongType), StructField("id_b", LongType))))
+      val minima = unionFindMinima(pairs)
+
+      val clusters = Dedup.duplicateClusters(docs.toDF("doc_id"), "doc_id", pairDf)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq
+      assert(clusters.size == docs.size, s"one row per doc: $at")
+      assert(clusters.toMap == docs.map(d => d -> minima.getOrElse(d, d)).toMap,
+        s"duplicateClusters: $at")
+
+      // connectedComponents labels the nodes of its non-loop edges
+      val edges = pairs.filter { case (a, b) => a != b }
+      val components = Communities.connectedComponents(
+          pairDf.select(col("id_a").as("src"), col("id_b").as("dst")), "src", "dst")
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq
+      assert(components.size == components.map(_._1).distinct.size, s"one row per node: $at")
+      assert(components.toMap == unionFindMinima(edges), s"connectedComponents: $at")
+      true
+    }, minSuccessful = 25)
   }
 }

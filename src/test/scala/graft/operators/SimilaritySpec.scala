@@ -846,9 +846,13 @@ class SimilaritySpec extends AnyFunSuite {
         }, outcome(TwoShuffle.knnGraphAgainstIndex(standing, batch, k, dim, probeWidth,
           bands, rf))))
       for ((op, (fast, ref)) <- outcomes) {
-        assert(fast == ref, s"$op $what")
-        // empty vectors fail both (a zero norm divides under ANSI; the
-        // quantized dim check); NULL vectors only drop out
+        // empty vectors fail every operator with the dim check (the
+        // two-shuffle knnGraph divides by their zero norm under ANSI
+        // instead); NULL vectors only drop out
+        if (withEmpty && op == "knnGraph") {
+          assert(ref == Left("DIVIDE_BY_ZERO"), s"$op $what: $ref")
+          assert(fast == Left("USER_RAISED_EXCEPTION"), s"$op $what: $fast")
+        } else assert(fast == ref, s"$op $what")
         if (!withEmpty) assert(ref.isRight, s"$op $what: $ref")
         ref.foreach { edges =>
           val perNode = edges.groupBy(_.getLong(0))
@@ -860,6 +864,15 @@ class SimilaritySpec extends AnyFunSuite {
         TwoShuffle.width(corpus, rpb, bands), dim, None))
       sawRepeats ||= rows.join(rows.withColumnRenamed("id", "nbr"), Seq("band", "bucket"))
         .where("id < nbr").groupBy("id", "nbr").count().where("count > 1").head(1).nonEmpty
+    }
+    // knnGraph and knnGraphQuantized reject an empty vector with one message
+    for (build <- Seq[org.apache.spark.sql.DataFrame => Unit](
+        c => Similarity.knnGraph(c, "vec_id", "embedding", 3, dim, 4, 4).collect(),
+        c => Similarity.knnGraphQuantized(c, "vec_id", "embedding", 3, dim, 4, 4).collect())) {
+      val e = intercept[Exception](build(knnCorpus(dim, withEmpty = true, seed = 21)))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => Option(t.getMessage).exists(_.contains(s"expected dim=$dim vectors, got size=0"))),
+        e.toString)
     }
     assert(sawRepeats && sawShort && sawTies,
       s"corpus must exercise repeated candidates ($sawRepeats), nodes short of k " +
