@@ -135,9 +135,10 @@ object Bench {
 
     // Width scaling at the reference's flagship width (190 features,
     // README.md:40-47). Derive synthetic numeric features and fit binned
-    // level-wise — the MultiFeatureHistogram path costs one un-melted pass
-    // per level regardless of feature count, which is what makes wide
-    // tables viable (the melt formulation multiplies rows by #features+1).
+    // level-wise — each level is one Spark job whose tasks count un-melted
+    // packed rows into MultiFeatureHistogram, one pass per level regardless
+    // of feature count, which is what makes wide tables viable (the melt
+    // formulation multiplies rows by #features+1).
     def wideFit(nDerived: Int): Unit = {
       // Shared construction (graft.tools.WideFrame) keeps WideHeapProbe
       // and WideScalableFitSpec on exactly this workload. Repartition

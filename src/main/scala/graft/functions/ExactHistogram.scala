@@ -1,12 +1,6 @@
 package graft.functions
 
-import java.nio.ByteBuffer
-
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{BinaryType, DataType}
 
 /** One-pass exact-threshold class-count histogram: the exact-mode twin of
   * [[MultiFeatureHistogram]]. Where the binned kernel counts rows into a
@@ -18,116 +12,48 @@ import org.apache.spark.sql.types.{BinaryType, DataType}
   *
   * Value keys follow Spark's grouping semantics: -0.0 counts as 0.0 and
   * every NaN as the one canonical NaN. Null feature values skip that
-  * feature's slot only; rows with a null/out-of-range class or node count
-  * nowhere. The buffer holds one entry per distinct (node, feature, value)
-  * a task sees - at most task rows x F, the same bound as the hash
-  * aggregate of a melted frame, so there is no budget and no fallback.
-  *
-  * `eval` emits the merged buffer in its serialized form (one binary
-  * value); the caller decodes it with [[ExactHistogram.decode]] and reads
-  * each slot in ascending value order with [[ExactHistogram.Buffer.sorted]].
+  * feature's slot only. The buffer holds one entry per distinct
+  * (node, feature, value) a task sees - at most task rows x F, the same
+  * bound as the hash aggregate of a melted frame, so there is no budget
+  * and no fallback. A task [[pack]]s its buffer into dense arrays, 8·(1+K)
+  * bytes per entry; the driver merges each into one [[ExactHistogram.Buffer]]
+  * and reads each slot in ascending value order with
+  * [[ExactHistogram.Buffer.sorted]].
   */
-case class ExactHistogram(
-    featuresArray: Expression,     // ArrayType(DoubleType): packed feature slots
-    classIndex: Expression,        // int class index, -1/null = no class
-    nodeIndex: Expression,         // int pending-node index, null = settled row
-    numFeatures: Int,
-    numClasses: Int,
-    numNodes: Int = 1,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0
-) extends TypedImperativeAggregate[ExactHistogram.Buffer] {
+final class ExactHistogram(numFeatures: Int, numClasses: Int, numNodes: Int)
+    extends LevelHistogram[ExactHistogram.Buffer, ExactHistogram.Packed] {
   import ExactHistogram._
 
-  override def children: Seq[Expression] = Seq(featuresArray, classIndex, nodeIndex)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "exact_histogram"
+  def newBuffer(): Buffer = new Buffer(numNodes, numFeatures, numClasses)
 
-  override def createAggregationBuffer(): Buffer = new Buffer(numNodes, numFeatures, numClasses)
-
-  override def update(buffer: Buffer, input: InternalRow): Buffer = {
-    val node = nodeIndex.eval(input)
-    if (node != null) {
-      val n = node.asInstanceOf[Int]
-      if (n >= 0 && n < numNodes) {
-        val cls = classIndex.eval(input)
-        if (cls != null) {
-          val k = cls.asInstanceOf[Int]
-          if (k >= 0 && k < numClasses) {
-            val arr = featuresArray.eval(input).asInstanceOf[ArrayData]
-            var f = 0
-            while (f < numFeatures) {
-              if (!arr.isNullAt(f)) buffer.slot(n, f).add(keyOf(arr.getDouble(f)), k)
-              f += 1
-            }
-            buffer.nodeTotals(n * numClasses + k) += 1L
-          }
-        }
-      }
+  def update(buffer: Buffer, arr: ArrayData, cls: Int, node: Int): Unit = {
+    var f = 0
+    while (f < numFeatures) {
+      if (!arr.isNullAt(f)) buffer.slot(node, f).add(keyOf(arr.getDouble(f)), cls)
+      f += 1
     }
-    buffer
+    buffer.nodeTotals(node * numClasses + cls) += 1L
   }
 
-  override def merge(buffer: Buffer, input: Buffer): Buffer = {
+  def pack(buffer: Buffer): Packed =
+    new Packed(buffer.nodeTotals, buffer.slots.map(s => if (s == null) null else s.entries))
+
+  def merge(buffer: Buffer, part: Packed): Unit = {
     var i = 0
-    while (i < buffer.nodeTotals.length) { buffer.nodeTotals(i) += input.nodeTotals(i); i += 1 }
+    while (i < buffer.nodeTotals.length) { buffer.nodeTotals(i) += part.nodeTotals(i); i += 1 }
     var s = 0
-    while (s < input.slots.length) {
-      val src = input.slots(s)
-      if (src != null) {
+    val width = 1 + numClasses
+    while (s < part.slots.length) {
+      val entries = part.slots(s)
+      if (entries != null) {
         val dst = buffer.slot(s / numFeatures, s % numFeatures)
-        dst.reserve(src.size)
+        dst.reserve(entries.length / width)
         var e = 0
-        while (e < src.keys.length) {
-          if (src.keys(e) != Empty) dst.addCounts(src.keys(e), src.counts, e * numClasses)
-          e += 1
-        }
+        while (e < entries.length) { dst.addCounts(entries(e), entries, e + 1); e += width }
       }
       s += 1
     }
-    buffer
   }
-
-  override def eval(buffer: Buffer): Any = serialize(buffer)
-
-  /** Layout: node totals (numNodes x K longs), then per slot its entry
-    * count n (int) followed by n x (key, K counts) longs. */
-  override def serialize(buffer: Buffer): Array[Byte] = {
-    val entries = buffer.slots.map(s => if (s == null) 0L else s.size.toLong).sum
-    val bytes = 8L * buffer.nodeTotals.length + 4L * buffer.slots.length +
-      8L * (1 + numClasses) * entries
-    require(bytes <= Int.MaxValue, s"exact histogram buffer of $bytes bytes exceeds 2 GB")
-    val bb = ByteBuffer.allocate(bytes.toInt)
-    buffer.nodeTotals.foreach(bb.putLong)
-    buffer.slots.foreach { s =>
-      if (s == null) bb.putInt(0)
-      else {
-        bb.putInt(s.size)
-        var e = 0
-        while (e < s.keys.length) {
-          if (s.keys(e) != Empty) {
-            bb.putLong(s.keys(e))
-            var c = 0
-            while (c < numClasses) { bb.putLong(s.counts(e * numClasses + c)); c += 1 }
-          }
-          e += 1
-        }
-      }
-    }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Buffer = decode(bytes, numNodes, numFeatures, numClasses)
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): ExactHistogram =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): ExactHistogram =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): ExactHistogram =
-    copy(featuresArray = newChildren(0), classIndex = newChildren(1),
-      nodeIndex = newChildren(2))
 }
 
 object ExactHistogram {
@@ -205,6 +131,23 @@ object ExactHistogram {
       while (c < k) { counts(base + c) += src(off + c); c += 1 }
     }
 
+    /** The entries densely, in table order: per key, the key then its K
+      * counts. */
+    def entries: Array[Long] = {
+      val out = new Array[Long](size * (1 + k))
+      var e = 0
+      var o = 0
+      while (e < keys.length) {
+        if (keys(e) != Empty) {
+          out(o) = keys(e)
+          System.arraycopy(counts, e * k, out, o + 1, k)
+          o += 1 + k
+        }
+        e += 1
+      }
+      out
+    }
+
     private def resize(newBits: Int): Unit = {
       val (oldKeys, oldCounts) = (keys, counts)
       bits = newBits
@@ -251,30 +194,9 @@ object ExactHistogram {
     }
   }
 
-  /** Inverse of [[ExactHistogram.serialize]] (and so of `eval`). */
-  def decode(bytes: Array[Byte], numNodes: Int, numFeatures: Int, k: Int): Buffer = {
-    val bb = ByteBuffer.wrap(bytes)
-    val buf = new Buffer(numNodes, numFeatures, k)
-    var i = 0
-    while (i < buf.nodeTotals.length) { buf.nodeTotals(i) = bb.getLong(); i += 1 }
-    val row = new Array[Long](k)
-    var s = 0
-    while (s < buf.slots.length) {
-      val n = bb.getInt()
-      if (n > 0) {
-        val vc = buf.slot(s / numFeatures, s % numFeatures)
-        vc.reserve(n)
-        var e = 0
-        while (e < n) {
-          val key = bb.getLong()
-          var c = 0
-          while (c < k) { row(c) = bb.getLong(); c += 1 }
-          vc.addCounts(key, row, 0)
-          e += 1
-        }
-      }
-      s += 1
-    }
-    buf
-  }
+  /** A task's [[Buffer]] on its way to the driver: the node totals and
+    * each slot's [[ValueCounts.entries]] (null for a slot that saw no
+    * value), so it serializes to 8·(1+K) bytes per entry, not the hash
+    * table's empty cells too. */
+  final class Packed(val nodeTotals: Array[Long], val slots: Array[Array[Long]]) extends Serializable
 }

@@ -1,6 +1,10 @@
 package graft.tree
 
+import scala.reflect.ClassTag
+
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
@@ -21,13 +25,15 @@ import org.apache.spark.sql.types.DoubleType
   * target) rows with a single `explode`, aggregates by (feature, value) and
   * runs windows per feature: the relational encoding, kept for the oracle
   * entries and as the tests' yardstick. The trainer instead runs each tree
-  * level as ONE native aggregate over un-melted rows —
-  * [[graft.functions.ExactHistogram]] (exact thresholds, sparse value keys)
-  * or [[graft.functions.MultiFeatureHistogram]] (binned, dense bin index)
-  * — and one shared driver-side gain scan ([[bestThreshold]]) that
-  * reproduces the pipeline's gains bit for bit. Either way one scan
-  * answers every feature, where the reference fans out one plan per
-  * feature joined by `pl.collect_all` (tree.py:338-339).
+  * level as ONE Spark job over un-melted packed rows ([[levelJob]]): tasks
+  * route rows through the partial tree's split table ([[Router]]) into a
+  * native histogram kernel — [[graft.functions.ExactHistogram]] (exact
+  * thresholds, sparse value keys) or
+  * [[graft.functions.MultiFeatureHistogram]] (binned, dense bin index) —
+  * and one shared driver-side gain scan ([[bestThreshold]]) reproduces the
+  * pipeline's gains bit for bit. Either way one scan answers every
+  * feature, where the reference fans out one plan per feature joined by
+  * `pl.collect_all` (tree.py:338-339).
   */
 object SplitSearch {
 
@@ -293,10 +299,12 @@ object SplitSearch {
   }
 
   /** The trainer's per-node search, one Spark job: per-feature best splits
-    * AND the node's class distribution ([[searchLevelExact]] with every row
-    * in node 0). Replaces the reference's ~3 executions per node
-    * (collect_all fan-out + mask collect + distribution collect,
-    * tree.py:339-372) with one.
+    * AND the node's class distribution ([[exactSearch]] with every row in
+    * node 0). Replaces the reference's ~3 executions per node (collect_all
+    * fan-out + mask collect + distribution collect, tree.py:339-372) with
+    * one. The result's candidates, counts, gains and tie-breaks equal the
+    * reference pipeline's ([[bestSplit]] / [[gainPerThreshold]], asserted
+    * with `==` in SplitSearchSpec).
     */
   def searchWithStats(
       df: DataFrame,
@@ -305,47 +313,49 @@ object SplitSearch {
       targets: Seq[Any],
       criterion: Criterion
   ): NodeSearch =
-    searchLevelExact(df, lit(0), 1, features, targetName, targets, criterion)
+    exactSearch(pack(df, features, targetName, targets), Router.root, 1, features,
+      targets.size, criterion)
       .getOrElse(0, throw new IllegalArgumentException(
         "searchWithStats on empty input data (no rows reached the search)"))
 
-  /** Exact-mode level search: ONE [[graft.functions.ExactHistogram]]
-    * aggregate job per tree LEVEL over un-melted rows. `nodeId` assigns
-    * every row to a pending node in [0, numNodes) (NULL = row settled in a
-    * finalized leaf or dropped by a NULL split feature — excluded); it is
-    * evaluated over [[pack]]'s frame, so it routes on `__arr[i]`, feature
-    * i. The aggregate's one binary row carries, per (node, feature), the
-    * class counts of every distinct value; the driver sorts each slot and
-    * runs [[bestThreshold]] over it, so candidates, counts, gains and
-    * tie-breaks equal the reference pipeline's ([[bestSplit]] /
-    * [[gainPerThreshold]], asserted with `==` in SplitSearchSpec). Rows
-    * whose target is not in `targets` count nowhere. Nodes with no rows are
-    * absent from the result map.
+  /** Binned twin of [[searchWithStats]]: [[binnedSearch]] with every row in
+    * node 0. Features without bin edges (all-null features have none)
+    * yield no candidate; targets must be non-null. On null-free features
+    * with finite edges, candidate set, counts and gains match
+    * [[searchWithStats]] run over [[snapToEdges]]-snapped features
+    * (asserted in SplitSearchSpec). Unlike the snap, null feature values
+    * count in no bin, and an interior +Inf edge keeps its own bin apart
+    * from NaN.
     */
-  def searchLevelExact(
+  def searchLevelAggregated(
       df: DataFrame,
-      nodeId: Column,
-      numNodes: Int,
       features: Seq[String],
       targetName: String,
       targets: Seq[Any],
-      criterion: Criterion
-  ): Map[Int, NodeSearch] =
-    exactSearch(pack(df, features, targetName, targets), nodeId, numNodes, features,
-      targets.size, criterion)
+      criterion: Criterion,
+      binEdges: Map[String, Seq[Double]]
+  ): NodeSearch =
+    binnedSearch(pack(df, features, targetName, targets), Router.root, 1, features,
+      targets.size, criterion, binEdges)
+      .getOrElse(0, throw new IllegalArgumentException(
+        "searchLevelAggregated on empty input data (no rows reached the search)"))
 
-  /** [[searchLevelExact]] over an already [[pack]]ed frame. */
+  /** Exact-mode level search over a [[pack]]ed frame: ONE
+    * [[graft.functions.ExactHistogram]] [[levelJob]] per tree LEVEL, which
+    * counts, per (pending node, feature), the classes of every distinct
+    * value. The driver sorts each slot and runs [[bestThreshold]] over it.
+    * Rows whose class index is -1 count nowhere. Nodes with no rows are
+    * absent from the result map.
+    */
   private[graft] def exactSearch(
       packed: DataFrame,
-      nodeId: Column,
+      router: Router,
       numNodes: Int,
       features: Seq[String],
       k: Int,
       criterion: Criterion
   ): Map[Int, NodeSearch] = {
-    val bytes = exactLevelQuery(packed, nodeId, numNodes, features.size, k)
-      .head().getAs[Array[Byte]](0)
-    val hist = graft.functions.ExactHistogram.decode(bytes, numNodes, features.size, k)
+    val hist = levelJob(packed, router, new graft.functions.ExactHistogram(features.size, k, numNodes))
     (0 until numNodes).flatMap { node =>
       val nodeDist = hist.nodeTotals.slice(node * k, (node + 1) * k).toVector
       if (nodeDist.sum == 0) None
@@ -356,36 +366,15 @@ object SplitSearch {
     }.toMap
   }
 
-  /** Binned-mode level search: ONE [[graft.functions.MultiFeatureHistogram]]
-    * aggregate job per tree LEVEL (no melt — a single pass over un-exploded
-    * rows; the buffer = nodes x (F+1) x (B+1) x K longs merged to one row)
-    * and the entire gain computation on the driver. `nodeId` routes over
-    * [[pack]]'s frame, as in [[searchLevelExact]]. Features without bin
-    * edges (all-null features have none) yield no candidate; targets must
-    * be non-null. On null-free features with finite edges, candidate set,
-    * counts and gains match the exact [[searchWithStats]] run over
-    * [[snapToEdges]]-snapped features (asserted in SplitSearchSpec). Unlike
-    * the snap, null feature values count in no bin, and an interior +Inf
-    * edge keeps its own bin apart from NaN. Nodes with no rows are absent
-    * from the result map.
+  /** Binned-mode level search over a [[pack]]ed frame: ONE
+    * [[graft.functions.MultiFeatureHistogram]] [[levelJob]] per tree LEVEL
+    * (the buffer = nodes x (F+1) x (B+1) x K longs) and the entire gain
+    * computation on the driver. Nodes with no rows are absent from the
+    * result map.
     */
-  def searchLevelAggregated(
-      df: DataFrame,
-      nodeId: Column,
-      numNodes: Int,
-      features: Seq[String],
-      targetName: String,
-      targets: Seq[Any],
-      criterion: Criterion,
-      binEdges: Map[String, Seq[Double]]
-  ): Map[Int, NodeSearch] =
-    binnedSearch(pack(df, features, targetName, targets), nodeId, numNodes, features,
-      targets.size, criterion, binEdges)
-
-  /** [[searchLevelAggregated]] over an already [[pack]]ed frame. */
   private[graft] def binnedSearch(
       packed: DataFrame,
-      nodeId: Column,
+      router: Router,
       numNodes: Int,
       features: Seq[String],
       k: Int,
@@ -393,8 +382,7 @@ object SplitSearch {
       binEdges: Map[String, Seq[Double]]
   ): Map[Int, NodeSearch] = {
     val edges = features.map(binEdges.getOrElse(_, Nil))
-    val buffer: Array[Long] = binnedLevelQuery(packed, nodeId, numNodes, edges, k)
-      .head().getSeq[Long](0).toArray
+    val buffer = levelJob(packed, router, new graft.functions.MultiFeatureHistogram(edges, k, numNodes))
     val block = (edges.map(_.size).max + 1) * k
     val nodeLen = (features.size + 1) * block
     (0 until numNodes).flatMap { node =>
@@ -410,16 +398,42 @@ object SplitSearch {
     }.toMap
   }
 
+  /** One tree level as ONE Spark job of one stage over a [[pack]]ed frame's
+    * rows, with no SQL plan or exchange of its own: each task routes its
+    * rows through `router` and counts them into a fresh `hist` buffer; the
+    * driver merges each task's packed partial into one buffer as the task
+    * finishes. It runs as a SQL execution of the packed frame, named by
+    * this call site, so listeners and the UI file one execution per level.
+    * The frame's physical plan is made once (`toRdd` is lazy on the
+    * frame), and over the trainer's cached frame it is the cache scan.
+    */
+  private def levelJob[B, P: ClassTag](packed: DataFrame, router: Router,
+      hist: graft.functions.LevelHistogram[B, P]): B = {
+    val qe = packed.queryExecution
+    val total = hist.newBuffer()
+    SQLExecution.withNewExecutionId(qe) {
+      packed.sparkSession.sparkContext.runJob(qe.toRdd, (rows: Iterator[InternalRow]) => {
+        val buffer = hist.newBuffer()
+        while (rows.hasNext) {
+          val row = rows.next()
+          val arr = row.getArray(0)
+          val node = router.route(arr)
+          val cls = row.getInt(1)
+          if (node >= 0 && cls >= 0) hist.update(buffer, arr, cls, node)
+        }
+        hist.pack(buffer)
+      }, (_: Int, part: P) => hist.merge(total, part))
+    }
+    total
+  }
+
   /** The level searches' one input layout: the packed feature array
     * `__arr` (slot i = feature i as a double; the features in `shrink`
     * pass through Float32 first) and the class index `__cls` (position in
-    * `targets`, -1 = no class). The trainer projects and caches it once
-    * per fit, so no level query rebuilds the array or the class when-chain
-    * from feature columns. The array must be a projected column, not an
-    * aggregate child: an imperative aggregate evaluates its children
-    * interpreted per row, so a bare CreateArray would box every feature of
-    * every row (at 190 features that boxing dominated the histogram scan);
-    * bound attribute reads allocate nothing. */
+    * `targets`, -1 = no class; never null). The trainer projects and
+    * caches it once per fit, so no level rebuilds the array or the class
+    * when-chain from feature columns, and the level kernels read each row's
+    * features as one primitive array without boxing. */
   private[graft] def pack(
       df: DataFrame,
       features: Seq[String],
@@ -434,45 +448,6 @@ object SplitSearch {
     df.select(array(features.map { f =>
       if (shrink(f)) col(f).cast("float").cast(DoubleType) else col(f).cast(DoubleType)
     }: _*).as("__arr"), classIdx.as("__cls"))
-  }
-
-  /** A packed frame plus the level's node id as a bound `__node` column. */
-  private def routed(packed: DataFrame, nodeId: Column): DataFrame =
-    packed.select(col("__arr"), col("__cls"), nodeId.cast("int").as("__node"))
-
-  /** The exact level's single aggregate query over a [[pack]]ed frame: one
-    * row, one binary [[graft.functions.ExactHistogram]] buffer. */
-  private[graft] def exactLevelQuery(
-      packed: DataFrame,
-      nodeId: Column,
-      numNodes: Int,
-      numFeatures: Int,
-      numClasses: Int
-  ): DataFrame = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    val agg = graft.functions.ExactHistogram(
-      ColumnBridge.expression(col("__arr")),
-      ColumnBridge.expression(col("__cls")),
-      ColumnBridge.expression(col("__node")), numFeatures, numClasses, numNodes)
-    routed(packed, nodeId).select(ColumnBridge.column(agg.toAggregateExpression()).as("hist"))
-  }
-
-  /** The binned level's single aggregate query over a [[pack]]ed frame:
-    * one row, one flat [[graft.functions.MultiFeatureHistogram]] count
-    * array, one block per slot of `__arr` (`edges` aligned to the slots). */
-  private[graft] def binnedLevelQuery(
-      packed: DataFrame,
-      nodeId: Column,
-      numNodes: Int,
-      edges: Seq[Seq[Double]],
-      numClasses: Int
-  ): DataFrame = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    val agg = graft.functions.MultiFeatureHistogram(
-      ColumnBridge.expression(col("__arr")),
-      ColumnBridge.expression(col("__cls")),
-      ColumnBridge.expression(col("__node")), edges, numClasses, numNodes)
-    routed(packed, nodeId).select(ColumnBridge.column(agg.toAggregateExpression()).as("hist"))
   }
 
   private val Log2 = StrictMath.log(2.0)

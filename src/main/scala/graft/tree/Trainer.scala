@@ -9,22 +9,23 @@ import org.apache.spark.storage.StorageLevel
   * DataFrame dataflow — the Spark-native rebuild of the reference's
   * Polars-backed `DecisionTreeClassifier` (reference: efficient_trees/tree.py:16-385).
   *
-  * Fit pipeline: ONE stats pass, ONE pack, then one query per level.
+  * Fit pipeline: ONE stats pass, ONE pack, then one job per level.
   *  1. Stats pass: a single aggregate over the input answers the distinct
   *     targets, the f32 shrink gate and, in binned mode, every feature's
   *     quantile bin edges ([[graft.functions.MultiQuantileSketch]]).
   *  2. Pack: the rows are projected once into [[SplitSearch.pack]]'s
   *     `(__arr array<double>, __cls int)` frame, with the shrink casts and
   *     the class index folded in, and that frame is cached.
-  *  3. Levels: each tree level runs ONE native aggregate over the packed
-  *     rows that answers every pending node at once — per-feature
-  *     class-count histograms AND each node's class distribution; one
-  *     driver-side gain scan picks the splits, and the children's
+  *  3. Levels: each tree level runs ONE Spark job over the packed rows,
+  *     with no SQL plan or shuffle, that answers every pending node at
+  *     once — tasks route rows through the partial tree's split table
+  *     ([[Router]]) into per-feature class-count histograms AND each
+  *     node's class distribution, and the driver merges the task partials;
+  *     one driver-side gain scan picks the splits, and the children's
   *     distributions fall out of the winner's cumulative counts, so leaves
   *     cost zero jobs. `maxBins` picks the histogram's key layout: exact
-  *     mode runs [[SplitSearch.searchLevelExact]]'s sparse
-  *     [[graft.functions.ExactHistogram]] keyed by distinct value, binned
-  *     mode runs [[SplitSearch.searchLevelAggregated]]'s dense
+  *     mode runs the sparse [[graft.functions.ExactHistogram]] keyed by
+  *     distinct value, binned mode the dense
   *     [[graft.functions.MultiFeatureHistogram]] keyed by bin index.
   * A fit that reaches its depth cap d with c categorical columns runs c + 1 + d SQL
   * executions (one per categorical for its target-encoding means). The
@@ -54,7 +55,7 @@ import org.apache.spark.storage.StorageLevel
   *                       restricted to `maxBins` approximate quantile edges
   *                       computed ONCE on the training data (MLlib-style),
   *                       and every level is one single-pass histogram
-  *                       aggregate over un-melted rows with a fixed-size
+  *                       job over un-melted rows with a fixed-size
   *                       buffer — the scale-safe mode for continuous
   *                       features, where exact mode's buffer and driver
   *                       scan grow with every distinct value. Counts at the
@@ -84,7 +85,7 @@ final case class DecisionTreeClassifier(
   /** Level-wise construction state: the partially built tree, where
     * [[BPending]] marks nodes whose split is still to be decided. Pending
     * ids are (re)assigned every level in pre-order, matching the order the
-    * nodeId expression emits them. */
+    * level's [[Router]] numbers them. */
   private sealed trait Building
   private final case class BSplit(feature: String, threshold: Double, gain: Double,
       crit: Double, dist: Seq[Long], left: Building, right: Building) extends Building
@@ -206,16 +207,14 @@ final case class DecisionTreeClassifier(
   // ---- level-wise construction (one Spark job per tree LEVEL) -------------
 
   /** Breadth-first trainer over [[SplitSearch.pack]]'s frame: each level
-    * runs ONE aggregate job ([[SplitSearch.searchLevelExact]], or
-    * [[SplitSearch.searchLevelAggregated]] in binned mode) that answers
-    * every pending node at once — rows are routed to their pending node by
-    * a when-chain id expression over `__arr` and the partial tree. Jobs per
-    * tree = depth, not node count; the packed frame is cached once. Node
+    * runs ONE Spark job ([[SplitSearch.exactSearch]], or
+    * [[SplitSearch.binnedSearch]] in binned mode) that answers every
+    * pending node at once — tasks route each row to its pending node
+    * through the partial tree's [[Router]] split table. Jobs per tree =
+    * depth, not node count; the packed frame is cached once. Node
     * membership follows the reference's filter/negated-filter recursion
     * (tree.py:351-358; pinned against RefTree in TreeSpec and
-    * SplitSearchSpec). The id when-chain has one branch per node at the
-    * current frontier, so keep depth <= ~12 (the reference's own examples
-    * cap at 4-8).
+    * SplitSearchSpec).
     */
   private def trainLevels(
       packed: DataFrame,
@@ -232,25 +231,26 @@ final case class DecisionTreeClassifier(
       case _: BPending => 1
     }
 
-    /** Pre-order pending-node id routing expression over the partial tree,
-      * reading split features from their `__arr` slot (a NULL slot is a
-      * NULL feature). NULL id = row sits in a finalized leaf or drops out at a NULL split
-      * feature (3-valued logic — the reference's mask + ~mask drops
-      * NULL-feature rows from both children, tree.py:351-358). */
-    def idExpr(b: Building): org.apache.spark.sql.Column = {
-      var idx = -1
-      def walk(n: Building): org.apache.spark.sql.Column = n match {
-        case _: BLeaf => lit(null).cast("int")
+    /** The partial tree as a [[Router]] split table: splits and pending
+      * nodes numbered in pre-order, as `rebuild` reads the results. */
+    def routerOf(b: Building): Router = {
+      import scala.collection.mutable.ArrayBuffer
+      val (slots, thresholds) = (ArrayBuffer[Int](), ArrayBuffer[Double]())
+      val (lefts, rights) = (ArrayBuffer[Int](), ArrayBuffer[Int]())
+      var pendings = 0
+      def walk(n: Building): Int = n match {
+        case _: BLeaf => Router.Settled
         case _: BPending =>
-          idx += 1; lit(idx).cast("int")
+          pendings += 1; Router.pending(pendings - 1)
         case s: BSplit =>
-          val c = col("__arr").getItem(slot(s.feature))
-          val lc = walk(s.left)
-          val rc = walk(s.right)
-          when(c <= lit(s.threshold), lc).when(c > lit(s.threshold), rc)
-            .otherwise(lit(null).cast("int"))
+          val row = lefts.size
+          slots += slot(s.feature); thresholds += s.threshold; lefts += 0; rights += 0
+          lefts(row) = walk(s.left)
+          rights(row) = walk(s.right)
+          row
       }
-      walk(b)
+      val root = walk(b)
+      new Router(slots.toArray, thresholds.toArray, lefts.toArray, rights.toArray, root)
     }
 
     def finalizeAtDepthCap(b: Building, isRoot: Boolean = false): Building = b match {
@@ -285,16 +285,16 @@ final case class DecisionTreeClassifier(
           tree = finalizeAtDepthCap(tree, isRoot = depth == 0)
         } else {
           val numPendings = countPendings(tree)
-          val nodeId = idExpr(tree)
+          val router = routerOf(tree)
           val results: Map[Int, SplitSearch.NodeSearch] =
             // binEdges is empty in exact mode, and in maxBins mode only when
             // every feature is all-null — then the exact search (which finds
             // no candidates either) still answers the node distributions
             if (binEdges.nonEmpty)
-              SplitSearch.binnedSearch(source, nodeId, numPendings,
+              SplitSearch.binnedSearch(source, router, numPendings,
                 featureNames, targets.size, criterion, binEdges)
             else
-              SplitSearch.exactSearch(source, nodeId, numPendings,
+              SplitSearch.exactSearch(source, router, numPendings,
                 featureNames, targets.size, criterion)
           var idx = -1
           def rebuild(b: Building): Building = b match {

@@ -93,65 +93,56 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(p.contains("BroadcastHashJoin"), "per-bucket offsets must broadcast back")
   }
 
-  test("tree level searches plan no Generate and no Window node") {
-    import org.apache.spark.sql.catalyst.expressions.CreateArray
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.functions.{col, lit, when}
-    import graft.functions.{ExactHistogram, MultiFeatureHistogram}
-    import graft.tree.{Criterion, DecisionTreeClassifier, SplitSearch}
-    def static(df: DataFrame): SparkPlan =
-      withConf("spark.sql.adaptive.enabled" -> "false")(df.queryExecution.executedPlan)
-    def nodes(p: SparkPlan): Seq[String] = p.collect { case n => n.nodeName }
-    val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
-    val features = Seq("l_quantity", "l_discount", "l_tax", "l_extendedprice")
-    val targets = Seq[Any]("A", "N", "R")
-    // arrays built from the named feature columns anywhere in the plan
-    def featureArrays(p: SparkPlan): Seq[CreateArray] =
-      p.collect { case n => n.expressions }.flatten.flatMap(
-        _.collect { case a: CreateArray if a.references.exists(r => features.contains(r.name)) => a })
-    def check(what: String, p: SparkPlan): Unit = {
-      val n = nodes(p)
-      assert(!n.contains("Generate") && !n.contains("Window"), s"$what plans $n")
-      assert(featureArrays(p).isEmpty, s"$what re-packs feature columns: ${featureArrays(p)}")
+  test("each tree level is one job of one stage that shuffles nothing, AQE on and off") {
+    import scala.collection.mutable
+    import org.apache.spark.scheduler._
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    import graft.tree.DecisionTreeClassifier
+    final class Exec(val site: String) {
+      var jobs = 0
+      val stages = mutable.Set[Int]()
+      var shuffleBytes = 0L
     }
-    // detector proofs: the reference pipeline melts and windows, and the
-    // packing itself builds the feature array
-    val ref = nodes(static(SplitSearch.gainPerThreshold(li, features, "l_returnflag", targets,
-      Criterion.Entropy)))
-    assert(ref.contains("Generate") && ref.contains("Window"), s"detector is vacuous: $ref")
-    assert(featureArrays(static(SplitSearch.pack(li, features, "l_returnflag", targets))).nonEmpty,
-      "CreateArray detector is vacuous")
-    // the level queries over the input as the trainer holds it: packed once, cached
-    val packed = SplitSearch.pack(li, features, "l_returnflag", targets).cache()
-    try {
-      val nodeId = when(col("__arr").getItem(0) <= 25.0, lit(0)).otherwise(lit(1))
-      check("exact level", static(
-        SplitSearch.exactLevelQuery(packed, nodeId, 2, features.size, targets.size)))
-      check("binned level", static(SplitSearch.binnedLevelQuery(packed, nodeId, 2,
-        features.map(_ => Seq(0.05, 10.0)), targets.size)))
-    } finally packed.unpersist()
-    // and the level executions a real fit runs, exact and binned
-    val executed = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-          ns: Long): Unit = executed.add(qe.executedPlan)
-      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-          e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try withConf("spark.sql.adaptive.enabled" -> "false") {
-      val rows = li.select((features :+ "l_returnflag").map(col): _*)
-      for (bins <- Seq(None, Some(8)))
-        DecisionTreeClassifier(maxDepth = Some(2), maxBins = bins).fit(rows, "l_returnflag")
+    val rows = spark.read.parquet(s"$sfDir/lineitem.parquet")
+      .select("l_quantity", "l_discount", "l_tax", "l_extendedprice", "l_returnflag")
+    for (aqe <- Seq("false", "true")) {
+      // touched only on the listener bus thread, read after it drains
+      val execs = mutable.LinkedHashMap[Long, Exec]()
+      val stageExec = mutable.Map[Int, Exec]()
+      val listener = new SparkListener {
+        override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+          case s: SparkListenerSQLExecutionStart => execs(s.executionId) = new Exec(s.description)
+          case _ =>
+        }
+        override def onJobStart(j: SparkListenerJobStart): Unit =
+          Option(j.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+            .flatMap(id => execs.get(id.toLong)).foreach { x =>
+              x.jobs += 1
+              x.stages ++= j.stageIds
+              j.stageIds.foreach(stageExec(_) = x)
+            }
+        override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+          if (t.taskMetrics != null) stageExec.get(t.stageId)
+            .foreach(_.shuffleBytes += t.taskMetrics.shuffleWriteMetrics.bytesWritten)
+      }
       org.apache.spark.sql.graft.ListenerBridge.waitUntilListenerBusEmpty(spark)
-    } finally spark.listenerManager.unregister(listener)
-    import scala.jdk.CollectionConverters._
-    val levels = executed.asScala.toSeq.filter(_.exists(_.expressions.exists(_.exists {
-      case _: ExactHistogram | _: MultiFeatureHistogram => true
-      case _ => false
-    })))
-    assert(levels.size == 4, s"expected 2 exact + 2 binned level executions, saw ${levels.size}")
-    levels.foreach(check("fit level", _))
+      spark.sparkContext.addSparkListener(listener)
+      try withConf("spark.sql.adaptive.enabled" -> aqe) {
+        for (bins <- Seq(None, Some(8)))
+          DecisionTreeClassifier(maxDepth = Some(2), maxBins = bins).fit(rows, "l_returnflag")
+        org.apache.spark.sql.graft.ListenerBridge.waitUntilListenerBusEmpty(spark)
+      } finally spark.sparkContext.removeSparkListener(listener)
+      val levels = execs.values.filter(_.site.contains("Split.scala")).toSeq
+      assert(levels.size == 4, s"AQE $aqe: expected 2 exact + 2 binned level executions, saw " +
+        execs.values.map(_.site))
+      levels.foreach { l =>
+        assert(l.jobs == 1 && l.stages.size == 1 && l.shuffleBytes == 0L,
+          s"AQE $aqe: ${l.site} ran ${l.jobs} jobs, ${l.stages.size} stages, ${l.shuffleBytes} shuffle bytes")
+      }
+      // detector proof: the stats pass, a global aggregate, is seen to shuffle
+      assert(execs.values.exists(x => x.stages.size >= 2 && x.shuffleBytes > 0L),
+        s"AQE $aqe: the listener saw no shuffling execution, so the pins above are vacuous")
+    }
   }
 
   test("a tree fit runs one stats pass, one query per categorical and one per level") {

@@ -153,7 +153,7 @@ class SplitSearchSpec extends AnyFunSuite {
       val viaPipeline = SplitSearch.searchWithStats(
         snapped, features, "l_returnflag", targets, crit)
       val viaAggregate = SplitSearch.searchLevelAggregated(
-        li, lit(0), 1, features, "l_returnflag", targets, crit, edges)(0)
+        li, features, "l_returnflag", targets, crit, edges)
       assert(viaAggregate.nodeDistribution == viaPipeline.nodeDistribution)
       val p = viaPipeline.candidates.map(c => c.candidate.feature -> c).toMap
       val a = viaAggregate.candidates.map(c => c.candidate.feature -> c).toMap
@@ -172,7 +172,7 @@ class SplitSearchSpec extends AnyFunSuite {
 
   test("level-wise null routing matches RefTree on null-laden data") {
     // nulls in the split features: rows must drop out of BOTH children at
-    // the level-wise id when-chain, as in the reference's mask + ~mask
+    // the level router, as in the reference's mask + ~mask
     // recursion that RefTree reproduces. shrinkDtype = false keeps the
     // Gaussian values off the f32 grid RefTree does not model.
     val rnd = new scala.util.Random(5)
@@ -219,8 +219,8 @@ class SplitSearchSpec extends AnyFunSuite {
   }
 
   test("binned search gives exact gain at a chosen edge") {
-    val search = SplitSearch.searchLevelAggregated(df, lit(0), 1, Seq("x"), "target", Seq(0, 1),
-      Criterion.Entropy, Map("x" -> Seq(2.0, 3.0)))(0)
+    val search = SplitSearch.searchLevelAggregated(df, Seq("x"), "target", Seq(0, 1),
+      Criterion.Entropy, Map("x" -> Seq(2.0, 3.0)))
     val exact = SplitSearch.bestSplit(df, Seq("x"), "target", Seq(0, 1), Criterion.Entropy).get
     val b = search.best.get.candidate
     // 2.0 is in the edge set, so the binned winner must equal the exact one
@@ -237,8 +237,8 @@ class SplitSearchSpec extends AnyFunSuite {
     val d = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2),
       StructType(Seq(StructField("x", DoubleType, nullable = true),
         StructField("z", DoubleType), StructField("target", IntegerType))))
-    val s = SplitSearch.searchLevelAggregated(d, lit(0), 1, Seq("x", "z"), "target", Seq(0, 1),
-      Criterion.Entropy, Map("x" -> Seq(1.0, Double.PositiveInfinity), "z" -> Seq(-0.0, 0.0, 1.0)))(0)
+    val s = SplitSearch.searchLevelAggregated(d, Seq("x", "z"), "target", Seq(0, 1),
+      Criterion.Entropy, Map("x" -> Seq(1.0, Double.PositiveInfinity), "z" -> Seq(-0.0, 0.0, 1.0)))
     assert(s.nodeDistribution == Seq(3L, 3L))
     val byFeature = s.candidates.map(c => c.candidate.feature -> c).toMap
     val x = byFeature("x")

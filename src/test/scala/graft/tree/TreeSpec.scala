@@ -165,6 +165,28 @@ class TreeSpec extends AnyFunSuite {
     assert(wrong == 0)
   }
 
+  test("deep exact fit (depth >= 16) equals RefTree") {
+    // noisy labels over two continuous features: the greedy tree keeps
+    // splitting well past the depth the reference's examples use, so the
+    // level router walks long split chains. shrinkDtype = false keeps the
+    // values off the f32 grid RefTree does not model.
+    val rnd = new scala.util.Random(11)
+    val vals = (0 until 320).map { _ =>
+      val c = rnd.nextInt(2)
+      (math.rint((c * 0.6 + rnd.nextGaussian()) * 1000) / 1000.0, math.rint(rnd.nextDouble() * 1000) / 1000.0, c)
+    }
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(vals.map { case (a, b, c) => Row(a, b, c) }, 4),
+      StructType(Seq(StructField("f1", DoubleType), StructField("f2", DoubleType),
+        StructField("target", IntegerType))))
+    val depth = 24
+    val model = DecisionTreeClassifier(maxDepth = Some(depth), shrinkDtype = false).fit(df, "target")
+    val ref = RefTree.fit(vals.map { case (a, b, _) => Map("f1" -> Option(a), "f2" -> Option(b)) },
+      vals.map(_._3), Seq("f1", "f2"), Criterion.Entropy, maxDepth = depth)
+    assert(model.tree.depth >= 16, s"tree of depth ${model.tree.depth} is too shallow")
+    assert(sameTree(model.tree, ref.tree), s"engine: ${model.tree}\nref: ${ref.tree}")
+  }
+
   test("maxDepth = 0: root majority leaf via the depth-cap fallback job") {
     val df = makeDf(strTarget = false, withCat = false)
     val model = DecisionTreeClassifier(maxDepth = Some(0)).fit(df, "target")
