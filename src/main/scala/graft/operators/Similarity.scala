@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -313,10 +314,16 @@ object Similarity {
 
   /** `(id, vec, buckets)`: ids, the cast vectors and their
     * [[bandBuckets]], checkpointed so the banding runs once for every
-    * consumer (both join sides, the verify re-join). */
+    * consumer (both join sides, the verify re-join). An empty vector has
+    * no cosine (a zero norm divides), so it fails the checkpoint with the
+    * `USER_RAISED_EXCEPTION` "`label`: expected dim=... vectors, got
+    * size=0", as [[knnGraphQuantized]]'s stats pass does. */
   private def bandedFrame(df: DataFrame, idCol: String, vecCol: String,
-      bands: Int, rowsPerBand: Int, dim: Int): DataFrame =
-    bandedProjection(df, idCol, vecCol, bands, rowsPerBand, dim).localCheckpoint(true)
+      bands: Int, rowsPerBand: Int, dim: Int, label: String): DataFrame =
+    bandedProjection(df, idCol, vecCol, bands, rowsPerBand, dim)
+      .withColumn("vec", when(size(col("vec")) === 0, raise_error(
+        lit(s"$label: expected dim=$dim vectors, got size=0"))).otherwise(col("vec")))
+      .localCheckpoint(true)
 
   /** [[bandedFrame]] before its checkpoint. */
   private def bandedProjection(df: DataFrame, idCol: String, vecCol: String,
@@ -386,9 +393,13 @@ object Similarity {
     * that partitioning: the pair dedup and both per-node windows of the
     * verify tails require clustering by `id`, which this one exchange
     * satisfies (a dedup shuffled by the pair would need a second exchange
-    * for the windows). Ids only — the payload-free pair rule. */
+    * for the windows). Ids only — the payload-free pair rule. The width
+    * is explicit, the one Spark plans with AQE off: AQE coalesces a
+    * by-column repartition by bytes, and the ids-only pairs are so small
+    * that the whole verify then ran in one task. */
   private def byId(pairs: DataFrame): DataFrame =
-    pairs.select("id", "nbr").repartition(col("id")).dropDuplicates("id", "nbr")
+    pairs.select("id", "nbr").repartition(SQLConf.get.numShufflePartitions, col("id"))
+      .dropDuplicates("id", "nbr")
 
   /** `(key, value)` of a payload frame's `id` and `column`, renamed for
     * one join side. The id side and the nbr side of a self-graph project
@@ -467,7 +478,10 @@ object Similarity {
     * re-join from the checkpointed banded frame afterwards (the
     * [[Dedup.minHashLshJaccardPairs]] pattern). At 100 TB embeddings this
     * is the difference between a metadata shuffle and shuffling
-    * O(candidates x dim) doubles through the dedup exchange. */
+    * O(candidates x dim) doubles through the dedup exchange.
+    *
+    * A NULL vector has no pairs; an empty vector fails the call with
+    * [[knnGraph]]'s "expected dim=... vectors, got size=0". */
   def cosineNearDupPairs(
       df: DataFrame,
       idCol: String,
@@ -478,7 +492,7 @@ object Similarity {
       bands: Int = 4
   ): DataFrame = {
     val rpb = resolveRowsPerBand(df.count(), rowsPerBand, bands)
-    val signed = bandedFrame(df, idCol, vecCol, bands, rpb, dim)
+    val signed = bandedFrame(df, idCol, vecCol, bands, rpb, dim, "cosineNearDupPairs")
     val banded = bandRows(signed)
     val a = banded.select(col("band"), col("bucket"), col("id").as("id_a"))
     val b = banded.select(col("band"), col("bucket"), col("id").as("id_b"))
@@ -547,12 +561,7 @@ object Similarity {
   ): DataFrame = {
     require(k >= 1 && k <= 1000, s"k must be in [1, 1000], got $k")
     val rpb = resolveRowsPerBand(df.count(), rowsPerBand, bands)
-    // an empty vector has no cosine (a zero norm divides): reject it in
-    // the checkpoint, as knnGraphQuantized's stats pass does
-    val signed = bandedProjection(df, idCol, vecCol, bands, rpb, dim)
-      .withColumn("vec", when(size(col("vec")) === 0, raise_error(
-        lit(s"knnGraph: expected dim=$dim vectors, got size=0"))).otherwise(col("vec")))
-      .localCheckpoint(true)
+    val signed = bandedFrame(df, idCol, vecCol, bands, rpb, dim, "knnGraph")
     exactTopK(directedCandidates(signed), signed, signed, k)
   }
 

@@ -83,8 +83,9 @@ object PlanAudit {
     val enc = graft.tree.TargetEncoder.applyMappings(
       spark.read.parquet(s"$sfDir/lineitem.parquet"),
       Map("l_linestatus" -> (0 until 200).map(i => s"v$i" -> i).toMap))
-    audit("target-encode apply, >128 categories", enc, Seq(
-      "broadcast join for big dictionary" -> (_.contains("BroadcastHashJoin"))
+    audit("target-encode apply, 200 categories", enc, Seq(
+      "recode is one dictionary_code projection" -> (_.contains("dictionary_code(")),
+      "no join and no exchange" -> (p => !p.contains("Join") && !p.contains("Exchange"))
     ))
     audit("asof_join (union-tag carry-forward)", q("asof_join")(spark, sfDir), Seq(
       "single Window node (struct payload carry)" ->

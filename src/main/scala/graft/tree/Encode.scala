@@ -1,10 +1,13 @@
 package graft.tree
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, IntegerType, StringType}
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types.{DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.functions.DictionaryCode
 
 /** Ordinal target encoding for categorical feature columns.
   *
@@ -14,19 +17,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * sort on the category's string rendering for determinism (documented
   * divergence, SURVEY.md §2.11).
   *
-  * Apply: dictionary recode (reference: tree.py:67-77, `pl.col(c).replace`).
-  * Small mappings become a codegen-friendly `when`-chain; large ones a
-  * broadcast join against a 2-column mapping frame (the scale path — a
-  * high-cardinality dictionary must not be serialized into the plan).
-  * Unseen categories map to NULL, so at predict time the row falls out of
-  * both split branches — mirroring Spark/Polars NULL-predicate semantics
-  * (SURVEY.md §2.11 edge-case note).
+  * Apply: dictionary recode (reference: tree.py:67-77, `pl.col(c).replace`),
+  * one projection per column: the native [[graft.functions.DictionaryCode]]
+  * maps `cast(c as string)` to its code, whatever the mapping's size. The
+  * trade: the dictionary travels in the task binary, which Spark
+  * broadcasts once per stage, instead of as a broadcast relation built by
+  * a job of its own. Unseen categories (and a NULL value) map to NULL, so
+  * at predict time the row falls out of both split branches — mirroring
+  * Spark/Polars NULL-predicate semantics (SURVEY.md §2.11 edge-case note).
   */
 object TargetEncoder {
-
-  /** Max mapping size inlined as a `when`-chain before switching to a
-    * broadcast join. */
-  val WhenChainThreshold = 128
 
   /** One aggregate job per column. Its <= #levels rows are sorted on the
     * driver in exactly Spark's `orderBy(avg.asc_nulls_last,
@@ -70,29 +70,10 @@ object TargetEncoder {
     }
   }
 
-  private def recodeColumn(df: DataFrame, c: String, mapping: Map[String, Int],
-      whenChainThreshold: Int): DataFrame =
-    if (mapping.size <= whenChainThreshold) {
-      val key = col(c).cast(StringType)
-      val chain = mapping.toSeq.sortBy(_._2).foldLeft(Option.empty[Column]) {
-        case (acc, (k, v)) =>
-          val w = acc.map(_.when(key === lit(k), lit(v))).getOrElse(when(key === lit(k), lit(v)))
-          Some(w)
-      }
-      df.withColumn(c, chain.map(_.otherwise(lit(null))).getOrElse(lit(null)).cast(IntegerType))
-    } else {
-      val spark = df.sparkSession
-      import spark.implicits._
-      val mapDf = mapping.toSeq.toDF("__cat_key", "__cat_code")
-      val joined = df
-        .withColumn("__cat_join_key", col(c).cast(StringType))
-        .join(broadcast(mapDf), col("__cat_join_key") === col("__cat_key"), "left")
-      joined
-        .withColumn(c, col("__cat_code").cast(IntegerType))
-        .drop("__cat_join_key", "__cat_key", "__cat_code")
-    }
+  private def recodeColumn(df: DataFrame, c: String, mapping: Map[String, Int]): DataFrame =
+    df.withColumn(c, ColumnBridge.column(DictionaryCode(
+      ColumnBridge.expression(col(c).cast(StringType)), new DictionaryCode.Dictionary(mapping))))
 
-  def applyMappings(df: DataFrame, mappings: Map[String, Map[String, Int]],
-      whenChainThreshold: Int = WhenChainThreshold): DataFrame =
-    mappings.foldLeft(df) { case (d, (c, m)) => recodeColumn(d, c, m, whenChainThreshold) }
+  def applyMappings(df: DataFrame, mappings: Map[String, Map[String, Int]]): DataFrame =
+    mappings.foldLeft(df) { case (d, (c, m)) => recodeColumn(d, c, m) }
 }

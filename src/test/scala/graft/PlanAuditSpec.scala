@@ -47,6 +47,33 @@ class PlanAuditSpec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  /** Per SQL execution `body` starts under `kv`, in order: the task count
+    * of each of its jobs' final stage, in job order. */
+  private def jobsPerExecution(kv: (String, String)*)(body: => Unit): Seq[Seq[Int]] = {
+    import scala.collection.mutable
+    import org.apache.spark.scheduler._
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    // touched only on the listener bus thread, read after it drains
+    val execs = mutable.LinkedHashMap[Long, mutable.Buffer[Int]]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => execs(s.executionId) = mutable.Buffer()
+        case _ =>
+      }
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .flatMap(id => execs.get(id.toLong))
+          .foreach(_ += j.stageInfos.maxBy(_.stageId).numTasks)
+    }
+    org.apache.spark.sql.graft.ListenerBridge.waitUntilListenerBusEmpty(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try withConf(kv: _*) {
+      body
+      org.apache.spark.sql.graft.ListenerBridge.waitUntilListenerBusEmpty(spark)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    execs.values.map(_.toSeq).toSeq
+  }
+
   test("the cartesian detector fires on an injected crossJoin (suite-red proof)") {
     withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val p = plan(spark.range(3).toDF("a").crossJoin(spark.range(3).toDF("b")))
@@ -371,5 +398,54 @@ class PlanAuditSpec extends AnyFunSuite {
       s"the codes and the vectors are each broadcast once:\n$verify")
     assert(verify.collect { case r: ReusedExchangeExec => r }.size == 2,
       s"the nbr sides reuse both broadcasts:\n$verify")
+  }
+
+  test("a scoring pass over a >128-level categorical is one job, AQE on") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions.{broadcast, col}
+    import org.apache.spark.sql.types._
+    import graft.tree.{DecisionTreeClassifier, Predict}
+    val rows = (0 until 2000).map(i => Row(s"level${i % 200}", (i % 7).toDouble, (i % 200) / 70))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), StructType(Seq(
+      StructField("cat", StringType), StructField("x", DoubleType),
+      StructField("target", IntegerType))))
+    val model = DecisionTreeClassifier(maxDepth = Some(2), categoricalColumns = Seq("cat"))
+      .fit(df, "target")
+    val mapping = model.categoricalMappings("cat")
+    assert(mapping.size == 200, s"the mapping must be above the old 128-level when-chain")
+    val aqe = "spark.sql.adaptive.enabled" -> "true"
+    // detector proof: the broadcast-join recode the kernel replaced runs
+    // a broadcast job ahead of the scan in the same execution
+    val viaJoin = {
+      import spark.implicits._
+      df.join(broadcast(mapping.toSeq.toDF("__k", "__code")), col("cat") === col("__k"), "left")
+    }
+    val joinJobs = jobsPerExecution(aqe)(viaJoin.collect())
+    assert(joinJobs.size == 1 && joinJobs.head.size == 2,
+      s"the listener must see the broadcast's job, or the pin below is vacuous: $joinJobs")
+    val pass = jobsPerExecution(aqe)(Predict.predictMany(model, df).collect())
+    assert(pass.size == 1 && pass.head.size == 1,
+      s"one predictMany pass: one execution of one job, saw $pass")
+  }
+
+  test("the kNN verify runs spark.sql.shuffle.partitions tasks with AQE on") {
+    import org.apache.spark.sql.functions.col
+    val conf = Seq("spark.sql.adaptive.enabled" -> "true", "spark.sql.shuffle.partitions" -> "4")
+    val input = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    // detector proof: the id repartition without a width coalesces to
+    // fewer tasks under the same conf
+    val pairs = input.select(col("vec_id").as("id"), (col("vec_id") % 7).as("nbr"))
+    val coalesced = jobsPerExecution(conf: _*)(
+      pairs.repartition(col("id")).dropDuplicates("id", "nbr").collect())
+    assert(coalesced.size == 1 && coalesced.head.last < 4,
+      s"AQE must coalesce the by-column repartition, or the pin below is vacuous: $coalesced")
+    for ((name, graph) <- Seq[(String, () => Unit)](
+        "knnGraph" -> (() => graft.operators.Similarity.knnGraph(
+          input, "vec_id", "embedding", k = 3, dim = 64).collect()),
+        "knnGraphQuantized" -> (() => graft.operators.Similarity.knnGraphQuantized(
+          input, "vec_id", "embedding", k = 3, dim = 64).collect()))) {
+      val verify = jobsPerExecution(conf: _*)(graph()).last
+      assert(verify.last == 4, s"$name: the verify's final stage ran ${verify.last} tasks: $verify")
+    }
   }
 }

@@ -865,10 +865,12 @@ class SimilaritySpec extends AnyFunSuite {
       sawRepeats ||= rows.join(rows.withColumnRenamed("id", "nbr"), Seq("band", "bucket"))
         .where("id < nbr").groupBy("id", "nbr").count().where("count > 1").head(1).nonEmpty
     }
-    // knnGraph and knnGraphQuantized reject an empty vector with one message
+    // knnGraph, knnGraphQuantized and cosineNearDupPairs reject an empty
+    // vector with one message
     for (build <- Seq[org.apache.spark.sql.DataFrame => Unit](
         c => Similarity.knnGraph(c, "vec_id", "embedding", 3, dim, 4, 4).collect(),
-        c => Similarity.knnGraphQuantized(c, "vec_id", "embedding", 3, dim, 4, 4).collect())) {
+        c => Similarity.knnGraphQuantized(c, "vec_id", "embedding", 3, dim, 4, 4).collect(),
+        c => Similarity.cosineNearDupPairs(c, "vec_id", "embedding", 0.5, dim, 4, 4).collect())) {
       val e = intercept[Exception](build(knnCorpus(dim, withEmpty = true, seed = 21)))
       assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
         .exists(t => Option(t.getMessage).exists(_.contains(s"expected dim=$dim vectors, got size=0"))),

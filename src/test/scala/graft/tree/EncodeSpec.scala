@@ -1,6 +1,7 @@
 package graft.tree
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.{broadcast, col}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -33,7 +34,7 @@ class EncodeSpec extends AnyFunSuite {
   }
 
   test("fitMappings sorts like Spark's orderBy on adversarial keys and means") {
-    import org.apache.spark.sql.functions.{avg, col}
+    import org.apache.spark.sql.functions.avg
     val smile = "\uD83D\uDE00" // U+1F600: below "\uFFFF" in UTF-16, above it in UTF-8
     val rows = Seq(
       Row("\uFFFF", 1.0), Row(smile, 1.0), Row(null, 1.0), // tied means, null key
@@ -56,16 +57,68 @@ class EncodeSpec extends AnyFunSuite {
     assert(TargetEncoder.fitMappings(d, Seq("cat"), "target")("cat") == viaOrderBy)
   }
 
-  test("when-chain and broadcast-join recode paths agree; unseen -> null") {
-    val m = Map("cat" -> TargetEncoder.fitMappings(df, Seq("cat"), "target")("cat"))
-    val withUnseen = df.union(spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(Row("zz", 9))), df.schema))
-    val viaChain = TargetEncoder.applyMappings(withUnseen, m, whenChainThreshold = 100)
-      .collect().map(r => (r.get(0), r.getInt(1)))
-    val viaJoin = TargetEncoder.applyMappings(withUnseen, m, whenChainThreshold = 0)
-      .collect().map(r => (r.get(0), r.getInt(1)))
-    assert(viaChain.sortBy(_._2.toString).toSeq == viaJoin.sortBy(_._2.toString).toSeq)
-    assert(viaChain.count(_._1 == null) == 1) // the unseen 'zz' row
+  private def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val prev = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** The broadcast-join recode as it shipped before the dictionary
+    * kernel: a left join of `cast(c as string)` against a `(key, code)`
+    * frame. */
+  private def joinRecode(df: DataFrame, c: String, mapping: Map[String, Int]): DataFrame = {
+    import spark.implicits._
+    val mapDf = mapping.toSeq.toDF("__cat_key", "__cat_code")
+    df.withColumn("__cat_join_key", col(c).cast(StringType))
+      .join(broadcast(mapDf), col("__cat_join_key") === col("__cat_key"), "left")
+      .withColumn(c, col("__cat_code").cast(IntegerType))
+      .drop("__cat_join_key", "__cat_key", "__cat_code")
+  }
+
+  test("dictionary kernel equals the broadcast-join recode in both eval modes") {
+    def frame(t: DataType, values: Seq[Any]): DataFrame =
+      spark.createDataFrame(spark.sparkContext.parallelize(
+        values.zipWithIndex.map { case (v, i) => Row(i.toLong, v) }, 3),
+        StructType(Seq(StructField("id", LongType), StructField("cat", t))))
+    val smile = "\uD83D\uDE00"
+    val strings = frame(StringType, Seq("a", "b", "A", " a", "", "\u00e9", "e\u0301", "\u4e2d\u6587",
+      smile, "\uFFFF", null, "zz", "k7", "k200", "a"))
+    val ints = frame(IntegerType, Seq(1, 2, 3, -1, null, 99, 1))
+    val doubles = frame(DoubleType, Seq(0.0, -0.0, Double.NaN, 1.5, null, Double.PositiveInfinity,
+      Double.NegativeInfinity, 2.0))
+    val small = Map("a" -> 0, "b" -> 1, "\u00e9" -> 2, "\u4e2d\u6587" -> 3, smile -> 4, "" -> 5,
+      (null: String) -> 6, "A" -> 7, "\uFFFF" -> 8)
+    val big = small ++ (0 until 300).map(i => s"k$i" -> (100 + i))
+    val cases = Seq(
+      ("strings, small mapping", strings, small),
+      ("strings, 309 keys", strings, big),
+      ("strings, empty mapping", strings, Map.empty[String, Int]),
+      ("ints", ints, Map("1" -> 0, "-1" -> 1, "01" -> 2, (null: String) -> 3)),
+      ("doubles", doubles, Map("0.0" -> 0, "NaN" -> 1, "1.5" -> 2, "Infinity" -> 3,
+        (null: String) -> 4)),
+      ("doubles, -0.0 key", doubles, Map("-0.0" -> 0, "2.0" -> 1)))
+    assert(big.size > 128, "the large mapping must be above the old when-chain size")
+    for (mode <- Seq("CODEGEN_ONLY", "NO_CODEGEN");
+         (what, df, m) <- cases) withConf("spark.sql.codegen.factoryMode" -> mode,
+        "spark.sql.codegen.wholeStage" -> (mode == "CODEGEN_ONLY").toString) {
+      val got = TargetEncoder.applyMappings(df, Map("cat" -> m))
+      val ref = joinRecode(df, "cat", m)
+      assert(got.schema.map(f => f.name -> f.dataType) == ref.schema.map(f => f.name -> f.dataType),
+        s"$mode $what: ${got.schema} vs ${ref.schema}")
+      def rows(d: DataFrame) = d.collect().map(r => r.getLong(0) -> r.get(1)).sortBy(_._1).toSeq
+      assert(rows(got) == rows(ref), s"$mode $what")
+    }
+    // the fixture's edges, read off the reference: a NULL value misses a
+    // NULL key, an unseen value and -0.0 against a "0.0" key miss, NaN hits
+    def codes(df: DataFrame, m: Map[String, Int]): Seq[Any] =
+      joinRecode(df, "cat", m).orderBy("id").collect().map(_.get(1)).toSeq
+    assert(codes(strings, small) == Seq(0, 1, 7, null, 5, 2, null, 3, 4, 8, null, null, null,
+      null, 0))
+    assert(codes(doubles, cases(4)._3) == Seq(0, null, 1, 2, null, 3, null, null))
+    assert(codes(doubles, cases(5)._3) == Seq(null, 0, null, null, null, null, null, 1))
   }
 
   test("fit with categoricalColumns learns on encoded values and records mappings") {
